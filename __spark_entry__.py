@@ -1882,10 +1882,10 @@ def _serving_batch_mentions(spark: SparkSession, sf: str):
 def _x1_linker_served(spark: SparkSession, sf: str) -> DataFrame:
     # Round 12: the serving probe on its OWN shape — a ~200-mention
     # batch against the persisted (bucket-partitioned, max_df=0.1,
-    # default-champion_c — see ALIAS_CHAMPION_C / the fit-time df
-    # sizing in save_alias_index) index, prune_buckets=True so the scans prune to
-    # the mention grams' buckets. use_champions auto-resolves by the
-    # index meta's n_aliases (CHAMPION_AUTO_MIN_ALIASES crossover):
+    # weight-policy champions — see ALIAS_WCUT_RMS_FACTOR) index,
+    # prune_buckets=True so the scans prune to the mention grams'
+    # buckets. The champion path turns on by the index meta's
+    # n_aliases (CHAMPION_AUTO_MIN_ALIASES crossover):
     # OFF at sf0.01/sf0.1 (3.5k aliases — flat pruned join wins
     # outright), ON at the bench's sf1 section (35.6k aliases —
     # champion candidate-gen + rerank beats the flat join there,

@@ -117,7 +117,7 @@ HEADLINE = [
     "x1_linker_indexed",
     # round 12 (VERDICT r11 next #1): the champion-list probe on its
     # OWN shape — a ~200-mention serving batch, prune_buckets=True,
-    # use_champions auto-ON; certified fraction instrumented into the
+    # champions auto-ON; certified fraction instrumented into the
     # JSON via a separate probe_stats call after the timing loop.
     "x1_linker_served",
     # round 8 late: the distributed Lloyd fit (3 iterations over the
@@ -631,10 +631,6 @@ def main() -> None:
         compact["sf1_linker"]["served_certified"] = result["sf1"].get(
             "x1_linker_served_stats", {}
         ).get("certified_fraction")
-        pp = result["sf1"].get("linker_pin_pair", {})
-        if pp:
-            compact["sf1_linker"]["pin_off_sec"] = pp.get("off_sec")
-            compact["sf1_linker"]["pin_full_sec"] = pp.get("full_sec")
     # compaction read-cost pair: the r13-r15 full rows+seconds block
     # (~270 chars) helped push the line over the truncation limit
     # (VERDICT r15 what's-wrong #2). The line now carries only the
@@ -1100,7 +1096,7 @@ def _sf1_section(spark, sf01_dir: str, qs, sf01_timings: dict) -> dict:
     from drugbankner_spark.operators import linker as L
 
     queries: dict = {}
-    pin_pair: dict = {}
+    pin_auto: dict = {}
     for name in SF1_QUERIES:
         fn = qs.get(ALIAS.get(name, name))
         if fn is None:
@@ -1127,37 +1123,8 @@ def _sf1_section(spark, sf01_dir: str, qs, sf01_timings: dict) -> dict:
         if name == "x1_linker_corpus_maxdf":
             # snapshot the auto gate's decision before a later linker
             # query overwrites the instrumentation dict
-            pin_pair["auto_sec"] = entry["sec"]
-            pin_pair["auto_decision"] = dict(L.LAST_PIN_DECISION)
-    # VERDICT r13 next #1: the pin gate measured AT THE SCALE IT TAXES
-    # — the same inline fit re-timed with the pin forced off and
-    # forced full-width (the r13 default), so BENCH_r{N} carries the
-    # pinned-vs-unpinned pair next to the auto gate's estimate.
-    prior_pin = os.environ.get(L.LINKER_PIN_ENV)
-    try:
-        fn = qs.get("x1_linker_corpus_maxdf")
-        if fn is not None:
-            for mode in ("off", "full"):
-                os.environ[L.LINKER_PIN_ENV] = mode
-                best = None
-                for _ in range(2):
-                    t0 = time.perf_counter()
-                    fn(spark, sf1_dir).toPandas()
-                    el = time.perf_counter() - t0
-                    best = el if best is None else min(best, el)
-                release_shared_caches()
-                pin_pair[f"{mode}_sec"] = round(best, 3)
-            print(f"# sf1 linker_pin_pair: {pin_pair}", file=sys.stderr)
-    except Exception as exc:  # pragma: no cover
-        pin_pair["error"] = f"{type(exc).__name__}: {exc}"
-    finally:
-        # RESTORE the caller's pin mode, don't clear it (round-14
-        # review finding: a user-forced mode must keep applying to
-        # everything after this paired section)
-        if prior_pin is None:
-            os.environ.pop(L.LINKER_PIN_ENV, None)
-        else:
-            os.environ[L.LINKER_PIN_ENV] = prior_pin
+            pin_auto["auto_sec"] = entry["sec"]
+            pin_auto["auto_decision"] = dict(L.LAST_PIN_DECISION)
     # serving-probe instrumentation at 10x aliases — the regime where
     # the n_aliases auto-gate turns the champion machinery ON; the
     # certified fraction here is the number VERDICT r11 #1a asked for
@@ -1181,7 +1148,7 @@ def _sf1_section(spark, sf01_dir: str, qs, sf01_timings: dict) -> dict:
             "calibration_sec": round(calib, 3),
             "x1_linker_index_fit_sec": fit_sec,
             "x1_linker_served_stats": serving_stats,
-            "linker_pin_pair": pin_pair,
+            "linker_pin_auto": pin_auto,
             "queries": queries}
 
 

@@ -45,8 +45,6 @@ size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -55,8 +53,8 @@ from pyspark.sql import functions as F
 ALIAS_BROADCAST_MAX_ROWS = 2_000_000
 
 
-def _maybe_broadcast(dim: DataFrame, max_rows: int) -> DataFrame:
-    return F.broadcast(dim) if dim.count() <= max_rows else dim
+def _maybe_broadcast(dim: DataFrame) -> DataFrame:
+    return F.broadcast(dim) if dim.count() <= ALIAS_BROADCAST_MAX_ROWS else dim
 
 
 def char_wb_gram_counts(
@@ -181,7 +179,6 @@ def link_by_tfidf(
     threshold: float = 0.7,
     k: int = 1,
     n: int = 3,
-    broadcast_max_rows: int = ALIAS_BROADCAST_MAX_ROWS,
     max_df_ratio: float | None = None,
 ) -> DataFrame:
     """Link each DISTINCT mention string to its top-k concepts.
@@ -207,23 +204,26 @@ def link_by_tfidf(
     postings, idf, _ = build_alias_vectors(
         alias_map, "alias", n, max_df_ratio=max_df_ratio
     )
+    mcounts = char_wb_gram_counts(
+        _distinct_mentions(mentions, mention_col), "mention", "mention", n
+    )
+    return _link_tail(mcounts, postings, idf, alias_map, threshold, k)
 
-    return _link_tail(
-        mentions, mention_col, postings, idf, alias_map,
-        threshold, k, n, broadcast_max_rows,
+
+def _distinct_mentions(mentions: DataFrame, mention_col: str) -> DataFrame:
+    return (
+        mentions.select(F.col(mention_col).alias("mention"))
+        .filter(F.col("mention").isNotNull())
+        .distinct()
     )
 
 
-def _mention_vectors(
-    mcounts: DataFrame, idf: DataFrame, broadcast_max_rows: int
-) -> DataFrame:
+def _mention_vectors(mcounts: DataFrame, idf: DataFrame) -> DataFrame:
     """(gram, mention, mw): mention TF-IDF vectors under the ALIAS
     corpus's idf (sklearn transform semantics — OOV grams drop at the
     idf join, before the norm). Shared by the full posting join and
     the champion-list probe so vectorization can never drift."""
-    mweighted = mcounts.join(
-        _maybe_broadcast(idf, broadcast_max_rows), "gram"
-    ).select(
+    mweighted = mcounts.join(_maybe_broadcast(idf), "gram").select(
         "gram", F.col("_id").alias("mention"),
         (F.col("tf") * F.col("idf")).alias("_w"),
     )
@@ -303,127 +303,98 @@ LINKER_PIN_FULL_MIN_POSTINGS = 1_000_000
 #: Bounded (ADVICE r14): a long-lived serving app issuing many
 #: distinct batch plans would otherwise grow it without limit — at
 #: the cap the whole dict clears (the entries are 1-row estimates; a
-#: re-estimate costs one broadcast-join job, and with the published
-#: ``df`` dim it is near-free anyway).
+#: re-estimate costs one broadcast-join job against the fit's
+#: vocabulary-sized ``df`` dim).
 _PIN_EST_CACHE: dict = {}
 _PIN_EST_CACHE_MAX = 1024
 
-#: Env override for the probe-tail pin: "auto" (the estimate gate,
-#: default), "off", "full" (every exchange at
-#: spark.sql.shuffle.partitions — the r13 behavior), or an explicit
-#: integer width. The bench's pinned-vs-unpinned sf1 pair and the
-#: sf10 rehearsal's collapse guard both record through this knob.
-LINKER_PIN_ENV = "SPARK_GRAFT_LINKER_PIN"
-
-#: Instrumentation: the most recent auto-gate decisions, keyed by
-#: path ("score_full": n_postings/est_products/width; "rerank":
-#: est_products/width) — read by bench.py so the pin evidence lands
-#: in BENCH JSON without a second estimate job.
+#: Instrumentation: the most recent pin decisions, keyed by call site
+#: ("score_full": n_postings/est_products/width/reason; "rerank":
+#: n_aliases/width/reason) — read by bench.py so the pin evidence
+#: lands in BENCH JSON without a second estimate job.
 LAST_PIN_DECISION: dict = {}
 
 #: Alias-count gate for the champion rerank's full-width pin (the
-#: rerank knows the meta's n_aliases but not the posting count). A
-#: legacy meta without n_aliases does NOT pin (matching the posting
-#: gate's skip-below-threshold policy). Round 14: raised 20k → 100k
-#: with measurements on BOTH sides — sf1 bulk (35.6k aliases) runs
-#: faster unpinned (2.13 s vs r13's pinned 2.56 s), sf10 bulk (357k)
-#: collapses without the pin (36.9 s vs 25.7 s pinned, loaded box).
-#: See :func:`_rerank_pin_width` for the estimate-gated variant this
-#: replaced after measurement.
+#: rerank knows the meta's n_aliases but not the posting count).
+#: Round 14: raised 20k → 100k with measurements on BOTH sides — sf1
+#: bulk (35.6k aliases) runs faster unpinned (2.13 s vs r13's pinned
+#: 2.56 s), sf10 bulk (357k) collapses without the pin (36.9 s vs
+#: 25.7 s pinned, loaded box). An estimate-gated rerank variant
+#: (exact candidate-pair gram-count bound, one agg + 1-row collect)
+#: was implemented, MEASURED at both scales, and rejected: the sf10
+#: bulk rerank estimates 2.6×10⁸ products — under the 4×10⁸ gate that
+#: is correct for the full join's shape — yet runs 36.9 s unpinned vs
+#: 25.7 s pinned, while sf1's bulk runs FASTER unpinned. Two shapes,
+#: two thresholds — and this alias gate already separates the
+#: measured-healthy from the measured-unhealthy points at both
+#: scales, with no estimate job on any probe.
 LINKER_PIN_MIN_ALIASES = 100_000
 
 
-def _pin_env_override(df: DataFrame) -> int | None:
-    """Resolve :data:`LINKER_PIN_ENV`: None for "auto"/unset (let the
-    gate decide), else the forced width (0 for "off"). A malformed
-    value names the variable instead of surfacing a bare int() error
-    mid-probe (round-14 review finding)."""
-    mode = os.environ.get(LINKER_PIN_ENV, "auto").strip().lower()
-    if mode in ("", "auto"):
-        return None
-    if mode == "off":
-        return 0
-    full = _pinned_shuffle_n(df)
-    if mode == "full":
-        return full
-    try:
-        return max(0, min(full, int(mode)))
-    except ValueError:
-        raise ValueError(
-            f"{LINKER_PIN_ENV}={mode!r} — expected 'auto', 'off', "
-            "'full', or an integer width"
-        ) from None
-
-
 def _pin_width(
+    site: str,
     mvec: DataFrame,
-    postings: DataFrame,
-    n_post: int,
+    n_aliases: int | None = None,
+    n_post: int | None = None,
     gram_counts: DataFrame | None = None,
-    gram_df: DataFrame | None = None,
+    idf: DataFrame | None = None,
 ) -> int:
-    """Auto-gate + size the probe tail's pinned exchanges. Returns 0
-    (no pin — leave the plan to AQE) or the REPARTITION_BY_NUM width.
+    """Gate one probe-tail site's pinned exchanges and record the
+    decision in ``LAST_PIN_DECISION[site]``. Returns 0 (no pin — leave
+    the plan to AQE) or the full REPARTITION_BY_NUM width (narrow
+    widths measured strictly worse — see the constants' comment).
 
-    The gate fires when EITHER the estimated product row count clears
+    ``"rerank"`` (the champion rerank) pins when the index meta's
+    ``n_aliases`` clears :data:`LINKER_PIN_MIN_ALIASES`.
+
+    ``"score_full"`` (the full posting join over ``mvec``, the mention
+    vectors) pins when EITHER the estimated product row count clears
     :data:`LINKER_PIN_MIN_PRODUCT_ROWS` (a big batch × any index) OR
-    the posting table clears :data:`LINKER_PIN_FULL_MIN_POSTINGS` (a
-    corpus-scale index, where even a tiny batch's plan collapses —
-    the r12 serving-flat evidence); a fired pin is always FULL width
-    (narrow widths measured strictly worse — see the constants'
-    comment). The estimate is the exact product row count of the gram
-    join — Σ_gram (mention-side rows × posting-side rows), one
-    (gram → count) agg per side, an equi-join on the (bounded,
-    vocabulary-sized) gram dim, and a 1-row collect, memoized per
-    (app, batch plan, posting count). Grams outside the posting
-    vocabulary self-filter in the join, so the pre-idf
-    ``gram_counts`` a caller passes (from raw mention gram counts —
-    cheaper than re-deriving vectors) gives the same number as
-    counting ``mvec`` itself. The whole estimate job is skipped below
-    :data:`LINKER_PIN_MIN_POSTINGS` where neither condition can
-    fire.
-
-    ``gram_df`` (VERDICT r14 next #1): a precomputed ``(gram,
-    _pcnt)`` dim — the fit's per-gram posting-list lengths, i.e. the
-    ``df`` column :func:`build_alias_vectors` now keeps and
-    :func:`save_alias_index` publishes with ``/idf``. When provided,
-    the posting side of the estimate is this vocabulary-sized
-    broadcast dim instead of a fresh ``groupBy(gram).count()`` over
-    the posting table, so the estimate job collapses to
-    mention-side-counts ⋈ broadcast-dim → 1-row sum: near-free per
-    new batch plan, and stable across driver restarts because the
-    dim comes from the published index, not a recomputation
-    (the r14 bench priced the old posting-side agg at ~17% of the
-    sf1 inline fit — ``linker_pin_pair`` auto 8.22 s vs off 7.04 s).
-
-    Every exit records its decision in :data:`LAST_PIN_DECISION`
-    (ADVICE r14: the env-override and below-floor early returns used
-    to leave a stale decision from an earlier probe for bench's
-    snapshot to pick up)."""
-    override = _pin_env_override(mvec)
-    if override is not None:
-        LAST_PIN_DECISION["score_full"] = {
-            "n_postings": n_post, "est_products": None,
-            "width": override, "reason": "override",
-        }
-        return override
+    the posting count ``n_post`` clears
+    :data:`LINKER_PIN_FULL_MIN_POSTINGS` (a corpus-scale index, where
+    even a tiny batch's plan collapses — the r12 serving-flat
+    evidence). The estimate is the exact product row count of the gram
+    join — Σ_gram (mention-side rows × posting-side rows): the
+    mention side is ``gram_counts`` ``(gram, _mcnt)`` (raw mention
+    gram counts — grams outside the posting vocabulary self-filter in
+    the join, so this equals counting ``mvec`` itself), the posting side
+    is the fit's per-gram posting-list length, the ``df`` column of
+    ``idf`` (VERDICT r14 next #1: a vocabulary-sized broadcast dim,
+    published with ``/idf``, so the estimate is near-free per new
+    batch plan and stable across driver restarts), and the job is a
+    1-row collect memoized per (app, batch plan, posting count). It is
+    skipped below :data:`LINKER_PIN_MIN_POSTINGS`, where neither
+    condition can fire, and at/above the posting floor, where the
+    estimate cannot change the decision."""
     full = _pinned_shuffle_n(mvec)
+    if site == "rerank":
+        width = full if n_aliases >= LINKER_PIN_MIN_ALIASES else 0
+        LAST_PIN_DECISION[site] = {
+            "n_aliases": n_aliases, "width": width, "reason": "alias-gate",
+        }
+        return width
+    est = None
     if n_post < LINKER_PIN_MIN_POSTINGS:
-        LAST_PIN_DECISION["score_full"] = {
-            "n_postings": n_post, "est_products": None, "width": 0,
-            "reason": "below-floor",
-        }
-        return 0
-    if n_post >= LINKER_PIN_FULL_MIN_POSTINGS:
-        # the OR-condition alone forces the pin — don't pay the
-        # estimate job for a decision it cannot change (round-14
-        # review finding: the corpus-scale serving path was paying a
-        # full posting-table agg per new batch plan for evidence only)
-        LAST_PIN_DECISION["score_full"] = {
-            "n_postings": n_post, "est_products": None, "width": full,
-            "reason": "posting-floor",
-        }
-        return full
+        width, reason = 0, "below-floor"
+    elif n_post >= LINKER_PIN_FULL_MIN_POSTINGS:
+        width, reason = full, "posting-floor"
+    else:
+        est = _estimate_products(mvec, n_post, gram_counts, idf)
+        width = 0 if est < LINKER_PIN_MIN_PRODUCT_ROWS else full
+        reason = "estimate"
+    LAST_PIN_DECISION[site] = {
+        "n_postings": n_post, "est_products": est, "width": width,
+        "reason": reason,
+    }
+    return width
+
+
+def _estimate_products(
+    mvec: DataFrame,
+    n_post: int,
+    gram_counts: DataFrame | None,
+    idf: DataFrame,
+) -> int:
     mcnt = (
         gram_counts if gram_counts is not None
         else mvec.groupBy("gram").agg(F.count(F.lit(1)).alias("_mcnt"))
@@ -440,73 +411,19 @@ def _pin_width(
     except Exception:
         pass  # py4j API drift — just skip memoization
     if key is not None and key in _PIN_EST_CACHE:
-        est = _PIN_EST_CACHE[key]
-    else:
-        # posting side of Σ_gram (mention rows × posting rows): the
-        # published df dim when the caller has one (vocabulary-sized,
-        # broadcast — no posting-table re-aggregation per batch
-        # plan), else the on-the-fly agg for legacy indexes
-        pside = (
-            F.broadcast(gram_df) if gram_df is not None
-            else postings.groupBy("gram").agg(
-                F.count(F.lit(1)).alias("_pcnt")
-            )
-        )
-        est_row = (
-            mcnt.join(pside, "gram")
-            .agg(F.sum(F.col("_mcnt") * F.col("_pcnt")).alias("_est"))
-            .collect()
-        )
-        est = int(est_row[0]["_est"] or 0)
-        if key is not None:
-            if len(_PIN_EST_CACHE) >= _PIN_EST_CACHE_MAX:
-                _PIN_EST_CACHE.clear()
-            _PIN_EST_CACHE[key] = est
-    width = 0 if est < LINKER_PIN_MIN_PRODUCT_ROWS else full
-    LAST_PIN_DECISION["score_full"] = {
-        "n_postings": n_post, "est_products": est, "width": width,
-        "reason": "estimate",
-        # True when the posting side was the fit's df dim (in-memory
-        # on inline fits, read from /idf on serving probes) rather
-        # than a fresh posting-table aggregation
-        "est_from_df_dim": gram_df is not None,
-    }
-    return width
-
-
-def _rerank_pin_width(cand: DataFrame, n_aliases: int | None) -> int:
-    """Alias-count gate for the champion rerank's mention-keyed pin
-    (full width when fired; env override like :func:`_pin_width` —
-    and the override wins even on a legacy meta whose ``n_aliases``
-    is None, so a forced paired measurement is actually forced;
-    round-14 review finding).
-
-    An estimate-gated variant (exact candidate-pair gram-count bound,
-    one agg + 1-row collect) was implemented, MEASURED at both
-    scales, and rejected (round 14): the sf10 bulk rerank estimates
-    2.6×10⁸ products — under the 4×10⁸ gate that is correct for
-    :func:`_score_full`'s shape — yet runs 36.9 s unpinned vs 25.7 s
-    pinned, while sf1's 35.6k-alias bulk runs FASTER unpinned
-    (2.13 s vs 2.56 s). Two shapes, two thresholds — and the simple
-    alias gate at :data:`LINKER_PIN_MIN_ALIASES` already separates
-    the measured-healthy from the measured-unhealthy points at both
-    scales, with no estimate job on any probe."""
-    override = _pin_env_override(cand)
-    if override is not None:
-        LAST_PIN_DECISION["rerank"] = {
-            "n_aliases": n_aliases, "width": override,
-            "reason": "override",
-        }
-        return override
-    width = (
-        _pinned_shuffle_n(cand)
-        if n_aliases is not None and n_aliases >= LINKER_PIN_MIN_ALIASES
-        else 0
+        return _PIN_EST_CACHE[key]
+    pside = F.broadcast(idf.select("gram", F.col("df").alias("_pcnt")))
+    est_row = (
+        mcnt.join(pside, "gram")
+        .agg(F.sum(F.col("_mcnt") * F.col("_pcnt")).alias("_est"))
+        .collect()
     )
-    LAST_PIN_DECISION["rerank"] = {
-        "n_aliases": n_aliases, "width": width, "reason": "alias-gate",
-    }
-    return width
+    est = int(est_row[0]["_est"] or 0)
+    if key is not None:
+        if len(_PIN_EST_CACHE) >= _PIN_EST_CACHE_MAX:
+            _PIN_EST_CACHE.clear()
+        _PIN_EST_CACHE[key] = est
+    return est
 
 
 def _mention_clustered(products: DataFrame, width: int) -> DataFrame:
@@ -538,10 +455,9 @@ def _mention_clustered(products: DataFrame, width: int) -> DataFrame:
     elides it when the child already hashes by mention — exactly what
     silently re-created the collapse on the first attempt.
 
-    ``width`` comes from the caller's estimate-sized gate
-    (:func:`_pin_width` or the rerank's candidate bound) — round 14:
-    the r13 full-width pin shuffled the whole raw product table for
-    parallelism the mid-scale data couldn't use."""
+    ``width`` comes from the caller's gate (:func:`_pin_width`) —
+    round 14: the r13 always-on pin shuffled the whole raw product
+    table for parallelism the mid-scale data couldn't use."""
     return products.repartition(width, F.col("mention"))
 
 
@@ -550,7 +466,6 @@ def _fold_rank(
     alias_map: DataFrame,
     threshold: float,
     k: int,
-    broadcast_max_rows: int,
 ) -> DataFrame:
     """Per-concept fold + threshold + top-k rank — the deterministic
     tail every linker face ends in (scores already rounded to 6dp).
@@ -567,10 +482,11 @@ def _fold_rank(
     already mention-clustered (:func:`_mention_clustered`), which the
     fold's (mention, alias_id) clustering and the window's (mention)
     clustering both reuse — provided ``alias_map`` broadcasts (the
-    serving contract; a >broadcast_max_rows alias dim re-shuffles on
-    alias, which that shape needs anyway)."""
+    serving contract; an alias dim above
+    :data:`ALIAS_BROADCAST_MAX_ROWS` re-shuffles on alias, which that
+    shape needs anyway)."""
     per_concept = (
-        scored.join(_maybe_broadcast(alias_map, broadcast_max_rows), "alias")
+        scored.join(_maybe_broadcast(alias_map), "alias")
         .groupBy("mention", "alias_id")
         .agg(F.max("score").alias("score"))
     )
@@ -588,40 +504,41 @@ def _fold_rank(
 def _score_full(
     mvec: DataFrame,
     postings: DataFrame,
+    idf: DataFrame,
     alias_map: DataFrame,
     threshold: float,
     k: int,
-    broadcast_max_rows: int,
     gram_counts: DataFrame | None = None,
     n_post: int | None = None,
-    gram_df: DataFrame | None = None,
 ) -> DataFrame:
     """Full sparse matmul + fold over PRE-VECTORIZED mentions: one
     equi-join on gram + one (mention, alias) agg. Split out of
     :func:`_link_tail` so the champion path's uncertified tail can
     reuse its already-persisted mention vectors instead of re-running
     gram counting + vectorization (VERDICT r11 next #1b — the risky
-    mentions were paying for vectorization twice).
+    mentions were paying for vectorization twice). ``idf`` is the
+    fit's (gram, idf, df) vocabulary; only its ``df`` is read here,
+    to price the pin estimate.
 
-    When :func:`_pin_width` fires (the estimated gram-join product
-    exceeds :data:`LINKER_PIN_MIN_PRODUCT_ROWS`), the mention side
-    enters the join under a PINNED gram-keyed repartition and the
-    products under a mention-keyed one, both at the estimate-sized
-    width: when the postings dim broadcasts, the join's fan-out (each
-    mention-gram row × its posting list) runs at the CHILD's
-    parallelism, and AQE had coalesced that child to ~1 partition on
-    its tiny pre-explosion bytes (see :func:`_mention_clustered` for
-    the full post-mortem). Keyed by gram, so when postings DON'T
-    broadcast the sort-merge join reuses the exchange instead of
-    adding one. Below the gate the coalesced plan is strictly faster
-    and the pins are skipped — the posting count is already paid for
-    by the broadcast decision, and the estimate job itself is skipped
-    below :data:`LINKER_PIN_MIN_POSTINGS`."""
+    When :func:`_pin_width` fires, the mention side enters the join
+    under a PINNED gram-keyed repartition and the products under a
+    mention-keyed one, both at full width: when the postings dim
+    broadcasts, the join's fan-out (each mention-gram row × its
+    posting list) runs at the CHILD's parallelism, and AQE had
+    coalesced that child to ~1 partition on its tiny pre-explosion
+    bytes (see :func:`_mention_clustered` for the full post-mortem).
+    Keyed by gram, so when postings DON'T broadcast the sort-merge
+    join reuses the exchange instead of adding one. Below the gate
+    the coalesced plan is strictly faster and the pins are skipped —
+    the posting count is already paid for by the broadcast decision,
+    and the estimate job itself is skipped below
+    :data:`LINKER_PIN_MIN_POSTINGS`."""
     if n_post is None:
         n_post = postings.count()
-    post_dim = (F.broadcast(postings) if n_post <= broadcast_max_rows
+    post_dim = (F.broadcast(postings) if n_post <= ALIAS_BROADCAST_MAX_ROWS
                 else postings)
-    width = _pin_width(mvec, postings, n_post, gram_counts, gram_df)
+    width = _pin_width("score_full", mvec, n_post=n_post,
+                       gram_counts=gram_counts, idf=idf)
     mside = mvec.repartition(width, F.col("gram")) if width else mvec
     products = mside.join(post_dim, "gram").select(
         "mention", "alias", (F.col("mw") * F.col("w")).alias("_prod")
@@ -632,32 +549,24 @@ def _score_full(
         products.groupBy("mention", "alias")
         .agg(F.round(F.sum("_prod"), 6).alias("score"))
     )
-    return _fold_rank(scored, alias_map, threshold, k, broadcast_max_rows)
+    return _fold_rank(scored, alias_map, threshold, k)
 
 
 def _link_tail(
-    mentions: DataFrame,
-    mention_col: str,
+    mcounts: DataFrame,
     postings: DataFrame,
     idf: DataFrame,
     alias_map: DataFrame,
     threshold: float,
     k: int,
-    n: int,
-    broadcast_max_rows: int,
 ) -> DataFrame:
-    """The probe half of the linker, shared verbatim between the
-    inline fit (:func:`link_by_tfidf`) and the persisted-index serving
-    path (:func:`link_with_alias_index`) so the two can never drift —
-    the index probe's parity test leans on exactly this."""
+    """The flat probe half of the linker over the distinct mentions'
+    gram counts, shared verbatim between the inline fit
+    (:func:`link_by_tfidf`) and the persisted-index serving path
+    (:func:`link_with_alias_index`) so the two can never drift — the
+    index probe's parity test leans on exactly this."""
     from drugbankner_spark.caching import shared_persist
 
-    distinct_mentions = (
-        mentions.select(F.col(mention_col).alias("mention"))
-        .filter(F.col("mention").isNotNull())
-        .distinct()
-    )
-    mcounts = char_wb_gram_counts(distinct_mentions, "mention", "mention", n)
     # above the pin floor the product-estimate job will scan the
     # mention grams once more — persist them so the mention-source
     # derivation (document trigram extraction on the corpus shapes) is
@@ -668,22 +577,16 @@ def _link_tail(
     n_post = postings.count()
     if n_post >= LINKER_PIN_MIN_POSTINGS:
         mcounts = shared_persist(mcounts)
-    mvec = _mention_vectors(mcounts, idf, broadcast_max_rows)
     # the pin gate's product estimate counts mention gram rows from the
     # RAW gram counts (grams outside the posting vocabulary self-filter
     # in the estimate join), sparing a second vectorization pass
     return _score_full(
-        mvec, postings, alias_map, threshold, k, broadcast_max_rows,
+        _mention_vectors(mcounts, idf), postings, idf, alias_map,
+        threshold, k,
         gram_counts=mcounts.groupBy("gram").agg(
             F.count(F.lit(1)).alias("_mcnt")
         ),
         n_post=n_post,
-        # the fit's own df column prices the estimate's posting side
-        # (VERDICT r14 next #1) — no posting re-aggregation
-        gram_df=(
-            idf.select("gram", F.col("df").alias("_pcnt"))
-            if "df" in idf.columns else None
-        ),
     )
 
 
@@ -692,42 +595,29 @@ def _link_tail(
 #: small query batch touches a handful of the 64 partitions.
 ALIAS_INDEX_BUCKETS = 64
 
-#: Champion-list cap: per gram, only the top-C postings by TF-IDF
-#: weight are stored in the candidate-generation index (impact
-#: ordering, VERDICT r10 next #1). Candidates get an EXACT rerank and
-#: a per-mention completeness certificate routes any mention the cap
+#: Champion policy (impact thresholding, round 13 — VERDICT r12 next
+#: #1): the candidate-generation index keeps, per gram, only the
+#: postings with ``w ≥ w_cut``. Candidates get an EXACT rerank and a
+#: per-mention completeness certificate routes any mention the cut
 #: could have hurt through the full posting join, so results stay
-#: bit-identical to the inline linker at every C.
+#: bit-identical to the inline linker at every w_cut; the cut only
+#: moves the certified fraction and the candidate-gen cost.
 #:
-#: Floor for the AUTO-sized champion cap (and the legacy fixed
-#: default), measured (round 12, sf1 serving fixture — 35.6k
-#: aliases, ~200-mention batch, threshold 0.6/k=1): C=128 → probe
-#: 3.8 s, certified fraction 0.08; C=256 → 5.0 s, 0.18 (bigger
-#: candidate lists, tail still pays); C=512 → 2.2 s, certified 1.0 —
-#: past the point where most grams' full posting lists fit under C,
-#: cutoffs go to 0, every mention certifies, and the fallback tail
-#: never reaches the scheduler. The sweep is non-monotonic by design:
-#: candidate-gen cost grows with C until certification flips to ~1
-#: and deletes the (dominant) tail cost.
-ALIAS_CHAMPION_C = 512
-
-#: Impact-threshold champion policy (round 13, VERDICT r12 next #1):
-#: a FIXED per-gram rank cap C stops tracking the ontology — at 357k
-#: aliases C=512 left 23% of the serving batch uncertified and the
-#: full-join fallback dominated the probe (BENCH_LOCAL_sf10_r12:
-#: certified 0.77, 9.8 s), while a mass-quantile-sized C (16k) flipped
-#: certification to 1.0 but exploded candidate generation on hot grams
-#: (12.3 s, measured this round). The right truncation axis is WEIGHT,
-#: not rank (impact ordering, the IR trick): champions = postings with
-#: ``w ≥ w_cut``. Stop grams have low idf → tiny weights → SHORT
-#: champion lists (cheap candidate gen); rare discriminative grams
-#: keep their full lists (high recall where it matters); and every
-#: truncated gram's cutoff is ≤ ``w_cut`` BY CONSTRUCTION, so the
-#: certificate's pointwise bound stays w_cut·Σmw — any mention with
-#: ≤ (threshold / w_cut)² grams certifies UNCONDITIONALLY; above
-#: that, certification leans on the kth-score rule (near-exact
-#: matches score ~1.0, far above any bound the small cutoffs can
-#: reach), which is exactly the serving regime.
+#: Why WEIGHT, not a per-gram RANK cap C (the retired policy,
+#: measured): a fixed C stops tracking the ontology — at 357k aliases
+#: C=512 left 23% of the serving batch uncertified and the full-join
+#: fallback dominated the probe (BENCH_LOCAL_sf10_r12: certified
+#: 0.77, 9.8 s), while a mass-quantile-sized C (16k) flipped
+#: certification to 1.0 but exploded candidate generation on hot
+#: grams (12.3 s). Under the weight cut, stop grams have low idf →
+#: tiny weights → SHORT champion lists (cheap candidate gen); rare
+#: discriminative grams keep their full lists (high recall where it
+#: matters); and every truncated gram's cutoff is ≤ ``w_cut`` BY
+#: CONSTRUCTION, so the certificate's pointwise bound stays
+#: w_cut·Σmw — any mention with ≤ (threshold / w_cut)² grams
+#: certifies UNCONDITIONALLY; above that, certification leans on the
+#: kth-score rule (near-exact matches score ~1.0, far above any bound
+#: the small cutoffs can reach), which is exactly the serving regime.
 #:
 #: The auto threshold is RMS-relative: ``w_cut = factor / √G*`` with
 #: G* the p95 per-alias gram count — 1/√G* is the root-mean-square
@@ -742,32 +632,29 @@ ALIAS_CHAMPION_C = 512
 #: candidate recall. Result: 5.5 s vs r12's 9.8 s (C=512, certified
 #: 0.77) and 47.3 s flat — both VERDICT r12 #1 "done" bars cleared.
 #:
-#: Round 14 (VERDICT r13 next #2): the factor is now TWO-REGIME by
+#: Round 14 (VERDICT r13 next #2): the factor is TWO-REGIME by
 #: ontology size, both regimes measured. Mid scale (sf1, 35.6k
 #: aliases, G*=16 — where the sf10-only tuning left 11/202 mentions
-#: uncertified and every probe paying the full-join fallback): the
-#: sweep (tools/exp_wcut_sf1.py) measured factor 1.0 → certified
-#: 0.9455 / 5.6 s; 0.9 → **1.0 / 3.2 s**; 0.8 → 1.0 / 3.9 s; 0.7 →
-#: 1.0 / 5.0 s (candidate gen growing); legacy C=512 → 1.0 / 2.9 s —
-#: 0.9 is the largest cut that certifies everything. Large scale
-#: (sf10, 357k aliases): factor 1.0 already certifies 1.0 (the
-#: kth-score rule dominates — near-exact matches outscore any bound
-#: the cutoffs reach) and the shorter lists are strictly faster
-#: (bulk 23.7 s / serving 6.5 s at 1.0 vs 30.7 s / 7.8 s at 0.9,
-#: both measured round 14) — so a single global 0.9 would tax every
-#: large-ontology probe ~30% to fix a regime it isn't in. A fixed
-#: factor stops tracking the ontology exactly the way the fixed
-#: rank cap C did (VERDICT r12 #1); the fit auto-picks by its own
-#: alias count. Boundary MEASURED from above
-#: (tools/exp_wcut_sf3.py — the sf3 corpus's 107k-alias dim: factor
-#: 1.0 certifies 1.0 AND serves faster, 4.48 s vs 5.14 s;
-#: tools/exp_wcut_70k.py, round 15 — a 69.5k-alias hash-cut of the
-#: same dim: factor 1.0 STILL certifies 1.0 with zero risky
-#: mentions, so the large regime is correct down to ~70k) and below
-#: (sf1, 35.6k: only ≤0.9 certifies 1.0). Boundary lowered 100k →
-#: 70k on that round-15 point (VERDICT r14 next #7); the remaining
-#: unmeasured gap (35.6k, 69.5k) runs 0.9, which errs toward
-#: certification — the exactness-preserving direction.
+#: uncertified and every probe paying the full-join fallback): a
+#: factor sweep measured 1.0 → certified 0.9455 / 5.6 s; 0.9 →
+#: **1.0 / 3.2 s**; 0.8 → 1.0 / 3.9 s; 0.7 → 1.0 / 5.0 s (candidate
+#: gen growing); the retired rank cap C=512 → 1.0 / 2.9 s — 0.9 is
+#: the largest cut that certifies everything. Large scale (sf10, 357k
+#: aliases): factor 1.0 already certifies 1.0 (the kth-score rule
+#: dominates — near-exact matches outscore any bound the cutoffs
+#: reach) and the shorter lists are strictly faster (bulk 23.7 s /
+#: serving 6.5 s at 1.0 vs 30.7 s / 7.8 s at 0.9, both measured round
+#: 14) — so a single global 0.9 would tax every large-ontology probe
+#: ~30% to fix a regime it isn't in. The fit auto-picks by its own
+#: alias count. Boundary MEASURED from above (the sf3 corpus's
+#: 107k-alias dim: factor 1.0 certifies 1.0 AND serves faster,
+#: 4.48 s vs 5.14 s; round 15, a 69.5k-alias hash-cut of the same
+#: dim: factor 1.0 STILL certifies 1.0 with zero risky mentions, so
+#: the large regime is correct down to ~70k) and below (sf1, 35.6k:
+#: only ≤0.9 certifies 1.0). Boundary lowered 100k → 70k on that
+#: round-15 point (VERDICT r14 next #7); the remaining unmeasured gap
+#: (35.6k, 69.5k) runs 0.9, which errs toward certification — the
+#: exactness-preserving direction.
 ALIAS_WCUT_RMS_FACTOR = 0.9
 
 #: Large-ontology regime: factor and boundary (see above).
@@ -787,20 +674,18 @@ _CERT_MARGIN = 1e-6
 #: ~10⁴ distinct aliases the whole posting table is a few MB and the
 #: flat bucket-pruned join beats that overhead outright (sf0.1 serving
 #: fixture, 3.5k aliases: flat 0.85 s vs champion 2.6 s); above it the
-#: per-gram posting lists outgrow champion_c and candidate generation
-#: stops tracking the ontology (sf1, 35.6k aliases: champion 5.1 s vs
-#: flat 6.2 s — and the gap widens with the dim). The probe auto-picks
-#: by the ``n_aliases`` the index meta carries; ``use_champions``
-#: overrides in either direction.
+#: flat join's per-gram posting lists grow with the ontology while
+#: candidate generation reads only the champions (sf1, 35.6k aliases:
+#: champion 5.1 s vs flat 6.2 s — and the gap widens with the dim).
+#: The probe serves champions exactly when the ``n_aliases`` the index
+#: meta carries clears this crossover, on every batch shape.
 CHAMPION_AUTO_MIN_ALIASES = 10_000
 
-#: (applicationId, index path) → (n, n_buckets, champion_c|None,
-#: n_aliases|None) fit metadata — the meta parquet is 1 row and
-#: immutable per path, so one read per session is enough; re-reading
-#: it per probe cost a driver job on the serving hot path.
-_ALIAS_META_CACHE: dict[
-    tuple[str, str], tuple[int, int, int | None, int | None]
-] = {}
+#: (applicationId, index path) → (n, n_buckets, n_aliases) fit
+#: metadata — the meta parquet is 1 row and immutable per path, so one
+#: read per session is enough; re-reading it per probe cost a driver
+#: job on the serving hot path.
+_ALIAS_META_CACHE: dict[tuple[str, str], tuple[int, int, int]] = {}
 
 
 def _gram_bucket(col, n_buckets: int):
@@ -884,8 +769,6 @@ def save_alias_index(
     n: int = 3,
     max_df_ratio: float | None = None,
     n_buckets: int = ALIAS_INDEX_BUCKETS,
-    champion_c: int | str | None = "auto",
-    champion_w_cut: float | None = None,
 ) -> None:
     """Fit the TF-IDF alias model ONCE and persist it as a serving
     index — the production shape the corpus-scale bench exposed: the
@@ -895,69 +778,43 @@ def save_alias_index(
     fixed. Fit once → probe many flattens that to the probe's own
     work.
 
-    Layout: ``postings`` and ``idf`` land PARTITIONED BY
-    ``gram_bucket = pmod(xxhash64(gram), n_buckets)`` so a probe reads
-    only the partitions its mention grams hash into (partition
+    Layout: ``postings`` and ``idf`` (gram, idf, df) land PARTITIONED
+    BY ``gram_bucket = pmod(xxhash64(gram), n_buckets)`` so a probe
+    reads only the partitions its mention grams hash into (partition
     pruning — the lsh/ivf on-disk index discipline); ``alias_map`` is
     a plain dim. The bucket hash is a STORAGE layout, not an oracle
     surface — probe results are bit-identical to the inline linker
     regardless of bucketing.
 
-    ``champion_c`` (VERDICT r10 next #1): additionally persist the
-    impact-ordered serving layout —
+    Every index also carries the impact-ordered serving layout (the
+    champion policy — see :data:`ALIAS_WCUT_RMS_FACTOR`):
 
-    - ``champions``: per gram, the top-``champion_c`` postings by
-      weight (ties by alias asc), gram-bucket-partitioned — the
-      CANDIDATE-generation index, whose per-gram posting lists are
-      bounded by C instead of growing with the ontology;
+    - ``champions``: the postings with ``w ≥ w_cut``, gram-bucket-
+      partitioned — the CANDIDATE-generation index: stop grams keep
+      short lists, rare grams their full lists;
     - ``cutoffs``: per gram, the largest weight the champion list
-      EXCLUDED (0 when the gram's df ≤ C) — the per-mention
-      completeness certificate's raw material;
+      EXCLUDED (≤ w_cut by construction; only grams with exclusions
+      get a row — the probe's left join + coalesce supplies the
+      zeros) — the per-mention completeness certificate's raw
+      material;
     - ``alias_vecs``: the same posting rows re-partitioned by
       ``alias_bucket = pmod(xxhash64(alias), n_buckets)`` — the
       exact-rerank side, keyed by the candidate pair's alias so the
       rerank join is bounded by candidates, never by the ontology.
 
-    ``champion_c=None`` skips the serving layout (postings/idf probes
-    still work); the probe auto-detects what the index carries.
-
-    ``champion_c="auto"`` (the default, round 13 — VERDICT r12 next
-    #1) switches the truncation axis from RANK to WEIGHT (impact
-    thresholding): champions = postings with ``w ≥ w_cut``, cutoffs =
-    each gram's max EXCLUDED weight (≤ w_cut by construction, 0 when
-    nothing excluded — only grams with exclusions get a row; the
-    probe's left join + coalesce supplies the zeros). A fixed C stops
-    certifying as the ontology grows (C=512 → certified 0.77 at 357k
-    aliases, fallback-dominated probe) and a mass-sized C explodes
-    candidate generation on hot grams (C=16384 → certified 1.0 but
-    12.3 s — both measured, BENCH_LOCAL_sf10); the weight cut gives
-    short lists exactly where lists are hot (low-idf grams) and full
-    lists where recall lives (rare grams), plus the analytic
-    certification story in :data:`ALIAS_WCUT_RMS_FACTOR`'s
-    comment. ``champion_w_cut`` overrides the auto threshold
-    (:func:`_auto_champion_w_cut`); the chosen value is persisted in
-    the meta parquet (``champion_c = -1`` marks the weight policy).
-    An explicit INT ``champion_c`` keeps the legacy rank policy.
-    Results are policy-independent — the probe's certificate routes
-    anything truncation could hurt through the full join; the policy
-    only moves the certified fraction and candidate-gen cost. The
-    weight-policy fit needs NO ranking pass at all (two filters + a
-    max agg), so the fit also gets cheaper.
-
-    Build-time skew (ADVICE r11 — CLOSED round 12): the champion
-    ranking now runs through ``scale.sharded_topk`` — shard-local
-    top-(C+1) then a bounded re-rank — so no window partition ever
-    holds more than shards×(C+1) rows regardless of how hot a stop
-    gram is (AQE cannot split skewed windows; the two-phase shape
-    removes the skew structurally). ``max_df_ratio`` remains the
-    PROBE-side stop-gram lever (it shrinks the posting join itself),
-    no longer a build-time necessity."""
+    ``w_cut`` is auto-sized from the fit's own shape
+    (:func:`_auto_champion_w_cut`, factor picked by the alias count)
+    and persisted in the meta parquet with ``n``, ``n_buckets``,
+    ``max_df_ratio`` and ``n_aliases``. The champion/cutoff split is
+    two filters + a map-side-combinable max agg — no ranking pass,
+    nothing skew-sensitive at build time; ``max_df_ratio`` remains the
+    PROBE-side stop-gram lever (it shrinks the posting join itself)."""
     from drugbankner_spark.operators.similarity import (
         invalidate_index_cache,
     )
 
     # the fit is consumed by up to five actions inside this function
-    # (auto-C sizing, postings/champions/cutoffs/alias_vecs writes);
+    # (w_cut sizing, postings/champions/cutoffs/alias_vecs writes);
     # build_alias_vectors persists it (counts/postings/idf) for the
     # function's scope so the TF-IDF fit runs once. save_alias_index is
     # eager (every write completes before return), so the release is
@@ -987,41 +844,38 @@ def save_alias_index(
     # alias_map feeds the /alias_map write below plus the fit's
     # distinct-texts scan — persist so the distinct shuffle runs once
     # per publish (round 15). The fit's own N (needed up front: the
-    # auto weight policy's RMS factor is two-regime by ontology size,
-    # round 14; persisted in the meta below) now rides out of the fit
-    # itself — the separate distinct-count job is gone (round 16).
+    # RMS factor is two-regime by ontology size, round 14; persisted
+    # in the meta below) rides out of the fit itself (round 16).
     alias_map = shared_persist(alias_map)
-    w_cut: float | None = None
-    if champion_c == "auto":
-        if champion_w_cut is not None:
-            w_cut = float(champion_w_cut)
-            # the auto path's quantile collect doubles as the postings
-            # cache warm; with an explicit cut, warm it here so the
-            # write pool's concurrent consumers (postings/champions/
-            # alias_vecs writes, cutoffs agg) read blocks, not four
-            # cold copies of the fit (round 16, guide §2.3/§5)
-            postings.count()
-        else:
-            w_cut = _auto_champion_w_cut(
-                postings,
-                rms_factor=(
-                    ALIAS_WCUT_RMS_FACTOR_LARGE
-                    if n_aliases >= ALIAS_WCUT_LARGE_MIN_ALIASES
-                    else ALIAS_WCUT_RMS_FACTOR
-                ),
-            )
-        champion_c = -1  # meta sentinel: weight-policy champions
-    elif isinstance(champion_c, str):
-        raise ValueError(
-            f"save_alias_index: champion_c={champion_c!r} — expected "
-            "'auto', an int, or None"
+    # the quantile collect doubles as the postings cache warm, so the
+    # write pool's concurrent consumers read blocks, not cold copies
+    # of the fit (round 16, guide §2.3/§5)
+    w_cut = _auto_champion_w_cut(
+        postings,
+        rms_factor=(
+            ALIAS_WCUT_RMS_FACTOR_LARGE
+            if n_aliases >= ALIAS_WCUT_LARGE_MIN_ALIASES
+            else ALIAS_WCUT_RMS_FACTOR
+        ),
+    )
+    # The probe's certificate contract is the only invariant: every
+    # EXCLUDED posting of gram g has w ≤ cutoff(g). NOT persisted
+    # (round 16): each feeds exactly ONE action (its write), reading
+    # the warm postings cache — a persist would only copy blocks.
+    champs = postings.filter(F.col("w") >= F.lit(w_cut))
+    cuts = (
+        postings.filter(F.col("w") < F.lit(w_cut))
+        .groupBy("gram")
+        .agg(F.max("w").alias("cutoff"))
+    )
+
+    def _by_gram(df: DataFrame, sub: str):
+        return lambda: _write_bucket_partitioned(
+            df.withColumn(
+                "gram_bucket", _gram_bucket(F.col("gram"), n_buckets)
+            ), path + sub, n_buckets, "gram_bucket",
         )
-    elif champion_w_cut is not None:
-        raise ValueError(
-            "save_alias_index: champion_w_cut only applies to the "
-            "weight policy (champion_c='auto'); got an explicit "
-            f"champion_c={champion_c!r} as well"
-        )
+
     # repartition ON the bucket key before the partitioned write: each
     # task then owns whole buckets, so the layout is ~1 file per bucket
     # instead of (shuffle tasks × buckets) tiny files — the probe-side
@@ -1035,122 +889,43 @@ def save_alias_index(
     # (guide §2.6, overlap independent jobs) instead of serially. The
     # files written are identical; only the wall clock changes
     # (round 15: publish ~2x faster at sf0.1).
-    write_jobs = [
-        ("postings", lambda: _write_bucket_partitioned(
-            postings.withColumn(
-                "gram_bucket", _gram_bucket(F.col("gram"), n_buckets)
-            ), path + "/postings", n_buckets, "gram_bucket",
-        )),
-        ("idf", lambda: _write_bucket_partitioned(
-            idf.withColumn(
-                "gram_bucket", _gram_bucket(F.col("gram"), n_buckets)
-            ), path + "/idf", n_buckets, "gram_bucket",
-        )),
-        ("alias_map", lambda: alias_map.write.mode("overwrite").parquet(
-            path + "/alias_map"
-        )),
-    ]
-    subs = ["/postings", "/idf", "/alias_map", "/meta"]
-    if champion_c is not None:
-        if w_cut is not None:
-            # WEIGHT policy (round 13): champions/cutoffs are two
-            # complementary filters + one map-side-combinable max agg
-            # — no ranking pass, no window, nothing skew-sensitive.
-            # The probe's certificate contract is the only invariant:
-            # every EXCLUDED posting of gram g has w ≤ cutoff(g).
-            # NOT persisted (round 16): with the take(1) emptiness
-            # probes gone each feeds exactly ONE action (its write),
-            # reading the warm postings cache the w_cut collect above
-            # materialized — a persist would only copy blocks.
-            champs = postings.filter(F.col("w") >= F.lit(w_cut))
-            cuts = (
-                postings.filter(F.col("w") < F.lit(w_cut))
-                .groupBy("gram")
-                .agg(F.max("w").alias("cutoff"))
-            )
-        else:
-            # legacy RANK policy via scale.sharded_topk (round 12,
-            # ADVICE r11): the two-phase top-k bounds every window
-            # partition at shards×(C+1) rows regardless of how hot a
-            # stop gram is (AQE cannot split skewed windows). Ranked
-            # to C+1 because the cutoff — the max weight the champion
-            # list EXCLUDED — is the weight at global rank C+1 under
-            # (w desc, alias asc); grams whose postings all fit under
-            # C keep cutoff 0.
-            from drugbankner_spark.operators.scale import sharded_topk
-
-            ranked = shared_persist(sharded_topk(
-                postings, ["gram"], [F.desc("w"), F.asc("alias")],
-                champion_c + 1, rank_col="_rn",
-            ))
-            # materialize the ranking ONCE before the write pool fans
-            # its two consumers (champs + cuts writes) out over it
-            # concurrently — the weight path gets this for free from
-            # the w_cut collect; the legacy rank path pays one count
-            # (round 16, same concurrent-cold-cache rationale as
-            # dedup.minhash_band_pairs)
-            ranked.count()
-            champs = ranked.filter(F.col("_rn") <= champion_c) \
-                .drop("_rn")
-            cuts = ranked.groupBy("gram").agg(
-                F.coalesce(
-                    F.max(F.when(F.col("_rn") > champion_c,
-                                 F.col("w"))),
-                    F.lit(0.0),
-                ).alias("cutoff")
-            )
-        write_jobs += [
-            ("champions", lambda: _write_bucket_partitioned(
-                champs.withColumn(
-                    "gram_bucket", _gram_bucket(F.col("gram"), n_buckets)
-                ), path + "/champions", n_buckets, "gram_bucket",
-            )),
-            ("cutoffs", lambda: _write_bucket_partitioned(
-                cuts.withColumn(
-                    "gram_bucket", _gram_bucket(F.col("gram"), n_buckets)
-                ), path + "/cutoffs", n_buckets, "gram_bucket",
-            )),
-            ("alias_vecs", lambda: _write_bucket_partitioned(
-                postings.withColumn(
-                    "alias_bucket",
-                    _gram_bucket(F.col("alias"), n_buckets),
-                ), path + "/alias_vecs", n_buckets, "alias_bucket",
-            )),
-        ]
-        subs += ["/champions", "/cutoffs", "/alias_vecs"]
+    #
     # Fit metadata rides WITH the index (ADVICE r09: a probe whose n /
     # n_buckets differ from the fit silently prunes away every posting
     # — grams hash into different buckets — returning wrong/missing
     # matches with no error). A 1-row parquet, not a sidecar JSON, so
-    # the layout stays portable to any Hadoop-compatible FS. Round 12:
-    # also carries n_aliases (distinct alias strings — the fit's own
-    # N, counted once above) so probes can auto-gate the champion
-    # machinery by ontology size.
-    # Built as range(1).select(lit…), not createDataFrame(list): a
-    # python-list local relation executes through a Python worker, and
-    # inside a parquet write task that round trip measured ~5 s per
-    # publish (round 16) — for one metadata row. Literal columns plan
-    # as a pure-JVM LocalTableScan.
-    def _lit_or_null(v, typ):
-        return (F.lit(v) if v is not None
-                else F.lit(None)).cast(typ)
-
-    write_jobs.append(
+    # the layout stays portable to any Hadoop-compatible FS. It also
+    # carries n_aliases (distinct alias strings — the fit's own N) so
+    # probes gate the champion machinery by ontology size. Built as
+    # range(1).select(lit…), not createDataFrame(list): a python-list
+    # local relation executes through a Python worker, and inside a
+    # parquet write task that round trip measured ~5 s per publish
+    # (round 16) — for one metadata row. Literal columns plan as a
+    # pure-JVM LocalTableScan.
+    write_jobs = [
+        ("postings", _by_gram(postings, "/postings")),
+        ("idf", _by_gram(idf, "/idf")),
+        ("alias_map", lambda: alias_map.write.mode("overwrite").parquet(
+            path + "/alias_map"
+        )),
+        ("champions", _by_gram(champs, "/champions")),
+        ("cutoffs", _by_gram(cuts, "/cutoffs")),
+        ("alias_vecs", lambda: _write_bucket_partitioned(
+            postings.withColumn(
+                "alias_bucket",
+                _gram_bucket(F.col("alias"), n_buckets),
+            ), path + "/alias_vecs", n_buckets, "alias_bucket",
+        )),
         ("meta", lambda: spark.range(1).select(
-            _lit_or_null(int(n), "int").alias("n"),
-            _lit_or_null(int(n_buckets), "int").alias("n_buckets"),
-            _lit_or_null(
-                float(max_df_ratio) if max_df_ratio is not None else None,
-                "double").alias("max_df_ratio"),
-            _lit_or_null(
-                int(champion_c) if champion_c is not None else None,
-                "int").alias("champion_c"),
-            _lit_or_null(int(n_aliases), "int").alias("n_aliases"),
-            _lit_or_null(
-                float(w_cut) if w_cut is not None else None,
-                "double").alias("champion_w_cut"),
-        ).coalesce(1).write.mode("overwrite").parquet(path + "/meta"))
-    )
+            F.lit(int(n)).cast("int").alias("n"),
+            F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
+            F.lit(
+                float(max_df_ratio) if max_df_ratio is not None else None
+            ).cast("double").alias("max_df_ratio"),
+            F.lit(int(n_aliases)).cast("int").alias("n_aliases"),
+            F.lit(float(w_cut)).cast("double").alias("champion_w_cut"),
+        ).coalesce(1).write.mode("overwrite").parquet(path + "/meta")),
+    ]
     from concurrent.futures import ThreadPoolExecutor
 
     # 3 in flight: enough to fill each write's commit/straggler tail,
@@ -1169,8 +944,8 @@ def save_alias_index(
     with ThreadPoolExecutor(max_workers=3) as _pool:
         list(_pool.map(_run_write, write_jobs))
     release_since(_mark)
-    for sub in subs:
-        invalidate_index_cache(spark, path + sub)
+    for name, _fn in write_jobs:
+        invalidate_index_cache(spark, f"{path}/{name}")
     _ALIAS_META_CACHE.pop(
         (spark.sparkContext.applicationId, path), None
     )
@@ -1185,9 +960,7 @@ def link_with_alias_index(
     k: int = 1,
     n: int | None = None,
     n_buckets: int | None = None,
-    broadcast_max_rows: int = ALIAS_BROADCAST_MAX_ROWS,
     prune_buckets: bool = True,
-    use_champions: bool | None = None,
     probe_stats: dict | None = None,
 ) -> DataFrame:
     """Probe a :func:`save_alias_index` layout: identical results to
@@ -1197,25 +970,27 @@ def link_with_alias_index(
     driver-side collect (≤ n_buckets integers — a constant, not data
     scale).
 
-    ``use_champions`` (default: auto — on when the index carries the
-    champion layout AND ``prune_buckets`` is True, i.e. the
-    small-batch serving shape, AND the index's ``n_aliases`` meta is
-    ≥ :data:`CHAMPION_AUTO_MIN_ALIASES` — below that crossover the
+    Champion probe — on exactly when the index meta's ``n_aliases``
+    is ≥ :data:`CHAMPION_AUTO_MIN_ALIASES` (below that crossover the
     flat bucket-pruned join beats the machinery's fixed overhead
-    outright; see the constant's measured numbers): candidate
-    generation joins mention
-    grams against the top-C champion postings per gram (bounded by C,
-    not the ontology), candidates get an EXACT rerank through their
-    full alias vectors (a per-pair join bounded by the candidate
-    count), and a per-mention completeness certificate decides whether
-    the champion result is provably the full result:
+    outright; see the constant's measured numbers), on every batch
+    shape: the weight-thresholded champion table is a small fraction
+    of the postings, so candidate generation is far cheaper than the
+    full join even on a corpus-scale batch (measured on the
+    357k-alias sf10 fixture's 4548-mention bulk batch: champion
+    29.9 s vs 185 s flat, certified fraction 1.0). Candidate
+    generation joins mention grams against the champion postings,
+    candidates get an EXACT rerank through their full alias vectors
+    (a per-pair join bounded by the candidate count), and a
+    per-mention completeness certificate decides whether the champion
+    result is provably the full result:
 
         any non-candidate alias a of mention m shares only grams g
         where w(g, a) ≤ cutoff(g) — and w(g, a) = 0 on every mention
-        gram with cutoff 0 (df ≤ C means ALL of that gram's postings
-        are champions, so sharing it would have made a a candidate).
-        With G+ = the mention's grams with cutoff > 0, and using
-        ‖w(·, a)‖ ≤ 1 (alias rows are unit vectors):
+        gram with cutoff 0 (nothing excluded means ALL of that gram's
+        postings are champions, so sharing it would have made a a
+        candidate). With G+ = the mention's grams with cutoff > 0, and
+        using ‖w(·, a)‖ ≤ 1 (alias rows are unit vectors):
 
         score(m, a) ≤ B(m) = min( Σ_{G+} mw·cutoff,
                                   √(Σ_{G+} mw²) · √(min(1, Σ_{G+} cutoff²)) )
@@ -1230,23 +1005,8 @@ def link_with_alias_index(
     the exact answer. The remaining (uncertified) mentions re-run
     through the full posting join REUSING the already-persisted
     mention vectors (vectorization is never paid twice), so the probe
-    is EXACT at every champion_c; C only moves the certified fraction.
-
-    Bulk-shape auto gate, policy-dependent (round 13): under the
-    LEGACY rank policy the bulk default stays champions-OFF (VERDICT
-    r11 next #1 — a rank-capped champion table approaches the full
-    posting join's output on a corpus-scale batch, so the machinery
-    was strictly additive: 10.17 s vs 7.9 s flat at sf1), and the
-    auto default follows ``prune_buckets``. Under the WEIGHT policy
-    the champion table is a small fraction of the postings (only
-    dominant components survive the cut), so candidate generation is
-    far cheaper than the full join on EVERY batch shape — measured on
-    the 357k-alias sf10 fixture's 4548-mention bulk batch: champion
-    29.9 s vs 185 s flat (6×), certified fraction 1.0 — and the auto
-    default uses champions whenever the ontology clears
-    :data:`CHAMPION_AUTO_MIN_ALIASES`, regardless of
-    ``prune_buckets``. Pass ``use_champions`` explicitly to force
-    either direction (both stay exact).
+    is EXACT at every w_cut; the cut only moves the certified
+    fraction.
 
     The champion path runs ONE eager bounded driver job per probe
     (``risky.count()``, ≤ the distinct-mention count; the subtrees it
@@ -1261,9 +1021,9 @@ def link_with_alias_index(
     ``n`` / ``n_buckets`` default to the values persisted by
     :func:`save_alias_index` (the ``meta`` parquet); passing explicit
     values that disagree with the fit raises instead of silently
-    pruning every posting into the wrong bucket (ADVICE r09).
-    Pre-metadata indexes (no ``meta`` subdir) fall back to the module
-    defaults for backward compatibility.
+    pruning every posting into the wrong bucket (ADVICE r09). A
+    directory without ``meta`` is not an index this module wrote and
+    raises ``ValueError`` naming the path.
 
     ``prune_buckets``: bucket pruning costs one extra job (mention
     grams → distinct bucket ids → driver collect) to save index scan
@@ -1281,31 +1041,22 @@ def link_with_alias_index(
     ``release_since()``) between probe batches, after the consuming
     action — the caches are needed DURING the returned DataFrame's
     execution, so the probe cannot release them itself (ADVICE r11)."""
+    from drugbankner_spark.caching import shared_persist
     from drugbankner_spark.operators.similarity import _read_index
 
     mkey = (spark.sparkContext.applicationId, path)
     if mkey not in _ALIAS_META_CACHE:
-        try:
-            meta = _read_index(spark, path + "/meta").collect()[0]
-            md = meta.asDict()
-            _ALIAS_META_CACHE[mkey] = (
-                int(meta["n"]), int(meta["n_buckets"]),
-                int(md["champion_c"])
-                if md.get("champion_c") is not None else None,
-                int(md["n_aliases"])
-                if md.get("n_aliases") is not None else None,
+        if not _dir_has_parquet(spark, path + "/meta"):
+            raise ValueError(
+                f"alias index at {path!r} has no /meta fit metadata — "
+                "not a save_alias_index layout; rebuild it with "
+                "save_alias_index"
             )
-        except Exception:
-            # legacy layout without fit metadata — trust the caller
-            _ALIAS_META_CACHE[mkey] = (
-                n if n is not None else 3,
-                n_buckets if n_buckets is not None
-                else ALIAS_INDEX_BUCKETS,
-                None,
-                None,
-            )
-    fit_n, fit_buckets, fit_champion_c, fit_n_aliases = \
-        _ALIAS_META_CACHE[mkey]
+        meta = _read_index(spark, path + "/meta").collect()[0]
+        _ALIAS_META_CACHE[mkey] = (
+            int(meta["n"]), int(meta["n_buckets"]), int(meta["n_aliases"])
+        )
+    fit_n, fit_buckets, fit_n_aliases = _ALIAS_META_CACHE[mkey]
     if n is not None and n != fit_n:
         raise ValueError(
             f"alias index at {path!r} was fit with n={fit_n}, "
@@ -1318,35 +1069,8 @@ def link_with_alias_index(
             f"{fit_buckets}, probe requested n_buckets={n_buckets}"
         )
     n, n_buckets = fit_n, fit_buckets
-    if use_champions is None:
-        # auto (see docstring's bulk-gate rationale): weight-policy
-        # indexes (champion_c == -1) serve champions on EVERY batch
-        # shape once the ontology clears the size crossover — their
-        # champion table is a small fraction of the postings, so
-        # candidate-gen beats the flat join even corpus-scale
-        # (measured 6× at sf10 bulk). Legacy rank-policy indexes keep
-        # the r11/r12 rule: serving shape (prune_buckets) only.
-        big_enough = (fit_n_aliases is None
-                      or fit_n_aliases >= CHAMPION_AUTO_MIN_ALIASES)
-        if fit_champion_c == -1:
-            use_champions = big_enough
-        else:
-            use_champions = (
-                fit_champion_c is not None and prune_buckets
-                and big_enough
-            )
-    elif use_champions and fit_champion_c is None:
-        raise ValueError(
-            f"alias index at {path!r} was saved without champion "
-            "lists (champion_c=None); rebuild with save_alias_index("
-            "..., champion_c=C) to serve the champion probe"
-        )
 
-    distinct_mentions = (
-        mentions.select(F.col(mention_col).alias("mention"))
-        .filter(F.col("mention").isNotNull())
-        .distinct()
-    )
+    distinct_mentions = _distinct_mentions(mentions, mention_col)
 
     def _gram_side(sub: str, cols: list[str], buckets) -> DataFrame:
         out = _read_index(spark, path + sub)
@@ -1366,57 +1090,24 @@ def link_with_alias_index(
             ).distinct().collect()
         ]
     postings = _gram_side("/postings", ["gram", "alias", "w"], buckets)
-    idf_raw = _read_index(spark, path + "/idf")
-    if buckets is not None:
-        idf_raw = idf_raw.filter(F.col("gram_bucket").isin(buckets))
-    idf = idf_raw.select("gram", "idf")
-    # published per-gram posting counts (VERDICT r14 next #1): the
-    # pin gate's product estimate prices its posting side from this
-    # stored vocabulary dim — restart-stable, no posting-table agg
-    # per new batch plan. Legacy indexes predate the column.
-    gram_df = (
-        idf_raw.select("gram", F.col("df").alias("_pcnt"))
-        if "df" in idf_raw.columns else None
-    )
+    idf = _gram_side("/idf", ["gram", "idf", "df"], buckets)
     alias_map = _read_index(spark, path + "/alias_map")
-    if not use_champions:
+    if fit_n_aliases < CHAMPION_AUTO_MIN_ALIASES:
         if probe_stats is not None:
             probe_stats.update(
                 used_champions=False,
                 n_mentions=distinct_mentions.count(),
                 n_risky=None, certified_fraction=None,
             )
-        # mirror _link_tail's estimate plumbing (round-14 review
-        # finding: this path passed neither gram_counts nor n_post,
-        # so a mid-scale index's estimate job re-derived the mention
-        # vectors and re-counted postings)
-        from drugbankner_spark.caching import shared_persist as _sp
-
-        flat_counts = mcounts
-        n_post = postings.count()
-        if n_post >= LINKER_PIN_MIN_POSTINGS:
-            flat_counts = _sp(mcounts)
-        return _score_full(
-            _mention_vectors(flat_counts, idf, broadcast_max_rows),
-            postings, alias_map, threshold, k, broadcast_max_rows,
-            gram_counts=flat_counts.groupBy("gram").agg(
-                F.count(F.lit(1)).alias("_mcnt")
-            ),
-            n_post=n_post,
-            gram_df=gram_df,
-        )
-
-    from drugbankner_spark.caching import shared_persist
+        return _link_tail(mcounts, postings, idf, alias_map, threshold, k)
 
     champions = _gram_side("/champions", ["gram", "alias", "w"], buckets)
     cutoffs = _gram_side("/cutoffs", ["gram", "cutoff"], buckets)
     # mvec feeds candidate gen, the rerank, the certificate bound AND
     # the uncertified tail (VERDICT r11 next #1b — one vectorization)
-    mvec = shared_persist(
-        _mention_vectors(mcounts, idf, broadcast_max_rows)
-    )
+    mvec = shared_persist(_mention_vectors(mcounts, idf))
     cand = shared_persist(
-        mvec.join(_maybe_broadcast(champions, broadcast_max_rows), "gram")
+        mvec.join(_maybe_broadcast(champions), "gram")
         .select("mention", "alias")
         .distinct()
     )
@@ -1437,28 +1128,20 @@ def link_with_alias_index(
         avecs = _read_index(spark, path + "/alias_vecs").select(
             "alias", "gram", "w"
         )
-    # rerank products pin by the alias gate (round 14: the r13 20k
-    # threshold taxed mid-scale serving — raised to 100k with sf1/sf10
-    # bulk measurements on both sides; an estimate-gated variant was
-    # measured and rejected, see _rerank_pin_width). Legacy metas
-    # without n_aliases do not auto-pin (skip-below-threshold policy)
-    # but the env override still applies.
     rerank_products = (
         cand.join(avecs, "alias")
         .join(mvec, ["mention", "gram"])
         .select("mention", "alias",
                 (F.col("mw") * F.col("w")).alias("_prod"))
     )
-    width = _rerank_pin_width(cand, fit_n_aliases)
+    width = _pin_width("rerank", mvec, n_aliases=fit_n_aliases)
     if width:
         rerank_products = _mention_clustered(rerank_products, width)
     scored = (
         rerank_products.groupBy("mention", "alias")
         .agg(F.round(F.sum("_prod"), 6).alias("score"))
     )
-    ranked = shared_persist(
-        _fold_rank(scored, alias_map, threshold, k, broadcast_max_rows)
-    )
+    ranked = shared_persist(_fold_rank(scored, alias_map, threshold, k))
     # completeness certificate: B(m) bounds every NON-candidate pair's
     # score; a mention is certified when no missed pair could enter
     # its top-k or raise a surviving concept's folded max. Both factors
@@ -1514,11 +1197,7 @@ def link_with_alias_index(
     # non-champion probe, restricted to the risky mentions — REUSING
     # the persisted mention vectors (no second vectorization)
     risky_out = _score_full(
-        mvec.join(
-            _maybe_broadcast(risky, broadcast_max_rows),
-            "mention", "left_semi",
-        ),
-        postings, alias_map, threshold, k, broadcast_max_rows,
-        gram_df=gram_df,
+        mvec.join(_maybe_broadcast(risky), "mention", "left_semi"),
+        postings, idf, alias_map, threshold, k,
     )
     return safe_out.unionByName(risky_out)

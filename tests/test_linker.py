@@ -274,8 +274,9 @@ def test_alias_index_probe_prunes_partitions(spark, tmp_path):
 def test_alias_index_probe_validates_fit_params(spark, tmp_path):
     # ADVICE r09: a probe whose n / n_buckets differ from the fit used
     # to hash grams into buckets would silently prune every posting —
-    # the persisted meta parquet must make that a loud error, and an
-    # unparameterized probe must auto-load the fit values.
+    # the persisted meta parquet must make that a loud error, an
+    # unparameterized probe must auto-load the fit values, and an
+    # index without meta must fail loudly, naming its path.
     import pytest
 
     from drugbankner_spark.operators.linker import (
@@ -308,59 +309,15 @@ def test_alias_index_probe_validates_fit_params(spark, tmp_path):
         link_with_alias_index(
             spark, path, mentions, "mention", n_buckets=64
         )
+    # a directory without the /meta fit metadata is rejected by path
+    # instead of being probed with guessed n / n_buckets
+    import shutil
 
-
-def test_champion_probe_exact_even_at_champion_c_1(spark, tmp_path):
-    # VERDICT r10 next #1: the champion-list probe must be EXACT at
-    # every champion_c — candidates get an exact rerank, and the
-    # per-mention certificate routes any mention the cap could have
-    # hurt through the full posting join. champion_c=1 is the
-    # adversarial setting: almost every candidate list is truncated,
-    # so correctness rests entirely on the certificate + fallback.
-    from drugbankner_spark.operators.linker import (
-        link_by_tfidf,
-        link_with_alias_index,
-        save_alias_index,
-    )
-
-    aliases = spark.createDataFrame(
-        [("aspirin", 1), ("acetylsalicylic acid", 2), ("ecotrin", 3),
-         ("aspirin tablet", 4), ("aspirin gel", 5), ("asp", 6),
-         ("headache", 7), ("tension headache", 8), ("fever", 9),
-         ("hay fever", 10), ("yellow fever", 11)],
-        ["alias", "alias_id"],
-    )
-    mentions = spark.createDataFrame(
-        [("aspirin",), ("asprin",), ("aspirin tablets",),
-         ("tension headaches",), ("high fever",), ("hay fevers",),
-         ("zzz",)],
-        ["mention"],
-    )
-    for c in (1, 2, 1000):
-        path = str(tmp_path / f"idx_c{c}")
-        save_alias_index(
-            aliases, "alias", "alias_id", path, champion_c=c
-        )
-        for thr, k in [(0.05, 3), (0.3, 1), (0.7, 2)]:
-            inline = sorted(
-                tuple(r) for r in link_by_tfidf(
-                    mentions, "mention", aliases, "alias", "alias_id",
-                    threshold=thr, k=k,
-                ).collect()
-            )
-            # (use_champions=True forces the champion path — the tiny
-            # fixture sits under the round-12 n_aliases auto-gate)
-            for prune, champs in ((True, True), (True, None),
-                                  (False, None)):
-                probe = sorted(
-                    tuple(r) for r in link_with_alias_index(
-                        spark, path, mentions, "mention",
-                        threshold=thr, k=k, prune_buckets=prune,
-                        use_champions=champs,
-                    ).collect()
-                )
-                assert probe == inline and probe, (c, thr, k, prune,
-                                                   champs)
+    bare = str(tmp_path / "no_meta_idx")
+    save_alias_index(aliases, "alias", "alias_id", bare)
+    shutil.rmtree(bare + "/meta")
+    with pytest.raises(ValueError, match="no_meta_idx"):
+        link_with_alias_index(spark, bare, mentions, "mention")
 
 
 def test_auto_champion_w_cut_quantile_math(spark):
@@ -433,20 +390,17 @@ def test_wcut_factor_two_regime_by_alias_count(spark, tmp_path,
                ) < 1e-9
 
 
-def test_weight_policy_champions_exact_and_meta(spark, tmp_path):
-    # champion_c='auto' (the default) builds WEIGHT-thresholded
-    # champion lists; the probe must stay bit-identical to the inline
-    # linker at EVERY w_cut — including an adversarial cut that
-    # truncates almost everything (certificate + fallback carry the
-    # whole answer) and one that truncates nothing. Meta records the
-    # policy (champion_c=-1) and the chosen w_cut.
-    import pytest
-
-    from drugbankner_spark.operators.linker import (
-        link_by_tfidf,
-        link_with_alias_index,
-        save_alias_index,
-    )
+def test_weight_policy_champions_exact_and_meta(spark, tmp_path,
+                                                monkeypatch):
+    # The champion probe must stay bit-identical to the inline linker
+    # at EVERY w_cut — the auto cut, an adversarial cut that truncates
+    # almost everything (0.9: certificate + fallback carry the whole
+    # answer) and one that truncates nothing (1e-6) — on both the
+    # bucket-pruned and the bulk probe shape. The cut is forced by
+    # monkeypatching the auto sizing; the champion path by dropping
+    # the n_aliases crossover under this tiny fixture. The flat path
+    # (default crossover) is checked against the same inline rows.
+    from drugbankner_spark.operators import linker as L
 
     aliases = spark.createDataFrame(
         [("aspirin", 1), ("acetylsalicylic acid", 2), ("ecotrin", 3),
@@ -457,63 +411,67 @@ def test_weight_policy_champions_exact_and_meta(spark, tmp_path):
     )
     mentions = spark.createDataFrame(
         [("aspirin",), ("asprin",), ("aspirin tablets",),
-         ("tension headaches",), ("high fever",), ("zzz",)],
+         ("tension headaches",), ("high fever",), ("hay fevers",),
+         ("zzz",)],
         ["mention"],
     )
     path = str(tmp_path / "auto_idx")
-    save_alias_index(aliases, "alias", "alias_id", path)
+    L.save_alias_index(aliases, "alias", "alias_id", path)
     meta = spark.read.parquet(path + "/meta").collect()[0]
-    from drugbankner_spark.operators.linker import (
-        ALIAS_WCUT_MAX,
-        ALIAS_WCUT_MIN,
-    )
-
-    assert meta["champion_c"] == -1
-    assert meta["champion_w_cut"] is not None
-    assert ALIAS_WCUT_MIN <= meta["champion_w_cut"] <= ALIAS_WCUT_MAX
-    for w_cut in (None, 0.9, 1e-6):
-        p = path if w_cut is None else str(tmp_path / f"wc_{w_cut}")
-        if w_cut is not None:
-            save_alias_index(aliases, "alias", "alias_id", p,
-                             champion_w_cut=w_cut)
-        for thr, k in [(0.05, 3), (0.3, 1), (0.7, 2)]:
-            want = sorted(tuple(r) for r in link_by_tfidf(
-                mentions, "mention", aliases, "alias", "alias_id",
-                threshold=thr, k=k,
+    assert "champion_c" not in meta.asDict()
+    assert meta["n_aliases"] == 11
+    assert L.ALIAS_WCUT_MIN <= meta["champion_w_cut"] <= L.ALIAS_WCUT_MAX
+    paths = {None: path}
+    for w_cut in (0.9, 1e-6):
+        paths[w_cut] = str(tmp_path / f"wc_{w_cut}")
+        with monkeypatch.context() as m:
+            m.setattr(L, "_auto_champion_w_cut",
+                      lambda postings, rms_factor, w=w_cut: w)
+            L.save_alias_index(aliases, "alias", "alias_id", paths[w_cut])
+        got_cut = spark.read.parquet(
+            paths[w_cut] + "/meta"
+        ).collect()[0]["champion_w_cut"]
+        assert got_cut == w_cut
+    for thr, k in [(0.05, 3), (0.3, 1), (0.7, 2)]:
+        want = sorted(tuple(r) for r in L.link_by_tfidf(
+            mentions, "mention", aliases, "alias", "alias_id",
+            threshold=thr, k=k,
+        ).collect())
+        assert want
+        for prune in (True, False):
+            flat = sorted(tuple(r) for r in L.link_with_alias_index(
+                spark, path, mentions, "mention", threshold=thr, k=k,
+                prune_buckets=prune,
             ).collect())
-            got = sorted(tuple(r) for r in link_with_alias_index(
-                spark, p, mentions, "mention", threshold=thr, k=k,
-                use_champions=True,
-            ).collect())
-            assert got == want and got, (w_cut, thr, k)
+            assert flat == want, (thr, k, prune)
+            with monkeypatch.context() as m:
+                m.setattr(L, "CHAMPION_AUTO_MIN_ALIASES", 1)
+                for w_cut, p in paths.items():
+                    got = sorted(tuple(r) for r in L.link_with_alias_index(
+                        spark, p, mentions, "mention", threshold=thr,
+                        k=k, prune_buckets=prune,
+                    ).collect())
+                    assert got == want, (w_cut, thr, k, prune)
     # the analytic guarantee: at w_cut tiny nothing is excluded, so
     # every mention certifies (n_risky 0)
+    monkeypatch.setattr(L, "CHAMPION_AUTO_MIN_ALIASES", 1)
     stats: dict = {}
-    link_with_alias_index(
-        spark, str(tmp_path / "wc_1e-06"), mentions, "mention",
-        threshold=0.3, k=1, use_champions=True, probe_stats=stats,
+    L.link_with_alias_index(
+        spark, paths[1e-6], mentions, "mention",
+        threshold=0.3, k=1, probe_stats=stats,
     ).collect()
     assert stats["n_risky"] == 0 and stats["certified_fraction"] == 1.0
-    # invalid combos raise
-    with pytest.raises(ValueError, match="champion_c"):
-        save_alias_index(aliases, "alias", "alias_id",
-                         str(tmp_path / "bad"), champion_c="big")
-    with pytest.raises(ValueError, match="champion_w_cut"):
-        save_alias_index(aliases, "alias", "alias_id",
-                         str(tmp_path / "bad2"), champion_c=64,
-                         champion_w_cut=0.1)
 
 
 def test_weight_policy_bulk_gate_and_pinned_exchanges(
     spark, tmp_path, monkeypatch
 ):
-    # Round 13: (a) weight-policy indexes serve champions on the BULK
-    # shape too (prune_buckets=False) once n_aliases clears the
-    # crossover — the legacy rank policy keeps the serving-only gate;
-    # (b) the probe tail's exchanges are PINNED (REPARTITION_BY_NUM):
-    # AQE's compressed-byte coalescing collapsed the broadcast-join
-    # explosion into one task (25-minute straggler at sf10), and a
-    # pinned exchange is exempt.
+    # (a) champions are on exactly when the meta's n_aliases clears
+    # CHAMPION_AUTO_MIN_ALIASES, on the BULK shape (prune_buckets=False)
+    # too; (b) the probe tail's exchanges are PINNED
+    # (REPARTITION_BY_NUM) when the gate fires: AQE's compressed-byte
+    # coalescing collapsed the broadcast-join explosion into one task
+    # (25-minute straggler at sf10), and a pinned exchange is exempt.
     from drugbankner_spark.operators import linker as L
 
     aliases = spark.createDataFrame(
@@ -525,88 +483,61 @@ def test_weight_policy_bulk_gate_and_pinned_exchanges(
     )
     wpath = str(tmp_path / "w_idx")
     L.save_alias_index(aliases, "alias", "alias_id", wpath)
-    rpath = str(tmp_path / "r_idx")
-    L.save_alias_index(aliases, "alias", "alias_id", rpath,
-                       champion_c=64)
+
+    def probe(stats=None):
+        return L.link_with_alias_index(
+            spark, wpath, mentions, "mention", threshold=0.3, k=1,
+            prune_buckets=False, probe_stats=stats,
+        )
+
+    def plan():
+        return probe()._jdf.queryExecution().executedPlan().toString()
+
+    rows = {}
+    for gate, used in ((4, True), (5, False)):  # n_aliases == 4
+        monkeypatch.setattr(L, "CHAMPION_AUTO_MIN_ALIASES", gate)
+        stats: dict = {}
+        rows[gate] = sorted(tuple(r) for r in probe(stats).collect())
+        assert stats["used_champions"] is used, gate
+    assert rows[4] == rows[5] and rows[4]
+    # rerank pin: the alias gate, recorded per call site
     monkeypatch.setattr(L, "CHAMPION_AUTO_MIN_ALIASES", 1)
+    assert "REPARTITION_BY_NUM" not in plan()
+    assert L.LAST_PIN_DECISION["rerank"] == {
+        "n_aliases": 4, "width": 0, "reason": "alias-gate",
+    }
     monkeypatch.setattr(L, "LINKER_PIN_MIN_ALIASES", 1)
-    # weight policy: champions auto-ON even with prune_buckets=False
-    stats_w: dict = {}
-    out_w = L.link_with_alias_index(
-        spark, wpath, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, probe_stats=stats_w,
-    )
-    rows_w = sorted(tuple(r) for r in out_w.collect())
-    assert stats_w["used_champions"] is True
-    # legacy rank policy: bulk shape keeps champions OFF
-    stats_r: dict = {}
-    rows_r = sorted(tuple(r) for r in L.link_with_alias_index(
-        spark, rpath, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, probe_stats=stats_r,
-    ).collect())
-    assert stats_r["used_champions"] is False
-    assert rows_w == rows_r and rows_w
-    # pinned exchanges in the tail, gated by ESTIMATED PRODUCT ROWS
-    # (round 14 — the r13 posting-count gate taxed mid-scale data
-    # where AQE's coalesced plan was strictly better): with the
-    # product gate forced open the gram-side and mention-side
-    # repartitions survive as REPARTITION_BY_NUM (not elided, not
-    # AQE-coalescible); at the default gate this tiny fixture's
-    # estimate keeps the coalesced plan.
+    assert "REPARTITION_BY_NUM" in plan()
+    assert L.LAST_PIN_DECISION["rerank"]["width"] >= 2
+    assert sorted(tuple(r) for r in probe().collect()) == rows[4]
+    # flat-path pins, gated by ESTIMATED PRODUCT ROWS (round 14 — the
+    # r13 posting-count gate taxed mid-scale data where AQE's
+    # coalesced plan was strictly better): the estimate job is skipped
+    # entirely below LINKER_PIN_MIN_POSTINGS; with the product gate
+    # forced open the gram-side and mention-side repartitions survive
+    # as REPARTITION_BY_NUM (not elided, not AQE-coalescible).
+    monkeypatch.setattr(L, "CHAMPION_AUTO_MIN_ALIASES", 10**9)
     monkeypatch.setattr(L, "LINKER_PIN_MIN_PRODUCT_ROWS", 1)
-    out_w2 = L.link_with_alias_index(
-        spark, wpath, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False,
-    )
-    plan = out_w2._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" in plan  # rerank pin: estimate-sized
-    assert sorted(tuple(r) for r in out_w2.collect()) == rows_w
-    flat_small = L.link_with_alias_index(
-        spark, wpath, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    )._jdf.queryExecution().executedPlan().toString()
-    # estimate job is skipped entirely below LINKER_PIN_MIN_POSTINGS
-    assert "REPARTITION_BY_NUM" not in flat_small
+    assert "REPARTITION_BY_NUM" not in plan()
     monkeypatch.setattr(L, "LINKER_PIN_MIN_POSTINGS", 1)
-    flat_pinned = L.link_with_alias_index(
-        spark, wpath, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" in flat_pinned
+    assert "REPARTITION_BY_NUM" in plan()
     assert L.LAST_PIN_DECISION["score_full"]["width"] >= 2
     assert L.LAST_PIN_DECISION["score_full"]["est_products"] > 0
+    assert sorted(tuple(r) for r in probe().collect()) == rows[4]
     # the estimate itself gates: a sky-high product threshold keeps
     # the coalesced plan even above the posting floor
     monkeypatch.setattr(L, "LINKER_PIN_MIN_PRODUCT_ROWS", 10**15)
-    flat_est_gated = L.link_with_alias_index(
-        spark, wpath, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" not in flat_est_gated
-    # env override wins in both directions (the bench's paired-run knob)
-    monkeypatch.setenv(L.LINKER_PIN_ENV, "full")
-    forced = L.link_with_alias_index(
-        spark, wpath, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" in forced
-    monkeypatch.setattr(L, "LINKER_PIN_MIN_PRODUCT_ROWS", 1)
-    monkeypatch.setenv(L.LINKER_PIN_ENV, "off")
-    suppressed = L.link_with_alias_index(
-        spark, wpath, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "REPARTITION_BY_NUM" not in suppressed
+    assert "REPARTITION_BY_NUM" not in plan()
 
 
 def test_pin_estimate_from_published_df_dim(spark, tmp_path,
                                             monkeypatch):
     # VERDICT r14 next #1: the pin gate's product estimate prices its
     # posting side from the (gram, df) dim the fit publishes with
-    # /idf — same number as the legacy posting-table aggregation
-    # (df == posting-list length by construction), no posting agg per
-    # batch plan, restart-stable. Also covers ADVICE r14: every
-    # _pin_width exit path records LAST_PIN_DECISION.
+    # /idf — df == posting-list length by construction, so the
+    # estimate equals Σ_gram (mention grams × postings) without a
+    # posting agg per batch plan. Also covers ADVICE r14: every exit
+    # of the score_full gate records LAST_PIN_DECISION.
     from drugbankner_spark.operators import linker as L
 
     aliases = spark.createDataFrame(
@@ -621,16 +552,12 @@ def test_pin_estimate_from_published_df_dim(spark, tmp_path,
 
     # the published /idf carries df == per-gram posting-list length
     idf_disk = spark.read.parquet(path + "/idf")
-    assert "df" in idf_disk.columns
-    post_disk = spark.read.parquet(path + "/postings")
+    post_cnt = spark.read.parquet(path + "/postings").groupBy("gram").agg(
+        F.count(F.lit(1)).alias("_pcnt")
+    )
     mism = (
         idf_disk.select("gram", "df")
-        .join(
-            post_disk.groupBy("gram").agg(
-                F.count(F.lit(1)).alias("_pcnt")
-            ),
-            "gram", "full",
-        )
+        .join(post_cnt, "gram", "full")
         .filter(
             F.col("df").isNull() | F.col("_pcnt").isNull()
             | (F.col("df") != F.col("_pcnt"))
@@ -639,115 +566,51 @@ def test_pin_estimate_from_published_df_dim(spark, tmp_path,
     )
     assert mism == 0
 
-    # default floors on a tiny fixture: below-floor decision recorded
-    L.LAST_PIN_DECISION.clear()
-    L.link_with_alias_index(
-        spark, path, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    ).collect()
-    assert L.LAST_PIN_DECISION["score_full"]["reason"] == "below-floor"
-    assert L.LAST_PIN_DECISION["score_full"]["width"] == 0
+    def decide():
+        L.LAST_PIN_DECISION.clear()
+        L.link_with_alias_index(
+            spark, path, mentions, "mention", threshold=0.3, k=1,
+            prune_buckets=False,
+        ).collect()
+        return dict(L.LAST_PIN_DECISION["score_full"])
 
-    # estimate path: posting side comes from the published dim, and
-    # the estimate equals the legacy posting-agg number exactly
+    # default floors on a tiny fixture: below-floor decision recorded
+    dec = decide()
+    assert dec["reason"] == "below-floor" and dec["width"] == 0
+
+    # estimate path: the number equals the posting-table aggregation
     monkeypatch.setattr(L, "LINKER_PIN_MIN_POSTINGS", 1)
     L._PIN_EST_CACHE.clear()
-    L.LAST_PIN_DECISION.clear()
-    L.link_with_alias_index(
-        spark, path, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    ).collect()
-    dec_df = dict(L.LAST_PIN_DECISION["score_full"])
-    assert dec_df["reason"] == "estimate"
-    assert dec_df["est_from_df_dim"] is True
-    assert dec_df["est_products"] > 0
+    dec = decide()
+    assert dec["reason"] == "estimate" and dec["width"] == 0
+    want = (
+        L.char_wb_gram_counts(mentions, "mention", "mention")
+        .groupBy("gram").agg(F.count(F.lit(1)).alias("_mcnt"))
+        .join(post_cnt, "gram")
+        .agg(F.sum(F.col("_mcnt") * F.col("_pcnt")))
+        .collect()[0][0]
+    )
+    assert dec["est_products"] == want > 0
 
-    # legacy-index fallback (no df column): same estimate via the
-    # on-the-fly posting agg — the decision number must not change
-    legacy = str(tmp_path / "legacy_df_idx")
-    L.save_alias_index(aliases, "alias", "alias_id", legacy)
-    import shutil
-
-    # strip the df column to simulate a pre-r15 index
-    idf_legacy = spark.read.parquet(legacy + "/idf").select(
-        "gram", "idf", "gram_bucket"
-    ).toPandas()
-    shutil.rmtree(legacy + "/idf")
-    spark.createDataFrame(idf_legacy).write.partitionBy(
-        "gram_bucket"
-    ).parquet(legacy + "/idf")
-    L._PIN_EST_CACHE.clear()
-    L.LAST_PIN_DECISION.clear()
-    L._ALIAS_META_CACHE.clear()
-    L.link_with_alias_index(
-        spark, legacy, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    ).collect()
-    dec_legacy = dict(L.LAST_PIN_DECISION["score_full"])
-    assert dec_legacy["est_from_df_dim"] is False
-    assert dec_legacy["est_products"] == dec_df["est_products"]
-
-    # override path records its decision too (ADVICE r14)
-    L.LAST_PIN_DECISION.clear()
-    monkeypatch.setenv(L.LINKER_PIN_ENV, "off")
-    L.link_with_alias_index(
-        spark, path, mentions, "mention", threshold=0.3, k=1,
-        prune_buckets=False, use_champions=False,
-    ).collect()
-    assert L.LAST_PIN_DECISION["score_full"] == {
-        "n_postings": L.LAST_PIN_DECISION["score_full"]["n_postings"],
-        "est_products": None, "width": 0, "reason": "override",
-    }
-
-
-def test_champion_probe_opt_out_and_missing_layout(spark, tmp_path):
-    # champion_c=None saves the legacy layout (postings/idf only);
-    # the probe auto-detects and serves the full-join path, while an
-    # explicit use_champions=True on such an index raises loudly.
-    import pytest
-
-    from drugbankner_spark.operators.linker import (
-        link_with_alias_index,
-        save_alias_index,
+    # posting floor: pins full width without paying the estimate job
+    monkeypatch.setattr(L, "LINKER_PIN_FULL_MIN_POSTINGS", 1)
+    dec = decide()
+    assert dec["reason"] == "posting-floor"
+    assert dec["est_products"] is None
+    assert dec["width"] == int(
+        spark.conf.get("spark.sql.shuffle.partitions")
     )
 
-    aliases = spark.createDataFrame(
-        [("aspirin", 1), ("ecotrin", 3)], ["alias", "alias_id"]
-    )
-    mentions = spark.createDataFrame([("aspirin",)], ["mention"])
-    path = str(tmp_path / "legacy_idx")
-    save_alias_index(aliases, "alias", "alias_id", path,
-                     champion_c=None)
-    out = link_with_alias_index(
-        spark, path, mentions, "mention", threshold=0.3, k=1
-    ).collect()
-    assert [r["alias_id"] for r in out] == [1]
-    with pytest.raises(ValueError, match="without champion"):
-        link_with_alias_index(
-            spark, path, mentions, "mention", use_champions=True
-        ).collect()
-    # use_champions=False on a champion-carrying index also works
-    path2 = str(tmp_path / "champ_idx")
-    save_alias_index(aliases, "alias", "alias_id", path2,
-                     champion_c=8)
-    out2 = link_with_alias_index(
-        spark, path2, mentions, "mention", threshold=0.3, k=1,
-        use_champions=False,
-    ).collect()
-    assert [r["alias_id"] for r in out2] == [1]
 
-
-def test_champion_probe_stats_and_zero_risky_fast_path(spark, tmp_path):
+def test_champion_probe_stats_and_zero_risky_fast_path(
+    spark, tmp_path, monkeypatch
+):
     # Round 12 (VERDICT r11 next #1a): probe_stats reports the
     # certified fraction, and a fully-certified batch returns the
     # champion result WITHOUT the full-posting fallback branch in the
     # executed plan (the eager n_risky==0 short-circuit) — still
     # bit-identical to the inline linker.
-    from drugbankner_spark.operators.linker import (
-        link_by_tfidf,
-        link_with_alias_index,
-        save_alias_index,
-    )
+    from drugbankner_spark.operators import linker as L
 
     aliases = spark.createDataFrame(
         [("aspirin", 1), ("acetylsalicylic acid", 2), ("ecotrin", 3),
@@ -757,22 +620,37 @@ def test_champion_probe_stats_and_zero_risky_fast_path(spark, tmp_path):
     mentions = spark.createDataFrame(
         [("aspirin",), ("fever",), ("headache",)], ["mention"]
     )
-    path = str(tmp_path / "stats_idx")
-    # champion_c large enough that every gram's postings are ALL
-    # champions -> every cutoff is 0 -> every mention certifies
-    save_alias_index(aliases, "alias", "alias_id", path,
-                     champion_c=1000)
-    stats: dict = {}
-    out = link_with_alias_index(
-        spark, path, mentions, "mention", threshold=0.3, k=1,
-        use_champions=True, probe_stats=stats,
-    )
-    got = sorted(tuple(r) for r in out.collect())
-    want = sorted(tuple(r) for r in link_by_tfidf(
+    want = sorted(tuple(r) for r in L.link_by_tfidf(
         mentions, "mention", aliases, "alias", "alias_id",
         threshold=0.3, k=1,
     ).collect())
-    assert got == want and got
+    assert want
+    paths = {}
+    for w_cut in (1e-6, 0.9):
+        paths[w_cut] = str(tmp_path / f"stats_idx_{w_cut}")
+        with monkeypatch.context() as m:
+            m.setattr(L, "_auto_champion_w_cut",
+                      lambda postings, rms_factor, w=w_cut: w)
+            L.save_alias_index(aliases, "alias", "alias_id", paths[w_cut])
+
+    def probe(p, stats):
+        return L.link_with_alias_index(
+            spark, p, mentions, "mention", threshold=0.3, k=1,
+            probe_stats=stats,
+        )
+
+    # flat path stats (n_aliases under the default crossover):
+    # used_champions False, fraction None
+    stats_flat: dict = {}
+    probe(paths[1e-6], stats_flat).collect()
+    assert stats_flat["used_champions"] is False
+    assert stats_flat["certified_fraction"] is None
+    monkeypatch.setattr(L, "CHAMPION_AUTO_MIN_ALIASES", 1)
+    # w_cut tiny: nothing excluded -> every cutoff is 0 -> every
+    # mention certifies
+    stats: dict = {}
+    out = probe(paths[1e-6], stats)
+    assert sorted(tuple(r) for r in out.collect()) == want
     assert stats["used_champions"] is True
     assert stats["n_mentions"] == 3
     assert stats["n_risky"] == 0
@@ -780,23 +658,11 @@ def test_champion_probe_stats_and_zero_risky_fast_path(spark, tmp_path):
     # zero-risky plan: no Union (fallback branch never scheduled)
     assert "Union" not in out._jdf.queryExecution().executedPlan() \
         .toString()
-    # adversarial c=1: stats still report, result still exact
-    path1 = str(tmp_path / "stats_idx_c1")
-    save_alias_index(aliases, "alias", "alias_id", path1, champion_c=1)
+    # adversarial cut: stats still report, result still exact
     stats1: dict = {}
-    out1 = sorted(tuple(r) for r in link_with_alias_index(
-        spark, path1, mentions, "mention", threshold=0.3, k=1,
-        use_champions=True, probe_stats=stats1,
-    ).collect())
-    assert out1 == want
+    assert sorted(tuple(r) for r in probe(
+        paths[0.9], stats1
+    ).collect()) == want
     assert stats1["n_risky"] + round(
         stats1["certified_fraction"] * stats1["n_mentions"]
     ) == stats1["n_mentions"]
-    # flat path stats: used_champions False, fraction None
-    stats_flat: dict = {}
-    link_with_alias_index(
-        spark, path, mentions, "mention", threshold=0.3, k=1,
-        use_champions=False, probe_stats=stats_flat,
-    ).collect()
-    assert stats_flat["used_champions"] is False
-    assert stats_flat["certified_fraction"] is None
