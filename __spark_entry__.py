@@ -1,8 +1,8 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship query (broadcast star join) on sf0.001.
-``queries()`` — one entry per implemented operator from SURVEY.md §2,
-keyed by the §2 operator id it demonstrates.
+``queries()`` — the 50-query driver window; ``all_queries()`` adds every
+other registered query. Both derive from the ``_WINDOW``/``_MORE`` tuples.
 ``oracle_sql()`` — matching ANSI SQL for the DuckDB oracle.
 
 Aggregate float outputs are rounded in BOTH engines so the driver's
@@ -5359,728 +5359,103 @@ def _e5_datacard(spark: SparkSession, sf: str) -> DataFrame:
     return corpus_datacard(load_table(spark, sf, "documents"))
 
 
+#: The driver window. The driver hash-checks only the first 50 registry
+#: entries, so this tuple holds exactly 50 builders; rotating a query in
+#: or out moves its builder between ``_WINDOW`` and ``_MORE``.
+_WINDOW = (
+    _syn_suite, _j_join_suite, _e2_ann_suite, _e1_dedup_suite, _e3_qual_suite,
+    _e6_props_json, _a_agg_suite, _u_set_suite, _f_text_suite, _f_curie_suite,
+    _w_window_suite, _e4_media_suite, _e3_docmeta_suite, _e1_near_dup_suite,
+    _e5_retrieval_metrics, _e1_c4_filter, _e1_pii_scrub, _t_resample_gapfill,
+    _e6_transition_matrix, _j_jw_match, _x1_linker_served, _g_modularity,
+    _e6_interval_join, _x1_linker_indexed, _e3_fertility, _e6_windows,
+    _e1_sa_suite, _g_rank_suite, _e2_bit_suite, _e5_dp_suite, _e2_kmeans_suite,
+    _x1_linker_suite, _e6_hll_distinct, _pipeline_pretrain_prep,
+    _ep1_spotted_nodes, _t_ts_suite, _e6_journey_suite, _e5_eval_suite,
+    _e1_clean_suite, _e3_lm_suite, _e5_sft_suite, _g_count_suite,
+    _e2_assign_stream, _e1_semantic_decontaminate, _j_er_suite, _e1_pair_suite,
+    _ep1_tfidf_mechanistic_nodes, _q_tpch_suite, _e6_sessionize_closed,
+    _ep2_aligned_nodes,
+)
+
+#: Every other registered query: suite members, singles rotated out of
+#: the window, bench-only forms and rows-only probes. All stay runnable
+#: through all_queries(), which bench.py times from and
+#: tests/test_oracle_parity.py hash-checks against oracle_sql().
+_MORE = (
+    _t_cusum, _t_holt, _t_acf, _e5_dp_quantile, _e5_chi2, _g_kcore,
+    _ep1_mechanistic_nodes, _f7_identifier_extract, _q1_pricing_summary,
+    _q3_shipping_priority, _q18_large_orders, _q_correlated_avg, _agg_rollup,
+    _sql_api_q10, _e2_pq_adc_topk, _e2_ivfpq_append_topk, _j_fuzzy_name_match,
+    _e5_scd2_user_state, _e5_constraint_report, _e3_hashed_tf,
+    _e3_pack_sequences, _e4_wav_decode, _q17_small_quantity_revenue,
+    _q20_pattern_shippers, _e3_bm25_topk, _e3_ppl_buckets,
+    _e3_unicode_normalize, _e3_url_canonicalize, _e3_wordlm, _e3_kn_ppl,
+    _g_bfs_distances, _g_label_prop, _er_resolve, _e3_gopher_rep,
+    _e5_span_corrupt, _e2_hard_negatives, _e5_calibration, _e5_kfold,
+    _e5_profile, _e5_group_ols, _e6_cooccurrence, _g_random_walks,
+    _e3_skipgram, _pipeline_curate_corpus, _e5_tokenize, _e2_mean_pool,
+    _e6_transition_power, _e5_prep_suite, _g_graph_suite, _e3_gopher_rep_hash,
+    _e6_attribution, _e5_ner_eval, _e1_repair_text, _e5_augment, _e5_iob_tags,
+    _e5_class_report, _e3_char_entropy, _e3_zipf, _e5_datacard,
+    _e4_container_probe, _e4_gif_decode, _e3_unigram_tokens,
+    _e5_stratified_sample, _e2_lsh_append_topk, _e6_sessionize,
+    _q5_regional_revenue, _j1_dim_lookup, _q7_volume_shipping, _agg_cube,
+    _w1_running_sum, _w2_lag_lead, _w3_rank, _o2_sort_upper, _a7_count,
+    _approx_distinct, _f1_bracket_strip, _f2_strip_marks, _f3_simplify_name,
+    _syn_canonical_curie, _syn_canonical_name, _ep1_drug_records,
+    _e1_minhash_signatures, _e1_minhash_near_dup_xxh, _e2_pandas_topk,
+    _e6_tumbling, _e6_sliding, _e6_windows_batch, _e6_sessionize_batch,
+    _t_asof_join, _t_range_join, _e1_dup_clusters, _e2_label_centroids,
+    _e3_gopher_filter, _pipeline_clean_corpus, _e5_hash_sample, _e5_hash_split,
+    _e3_tfidf, _e1_incremental_dedup, _e3_repetition, _e3_redact_pii,
+    _e5_skew_profile, _q6_forecast_revenue, _q14_promo_revenue,
+    _q4_order_priority, _a9_percentiles, _q8_market_share, _q9_product_profit,
+    _q11_important_parts, _q12_late_priority, _q13_order_count_distribution,
+    _q15_top_supplier, _q16_supplier_counts, _q19_disjunctive_revenue,
+    _q21_late_sole_supplier, _q22_idle_customers, _q2_min_cost_supplier,
+    _a5_distinct, _u2_intersect, _u3_anti_join, _a8_explode_distinct, _o1_topk,
+    _j9_semi_join, _f4_curie_prefix_upper, _f10_prefix_extract,
+    _e5_mixture_sample, _e3_charlm, _e1_intradoc_dedup, _e5_cluster_safe_split,
+    _e3_packed_sequences_rows, _e5_pivot, _e5_unpivot, _e1_crossdoc_dedup,
+    _e1_bloom_decontaminate, _e5_countmin_topk, _e3_compression_ratio,
+    _e3_unigram_apply, _e2_retrieval_topk, _e1_semantic_dedup,
+    _e3_shuffle_shards, _e5_weighted_upsample, _e3_length_buckets,
+    _e2_int8_quantize, _e3_ngram_topk, _e3_dict_tag, _e5_eval_scores,
+    _e5_chat_render, _e5_needle_inject, _e4_bmp_decode, _s_warc_probe,
+    _s_tar_probe, _e2_cosine_topk, _e2_lsh_topk, _e2_ivf_topk, _e1_exact_dedup,
+    _e1_dedup_survivor, _e1_minhash_near_dup, _e1_decontaminate,
+    _e1_dup_clusters_star, _e3_text_quality, _e3_bpe_tokens,
+    _e3_chunk_documents, _f_name_normalize, _f5_sentence_pipeline,
+    _e5_sketch_distinct, _e4_image_hashes, _e4_audio_features, _e4_mpeg_decode,
+    _x1_tfidf_linker, _e5_gov_suite, _e1_suffix_array, _e1_sa_dup_spans,
+    _e1_sa_dedup, _t_seasonal, _e2_hamming_topk, _e2_rerank_topk,
+    _e2_hamming_pairs, _e2_kmeans, _e2_cluster_sample, _e2_semdedup_kmeans,
+    _e5_fim_transform, _g_pagerank, _g_ppr, _e5_agreement, _e5_bleu,
+    _e2_srp_sketch, _e5_dp_histogram, _e1_suffix_array_bench,
+    _x1_linker_corpus, _x1_linker_corpus_maxdf, _e5_dp_histogram_user,
+    _e6_funnel, _e5_cohort_retention, _e5_cdc_apply, _e1_near_dup_recall,
+    _e1_simhash_pairs, _e5_temperature_mix, _g_triangle_count,
+    _g_common_neighbors, _e5_ndcg, _e5_dsir_weights, _t_ewma, _t_anomaly,
+    _e5_k_anonymity, _e1_boilerplate_strip, _e6_top_paths, _e5_winsorize,
+    _e3_wordpiece_apply, _syn_canonical, _syn_equivalent_nodes,
+    _syn_category_histogram, _syn_normalizer_nodes, _j2_mode_vote,
+    _j4_coalesce_fallback, _j5_prefix_expansion, _a2_longest_value,
+    _a4_category_histogram, _a6_first_writer_wins, _e1_simhash,
+    _e1_ngram_jaccard, _e1_embedding_near_dup, _e3_lang_id, _e3_fingerprint,
+    _e4_png_decode, _e4_media_metadata, _u1_union_merge,
+    _u4_union_prefer_first,
+)
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The driver registry — capped at 50 entries so EVERY query lands in
-    the driver's observed 50-entry CORRECTNESS window (round 1 registered
-    62 and the 12 after position 50 got no correctness row — VERDICT r01
-    "What's missing" #1). Round 5 rotation (VERDICT r04 next #1): the 13
-    queries never driver-verified go FIRST — the 11 pytest-only round-4
-    oracles (e2_pq_adc_topk, j_fuzzy_name_match, e5_scd2_user_state,
-    e5_constraint_report, e3_hashed_tf, e3_pack_sequences, e4_wav_decode,
-    q17, q20, t_asof_join, t_range_join) plus this round's two new ops
-    (e6_sessionize_closed, e2_ivfpq_append_topk). To make room, 19
-    long-green demonstrations consolidate into six new tagged-union
-    suites (syn_suite, j_join_suite, a_agg_suite, e1_near_dup_suite,
-    e3_docmeta_suite, e4_media_suite) and u_set_suite absorbs u1/u4 —
-    the established round-4 mechanism; every original remains
-    individually runnable via ``all_queries`` and hash-checked in
-    tests/test_oracle_parity.py. e6_windows_batch stays pytest-only: its
-    oracle SQL is byte-identical to the driver-green e6_windows.
-
-    Round-5 LATE rotation (this session): nine new hash-oracled ops
-    (e3_bm25_topk, e3_ppl_buckets, e3_unicode_normalize,
-    e3_url_canonicalize, e3_wordlm, e5_datacard, e4_container_probe,
-    e4_gif_decode, rows-only e3_unigram_tokens) entered the window by
-    consolidating 13 long-green singles into four more tagged-union
-    suites (e2_ann_suite = cosine+lsh+ivf; e1_dedup_suite =
-    exact+survivor+minhash+decontaminate+clusters; e3_qual_suite =
-    quality+bpe+chunking; f_text_suite = name-normalize+sentences) —
-    every original stays individually runnable and hash-checked via
-    all_queries.
-
-    Round-6 rotation (VERDICT r05 next #1): the ENTIRE 23-entry pool
-    enters the window — q_tpch_suite alone converts 14 never-driver-
-    verified TPC-H queries into one row — plus this round's two new
-    hash-oracled ops (e3_unigram_apply, which supersedes the
-    rows-only e3_unigram_tokens slot with a recursive-SQL Viterbi
-    oracle, and e2_retrieval_topk). To free the 25 slots, 25 r05-green
-    singles demote to pytest-only (the established mechanism: each
-    stays individually runnable via ``all_queries`` and hash-checked in
-    tests/test_oracle_parity.py, ready to rotate back): e2_pq_adc_topk,
-    e2_ivfpq_append_topk, j_fuzzy_name_match, e5_scd2_user_state,
-    e5_constraint_report, e3_hashed_tf, e3_pack_sequences,
-    e4_wav_decode, q17, q20, t_asof_join, t_range_join, e3_bm25_topk,
-    e3_ppl_buckets, e3_unicode_normalize, e3_url_canonicalize,
-    e3_wordlm, e5_datacard, e4_container_probe, e4_gif_decode,
-    e3_unigram_tokens, e5_stratified_sample, e2_lsh_append_topk,
-    complete-mode e6_sessionize (VERDICT r05: the closed/append
-    production face keeps the streaming-session slot), and q5.
-
-    Round-7 rotation pool (hash-oracled, pytest-green at both SFs,
-    ready for the next window): e6_funnel, e5_cohort_retention,
-    e5_retrieval_metrics, e5_cdc_apply, e1_near_dup_recall,
-    e1_simhash_pairs, g_triangle_count, g_common_neighbors,
-    e5_temperature_mix, e5_ndcg, e5_dsir_weights, t_resample_gapfill,
-    t_ewma, t_anomaly, e5_k_anonymity, e1_boilerplate_strip,
-    e6_transition_matrix, e6_top_paths, j_jw_match, e5_winsorize,
-    e3_wordpiece_apply (third tokenizer family, recursive-SQL greedy
-    oracle), e4_mpeg_decode (upgraded from rows-only to a
-    frozen-fixture hash oracle), e3_kn_ppl (interpolated Kneser-Ney
-    perplexity, the KenLM/CCNet smoothing, all four branches
-    hash-checked), g_bfs_distances (multi-source k-hop BFS vs a
-    recursive-CTE oracle), g_label_prop (synchronous LPA communities
-    vs a chained-CTE replay), er_resolve (composed entity resolution:
-    block -> JW -> CC -> canonical rep in one hash-checked row),
-    e3_gopher_rep (Gopher §A1.1 repetition signal set, one explode for
-    n=2..10), e1_c4_filter (C4 line rules + page flags, pure
-    higher-order expressions), e1_pii_scrub (sequential regex PII
-    redaction, Java-vs-RE2 dialect parity), e5_span_corrupt
-    (deterministic T5 denoising spans, hash-seeded + islands-merged),
-    e2_hard_negatives (DPR-style mining: anti-join labeled positives,
-    skip-top false-negative hedge), e5_calibration (ECE/reliability
-    bins, Guo et al. 2017), e5_kfold (deterministic hash k-fold),
-    e5_profile (Deequ-style column profile in one value-keyed
-    shuffle), e5_group_ols (closed-form per-group OLS trend with
-    exact integer-valued sums), q2_min_cost_supplier (the last
-    uncovered TPC-H number — per-part argmin supplier within a
-    region; all 22 TPC-H shapes now hash-oracled), e6_cooccurrence
-    (market-basket pair support/confidence/lift — the order-free
-    complement of the transition matrix), g_random_walks
-    (deterministic DeepWalk corpus: hash-seeded steps over sorted
-    adjacency), e3_skipgram (word2vec window-pair counts — one explode
-    + one pair-keyed agg), pipeline_curate_corpus (the FineWeb/Dolma
-    curation chain C4 -> PII -> Gopher -> dedup, per-stage verdicts
-    hash-checked end to end), e5_tokenize (salted-sha256
-    pseudonymization, join-preserving), e2_mean_pool (chunk->doc
-    embedding rollup: per-dim avg + ordered reassembly),
-    e6_transition_power (k-step Markov forecast via relational matrix
-    multiply), e6_attribution (multi-touch first/last/linear credits
-    with per-conversion reset + recency cap), e5_ner_eval (CoNLL
-    exact-match span P/R/F1 + micro over Aho-Corasick taggings),
-    e1_repair_text (extraction-artifact repair: de-hyphenation,
-    control strip, whitespace collapse — $1-vs-\\1 dialect pinned),
-    e5_augment (deterministic EDA: hash-seeded drops + disjoint pair
-    swaps, lead/lag oracle), e5_iob_tags (span -> B/I/O token labels
-    with pairwise-priority overlap resolution), e5_class_report
-    (sklearn-style per-class P/R/F1 + accuracy from one pair-count
-    agg), e3_char_entropy (character-distribution Shannon entropy, the
-    gibberish detector), e3_zipf (per-language Zipf rank-frequency
-    OLS, the corpus-authenticity signal) — plus the 24 demoted names
-    above. Two ready-made
-    consolidation suites compress the wave for the window:
-    e5_prep_suite (kfold + calibration + tokenize + profile + OLS) and
-    g_graph_suite (BFS + LPA + walk corpus), each a tagged union whose
-    branches stay individually hash-checked here.
-
-    Round-7 rotation (VERDICT r06 next #3): the ENTIRE pool above
-    enters the window — 43 singles plus the two consolidation suites
-    (8 ops in 2 slots). To free the 45 slots, every r06-green row
-    except five keepers demotes to pytest-only via ``all_queries`` +
-    tests/test_oracle_parity.py — the established mechanism; nothing
-    green goes unverified. Keepers: the flagship EP1/EP2 pipelines,
-    q_tpch_suite (the 14-query relational surface), and the two
-    readStream faces e6_sessionize_closed / e6_windows so Structured
-    Streaming is driver-verified every round.
-
-    Round-8 rotation pool (hash-oracled this round, pytest-green at
-    both SFs, ready for the next window): x1_tfidf_linker and
-    ep1_tfidf_mechanistic_nodes entered the window directly (round-7
-    new ops); e1_suffix_array (distributed prefix-doubling suffix
-    array, content-checked against a direct suffix-string sort) and
-    e1_sa_dup_spans (Lee-et-al exact substring duplication via
-    adjacent-suffix pairs), e2_hamming_topk (1-bit quantization +
-    integer-exact Hamming top-k), e2_rerank_topk (the composed
-    Hamming-shortlist → exact-cosine rerank funnel), and g_pagerank
-    (the CommonCrawl domain-authority signal, chained-CTE power-
-    iteration oracle), g_ppr (personalized PageRank — seeded teleport,
-    the seed-affinity expansion signal), e5_dp_histogram (the
-    Laplace-mechanism DP release, deterministic via the md5 hash
-    kernel — completes the privacy family), pipeline_pretrain_prep
-    (the third flagship
-    composition: curation chain → sequence packing of the survivors,
-    composed oracle) and t_seasonal (classical additive seasonal
-    decomposition, integer-exact micro-unit arithmetic end to end —
-    the float/rounding-convention findings are documented on the
-    operator) wait in the pool, plus the 47 r06-green rows demoted
-    this round.
-
-    Round-8 rotation (VERDICT r07 next #1): all nine pool entries
-    above enter the window, plus the four round-8 new ops
-    (e1_sa_dedup — the Lee-et-al exact-span REMOVAL composed;
-    e2_hamming_pairs — banded corpus×corpus 1-bit pairs;
-    e5_dp_histogram_user — user-level DP with the per-contributor
-    clamp; ep1_spotted_nodes — EP1 with ZERO stub factories via the
-    relational dictionary spotter). The 13 slots come from
-    consolidating 17 r07-green singles into four tagged-union suites
-    (t_ts_suite, e6_journey_suite, e5_eval_suite, e1_clean_suite) —
-    every original stays individually runnable via ``all_queries``
-    and hash-checked in tests/test_oracle_parity.py. Round-9 rotation
-    pool (hash-oracled this round, never driver-verified):
-    e1_suffix_array_bench, x1_linker_corpus, x1_linker_corpus_maxdf
-    (the corpus-scale bench probes — BENCH times them every round),
-    e2_kmeans (fully-relational distributed Lloyd's k-means —
-    grid-integer geometry per the float-parity law, hash-seeded
-    deterministic init, chained-CTE replay oracle), e2_cluster_sample
-    (the cluster-balanced diversity draw over the same replayed fit)
-    e2_semdedup_kmeans (SemDeDup in the paper's cluster-scoped
-    shape: within-cell cosine pairs → recursive-CTE components →
-    min-id survivor), e1_semantic_decontaminate (the paraphrase face
-    of benchmark decontamination — max benchmark cosine per train
-    vector, broadcast benchmark dim), e5_fim_transform
-    (deterministic Fill-in-the-Middle rendering, hash-drawn cut
-    points, pure projection) and e2_assign_stream (the STREAMING
-    routing face of the k-means fit — stateless grid-integer argmin
-    against the collected centroid literal; equals the batch
-    assignment bit-for-bit, so it shares e2_kmeans's oracle).
-
-    Round-9 rotation: the r8 driver artifacts were never produced, so
-    the round-8-placed window rows above have NOT yet been
-    driver-verified — they all STAY. The slots for the nine round-9
-    pool entries (e2_kmeans family, semantic decontamination, FIM,
-    the SA/linker bench probes) come instead from consolidating 15
-    r07-GREEN singles (driver-verified in CORRECTNESS_r07) into four
-    new tagged-union suites: e3_lm_suite (kn_ppl + skipgram +
-    char_entropy + zipf + wordpiece_apply), e5_sft_suite
-    (span_corrupt + augment + temperature_mix + dsir_weights),
-    g_count_suite (triangle_count + common_neighbors), e5_gov_suite
-    (k_anonymity + winsorize + cdc_apply + cohort_retention) — the
-    established mechanism; every original stays individually
-    runnable via ``all_queries`` and hash-checked in
-    tests/test_oracle_parity.py. Four of this round's six NEW
-    hash-oracled operators (g_kcore — synchronized h-index coreness;
-    t_cusum — closed-form CUSUM change detection; e5_bleu — corpus
-    BLEU-4; e2_srp_sketch — signed random projection) take the last
-    window slots via two more micro-consolidations of r07-green
-    singles (j_er_suite = jw_match + er_resolve; e1_pair_suite =
-    near_dup_recall + simhash_pairs). Round-10 rotation pool
-    (hash-oracled this round, never driver-verified): e5_dp_quantile
-    (DP quantiles off one noisy-CDF Laplace release) and t_holt
-    (Holt linear-trend smoothing, recursive-CTE replay oracle,
-    bit-exact doubles).
-
-    Round-10 rotation (VERDICT r09 next #1/#7): the EIGHT
-    never-driver-verified pool entries enter the window —
-    g_modularity, e6_interval_join, e5_dp_quantile, t_holt,
-    x1_linker_indexed, e3_fertility, e5_agreement, plus e6_windows
-    (the r7-keeper readStream face that fell out in the r9 rotation).
-    The slots come from consolidating SEVENTEEN r09-GREEN singles
-    (all 50 window rows were green in CORRECTNESS_r09) into six new
-    tagged-union suites: e1_sa_suite (suffix array + dup spans +
-    removal + bench checksum), g_rank_suite (pagerank + ppr),
-    e2_bit_suite (hamming topk + rerank + pairs + srp), e5_dp_suite
-    (row- + user-level DP histograms), e2_kmeans_suite (lloyd fit +
-    cluster sample + semdedup), x1_linker_suite (inline corpus
-    linker, unpruned + maxdf) — the established mechanism; every
-    original stays individually runnable via ``all_queries`` and
-    hash-checked in tests/test_oracle_parity.py. The remaining three
-    slots carry this round's new hash-oracled operators (e5_chi2,
-    t_acf, e6_hll_distinct).
-
-    Round-12 rotation (VERDICT r11 next #3): the window had been
-    identical for two rounds, so the five OLDEST demoted suites —
-    driver-verified last in their r6/r7-era windows — rotate back in
-    for re-verification at sf0.01 (syn_suite, j_join_suite,
-    e1_dedup_suite, e2_ann_suite, e3_qual_suite), plus the round-12
-    new op x1_linker_served (the champion-list serving probe on its
-    own small-batch shape). The six slots come from demoting six
-    TWICE-driver-green singles (green in both CORRECTNESS_r10 and
-    _r11 on identical code): t_seasonal, e5_fim_transform, e5_bleu,
-    e2_mean_pool, q2_min_cost_supplier, e6_funnel — the established
-    mechanism; each stays individually runnable via ``all_queries``
-    and hash-checked in tests/test_oracle_parity.py, ready to rotate
-    back.
-
-    Round-13 rotation (VERDICT r12 next #4): the six OLDEST
-    driver-verified pool rows — r7/r8-era, last driver-green in their
-    own windows — rotate back in (e5_retrieval_metrics, e1_c4_filter,
-    e1_pii_scrub, t_resample_gapfill, e6_transition_matrix,
-    j_jw_match). Slots from demoting the five suites the r12 rotation
-    just RE-verified plus the thrice-green e5_agreement; the
-    once-green x1_linker_served stays.
-
-    Round-14 rotation (VERDICT r13 next #4): the eight OLDEST demoted
-    driver-verified rows by the correctness-history ledger — the
-    r6-era consolidation suites, last driver-green in CORRECTNESS_r06
-    (a_agg_suite, u_set_suite, f_text_suite, f_curie_suite,
-    w_window_suite, e4_media_suite, e3_docmeta_suite,
-    e1_near_dup_suite; older than the r9/r10 singles the verdict
-    named, which are all still IN the window with 4-5 greens each) —
-    rotate back in. Slots from demoting eight 5-6×-green non-keeper
-    rows (x1_tfidf_linker, e5_prep_suite, e2_hard_negatives,
-    e4_mpeg_decode, e3_gopher_rep, pipeline_curate_corpus,
-    g_graph_suite, e5_gov_suite — X1 stays covered by
-    ep1_tfidf_mechanistic_nodes + the three x1_linker rows; E4's
-    driver presence moves to the rotated-in e4_media_suite); every
-    demoted name stays runnable + oracle-backed in ``all_queries``
-    and hash-checked in tests/test_oracle_parity.py.
-
-    Round-15 rotation (VERDICT r14 next #3, ledger-driven): the six
-    OLDEST demoted driver-verified rows rotate back in —
-    e6_props_json (last green r06) and the five r7-demoted
-    consolidation suites syn_suite, j_join_suite, e2_ann_suite,
-    e1_dedup_suite, e3_qual_suite (last green r12, when the r12
-    rotation re-verified them). Slots from demoting six 5-6×-green
-    r9/r10-era singles (t_cusum, t_holt, t_acf, e5_dp_quantile,
-    e5_chi2, g_kcore — the verdict's named candidates; g_modularity
-    and e6_hll_distinct stay one more round so the graph/sketch
-    families keep a fresh row each); every demoted name stays
-    runnable + oracle-backed in ``all_queries`` and hash-checked in
-    tests/test_oracle_parity.py. Window stays exactly 50."""
-    return {
-        # -- round-15 rotation (VERDICT r14 next #3): the six OLDEST
-        # demoted driver-verified rows rotate back in ------------------
-        "syn_suite": _syn_suite,
-        "j_join_suite": _j_join_suite,
-        "e2_ann_suite": _e2_ann_suite,
-        "e1_dedup_suite": _e1_dedup_suite,
-        "e3_qual_suite": _e3_qual_suite,
-        "e6_props_json": _e6_props_json,
-        # -- round-14 rotation rows (once-green since, stay one more
-        # round before demotion eligibility) ---------------------------
-        "a_agg_suite": _a_agg_suite,
-        "u_set_suite": _u_set_suite,
-        "f_text_suite": _f_text_suite,
-        "f_curie_suite": _f_curie_suite,
-        "w_window_suite": _w_window_suite,
-        "e4_media_suite": _e4_media_suite,
-        "e3_docmeta_suite": _e3_docmeta_suite,
-        "e1_near_dup_suite": _e1_near_dup_suite,
-        # -- round-13 rotation rows (twice-green, stay one more round
-        # before demotion eligibility) ---------------------------------
-        "e5_retrieval_metrics": _e5_retrieval_metrics,
-        "e1_c4_filter": _e1_c4_filter,
-        "e1_pii_scrub": _e1_pii_scrub,
-        "t_resample_gapfill": _t_resample_gapfill,
-        "e6_transition_matrix": _e6_transition_matrix,
-        "j_jw_match": _j_jw_match,
-        # -- round-12 keeper: the champion serving probe (twice-green) --
-        "x1_linker_served": _x1_linker_served,
-        # -- round-10 rotation (VERDICT r09 next #1/#7): the eight
-        # never-driver-verified pool entries enter the window; the
-        # slots come from consolidating 17 r09-GREEN singles into the
-        # six tagged-union suites below — the established mechanism:
-        # every original stays individually runnable via all_queries
-        # and hash-checked in tests/test_oracle_parity.py -------------
-        "g_modularity": _g_modularity,
-        "e6_interval_join": _e6_interval_join,
-        "x1_linker_indexed": _x1_linker_indexed,
-        "e3_fertility": _e3_fertility,
-        "e6_windows": _e6_windows,
-        # -- round-10 consolidation suites (r09-green singles) ---------
-        "e1_sa_suite": _e1_sa_suite,
-        "g_rank_suite": _g_rank_suite,
-        "e2_bit_suite": _e2_bit_suite,
-        "e5_dp_suite": _e5_dp_suite,
-        "e2_kmeans_suite": _e2_kmeans_suite,
-        "x1_linker_suite": _x1_linker_suite,
-        # -- round-10 NEW op staying (the sketch family's window row) --
-        "e6_hll_distinct": _e6_hll_distinct,
-        # -- r09-green rows staying in the window ----------------------
-        # (round 15 demotions: t_cusum, t_holt, t_acf, e5_dp_quantile,
-        # e5_chi2, g_kcore — all 5-6× driver-green, all still in
-        # all_queries; round 14 demotions: e5_gov_suite, e5_prep_suite,
-        # g_graph_suite, e4_mpeg_decode, e3_gopher_rep,
-        # e2_hard_negatives, pipeline_curate_corpus, x1_tfidf_linker)
-        "pipeline_pretrain_prep": _pipeline_pretrain_prep,
-        "ep1_spotted_nodes": _ep1_spotted_nodes,
-        "t_ts_suite": _t_ts_suite,
-        "e6_journey_suite": _e6_journey_suite,
-        "e5_eval_suite": _e5_eval_suite,
-        "e1_clean_suite": _e1_clean_suite,
-        "e3_lm_suite": _e3_lm_suite,
-        "e5_sft_suite": _e5_sft_suite,
-        "g_count_suite": _g_count_suite,
-        "e2_assign_stream": _e2_assign_stream,
-        "e1_semantic_decontaminate": _e1_semantic_decontaminate,
-        "j_er_suite": _j_er_suite,
-        "e1_pair_suite": _e1_pair_suite,
-        # -- round-7 new op: the X1-closure composition (the in-engine
-        # TF-IDF linker's own row x1_tfidf_linker demoted this round;
-        # the composed EP1 face keeps X1 driver-verified) ---------------
-        "ep1_tfidf_mechanistic_nodes": _ep1_tfidf_mechanistic_nodes,
-        # -- keepers: the EP2 flagship merge (its oracle hash-checks the
-        # classic EP1 assembly downstream too), the 14-query TPC-H
-        # suite, and a readStream face (streaming stays driver-verified
-        # every round) -------------------------------------------------
-        "q_tpch_suite": _q_tpch_suite,
-        "e6_sessionize_closed": _e6_sessionize_closed,
-        "ep2_aligned_nodes": _ep2_aligned_nodes,
-    }
+    """The driver window: builder ``_<name>`` registered as ``name``."""
+    return {f.__name__[1:]: f for f in _WINDOW}
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """queries() plus the pre-consolidation forms — NOT shipped to the
-    driver (window cap) but still first-class: bench.py times its round-1
-    headline list from here, and tests/test_oracle_parity.py hash-checks
-    every oracle-backed entry (the legacy oracles stay in oracle_sql)."""
-    return {
-        **queries(),
-        # round-6 rotation: the 25 demoted r05-green singles — each
-        # still hash-checked per-entry in tests/test_oracle_parity.py
-        # and ready to rotate back into the driver window
-        # round-7 rotation: the r06-green window rows demoted to make
-        # room for the 45-entry pool — every one stays hash-checked
-        # per-entry in tests/test_oracle_parity.py and ready to rotate
-        # back (the established mechanism)
-        # round-15 rotation: the six demoted 5-6×-green singles stay
-        # individually runnable + per-entry hash-checked here
-        "t_cusum": _t_cusum,
-        "t_holt": _t_holt,
-        "t_acf": _t_acf,
-        "e5_dp_quantile": _e5_dp_quantile,
-        "e5_chi2": _e5_chi2,
-        "g_kcore": _g_kcore,
-        "a_agg_suite": _a_agg_suite,
-        "e1_near_dup_suite": _e1_near_dup_suite,
-        "e3_docmeta_suite": _e3_docmeta_suite,
-        "e4_media_suite": _e4_media_suite,
-        "u_set_suite": _u_set_suite,
-        "e2_ann_suite": _e2_ann_suite,
-        "e1_dedup_suite": _e1_dedup_suite,
-        "e3_qual_suite": _e3_qual_suite,
-        "f_text_suite": _f_text_suite,
-        "f_curie_suite": _f_curie_suite,
-        "e6_props_json": _e6_props_json,
-        "e6_windows": _e6_windows,
-        "ep1_mechanistic_nodes": _ep1_mechanistic_nodes,
-        "w_window_suite": _w_window_suite,
-        "f7_identifier_extract": _f7_identifier_extract,
-        "q1_pricing_summary": _q1_pricing_summary,
-        "q3_shipping_priority": _q3_shipping_priority,
-        "q18_large_orders": _q18_large_orders,
-        "q_correlated_avg": _q_correlated_avg,
-        "agg_rollup": _agg_rollup,
-        "sql_api_q10": _sql_api_q10,
-        "e2_pq_adc_topk": _e2_pq_adc_topk,
-        "e2_ivfpq_append_topk": _e2_ivfpq_append_topk,
-        "j_fuzzy_name_match": _j_fuzzy_name_match,
-        "e5_scd2_user_state": _e5_scd2_user_state,
-        "e5_constraint_report": _e5_constraint_report,
-        "e3_hashed_tf": _e3_hashed_tf,
-        "e3_pack_sequences": _e3_pack_sequences,
-        "e4_wav_decode": _e4_wav_decode,
-        "q17_small_quantity_revenue": _q17_small_quantity_revenue,
-        "q20_pattern_shippers": _q20_pattern_shippers,
-        "e3_bm25_topk": _e3_bm25_topk,
-        "e3_ppl_buckets": _e3_ppl_buckets,
-        "e3_unicode_normalize": _e3_unicode_normalize,
-        "e3_url_canonicalize": _e3_url_canonicalize,
-        "e3_wordlm": _e3_wordlm,
-        "e3_kn_ppl": _e3_kn_ppl,
-        "g_bfs_distances": _g_bfs_distances,
-        "g_label_prop": _g_label_prop,
-        "er_resolve": _er_resolve,
-        "e3_gopher_rep": _e3_gopher_rep,
-        "e1_c4_filter": _e1_c4_filter,
-        "e1_pii_scrub": _e1_pii_scrub,
-        "e5_span_corrupt": _e5_span_corrupt,
-        "e2_hard_negatives": _e2_hard_negatives,
-        "e5_calibration": _e5_calibration,
-        "e5_kfold": _e5_kfold,
-        "e5_profile": _e5_profile,
-        "e5_group_ols": _e5_group_ols,
-        "e6_cooccurrence": _e6_cooccurrence,
-        "g_random_walks": _g_random_walks,
-        "e3_skipgram": _e3_skipgram,
-        "pipeline_curate_corpus": _pipeline_curate_corpus,
-        "e5_tokenize": _e5_tokenize,
-        "e2_mean_pool": _e2_mean_pool,
-        "e6_transition_power": _e6_transition_power,
-        "e5_prep_suite": _e5_prep_suite,
-        "g_graph_suite": _g_graph_suite,
-        "e3_gopher_rep_hash": _e3_gopher_rep_hash,  # rows-only: prod kernel
-        "e6_attribution": _e6_attribution,
-        "e5_ner_eval": _e5_ner_eval,
-        "e1_repair_text": _e1_repair_text,
-        "e5_augment": _e5_augment,
-        "e5_iob_tags": _e5_iob_tags,
-        "e5_class_report": _e5_class_report,
-        "e3_char_entropy": _e3_char_entropy,
-        "e3_zipf": _e3_zipf,
-        "e5_datacard": _e5_datacard,
-        "e4_container_probe": _e4_container_probe,
-        "e4_gif_decode": _e4_gif_decode,
-        "e3_unigram_tokens": _e3_unigram_tokens,  # rows-only by nature
-        "e5_stratified_sample": _e5_stratified_sample,
-        "e2_lsh_append_topk": _e2_lsh_append_topk,
-        "e6_sessionize": _e6_sessionize,
-        "q5_regional_revenue": _q5_regional_revenue,
-        "j1_dim_lookup": _j1_dim_lookup,
-        "q7_volume_shipping": _q7_volume_shipping,
-        "agg_cube": _agg_cube,
-        "w1_running_sum": _w1_running_sum,
-        "w2_lag_lead": _w2_lag_lead,
-        "w3_rank": _w3_rank,
-        "o2_sort_upper": _o2_sort_upper,
-        "a7_count": _a7_count,
-        "approx_distinct": _approx_distinct,
-        "f1_bracket_strip": _f1_bracket_strip,
-        "f2_strip_marks": _f2_strip_marks,
-        "f3_simplify_name": _f3_simplify_name,
-        "syn_canonical_curie": _syn_canonical_curie,
-        "syn_canonical_name": _syn_canonical_name,
-        "ep1_drug_records": _ep1_drug_records,
-        "e1_minhash_signatures": _e1_minhash_signatures,
-        "e1_minhash_near_dup_xxh": _e1_minhash_near_dup_xxh,
-        "e2_pandas_topk": _e2_pandas_topk,
-        "e6_tumbling": _e6_tumbling,
-        "e6_sliding": _e6_sliding,
-        "e6_windows_batch": _e6_windows_batch,
-        "e6_sessionize_batch": _e6_sessionize_batch,
-        # round 2: temporal joins, dedup clustering, E5 widening
-        "t_asof_join": _t_asof_join,
-        "t_range_join": _t_range_join,
-        "e1_dup_clusters": _e1_dup_clusters,
-        "e2_label_centroids": _e2_label_centroids,
-        "e3_gopher_filter": _e3_gopher_filter,
-        "pipeline_clean_corpus": _pipeline_clean_corpus,
-        "e5_hash_sample": _e5_hash_sample,
-        "e5_hash_split": _e5_hash_split,
-        "e3_tfidf": _e3_tfidf,
-        "e1_incremental_dedup": _e1_incremental_dedup,
-        "e3_repetition": _e3_repetition,
-        "e3_redact_pii": _e3_redact_pii,
-        "e5_skew_profile": _e5_skew_profile,
-        "q6_forecast_revenue": _q6_forecast_revenue,
-        "q14_promo_revenue": _q14_promo_revenue,
-        "q4_order_priority": _q4_order_priority,
-        "a9_percentiles": _a9_percentiles,
-        # round 2: full TPC-H-shape sweep over the star schema
-        "q8_market_share": _q8_market_share,
-        "q9_product_profit": _q9_product_profit,
-        "q11_important_parts": _q11_important_parts,
-        "q12_late_priority": _q12_late_priority,
-        "q13_order_count_distribution": _q13_order_count_distribution,
-        "q15_top_supplier": _q15_top_supplier,
-        "q16_supplier_counts": _q16_supplier_counts,
-        "q19_disjunctive_revenue": _q19_disjunctive_revenue,
-        "q21_late_sole_supplier": _q21_late_sole_supplier,
-        "q22_idle_customers": _q22_idle_customers,
-        "q2_min_cost_supplier": _q2_min_cost_supplier,
-        # round 4: the suite-consolidated originals stay individually
-        # runnable + per-entry hash-checked here (driver window shows
-        # them via u_set_suite / f_curie_suite)
-        "a5_distinct": _a5_distinct,
-        "u2_intersect": _u2_intersect,
-        "u3_anti_join": _u3_anti_join,
-        "a8_explode_distinct": _a8_explode_distinct,
-        "o1_topk": _o1_topk,
-        "j9_semi_join": _j9_semi_join,
-        "f4_curie_prefix_upper": _f4_curie_prefix_upper,
-        "f10_prefix_extract": _f10_prefix_extract,
-        # round 5: exact-target domain mixture draw (hash-oracled)
-        "e5_mixture_sample": _e5_mixture_sample,
-        # round 5: char-trigram LM perplexity quality signal (hash-oracled)
-        "e3_charlm": _e3_charlm,
-        # round 5: intra-document repeated-ngram removal (hash-oracled)
-        "e1_intradoc_dedup": _e1_intradoc_dedup,
-        # round 5: contamination-proof cluster-unit split (hash-oracled)
-        "e5_cluster_safe_split": _e5_cluster_safe_split,
-        # round 5: materialized packed training sequences (hash-oracled)
-        "e3_packed_sequences_rows": _e3_packed_sequences_rows,
-        # round 5: PIVOT reshaping + its UNPIVOT inverse (hash-oracled)
-        "e5_pivot": _e5_pivot,
-        "e5_unpivot": _e5_unpivot,
-        # round-6 rotation prep: the whole pytest-only TPC-H sweep as
-        # one tagged-union row (hash-oracled at both SFs)
-        "q_tpch_suite": _q_tpch_suite,
-        # round 5 late: cross-document substring dedup (hash-oracled)
-        "e1_crossdoc_dedup": _e1_crossdoc_dedup,
-        # round 5 late: join-free Bloom decontamination (hash-oracled,
-        # false positives replicated)
-        "e1_bloom_decontaminate": _e1_bloom_decontaminate,
-        # round 5 late: count-min sketch point queries (hash-oracled —
-        # the one sketch family whose cells ARE cross-engine exact)
-        "e5_countmin_topk": _e5_countmin_topk,
-        # round 5 late: zlib redundancy quality signal (rows-only —
-        # zlib has no DuckDB twin; goldens in test_ext_operators.py)
-        "e3_compression_ratio": _e3_compression_ratio,
-        # round 6: unigram APPLY on the frozen fixture table — the
-        # hash-oracled replacement for the rows-only e3_unigram_tokens
-        # driver slot (recursive-SQL Viterbi DP oracle)
-        "e3_unigram_apply": _e3_unigram_apply,
-        # round 6: end-to-end text retrieval (chunk → hashed-TF → LSH
-        # index on disk → probe → hydrate) — composed hash oracle
-        "e2_retrieval_topk": _e2_retrieval_topk,
-        # round 5 late: SemDeDup-shape semantic dedup (hash-oracled via
-        # recursive-SQL connected components over the cosine pairs)
-        "e1_semantic_dedup": _e1_semantic_dedup,
-        # round 5 late: deterministic global training-order shuffle
-        # (hash-oracled — md5 hash order replicated in SQL)
-        "e3_shuffle_shards": _e3_shuffle_shards,
-        # round 5 late: fractional-epoch domain upsampling (hash-oracled)
-        "e5_weighted_upsample": _e5_weighted_upsample,
-        # round 5 late: pow-2 length bucketing for batching (hash-oracled)
-        "e3_length_buckets": _e3_length_buckets,
-        # round 5 late: int8 scalar quantization for serving (hash-oracled)
-        "e2_int8_quantize": _e2_int8_quantize,
-        # round 5 late: per-language boilerplate trigram top-k (hash-oracled)
-        "e3_ngram_topk": _e3_ngram_topk,
-        # round 5 late: Aho-Corasick dictionary tagging (hash-oracled —
-        # brute-force substr oracle; round-6 rotation candidate)
-        "e3_dict_tag": _e3_dict_tag,
-        # round 5 late: EM/token-F1/ROUGE-n eval metrics (hash-oracled;
-        # round-6 rotation candidate)
-        "e5_eval_scores": _e5_eval_scores,
-        # round 5 late: SFT chat-template rendering (hash-oracled;
-        # round-6 rotation candidate)
-        "e5_chat_render": _e5_chat_render,
-        # round 5 late: NIAH needle injection at controlled depth
-        # (hash-oracled; round-6 rotation candidate)
-        "e5_needle_inject": _e5_needle_inject,
-        # round 5 late: BMP + WARC round-trip probes (hash-oracled;
-        # round-6 rotation candidates)
-        "e4_bmp_decode": _e4_bmp_decode,
-        "s_warc_probe": _s_warc_probe,
-        "s_tar_probe": _s_tar_probe,
-        # round 5 late: the originals consolidated into the four
-        # late-rotation suites (e2_ann_suite / e1_dedup_suite /
-        # e3_qual_suite / f_text_suite) — individually runnable and
-        # hash-checked here, exactly like the earlier consolidations
-        "e2_cosine_topk": _e2_cosine_topk,
-        "e2_lsh_topk": _e2_lsh_topk,
-        "e2_ivf_topk": _e2_ivf_topk,
-        "e1_exact_dedup": _e1_exact_dedup,
-        "e1_dedup_survivor": _e1_dedup_survivor,
-        "e1_minhash_near_dup": _e1_minhash_near_dup,
-        "e1_decontaminate": _e1_decontaminate,
-        "e1_dup_clusters_star": _e1_dup_clusters_star,
-        "e3_text_quality": _e3_text_quality,
-        "e3_bpe_tokens": _e3_bpe_tokens,
-        "e3_chunk_documents": _e3_chunk_documents,
-        "f_name_normalize": _f_name_normalize,
-        "f5_sentence_pipeline": _f5_sentence_pipeline,
-        # round 4: mergeable-sketch distinct counts — estimates by
-        # design, so tolerance-tested in pytest instead of hash-oracled
-        # (rows-only here; see tests/test_ext_operators.py)
-        "e5_sketch_distinct": _e5_sketch_distinct,
-        # round 4: multimodal ANALYSIS over real codecs — hash/FFT
-        # outputs aren't SQL-expressible → rows-only; goldens in
-        # tests/test_png_codec.py + tests/test_wav_codec.py
-        "e4_image_hashes": _e4_image_hashes,
-        "e4_audio_features": _e4_audio_features,
-        # round 6: REAL MPEG-1 Layer I/II sample decode (rows-only —
-        # the synthesis filterbank has no SQL twin; SNR/PR goldens in
-        # tests/test_mpeg_audio.py)
-        "e4_mpeg_decode": _e4_mpeg_decode,
-        # round-14 demotions (5-6x driver-green; oracles unchanged)
-        "x1_tfidf_linker": _x1_tfidf_linker,
-        "e5_gov_suite": _e5_gov_suite,
-        # round 7 (round-8 pool): distributed suffix array (prefix
-        # doubling, two-phase global dense-rank) + Lee-et-al exact
-        # substring duplication — both hash-oracled against direct
-        # suffix-string sorts in SQL
-        "e1_suffix_array": _e1_suffix_array,
-        "e1_sa_dup_spans": _e1_sa_dup_spans,
-        # round 8 (VERDICT r07 next #2): the composed removal step
-        "e1_sa_dedup": _e1_sa_dedup,
-        # round 8 (VERDICT r07 next #8): EP1 with the relational
-        # dictionary spotter — zero stub factories anywhere
-        "ep1_spotted_nodes": _ep1_spotted_nodes,
-        # round 7 (round-8 pool): the third flagship composition —
-        # curation chain -> sequence packing of the survivors
-        "pipeline_pretrain_prep": _pipeline_pretrain_prep,
-        # round 7 (round-8 pool): classical seasonal decomposition
-        "t_seasonal": _t_seasonal,
-        # round 7 (round-8 pool): 1-bit quantization + Hamming top-k,
-        # the composed rerank funnel, and PageRank (chained-CTE oracle)
-        "e2_hamming_topk": _e2_hamming_topk,
-        "e2_rerank_topk": _e2_rerank_topk,
-        # round 8 (VERDICT r07 next #7): banded corpus×corpus pairs
-        "e2_hamming_pairs": _e2_hamming_pairs,
-        # round 8 (round-9 pool): distributed Lloyd's k-means + the
-        # cluster-balanced diversity draw over its fit
-        "e2_kmeans": _e2_kmeans,
-        "e2_cluster_sample": _e2_cluster_sample,
-        "e2_semdedup_kmeans": _e2_semdedup_kmeans,
-        # round 8 (round-9 pool): the semantic decontamination face +
-        # the deterministic FIM pretraining transform
-        "e1_semantic_decontaminate": _e1_semantic_decontaminate,
-        "e5_fim_transform": _e5_fim_transform,
-        # round 8 (round-9 pool): the streaming routing face — equals
-        # the batch k-means assignment over the finite input
-        "e2_assign_stream": _e2_assign_stream,
-        "g_pagerank": _g_pagerank,
-        "g_ppr": _g_ppr,
-        # round 9 (round-10 pool): coreness by synchronized h-index
-        # iteration — fixed rounds, chained-CTE integer replay oracle
-        "g_kcore": _g_kcore,
-        # round 9 (round-10 pool): Newman modularity of the LPA
-        # communities — exact integer numerators, one division per row
-        "g_modularity": _g_modularity,
-        # round 9 (round-10 pool): stream-stream range join under the
-        # driver — watermark-bounded state, batch-equality oracle
-        "e6_interval_join": _e6_interval_join,
-        # round 9 (round-10 pool): tokenizer fertility audit — exact
-        # divisions over the wordpiece apply + doc word/char counts
-        "e3_fertility": _e3_fertility,
-        # round 9 (round-10 pool): MCC + Cohen's kappa — integer
-        # numerators, sqrt-only denominators, one division each
-        "e5_agreement": _e5_agreement,
-        # round 9 (round-10 pool): two-sided CUSUM change detection —
-        # closed-form window shape, BIGINT micro-units end to end
-        "t_cusum": _t_cusum,
-        # round 9 (round-10 pool): corpus BLEU-4 — exact clipped
-        # fractions, sqrt-only geometric mean, BP as a log-ratio
-        "e5_bleu": _e5_bleu,
-        # round 9 (round-10 pool): signed random projection (angle-
-        # preserving 1-bit codes) + its Hamming top-k composition
-        "e2_srp_sketch": _e2_srp_sketch,
-        # round 9 (round-10 pool): DP quantiles off one noisy CDF —
-        # post-processing of a single Laplace histogram release
-        "e5_dp_quantile": _e5_dp_quantile,
-        # round 9 (round-10 pool): Holt linear-trend smoothing — one
-        # fold per key, recursive-CTE replay oracle, bit-exact doubles
-        "t_holt": _t_holt,
-        "e5_dp_histogram": _e5_dp_histogram,
-        # round 8 (VERDICT r07 next #3/#4): bench-grade SA slice +
-        # corpus-scale TF-IDF linker probes (max_df off/on)
-        "e1_suffix_array_bench": _e1_suffix_array_bench,
-        "x1_linker_corpus": _x1_linker_corpus,
-        "x1_linker_corpus_maxdf": _x1_linker_corpus_maxdf,
-        # round 9 (round-10 pool): the linker serving face — persisted
-        # gram-bucket index probe, bit-identical to the inline fit
-        "x1_linker_indexed": _x1_linker_indexed,
-        # round 8 (VERDICT r07 next #6): user-level DP with the
-        # per-contributor clamp
-        "e5_dp_histogram_user": _e5_dp_histogram_user,
-        # round 6: event-analytics + retrieval-metric widening, all
-        # hash-oracled (rotation candidates for the next window)
-        "e6_funnel": _e6_funnel,
-        "e5_cohort_retention": _e5_cohort_retention,
-        "e5_retrieval_metrics": _e5_retrieval_metrics,
-        "e5_cdc_apply": _e5_cdc_apply,
-        "e1_near_dup_recall": _e1_near_dup_recall,
-        "e1_simhash_pairs": _e1_simhash_pairs,
-        "e5_temperature_mix": _e5_temperature_mix,
-        "g_triangle_count": _g_triangle_count,
-        "g_common_neighbors": _g_common_neighbors,
-        "e5_ndcg": _e5_ndcg,
-        "e5_dsir_weights": _e5_dsir_weights,
-        "t_resample_gapfill": _t_resample_gapfill,
-        "t_ewma": _t_ewma,
-        "t_anomaly": _t_anomaly,
-        "e5_k_anonymity": _e5_k_anonymity,
-        "e1_boilerplate_strip": _e1_boilerplate_strip,
-        "e6_transition_matrix": _e6_transition_matrix,
-        "e6_top_paths": _e6_top_paths,
-        "j_jw_match": _j_jw_match,
-        "e5_winsorize": _e5_winsorize,
-        "e3_wordpiece_apply": _e3_wordpiece_apply,
-        # round 5: the originals consolidated into the six new suites
-        # (driver window shows them via syn_suite / j_join_suite /
-        # a_agg_suite / e1_near_dup_suite / e3_docmeta_suite /
-        # e4_media_suite / the extended u_set_suite)
-        "syn_canonical": _syn_canonical,
-        "syn_equivalent_nodes": _syn_equivalent_nodes,
-        "syn_category_histogram": _syn_category_histogram,
-        "syn_normalizer_nodes": _syn_normalizer_nodes,
-        "j2_mode_vote": _j2_mode_vote,
-        "j4_coalesce_fallback": _j4_coalesce_fallback,
-        "j5_prefix_expansion": _j5_prefix_expansion,
-        "a2_longest_value": _a2_longest_value,
-        "a4_category_histogram": _a4_category_histogram,
-        "a6_first_writer_wins": _a6_first_writer_wins,
-        "e1_simhash": _e1_simhash,
-        "e1_ngram_jaccard": _e1_ngram_jaccard,
-        "e1_embedding_near_dup": _e1_embedding_near_dup,
-        "e3_lang_id": _e3_lang_id,
-        "e3_fingerprint": _e3_fingerprint,
-        "e4_png_decode": _e4_png_decode,
-        "e4_media_metadata": _e4_media_metadata,
-        "u1_union_merge": _u1_union_merge,
-        "u4_union_prefer_first": _u4_union_prefer_first,
-    }
+    """Every registered query: the window first, then ``_MORE``."""
+    return {f.__name__[1:]: f for f in _WINDOW + _MORE}
 
 
 def _sql_en_stopwords() -> str:

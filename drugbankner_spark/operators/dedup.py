@@ -172,26 +172,6 @@ def token_shingles(df: DataFrame, text_col: str, id_col: str, n: int = 3) -> Dat
     )
 
 
-def minhash_signatures(
-    shingles: DataFrame, id_col: str, num_hashes: int = 16, kernel: str = "md5"
-) -> DataFrame:
-    """k-permutation MinHash over the 32-bit shingle hashes (relational
-    form over an exploded shingle table). Output: (id, perm, minhash)."""
-    h = content_hash32(F.col("shingle"), kernel)
-    perms = F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1))).alias("perm")
-    hashed = shingles.select(F.col(id_col), h.alias("_h")).select(
-        F.col(id_col), "_h", perms
-    )
-    val = (
-        (F.col("perm") * 2 + 1) * F.col("_h") + F.col("perm") * F.col("perm") + 7
-    ) % F.lit(MINHASH_PRIME)
-    return (
-        hashed.select(F.col(id_col), "perm", val.alias("_v"))
-        .groupBy(id_col, "perm")
-        .agg(F.min("_v").alias("minhash"))
-    )
-
-
 def minhash_signature_array(
     df: DataFrame, text_col: str, id_col: str,
     num_hashes: int = 16, n: int = 3, kernel: str = "md5",
@@ -199,9 +179,8 @@ def minhash_signature_array(
     """Shuffle-free MinHash: the whole signature is computed per row with
     array expressions (shingle → hash → k permutation minima), so the
     ONLY shuffle in a near-dup pipeline is the band join itself. Output:
-    (id, sig: array<long>[k]). Identical values to minhash_signatures —
-    min over the same shingle multiset. ``kernel="xxhash64"`` is the
-    production hash (see content_hash32); md5 is kept for oracle runs."""
+    (id, sig: array<long>[k]). ``kernel="xxhash64"`` is the production
+    hash (see content_hash32); md5 is kept for oracle runs."""
     pre = df.select("*", F.split(F.col(text_col), " ").alias("_toks"))
     hashes = F.transform(
         shingle_array_from_tokens(F.col("_toks"), n),
@@ -230,8 +209,8 @@ def minhash_signatures_rowwise(
     df: DataFrame, text_col: str, id_col: str,
     num_hashes: int = 16, n: int = 3, kernel: str = "md5",
 ) -> DataFrame:
-    """(id, perm, minhash) view of minhash_signature_array (parity shape
-    with minhash_signatures, zero pre-explode shuffles)."""
+    """(id, perm, minhash) view of minhash_signature_array: one
+    posexplode of the per-row signature, no shuffle."""
     arr = minhash_signature_array(df, text_col, id_col, num_hashes, n, kernel)
     return arr.select(
         F.col(id_col), F.posexplode("sig").alias("perm", "minhash")
@@ -307,46 +286,6 @@ def minhash_band_pairs_rowwise(
         banded.count()
     a = banded.select(F.col(id_col).alias("id_a"), "band", "band_key")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "band_key")
-    return (
-        a.join(b, ["band", "band_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-
-
-def minhash_band_pairs(
-    signatures: DataFrame, id_col: str, bands: int = 4, rows_per_band: int = 4
-) -> DataFrame:
-    """LSH banding: docs sharing any band of their signature become
-    candidate pairs (id_a < id_b, distinct). The join key is
-    (band, concatenated band signature) — an equi join Catalyst can
-    shuffle-hash; at scale the band table is ~b rows per doc."""
-    banded = (
-        signatures.withColumn("band", (F.col("perm") / rows_per_band).cast("int"))
-        .groupBy(id_col, "band")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("perm", "minhash"))),
-                    lambda s: s["minhash"].cast("string"),
-                ),
-                "-",
-            ).alias("band_key")
-        )
-    )
-    banded = shared_persist(banded)  # both self-join sides
-    # materialize before the self-join fans out — same concurrent-cold-
-    # cache rationale (and the same one-task-input gate) as
-    # minhash_band_pairs_rowwise above
-    if not fits_one_task(signatures):
-        banded.count()
-    a = banded.select(
-        F.col(id_col).alias("id_a"), "band", "band_key"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), "band", "band_key"
-    )
     return (
         a.join(b, ["band", "band_key"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -467,7 +406,7 @@ def ngram_jaccard_pairs(
     """Exact Jaccard over distinct shingle sets (the ground truth for the
     approximate paths): self-join on shingle → |A∩B| / (|A|+|B|-|A∩B|).
     Quadratic blow-up on hot shingles — at scale run it on LSH candidates
-    (minhash_band_pairs), not the full corpus.
+    (minhash_band_pairs_rowwise), not the full corpus.
 
     The shingle table is persisted: it feeds BOTH self-join sides and
     the per-doc size agg, and Catalyst plans the three as independent

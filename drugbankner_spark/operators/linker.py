@@ -48,13 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Alias dims at/below this row count broadcast (same guard family as
-#: textanalysis.LM_BROADCAST_MAX_ROWS).
-ALIAS_BROADCAST_MAX_ROWS = 2_000_000
-
-
-def _maybe_broadcast(dim: DataFrame) -> DataFrame:
-    return F.broadcast(dim) if dim.count() <= ALIAS_BROADCAST_MAX_ROWS else dim
+from drugbankner_spark.tables import BROADCAST_MAX_ROWS, maybe_broadcast
 
 
 def char_wb_gram_counts(
@@ -223,7 +217,7 @@ def _mention_vectors(mcounts: DataFrame, idf: DataFrame) -> DataFrame:
     corpus's idf (sklearn transform semantics — OOV grams drop at the
     idf join, before the norm). Shared by the full posting join and
     the champion-list probe so vectorization can never drift."""
-    mweighted = mcounts.join(_maybe_broadcast(idf), "gram").select(
+    mweighted = mcounts.join(maybe_broadcast(idf), "gram").select(
         "gram", F.col("_id").alias("mention"),
         (F.col("tf") * F.col("idf")).alias("_w"),
     )
@@ -483,10 +477,10 @@ def _fold_rank(
     fold's (mention, alias_id) clustering and the window's (mention)
     clustering both reuse — provided ``alias_map`` broadcasts (the
     serving contract; an alias dim above
-    :data:`ALIAS_BROADCAST_MAX_ROWS` re-shuffles on alias, which that
+    ``tables.BROADCAST_MAX_ROWS`` re-shuffles on alias, which that
     shape needs anyway)."""
     per_concept = (
-        scored.join(_maybe_broadcast(alias_map), "alias")
+        scored.join(maybe_broadcast(alias_map), "alias")
         .groupBy("mention", "alias_id")
         .agg(F.max("score").alias("score"))
     )
@@ -535,7 +529,7 @@ def _score_full(
     :data:`LINKER_PIN_MIN_POSTINGS`."""
     if n_post is None:
         n_post = postings.count()
-    post_dim = (F.broadcast(postings) if n_post <= ALIAS_BROADCAST_MAX_ROWS
+    post_dim = (F.broadcast(postings) if n_post <= BROADCAST_MAX_ROWS
                 else postings)
     width = _pin_width("score_full", mvec, n_post=n_post,
                        gram_counts=gram_counts, idf=idf)
@@ -1107,7 +1101,7 @@ def link_with_alias_index(
     # the uncertified tail (VERDICT r11 next #1b — one vectorization)
     mvec = shared_persist(_mention_vectors(mcounts, idf))
     cand = shared_persist(
-        mvec.join(_maybe_broadcast(champions), "gram")
+        mvec.join(maybe_broadcast(champions), "gram")
         .select("mention", "alias")
         .distinct()
     )
@@ -1197,7 +1191,7 @@ def link_with_alias_index(
     # non-champion probe, restricted to the risky mentions — REUSING
     # the persisted mention vectors (no second vectorization)
     risky_out = _score_full(
-        mvec.join(_maybe_broadcast(risky), "mention", "left_semi"),
+        mvec.join(maybe_broadcast(risky), "mention", "left_semi"),
         postings, idf, alias_map, threshold, k,
     )
     return safe_out.unionByName(risky_out)

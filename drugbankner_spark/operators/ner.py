@@ -425,7 +425,6 @@ def spot_mentions(
     surfaces: DataFrame,
     surface_col: str = "name",
     max_tokens: int = 4,
-    broadcast_max_rows: int = 2_000_000,
 ) -> DataFrame:
     """IN-ENGINE mention spotting (VERDICT r07 next #8) — dictionary
     NER as pure relational algebra, the detection-stage replacement
@@ -443,13 +442,14 @@ def spot_mentions(
 
     Scale shape: one explode bounded by sentence_tokens ×
     ``max_tokens``, then ONE equi-join on the normalized gram — the
-    surface dim broadcasts below ``broadcast_max_rows`` (an ontology's
-    alias table is a dim) and otherwise shuffles on the gram key.
-    Fully SQL-expressible (no UDF), so EP1 variants built on it are
+    surface dim broadcasts below ``tables.BROADCAST_MAX_ROWS`` (an
+    ontology's alias table is a dim) and otherwise shuffles on the gram
+    key. Fully SQL-expressible (no UDF), so EP1 variants built on it are
     hash-oracle-able end to end; for 100k+-term dictionaries with
     deep phrases, textanalysis.tag_dictionary_terms (Aho-Corasick,
     O(text) per doc) is the offsets-included alternative."""
     from drugbankner_spark.caching import shared_persist
+    from drugbankner_spark.tables import maybe_broadcast
 
     norm = lambda c: F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))  # noqa: E731
     # persisted: the broadcast-size guard's count() and the join are
@@ -459,7 +459,7 @@ def spot_mentions(
         .filter(F.col("_surf") != "")
         .distinct()
     )
-    surf = F.broadcast(surf) if surf.count() <= broadcast_max_rows else surf
+    surf = maybe_broadcast(surf)
     # sequence(1, 0) is DESCENDING in Spark (slice at index 0 then
     # throws) — sentences shorter than n tokens get an empty gram list
     grams_expr = F.expr(

@@ -94,7 +94,7 @@ def cluster_safe_split(
     near-dups — two 95%-similar documents hash independently and land
     in train AND test, the classic benchmark-contamination bug.
 
-    Composition: near-dup ``pairs`` (minhash_band_pairs output) →
+    Composition: near-dup ``pairs`` (minhash_band_pairs_rowwise output) →
     connected components (graph.near_dup_clusters, O(log n) rounds) →
     ``hash_split`` on the CLUSTER id. A whole clique of near-dups
     therefore moves as one unit into a single split; singleton docs are

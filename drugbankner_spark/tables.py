@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 TABLE_NAMES = (
     "region",
@@ -128,20 +129,52 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
     ~5 s inside a parquet write task — both measured this round). For
     the engine's driver-built dims (per-round rank offsets, bucket
     offset tables, collected query rows) that tax recurs once per
-    consuming job. Routing the same rows through a pandas frame ships
-    ONE Arrow batch to the JVM at plan time; execution is then pure
-    JVM. Non-empty rows only — empty inputs keep the plain path (their
-    execution is trivially cheap), as does anything pandas/Arrow
-    cannot represent (the fallback preserves exact semantics)."""
+    consuming job. Building an Arrow table from the same rows ships ONE
+    Arrow batch to the JVM at plan time; execution is then pure JVM.
+    The columns are built with the target schema's Arrow types, so a
+    nullable long column keeps every int64 exactly (a pandas detour
+    would hold it as float64 once a None appears). Non-empty rows only
+    — empty inputs keep the plain path (their execution is trivially
+    cheap), as does anything Arrow cannot represent (the fallback
+    preserves exact semantics)."""
     if rows:
         try:
-            import pandas as pd
+            import pyarrow as pa
+            from pyspark.sql.pandas.types import to_arrow_schema
+            from pyspark.sql.types import StructType
 
-            pdf = pd.DataFrame([tuple(r) for r in rows])
-            return spark.createDataFrame(pdf, schema=schema)
+            struct = (schema if isinstance(schema, StructType)
+                      else StructType.fromDDL(schema))
+            arrow = to_arrow_schema(struct)
+            cols = zip(*(tuple(r) for r in rows))
+            table = pa.Table.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+                schema=arrow,
+            )
+            return spark.createDataFrame(table, schema=struct)
         except Exception:
             pass
     return spark.createDataFrame(rows, schema)
+
+
+#: Dims at or below this many rows take the explicit broadcast hint;
+#: above it the hint is omitted and AQE picks the join strategy (a
+#: shuffle join for a genuinely huge dim). ~2M rows of (key, double) is
+#: tens of MB serialized, comfortably inside executor broadcast
+#: budgets; an un-pruned web-scale dim (an ontology's full alias table,
+#: a bigram model without min_count) is not.
+BROADCAST_MAX_ROWS = 2_000_000
+
+
+def maybe_broadcast(
+    dim: DataFrame, max_rows: int = BROADCAST_MAX_ROWS
+) -> DataFrame:
+    """``F.broadcast(dim)`` when one count job on the (already
+    aggregated, bounded) dim says it fits under ``max_rows``; the bare
+    dim otherwise, so AQE chooses the join. The count scans the dim
+    only, never the fact side, so callers persist a dim that is costly
+    to recompute."""
+    return F.broadcast(dim) if dim.count() <= max_rows else dim
 
 
 def est_plan_bytes(df: DataFrame) -> int | None:
@@ -183,7 +216,6 @@ def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # TIMESTAMP(MICROS) read as NTZ. Branch on the loaded type and
         # normalize to session-TZ TimestampType (UTC session → the NTZ
         # cast is value-preserving and matches the DuckDB oracle).
-        from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

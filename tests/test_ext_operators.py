@@ -21,24 +21,6 @@ from drugbankner_spark.tables import load_table  # noqa: E402
 SF = "/root/testdata/sf0.001"
 
 
-def test_minhash_finds_planted_near_dups(spark):
-    # Plant three documents: A, a 1-token edit of A (near-dup), and an
-    # unrelated doc. The banded MinHash must pair the near-dups and must
-    # not pair the unrelated one.
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 5
-    near = base.replace("theta", "thetaX", 1)
-    other = "one two three four five six seven eight nine ten " * 5
-    docs = spark.createDataFrame(
-        [(1, base), (2, near), (3, other)], ["doc_id", "text"]
-    )
-    sh = D.token_shingles(docs, "text", "doc_id", n=3)
-    sigs = D.minhash_signatures(sh, "doc_id", 16)
-    pairs = {(r["id_a"], r["id_b"]) for r in
-             D.minhash_band_pairs(sigs, "doc_id").collect()}
-    assert (1, 2) in pairs
-    assert (1, 3) not in pairs and (2, 3) not in pairs
-
-
 def test_xxhash_kernel_identical_recall_on_planted_pairs(spark):
     # The production (xxhash64) and oracle (md5) shingle hashes must
     # find the same planted near-dup pairs and reject the same

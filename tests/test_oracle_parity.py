@@ -52,6 +52,12 @@ def test_driver_window_is_exactly_50():
     # CONSOLIDATE to make room, never silently exceed the window.
     assert len(QUERIES_DRIVER := entrymod.queries()) == 50, \
         sorted(QUERIES_DRIVER)
+    # every builder is registered once across the two tuples, under the
+    # name its function carries, and the window leads all_queries()
+    assert len(QUERIES) == len(entrymod._WINDOW) + len(entrymod._MORE)
+    for name, fn in QUERIES.items():
+        assert fn is getattr(entrymod, f"_{name}"), name
+    assert list(QUERIES.items())[:50] == list(QUERIES_DRIVER.items())
 
 
 #: The CLOSED list of registered queries with no DuckDB oracle twin
@@ -121,10 +127,9 @@ def test_round9_consolidated_singles_stay_oracle_ready():
 
 
 def test_round7_pool_names_stay_oracle_ready():
-    # The round-7 rotation pool advertised in the queries() docstring:
-    # every name must keep a runnable query AND a DuckDB oracle (the
-    # rows-only e4_mpeg_decode excepted) so the driver can hash-check
-    # it the day it rotates in.
+    # The round-7 rotation pool: every name must keep a runnable query
+    # AND a DuckDB oracle (the rows-only e4_mpeg_decode excepted) so the
+    # driver can hash-check it the day it rotates in.
     pool = [
         "e6_funnel", "e5_cohort_retention", "e5_retrieval_metrics",
         "e5_cdc_apply", "e1_near_dup_recall", "e1_simhash_pairs",

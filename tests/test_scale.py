@@ -484,3 +484,16 @@ def test_sharded_primitives_validate_args(spark):
         sharded_topk(df, ["grp"], order, 5, shards=0)
     with _pytest.raises(ValueError, match="method"):
         sharded_row_number(df, ["grp"], order, method="dense")
+
+
+def test_local_df_keeps_int64_exact_next_to_none(spark):
+    # A nullable long column must round-trip bit-exactly: 2**62 + 1 is
+    # not representable as float64, so any float detour shows up here.
+    from drugbankner_spark.tables import local_df
+
+    rows = [(2**62 + 1, "a"), (None, "b")]
+    df = local_df(spark, rows, "v long, s string")
+    assert [tuple(r) for r in df.collect()] == rows
+    # the Arrow batch becomes a LocalRelation, not a Python-RDD scan
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan, plan

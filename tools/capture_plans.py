@@ -24,21 +24,16 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as em
+    from bench import ALIAS
     from drugbankner_spark.session import get_spark
 
     spark = get_spark(app_name="capture-plans")
     qs = em.all_queries()
     os.makedirs(outdir, exist_ok=True)
-    # bench ALIAS: the benched form of a few names differs from the
-    # registry row of the same name — mirror bench.py so plans match
-    # what the bench times
-    alias = {
-        "e6_sessionize": "e6_sessionize_batch",
-        "e6_sessionize_stream": "e6_sessionize",
-        "e1_suffix_array": "e1_suffix_array_bench",
-    }
+    # bench.ALIAS: the benched form of a few names differs from the
+    # registry row of the same name, so plans match what the bench times
     for name in names:
-        fn = qs.get(alias.get(name, name))
+        fn = qs.get(ALIAS.get(name, name))
         if fn is None:
             print(f"SKIP {name}: not in registry", file=sys.stderr)
             continue

@@ -37,6 +37,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     import __spark_entry__ as em
+    from bench import ALIAS
     from drugbankner_spark.caching import release_shared_caches
     from drugbankner_spark.session import get_spark
 
@@ -44,13 +45,8 @@ def main() -> None:
         app_name="count-jobs", extra_conf={"spark.ui.enabled": "true"}
     )
     qs = em.all_queries()
-    alias = {
-        "e6_sessionize": "e6_sessionize_batch",
-        "e6_sessionize_stream": "e6_sessionize",
-        "e1_suffix_array": "e1_suffix_array_bench",
-    }
     for name in names:
-        fn = qs.get(alias.get(name, name))
+        fn = qs.get(ALIAS.get(name, name))
         if fn is None:
             print(f"{name}: not in registry")
             continue
