@@ -12,6 +12,7 @@ value-hash is bitwise-stable.
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -946,328 +947,6 @@ def _f10_prefix_extract(spark: SparkSession, sf: str) -> DataFrame:
     return cands.select(
         N.curie_prefix(F.col("candidate_curie")).alias("prefix")
     ).distinct()
-
-
-# ---------------------------------------------------------------------------
-# Driver-window suites (round 4). The driver records correctness for at
-# most 50 registry entries, so trivially-stable demonstrations are
-# consolidated into tagged-union suites — each branch reuses the ORIGINAL
-# query function (still individually registered in all_queries and
-# hash-checked per-entry by tests/test_oracle_parity.py), and the suite's
-# single driver hash covers every branch. Values are stringified into a
-# common (op, k, v) schema; numeric formatting-sensitive columns
-# (doubles) are excluded from v rather than risking engine-specific
-# rendering.
-# ---------------------------------------------------------------------------
-
-def _u_set_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # A5 distinct + U2 intersect + U3 anti + A8 explode-distinct +
-    # O1 top-k + J9 semi — the set/ordering family in one driver row.
-    null_s = F.lit(None).cast("string")
-    branches = [
-        _a5_distinct(spark, sf).select(
-            F.lit("a5").alias("op"),
-            F.col("o_orderstatus").alias("k"),
-            F.col("o_orderpriority").alias("v"),
-        ),
-        _u2_intersect(spark, sf).select(
-            F.lit("u2").alias("op"),
-            F.col("c_custkey").cast("string").alias("k"),
-            null_s.alias("v"),
-        ),
-        _u3_anti_join(spark, sf).select(
-            F.lit("u3").alias("op"),
-            F.col("c_custkey").cast("string").alias("k"),
-            F.col("c_name").alias("v"),
-        ),
-        _a8_explode_distinct(spark, sf).select(
-            F.lit("a8").alias("op"),
-            F.col("member_id").alias("k"),
-            null_s.alias("v"),
-        ),
-        _o1_topk(spark, sf).select(
-            F.lit("o1").alias("op"),
-            F.col("s_suppkey").cast("string").alias("k"),
-            F.col("s_name").alias("v"),
-        ),
-        _j9_semi_join(spark, sf).select(
-            F.lit("j9").alias("op"),
-            F.col("c_custkey").cast("string").alias("k"),
-            F.col("c_name").alias("v"),
-        ),
-        # round 5: U1 union-merge + U4 merge-prefer-first join the family
-        _u1_union_merge(spark, sf).select(
-            F.lit("u1").alias("op"),
-            F.col("c_custkey").cast("string").alias("k"),
-            null_s.alias("v"),
-        ),
-        _u4_union_prefer_first(spark, sf).select(
-            F.lit("u4").alias("op"),
-            F.col("c_custkey").cast("string").alias("k"),
-            F.col("reason").alias("v"),
-        ),
-    ]
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
-
-
-def _f_curie_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # F4 prefix-uppercase + F10 prefix-extract in one driver row.
-    null_s = F.lit(None).cast("string")
-    return _f4_curie_prefix_upper(spark, sf).select(
-        F.lit("f4").alias("op"),
-        F.col("p_partkey").cast("string").alias("k"),
-        F.col("id_simplified").alias("v"),
-    ).unionByName(
-        _f10_prefix_extract(spark, sf).select(
-            F.lit("f10").alias("op"),
-            F.col("prefix").alias("k"),
-            null_s.alias("v"),
-        )
-    )
-
-
-# Round-5 suites: same tagged-union mechanism, extended with a DOUBLE
-# ``v_num`` column so numeric branches (counts, similarities) stay
-# hash-checked as numbers — doubles are rounded identically on both
-# engines, exactly like the standalone oracles they came from.
-
-def _okv(op: str, k, v=None, v_num=None):
-    null_s = F.lit(None).cast("string")
-    null_d = F.lit(None).cast("double")
-    return [
-        F.lit(op).alias("op"),
-        k.cast("string").alias("k"),
-        (v if v is not None else null_s).cast("string").alias("v"),
-        (v_num if v_num is not None else null_d).cast("double").alias("v_num"),
-    ]
-
-
-def _union_all(branches: list[DataFrame]) -> DataFrame:
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
-
-
-def _syn_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # The EP3 synonymizer family in one driver row: J1/J2 canonical
-    # lookups, J3 equivalent nodes, A4 per-cluster category histogram,
-    # and the full normalizer-node projection.
-    return _union_all([
-        _syn_canonical(spark, sf).select(*_okv(
-            "canonical",
-            F.concat_ws("§", "via", "entity"),
-            F.concat_ws("§", "preferred_curie", "preferred_name",
-                        "preferred_category"),
-        )),
-        _syn_equivalent_nodes(spark, sf).select(*_okv(
-            "equiv", F.col("entity"), F.col("equivalent_id"),
-        )),
-        _syn_category_histogram(spark, sf).select(*_okv(
-            "cathist", F.concat_ws("§", "cluster_id", "category"),
-            v_num=F.col("cnt"),
-        )),
-        _syn_normalizer_nodes(spark, sf).select(*_okv(
-            "norm", F.concat_ws("§", "cluster_id", "equivalent_id"),
-            F.concat_ws(
-                "§", "entity", "label", "category", "major_branch",
-                "name_sri", F.col("in_sri").cast("string"), "category_sri",
-                "name_kg2pre", F.col("in_kg2pre").cast("string"),
-                "category_kg2pre", "cluster_preferred_name",
-            ),
-        )),
-    ])
-
-
-def _j_join_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # J2 mode vote + J4 coalesce fallback + J5 prefix expansion.
-    return _union_all([
-        _j2_mode_vote(spark, sf).select(*_okv(
-            "j2", F.col("o_custkey"), F.col("modal_value"),
-            F.col("modal_count"),
-        )),
-        _j4_coalesce_fallback(spark, sf).select(*_okv(
-            "j4", F.concat_ws("§", F.col("o_orderkey").cast("string"),
-                              F.col("o_custkey").cast("string")),
-            F.col("resolved_name"),
-        )),
-        _j5_prefix_expansion(spark, sf).select(*_okv(
-            "j5", F.concat_ws("§", "suffix", "candidate"),
-            v_num=F.col("n_nationkey"),
-        )),
-    ])
-
-
-def _a_agg_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # A2 longest-argmax + A4 histogram + A6 first-writer-wins.
-    return _union_all([
-        _a2_longest_value(spark, sf).select(*_okv(
-            "a2", F.col("lang"), F.col("longest_value"),
-            F.col("longest_len"),
-        )),
-        _a4_category_histogram(spark, sf).select(*_okv(
-            "a4", F.concat_ws("§", F.col("c_nationkey").cast("string"),
-                              "c_mktsegment"),
-            v_num=F.col("cnt"),
-        )),
-        _a6_first_writer_wins(spark, sf).select(*_okv(
-            "a6", F.col("user_id"),
-            F.concat_ws("§", F.col("event_id").cast("string"),
-                        "event_type"),
-        )),
-    ])
-
-
-def _e1_near_dup_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # SimHash + n-gram Jaccard + embedding-cosine near-dup in one row.
-    return _union_all([
-        _e1_simhash(spark, sf).select(*_okv(
-            "simhash", F.col("doc_id"), F.col("simhash").cast("string"),
-        )),
-        _e1_ngram_jaccard(spark, sf).select(*_okv(
-            "ngram", F.concat_ws("§", F.col("id_a").cast("string"),
-                                 F.col("id_b").cast("string")),
-            F.col("n_common").cast("string"), F.col("jaccard"),
-        )),
-        _e1_embedding_near_dup(spark, sf).select(*_okv(
-            "embed", F.concat_ws("§", F.col("id_a").cast("string"),
-                                 F.col("id_b").cast("string")),
-            v_num=F.col("cos_sim"),
-        )),
-    ])
-
-
-def _e3_docmeta_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Language-ID + rolling-hash fingerprint per document.
-    return _union_all([
-        _e3_lang_id(spark, sf).select(*_okv(
-            "lang", F.col("doc_id"), F.col("predicted_lang"),
-            F.col("n_stopword_hits"),
-        )),
-        _e3_fingerprint(spark, sf).select(*_okv(
-            "fp", F.col("doc_id"), F.col("min_fingerprint").cast("string"),
-            F.col("n_chunks"),
-        )),
-    ])
-
-
-def _e4_media_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # PNG round-trip decode + media metadata extraction in one row.
-    return _union_all([
-        _e4_png_decode(spark, sf).select(*_okv(
-            "png", F.col("media_id"),
-            F.concat_ws("§", F.col("width").cast("string"),
-                        F.col("height").cast("string"),
-                        F.col("n_bytes").cast("string"),
-                        "decoded_sha256"),
-        )),
-        _e4_media_metadata(spark, sf).select(*_okv(
-            "meta", F.col("media_id"),
-            F.concat_ws("§", "mime_type",
-                        F.col("n_bytes").cast("string"), "payload_sha256"),
-        )),
-    ])
-
-
-def _e2_ann_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-6-prep consolidation (round 5 late): the three long-green
-    # ANN top-k rows share one schema — exact cosine, banded LSH, IVF.
-    def melt(df: DataFrame, op: str) -> DataFrame:
-        return df.select(*_okv(
-            op, F.concat_ws("§", F.col("query_id").cast("string"),
-                            F.col("neighbor_id").cast("string")),
-            F.col("rank").cast("string"), F.col("cos_sim"),
-        ))
-
-    return _union_all([
-        melt(_e2_cosine_topk(spark, sf), "cosine"),
-        melt(_e2_lsh_topk(spark, sf), "lsh"),
-        melt(_e2_ivf_topk(spark, sf), "ivf"),
-    ])
-
-
-def _e1_dedup_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Five long-green E1 rows in one: exact digests, survivor set,
-    # minhash pairs, decontamination flags, star-CC clusters.
-    return _union_all([
-        _e1_exact_dedup(spark, sf).select(*_okv(
-            "exact", F.col("content_sha"),
-            F.col("canonical_id").cast("string"), F.col("n_copies"),
-        )),
-        _e1_dedup_survivor(spark, sf).select(*_okv(
-            "survivor", F.col("doc_id"),
-            F.concat_ws("§", "lang", "source"), F.col("n_chars"),
-        )),
-        _e1_minhash_near_dup(spark, sf).select(*_okv(
-            "minhash", F.concat_ws("§", F.col("id_a").cast("string"),
-                                   F.col("id_b").cast("string")),
-        )),
-        _e1_decontaminate(spark, sf).select(*_okv(
-            "decon", F.col("doc_id"),
-            F.col("contaminated").cast("string"),
-            F.col("n_overlapping"),
-        )),
-        _e1_dup_clusters_star(spark, sf).select(*_okv(
-            "cluster", F.col("doc_id"),
-            F.concat_ws("§", F.col("cluster_id").cast("string"),
-                        F.col("is_singleton").cast("string")),
-        )),
-    ])
-
-
-def _e3_qual_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Quality stats (per-measure melt so every float stays a DOUBLE in
-    # v_num), BPE token stats, and document chunking in one row.
-    q = _e3_text_quality(spark, sf)
-    q_melt = q.select(
-        F.col("doc_id"),
-        F.explode(F.array(*[
-            F.struct(F.lit(m).alias("m"), F.col(m).cast("double").alias("x"))
-            for m in ["n_chars", "n_tokens", "mean_token_len",
-                      "digit_ratio", "upper_ratio",
-                      "distinct_token_ratio"]
-        ])).alias("e"),
-    ).select(*_okv(
-        "quality", F.concat_ws("§", F.col("doc_id").cast("string"),
-                               F.col("e.m")),
-        v_num=F.col("e.x"),
-    ))
-    b = _e3_bpe_tokens(spark, sf)
-    b_melt = b.select(
-        F.col("doc_id"),
-        F.explode(F.array(*[
-            F.struct(F.lit(m).alias("m"), F.col(m).cast("double").alias("x"))
-            for m in ["ws_tokens", "bpe_tokens", "pieces_per_word"]
-        ])).alias("e"),
-    ).select(*_okv(
-        "bpe", F.concat_ws("§", F.col("doc_id").cast("string"),
-                           F.col("e.m")),
-        v_num=F.col("e.x"),
-    ))
-    chunks = _e3_chunk_documents(spark, sf).select(*_okv(
-        "chunk", F.concat_ws("§", F.col("doc_id").cast("string"),
-                             F.col("chunk_index").cast("string")),
-        F.col("chunk_text"), F.col("n_chunk_tokens"),
-    ))
-    return _union_all([q_melt, b_melt, chunks])
-
-
-def _f_text_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Name-normalization chain (F1+F2+F3+O2) + sentence pipeline (F5)
-    # in one row.
-    return _union_all([
-        _f_name_normalize(spark, sf).select(*_okv(
-            "name", F.col("doc_id"),
-            F.concat_ws("§", "cleaned", "stripped", "name_simplified"),
-            F.col("pos"),
-        )),
-        _f5_sentence_pipeline(spark, sf).select(*_okv(
-            "sent", F.col("doc_id"), F.col("sentence"),
-        )),
-    ])
 
 
 # ---------------------------------------------------------------------------
@@ -2400,56 +2079,6 @@ def _e5_unpivot(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _q_tpch_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-6 rotation prep: the 14 TPC-H-shape queries that have only
-    # ever been pytest-oracled, consolidated into ONE tagged-union row
-    # (the established suite mechanism) so a single future driver slot
-    # hash-verifies the whole sweep. Branches reuse the ORIGINAL query
-    # functions; every original stays individually runnable +
-    # per-entry hash-checked in tests/test_oracle_parity.py.
-    cw = F.concat_ws
-    branches = [
-        _q4_order_priority(spark, sf).select(*_okv(
-            "q4", F.col("o_orderpriority"), v_num=F.col("order_count"))),
-        _q6_forecast_revenue(spark, sf).select(*_okv(
-            "q6", F.lit("revenue"), v_num=F.col("revenue"))),
-        _q7_volume_shipping(spark, sf).select(*_okv(
-            "q7", cw("§", "supp_nation", "cust_nation",
-                     F.col("l_year").cast("string")),
-            v_num=F.col("revenue"))),
-        _q8_market_share(spark, sf).select(*_okv(
-            "q8", F.col("o_year"), v_num=F.col("mkt_share"))),
-        _q9_product_profit(spark, sf).select(*_okv(
-            "q9", cw("§", "nation", F.col("o_year").cast("string")),
-            v_num=F.col("sum_profit"))),
-        _q11_important_parts(spark, sf).select(*_okv(
-            "q11", F.col("l_partkey"), v_num=F.col("part_value"))),
-        _q12_late_priority(spark, sf).select(*_okv(
-            "q12", F.col("l_returnflag"),
-            F.col("high_line_count").cast("string"),
-            F.col("low_line_count"))),
-        _q13_order_count_distribution(spark, sf).select(*_okv(
-            "q13", F.col("c_count"), v_num=F.col("custdist"))),
-        _q14_promo_revenue(spark, sf).select(*_okv(
-            "q14", F.lit("promo"), v_num=F.col("promo_revenue"))),
-        _q15_top_supplier(spark, sf).select(*_okv(
-            "q15", F.col("s_suppkey"), F.col("s_name"),
-            F.col("total_revenue"))),
-        _q16_supplier_counts(spark, sf).select(*_okv(
-            "q16", cw("§", "p_brand", "p_type",
-                      F.col("p_size").cast("string")),
-            v_num=F.col("supplier_cnt"))),
-        _q19_disjunctive_revenue(spark, sf).select(*_okv(
-            "q19", F.lit("revenue"), v_num=F.col("revenue"))),
-        _q21_late_sole_supplier(spark, sf).select(*_okv(
-            "q21", F.col("s_name"), v_num=F.col("numwait"))),
-        _q22_idle_customers(spark, sf).select(*_okv(
-            "q22", F.col("c_mktsegment"),
-            F.col("numcust").cast("string"), F.col("totacctbal"))),
-    ]
-    return _union_all(branches)
-
-
 def _e3_packed_sequences_rows(spark: SparkSession, sf: str) -> DataFrame:
     # The materialized training sequences themselves (round 5 last
     # mile): (seq_id, joined text, n_tokens) — the oracle recomputes
@@ -2630,475 +2259,6 @@ def _g_random_walks(spark: SparkSession, sf: str) -> DataFrame:
     return random_walks(
         _graph_edges(docs), walk_len=3, walks_per_node=2
     )
-
-
-def _e5_prep_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-7 consolidation suite: five round-6-late E5 singles in one
-    # tagged-union row (kfold, calibration, tokenize, profile, OLS) —
-    # numerics ride v_num per metric so no double ever casts to
-    # string (engine repr divergence), strings ride v.
-    cal = _e5_calibration(spark, sf)
-    cal_rows = _union_all([
-        cal.select(*_okv(
-            "ece", F.concat_ws("§", F.col("bin").cast("string"),
-                               F.lit(m)),
-            v_num=F.col(m).cast("double"),
-        ))
-        for m in ["n", "avg_confidence", "accuracy", "abs_gap", "ece"]
-    ])
-    ols = _e5_group_ols(spark, sf)
-    ols_rows = _union_all([
-        ols.select(*_okv(
-            "ols", F.concat_ws("§", F.col("l_returnflag"), F.lit(m)),
-            v_num=F.col(m).cast("double"),
-        ))
-        for m in ["n", "slope", "intercept", "r2"]
-    ])
-    return _union_all([
-        _e5_kfold(spark, sf).select(*_okv(
-            "kfold", F.col("doc_id"), v_num=F.col("fold"),
-        )),
-        cal_rows,
-        _e5_tokenize(spark, sf).select(*_okv(
-            "tok", F.col("c_custkey"), F.col("c_name"),
-            F.col("c_nationkey"),
-        )),
-        _e5_profile(spark, sf).select(*_okv(
-            "profile", F.col("column"),
-            F.concat_ws(
-                "§", F.col("n").cast("string"),
-                F.col("n_null").cast("string"),
-                F.col("n_distinct").cast("string"),
-                "min_value", "max_value", "top_value",
-                F.col("top_count").cast("string"),
-            ),
-        )),
-        ols_rows,
-    ])
-
-
-def _g_graph_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-7 consolidation suite: the three round-6-late graph
-    # singles (BFS distances, LPA communities, walk corpus) in one
-    # tagged-union row.
-    return _union_all([
-        _g_bfs_distances(spark, sf).select(*_okv(
-            "bfs", F.col("node"), v_num=F.col("dist"),
-        )),
-        _g_label_prop(spark, sf).select(*_okv(
-            "lpa", F.col("node"), v_num=F.col("label"),
-        )),
-        _g_random_walks(spark, sf).select(*_okv(
-            "walk",
-            F.concat_ws("§", F.col("start").cast("string"),
-                        F.col("walk_id").cast("string")),
-            F.col("path"),
-        )),
-    ])
-
-
-def _num_metric_rows(df, op: str, key_cols: list[str], metrics: list[str]):
-    """Tagged-union rows for a numeric-wide relation: one output row
-    per (input row, metric), k = key values § metric name, v_num = the
-    metric — the e5_prep_suite per-metric pattern, factored out for
-    the round-8 consolidation wave."""
-    return _union_all([
-        df.select(*_okv(
-            op,
-            F.concat_ws("§", *[F.col(c).cast("string") for c in key_cols],
-                        F.lit(m)),
-            v_num=F.col(m).cast("double"),
-        ))
-        for m in metrics
-    ])
-
-
-def _t_ts_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-8 consolidation suite (VERDICT r07 next #1): the three
-    # r07-green time-series singles in one tagged-union row; every
-    # original stays individually runnable + hash-checked via
-    # all_queries.
-    anomaly = _t_anomaly(spark, sf)
-    return _union_all([
-        _num_metric_rows(_t_resample_gapfill(spark, sf), "resample",
-                         ["event_type", "bucket_start"],
-                         ["n_obs", "value_avg", "locf", "interp"]),
-        _num_metric_rows(_t_ewma(spark, sf), "ewma",
-                         ["event_type", "bucket_start"], ["ewma"]),
-        _num_metric_rows(anomaly, "anomaly",
-                         ["event_type", "bucket_start"],
-                         ["value_avg", "zscore"]),
-        anomaly.select(*_okv(
-            "anomaly_flag",
-            F.concat_ws("§", F.col("event_type"),
-                        F.col("bucket_start").cast("string")),
-            F.col("is_anomaly"),
-        )),
-    ])
-
-
-def _e6_journey_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-8 consolidation suite: the five r07-green event-journey
-    # singles (transition matrix/power, top paths, attribution,
-    # co-occurrence) in one tagged-union row.
-    att = _e6_attribution(spark, sf)
-    return _union_all([
-        _num_metric_rows(_e6_transition_matrix(spark, sf), "tm",
-                         ["prev_state", "next_state"], ["n", "prob"]),
-        _num_metric_rows(_e6_top_paths(spark, sf), "paths",
-                         ["path"], ["n_entities"]),
-        _num_metric_rows(_e6_transition_power(spark, sf), "power",
-                         ["prev_state", "next_state"], ["prob"]),
-        _num_metric_rows(att, "att",
-                         ["user_id", "conversion_id", "touch_id"],
-                         ["position", "n_touches", "first_credit",
-                          "last_credit", "linear_credit"]),
-        att.select(*_okv(
-            "att_touch",
-            F.concat_ws("§", F.col("user_id").cast("string"),
-                        F.col("conversion_id").cast("string"),
-                        F.col("touch_id").cast("string")),
-            F.col("touch_type"),
-        )),
-        _num_metric_rows(_e6_cooccurrence(spark, sf), "cooc",
-                         ["item_a", "item_b"],
-                         ["n_ab", "n_a", "n_b", "confidence_a_to_b",
-                          "lift"]),
-    ])
-
-
-def _e5_eval_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-8 consolidation suite: the five r07-green eval/metric
-    # singles (nDCG, retrieval metrics, classification report, NER
-    # span eval, IOB tagging) in one tagged-union row.
-    return _union_all([
-        _num_metric_rows(_e5_ndcg(spark, sf), "ndcg",
-                         ["query_id"], ["ndcg_at_k"]),
-        _num_metric_rows(_e5_retrieval_metrics(spark, sf), "retr",
-                         ["query_id"],
-                         ["n_relevant", "n_retrieved_relevant",
-                          "recall_at_k", "capped_recall_at_k",
-                          "reciprocal_rank"]),
-        _num_metric_rows(_e5_class_report(spark, sf), "cls",
-                         ["label"],
-                         ["support", "precision", "recall", "f1"]),
-        _num_metric_rows(_e5_ner_eval(spark, sf), "ner",
-                         ["label"],
-                         ["tp", "fp", "fn", "precision", "recall",
-                          "f1"]),
-        _e5_iob_tags(spark, sf).select(*_okv(
-            "iob",
-            F.concat_ws("§", F.col("doc_id").cast("string"),
-                        F.col("pos").cast("string")),
-            F.concat_ws("§", F.col("token"), F.col("tag")),
-        )),
-    ])
-
-
-def _e1_clean_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-8 consolidation suite: the four r07-green text-cleaning
-    # singles (C4 line rules, PII scrub, extraction repair,
-    # boilerplate strip) in one tagged-union row — full cleaned texts
-    # ride v, so the hash still checks every output character.
-    return _union_all([
-        _e1_c4_filter(spark, sf).select(*_okv(
-            "c4", F.col("doc_id"),
-            F.concat_ws("§", "text",
-                        F.col("n_lines_kept").cast("string"),
-                        F.col("n_lines_dropped").cast("string"),
-                        F.col("has_brace").cast("string"),
-                        F.col("has_lorem").cast("string"),
-                        F.col("keep").cast("string")),
-        )),
-        _e1_pii_scrub(spark, sf).select(*_okv(
-            "pii", F.col("doc_id"),
-            F.concat_ws("§", "text",
-                        F.col("n_email").cast("string"),
-                        F.col("n_ipv4").cast("string"),
-                        F.col("n_ssn").cast("string"),
-                        F.col("n_phone").cast("string"),
-                        F.col("has_pii").cast("string")),
-        )),
-        _e1_repair_text(spark, sf).select(*_okv(
-            "repair", F.col("doc_id"),
-            F.concat_ws("§", "text",
-                        F.col("n_chars_before").cast("string"),
-                        F.col("n_chars_after").cast("string")),
-        )),
-        _e1_boilerplate_strip(spark, sf).select(*_okv(
-            "boiler", F.col("doc_id"),
-            F.concat_ws("§", "text_clean",
-                        F.col("n_removed").cast("string")),
-        )),
-    ])
-
-
-def _e3_lm_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-9 consolidation suite: five r07-green LM / text-statistics
-    # singles (Kneser-Ney perplexity, skip-gram pairs, char entropy,
-    # Zipf OLS, WordPiece apply) in one tagged-union row; every
-    # original stays individually runnable + hash-checked via
-    # all_queries.
-    return _union_all([
-        _num_metric_rows(_e3_kn_ppl(spark, sf), "kn", ["doc_id"],
-                         ["n_bigrams", "mean_logprob", "ppl"]),
-        _num_metric_rows(_e3_skipgram(spark, sf), "skip",
-                         ["center", "context"], ["n"]),
-        _num_metric_rows(_e3_char_entropy(spark, sf), "ent", ["doc_id"],
-                         ["n_chars", "n_distinct_chars", "entropy"]),
-        _num_metric_rows(_e3_zipf(spark, sf), "zipf", ["grp"],
-                         ["n", "slope", "intercept", "r2"]),
-        _e3_wordpiece_apply(spark, sf).select(*_okv(
-            "wp", F.col("doc_id").cast("string"),
-            F.concat_ws("§", F.col("n_tokens").cast("string"),
-                        F.col("tokens_str")),
-        )),
-    ])
-
-
-def _e5_sft_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-9 consolidation suite: four r07-green SFT / data-mixing
-    # singles (T5 span corruption, EDA augmentation, temperature
-    # mixing, DSIR importance weights) in one tagged-union row.
-    return _union_all([
-        _e5_span_corrupt(spark, sf).select(*_okv(
-            "corrupt", F.col("doc_id").cast("string"),
-            F.concat_ws("§", F.col("inputs"), F.col("targets"),
-                        F.col("n_spans").cast("string"),
-                        F.col("n_noise_tokens").cast("string")),
-        )),
-        _e5_augment(spark, sf).select(*_okv(
-            "aug", F.col("doc_id").cast("string"),
-            F.concat_ws("§", F.col("text"),
-                        F.col("n_dropped").cast("string"),
-                        F.col("n_swapped_pairs").cast("string")),
-        )),
-        _e5_temperature_mix(spark, sf).select(*_okv(
-            "mix", F.col("doc_id").cast("string"), F.col("source"),
-        )),
-        _num_metric_rows(_e5_dsir_weights(spark, sf), "dsir",
-                         ["doc_id"], ["dsir_log_weight"]),
-    ])
-
-
-def _g_count_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-9 consolidation suite: the two r07-green graph-counting
-    # singles (global triangle count, common-neighbor/Jaccard link
-    # scores) in one tagged-union row.
-    return _union_all([
-        _num_metric_rows(_g_triangle_count(spark, sf), "tri", [],
-                         ["n_triangles", "n_edges", "n_vertices"]),
-        _num_metric_rows(_g_common_neighbors(spark, sf), "cn",
-                         ["a", "b"], ["n_common", "jaccard"]),
-    ])
-
-
-def _e5_gov_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-9 consolidation suite: four r07-green governance /
-    # warehouse singles (k-anonymity risk, winsorization, CDC
-    # compaction, cohort retention) in one tagged-union row.
-    # Timestamps ride as unix microseconds (Spark unix_micros ==
-    # DuckDB epoch_us on the same parquet values) — never as
-    # engine-formatted strings.
-    cdc = _e5_cdc_apply(spark, sf).withColumn("ts_us",
-                                              F.unix_micros("ts"))
-    return _union_all([
-        _e5_k_anonymity(spark, sf).select(*_okv(
-            "kanon",
-            F.concat_ws("§", F.col("event_type"),
-                        F.col("day_start").cast("string")),
-            F.concat_ws("§", F.col("class_size").cast("string"),
-                        F.col("l_diversity").cast("string"),
-                        F.col("at_risk").cast("string")),
-        )),
-        _num_metric_rows(_e5_winsorize(spark, sf), "winsor",
-                         ["event_type", "event_id"],
-                         ["value", "pct_rank", "winsorized"]),
-        _num_metric_rows(cdc, "cdc", ["user_id", "ts_us", "event_id"],
-                         ["value"]),
-        cdc.select(*_okv(
-            "cdc_t",
-            F.concat_ws("§", F.col("user_id").cast("string"),
-                        F.col("ts_us").cast("string"),
-                        F.col("event_id").cast("string")),
-            F.col("event_type"),
-        )),
-        _num_metric_rows(
-            _e5_cohort_retention(spark, sf).withColumn(
-                "cohort_us", F.unix_micros("cohort_period")),
-            "cohort", ["cohort_us", "periods_since"], ["n_active"]),
-    ])
-
-
-def _j_er_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-9 consolidation suite: the two r07-green fuzzy-matching
-    # singles (Jaro-Winkler match, composed entity resolution) in one
-    # tagged-union row.
-    return _union_all([
-        _j_jw_match(spark, sf).select(*_okv(
-            "jw",
-            F.concat_ws("§", F.col("c_custkey").cast("string"),
-                        F.col("c_name")),
-            F.col("matched_v_name"),
-            v_num=F.col("jw_sim"),
-        )),
-        _er_resolve(spark, sf).select(*_okv(
-            "er",
-            F.concat_ws("§", F.col("id").cast("string"), F.col("name")),
-            F.concat_ws("§", F.col("cluster").cast("string"),
-                        F.col("canonical_name")),
-        )),
-    ])
-
-
-def _e1_pair_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-9 consolidation suite: the two r07-green near-dup pair
-    # singles (banded MinHash recall/precision audit, banded SimHash
-    # pairs) in one tagged-union row.
-    return _union_all([
-        _num_metric_rows(_e1_near_dup_recall(spark, sf), "recall", [],
-                         ["n_true", "n_candidates", "n_hit", "recall",
-                          "precision"]),
-        _num_metric_rows(_e1_simhash_pairs(spark, sf), "simhash",
-                         ["id_a", "id_b"], ["hamming"]),
-    ])
-
-
-def _e1_sa_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-10 consolidation suite: the four r09-green suffix-array
-    # singles (global SA ranks, Lee-et-al duplicate spans, the
-    # composed exact-span removal, and the sf-proportional bench
-    # slice's rank checksum) in one tagged-union row.
-    return _union_all([
-        _e1_suffix_array(spark, sf).select(*_okv(
-            "sa", F.col("gpos"),
-            F.concat_ws("§", F.col("doc_id").cast("string"),
-                        F.col("local_pos").cast("string"),
-                        F.col("sa_rank").cast("string")),
-        )),
-        _e1_sa_dup_spans(spark, sf).select(*_okv(
-            "spans",
-            F.concat_ws("§", F.col("doc_id").cast("string"),
-                        F.col("local_pos").cast("string")),
-            F.concat_ws("§", F.col("other_doc_id").cast("string"),
-                        F.col("other_pos").cast("string"),
-                        F.col("prefix")),
-        )),
-        _e1_sa_dedup(spark, sf).select(*_okv(
-            "dedup", F.col("doc_id"),
-            F.concat_ws("§", F.col("n_chars_kept").cast("string"),
-                        F.col("n_chars_removed").cast("string"),
-                        F.col("text")),
-        )),
-        _e1_suffix_array_bench(spark, sf).select(*_okv(
-            "bench", F.col("doc_id"),
-            F.concat_ws("§", F.col("n_positions").cast("string"),
-                        F.col("rank_checksum").cast("string")),
-        )),
-    ])
-
-
-def _g_rank_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-10 consolidation suite: the two r09-green power-iteration
-    # singles (PageRank, personalized PageRank) in one tagged row.
-    return _union_all([
-        _g_pagerank(spark, sf).select(*_okv(
-            "pr", F.col("node"), v_num=F.col("rank"))),
-        _g_ppr(spark, sf).select(*_okv(
-            "ppr", F.col("node"), v_num=F.col("rank"))),
-    ])
-
-
-def _e2_bit_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-10 consolidation suite: the four r09-green 1-bit ANN
-    # singles (Hamming top-k, the Hamming→cosine rerank funnel,
-    # banded corpus×corpus Hamming pairs, SRP sketches+topk) in one
-    # tagged-union row. The srp branch is already in okv form (ops
-    # 'code'/'topk') and passes through unchanged.
-    return _union_all([
-        _e2_hamming_topk(spark, sf).select(*_okv(
-            "htop",
-            F.concat_ws("§", F.col("query_id").cast("string"),
-                        F.col("rank").cast("string")),
-            F.col("neighbor_id"),
-            v_num=F.col("hamming").cast("double"),
-        )),
-        _e2_rerank_topk(spark, sf).select(*_okv(
-            "rrk",
-            F.concat_ws("§", F.col("query_id").cast("string"),
-                        F.col("rank").cast("string")),
-            F.col("neighbor_id"),
-            v_num=F.col("cos_sim"),
-        )),
-        _e2_hamming_pairs(spark, sf).select(*_okv(
-            "hpairs",
-            F.concat_ws("§", F.col("id_a").cast("string"),
-                        F.col("id_b").cast("string")),
-            v_num=F.col("hamming").cast("double"),
-        )),
-        _e2_srp_sketch(spark, sf),
-    ])
-
-
-def _e5_dp_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-10 consolidation suite: the two r09-green DP-histogram
-    # releases (row-level, user-level with per-contributor clamp).
-    return _union_all([
-        _e5_dp_histogram(spark, sf).select(*_okv(
-            "row", F.col("event_type"), F.col("true_count"),
-            v_num=F.col("noisy_count").cast("double"))),
-        _e5_dp_histogram_user(spark, sf).select(*_okv(
-            "user", F.col("event_type"), F.col("true_count"),
-            v_num=F.col("noisy_count").cast("double"))),
-    ])
-
-
-def _e2_kmeans_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-10 consolidation suite: the three r09-green k-means-family
-    # singles (the Lloyd fit assignments, the cluster-balanced sample,
-    # cluster-scoped SemDeDup) in one tagged-union row.
-    return _union_all([
-        _e2_kmeans(spark, sf).select(*_okv(
-            "km", F.col("vec_id"),
-            F.concat_ws("§", F.col("cluster_id").cast("string"),
-                        F.col("sq_dist").cast("string")),
-        )),
-        _e2_cluster_sample(spark, sf).select(*_okv(
-            "cs", F.col("vec_id"),
-            F.concat_ws("§", F.col("cluster_id").cast("string"),
-                        F.col("draw_rank").cast("string")),
-        )),
-        _e2_semdedup_kmeans(spark, sf).select(*_okv(
-            "sd", F.col("vec_id"),
-            F.concat_ws("§", F.col("kmeans_cluster").cast("string"),
-                        F.col("cluster_id").cast("string"),
-                        F.col("cluster_size").cast("string"),
-                        F.col("is_survivor").cast("int").cast("string")),
-        )),
-    ])
-
-
-def _x1_linker_suite(spark: SparkSession, sf: str) -> DataFrame:
-    # Round-10 consolidation suite: the two r09-green inline
-    # corpus-linker probes (unpruned, max_df=0.1). The serving-index
-    # probe keeps its OWN window row (x1_linker_indexed — rotated in
-    # this round, never driver-verified).
-    return _union_all([
-        _x1_linker_corpus(spark, sf).select(*_okv(
-            "inline",
-            F.concat_ws("§", F.col("mention"),
-                        F.col("rank").cast("string")),
-            F.col("alias_id"),
-            v_num=F.col("score"),
-        )),
-        _x1_linker_corpus_maxdf(spark, sf).select(*_okv(
-            "maxdf",
-            F.concat_ws("§", F.col("mention"),
-                        F.col("rank").cast("string")),
-            F.col("alias_id"),
-            v_num=F.col("score"),
-        )),
-    ])
 
 
 def _e5_temperature_mix(spark: SparkSession, sf: str) -> DataFrame:
@@ -4261,20 +3421,17 @@ def _e6_hll_distinct(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")
     regs = hll_exact_registers(ev, ["event_type"], "user_id")
     est = hll_exact_estimate(regs, ["event_type"])
-    return _union_all([
-        regs.select(*_okv(
-            "reg",
-            F.concat_ws("§", F.col("event_type"),
-                        F.col("reg_idx").cast("string")),
-            v_num=F.col("reg_max").cast("double"),
-        )),
-        est.select(*_okv(
-            "est", F.col("event_type"),
-            F.concat_ws("§", F.col("n_zero_regs").cast("string"),
-                        F.col("s_scaled").cast("string")),
-            v_num=F.round(F.col("hll_estimate"), 6),
-        )),
-    ])
+    return regs.select(*_okv(
+        "reg",
+        F.concat_ws("§", F.col("event_type"),
+                    F.col("reg_idx").cast("string")),
+        v_num=F.col("reg_max").cast("double"),
+    )).unionByName(est.select(*_okv(
+        "est", F.col("event_type"),
+        F.concat_ws("§", F.col("n_zero_regs").cast("string"),
+                    F.col("s_scaled").cast("string")),
+        v_num=F.round(F.col("hll_estimate"), 6),
+    )))
 
 
 def _e5_chi2(spark: SparkSession, sf: str) -> DataFrame:
@@ -5357,6 +4514,433 @@ def _e5_datacard(spark: SparkSession, sf: str) -> DataFrame:
     from drugbankner_spark.operators.corpus import corpus_datacard
 
     return corpus_datacard(load_table(spark, sf, "documents"))
+
+
+# ---------------------------------------------------------------------------
+# Tagged-union suites. Only the first 50 registry entries are hash-checked
+# against their oracles (see _WINDOW), so a suite unions several member
+# queries, each still registered and checked on its own, into one
+# (op, k, v, v_num) relation:
+#   op     the branch tag;
+#   k      the branch's key columns, as one string;
+#   v      its string payload, or NULL;
+#   v_num  its one numeric value as a DOUBLE, or NULL.
+# Doubles go to v_num only. Spark and DuckDB format a double as text
+# differently, so a double cast into k or v would break the hash; as a
+# DOUBLE it compares exactly, since each member and its oracle round it
+# alike.
+#
+# Each suite is declared once in the branch table below. _suite renders
+# it as the Spark query and _suite_sql, called from oracle_sql(), renders
+# the same branches over the members' own oracles, so the two stay
+# column-for-column alike. A branch is (tag, member, k, v, v_num): k and
+# v are one column entry or a tuple of them, several entries joining as
+# concat_ws('§', ...). A _melt branch emits one row per (member row,
+# metric) instead, with k = keys § metric name and v_num = the metric.
+# A column entry is a plain column name or SQL both engines parse alike;
+# the one engine-specific spelling, epoch_us() for a timestamp's epoch
+# microseconds, is translated in _spark_col. Tag None passes a member
+# that already has the (op, k, v, v_num) shape through unchanged.
+# ---------------------------------------------------------------------------
+
+def _okv(op: str, k, v=None, v_num=None):
+    null_s = F.lit(None).cast("string")
+    null_d = F.lit(None).cast("double")
+    return [
+        F.lit(op).alias("op"),
+        k.cast("string").alias("k"),
+        (v if v is not None else null_s).cast("string").alias("v"),
+        (v_num if v_num is not None else null_d).cast("double").alias("v_num"),
+    ]
+
+
+def _union_all(branches: list[DataFrame]) -> DataFrame:
+    out = branches[0]
+    for b in branches[1:]:
+        out = out.unionByName(b)
+    return out
+
+
+class _Branch(NamedTuple):
+    tag: str | None
+    member: Callable[[SparkSession, str], DataFrame]
+    k: tuple[str, ...] = ()
+    v: tuple[str, ...] = ()
+    v_num: str | None = None
+    metrics: tuple[str, ...] = ()
+
+
+def _entries(x) -> tuple[str, ...]:
+    return () if x is None else (x,) if isinstance(x, str) else tuple(x)
+
+
+def _branch(tag, member, k=(), v=(), v_num=None) -> _Branch:
+    return _Branch(tag, member, _entries(k), _entries(v), v_num)
+
+
+def _melt(tag: str, member, keys, metrics: tuple[str, ...]) -> _Branch:
+    return _Branch(tag, member, _entries(keys), metrics=metrics)
+
+
+def _melt_k(b: _Branch, metric: str) -> tuple[str, ...]:
+    return b.k + (f"'{metric}'",)
+
+
+def _spark_col(e: str):
+    if e.isidentifier():
+        return F.col(e)
+    return F.expr(e.replace("epoch_us(", "unix_micros("))
+
+
+def _spark_str(entries: tuple[str, ...]):
+    cols = [_spark_col(e).cast("string") for e in entries]
+    if not cols:
+        return F.lit(None).cast("string")
+    return cols[0] if len(cols) == 1 else F.concat_ws("§", *cols)
+
+
+def _spark_branch(b: _Branch, df: DataFrame) -> DataFrame:
+    if b.tag is None:
+        return df.select("op", "k", "v", "v_num")
+    if b.metrics:  # one pass over the member, one row per metric
+        df = df.select(F.explode(F.array(*[
+            F.struct(_spark_str(_melt_k(b, m)).alias("k"),
+                     F.col(m).cast("double").alias("v_num"))
+            for m in b.metrics
+        ])).alias("e")).select("e.k", "e.v_num")
+        b = _Branch(b.tag, b.member, ("k",), v_num="v_num")
+    num = F.lit(None) if b.v_num is None else _spark_col(b.v_num)
+    return df.select(
+        F.lit(b.tag).alias("op"), _spark_str(b.k).alias("k"),
+        _spark_str(b.v).alias("v"), num.cast("double").alias("v_num"),
+    )
+
+
+def _sql_col(e: str) -> str:
+    return f'"{e}"' if e.isidentifier() else e
+
+
+def _sql_str(entries: tuple[str, ...]) -> str:
+    cols = [f"CAST({_sql_col(e)} AS VARCHAR)" for e in entries]
+    if not cols:
+        return "CAST(NULL AS VARCHAR)"
+    return cols[0] if len(cols) == 1 else f"concat_ws('§', {', '.join(cols)})"
+
+
+def _suite_sql(branches: tuple[_Branch, ...], out: dict[str, str]) -> str:
+    """The DuckDB oracle of a suite: each branch over its member's oracle."""
+    selects = []
+    for b in branches:
+        src = f"({out[b.member.__name__[1:]]})"
+        if b.tag is None:
+            selects.append(f"SELECT op, k, v, v_num FROM {src}")
+            continue
+        if b.metrics:
+            rows = ", ".join(
+                f"({_sql_str(_melt_k(b, m))}, CAST({_sql_col(m)} AS DOUBLE))"
+                for m in b.metrics
+            )
+            src += f", LATERAL (VALUES {rows}) AS m(k, v_num)"
+            b = _Branch(b.tag, b.member, ("m.k",), v_num="m.v_num")
+        num = "NULL" if b.v_num is None else _sql_col(b.v_num)
+        selects.append(
+            f"SELECT '{b.tag}' AS op, {_sql_str(b.k)} AS k, "
+            f"{_sql_str(b.v)} AS v, CAST({num} AS DOUBLE) AS v_num FROM {src}"
+        )
+    return "\nUNION ALL\n".join(selects)
+
+
+#: suite name → its branches, in declaration order
+_SUITES: dict[str, tuple[_Branch, ...]] = {}
+
+
+def _suite(name: str, *branches) -> Callable[[SparkSession, str], DataFrame]:
+    """Register a suite's branches and return its Spark query."""
+    table = _SUITES[name] = tuple(
+        b if isinstance(b, _Branch) else _branch(*b) for b in branches
+    )
+
+    def build(spark: SparkSession, sf: str) -> DataFrame:
+        frames = {}  # a member feeding two branches is built once
+        for b in table:
+            if b.member not in frames:
+                frames[b.member] = b.member(spark, sf)
+        return _union_all([_spark_branch(b, frames[b.member]) for b in table])
+
+    build.__name__ = build.__qualname__ = f"_{name}"
+    return build
+
+
+_syn_suite = _suite(
+    "syn_suite",
+    ("canonical", _syn_canonical, ("via", "entity"),
+     ("preferred_curie", "preferred_name", "preferred_category")),
+    ("equiv", _syn_equivalent_nodes, "entity", "equivalent_id"),
+    ("cathist", _syn_category_histogram, ("cluster_id", "category"), None,
+     "cnt"),
+    ("norm", _syn_normalizer_nodes, ("cluster_id", "equivalent_id"),
+     ("entity", "label", "category", "major_branch", "name_sri", "in_sri",
+      "category_sri", "name_kg2pre", "in_kg2pre", "category_kg2pre",
+      "cluster_preferred_name")),
+)
+_j_join_suite = _suite(
+    "j_join_suite",
+    ("j2", _j2_mode_vote, "o_custkey", "modal_value", "modal_count"),
+    ("j4", _j4_coalesce_fallback, ("o_orderkey", "o_custkey"),
+     "resolved_name"),
+    ("j5", _j5_prefix_expansion, ("suffix", "candidate"), None,
+     "n_nationkey"),
+)
+_a_agg_suite = _suite(
+    "a_agg_suite",
+    ("a2", _a2_longest_value, "lang", "longest_value", "longest_len"),
+    ("a4", _a4_category_histogram, ("c_nationkey", "c_mktsegment"), None,
+     "cnt"),
+    ("a6", _a6_first_writer_wins, "user_id", ("event_id", "event_type")),
+)
+_u_set_suite = _suite(
+    "u_set_suite",
+    ("a5", _a5_distinct, "o_orderstatus", "o_orderpriority"),
+    ("u2", _u2_intersect, "c_custkey"),
+    ("u3", _u3_anti_join, "c_custkey", "c_name"),
+    ("a8", _a8_explode_distinct, "member_id"),
+    ("o1", _o1_topk, "s_suppkey", "s_name"),
+    ("j9", _j9_semi_join, "c_custkey", "c_name"),
+    ("u1", _u1_union_merge, "c_custkey"),
+    ("u4", _u4_union_prefer_first, "c_custkey", "reason"),
+)
+_f_curie_suite = _suite(
+    "f_curie_suite",
+    ("f4", _f4_curie_prefix_upper, "p_partkey", "id_simplified"),
+    ("f10", _f10_prefix_extract, "prefix"),
+)
+_f_text_suite = _suite(
+    "f_text_suite",
+    ("name", _f_name_normalize, "doc_id",
+     ("cleaned", "stripped", "name_simplified"), "pos"),
+    ("sent", _f5_sentence_pipeline, "doc_id", "sentence"),
+)
+_q_tpch_suite = _suite(
+    "q_tpch_suite",
+    ("q4", _q4_order_priority, "o_orderpriority", None, "order_count"),
+    ("q6", _q6_forecast_revenue, "'revenue'", None, "revenue"),
+    ("q7", _q7_volume_shipping, ("supp_nation", "cust_nation", "l_year"),
+     None, "revenue"),
+    ("q8", _q8_market_share, "o_year", None, "mkt_share"),
+    ("q9", _q9_product_profit, ("nation", "o_year"), None, "sum_profit"),
+    ("q11", _q11_important_parts, "l_partkey", None, "part_value"),
+    ("q12", _q12_late_priority, "l_returnflag", "high_line_count",
+     "low_line_count"),
+    ("q13", _q13_order_count_distribution, "c_count", None, "custdist"),
+    ("q14", _q14_promo_revenue, "'promo'", None, "promo_revenue"),
+    ("q15", _q15_top_supplier, "s_suppkey", "s_name", "total_revenue"),
+    ("q16", _q16_supplier_counts, ("p_brand", "p_type", "p_size"), None,
+     "supplier_cnt"),
+    ("q19", _q19_disjunctive_revenue, "'revenue'", None, "revenue"),
+    ("q21", _q21_late_sole_supplier, "s_name", None, "numwait"),
+    ("q22", _q22_idle_customers, "c_mktsegment", "numcust", "totacctbal"),
+)
+_e1_near_dup_suite = _suite(
+    "e1_near_dup_suite",
+    ("simhash", _e1_simhash, "doc_id", "simhash"),
+    ("ngram", _e1_ngram_jaccard, ("id_a", "id_b"), "n_common", "jaccard"),
+    ("embed", _e1_embedding_near_dup, ("id_a", "id_b"), None, "cos_sim"),
+)
+_e1_dedup_suite = _suite(
+    "e1_dedup_suite",
+    ("exact", _e1_exact_dedup, "content_sha", "canonical_id", "n_copies"),
+    ("survivor", _e1_dedup_survivor, "doc_id", ("lang", "source"),
+     "n_chars"),
+    ("minhash", _e1_minhash_near_dup, ("id_a", "id_b")),
+    ("decon", _e1_decontaminate, "doc_id", "contaminated", "n_overlapping"),
+    ("cluster", _e1_dup_clusters_star, "doc_id",
+     ("cluster_id", "is_singleton")),
+)
+_e1_clean_suite = _suite(
+    "e1_clean_suite",
+    ("c4", _e1_c4_filter, "doc_id",
+     ("text", "n_lines_kept", "n_lines_dropped", "has_brace", "has_lorem",
+      "keep")),
+    ("pii", _e1_pii_scrub, "doc_id",
+     ("text", "n_email", "n_ipv4", "n_ssn", "n_phone", "has_pii")),
+    ("repair", _e1_repair_text, "doc_id",
+     ("text", "n_chars_before", "n_chars_after")),
+    ("boiler", _e1_boilerplate_strip, "doc_id", ("text_clean", "n_removed")),
+)
+_e1_pair_suite = _suite(
+    "e1_pair_suite",
+    _melt("recall", _e1_near_dup_recall, (),
+          ("n_true", "n_candidates", "n_hit", "recall", "precision")),
+    _melt("simhash", _e1_simhash_pairs, ("id_a", "id_b"), ("hamming",)),
+)
+_e1_sa_suite = _suite(
+    "e1_sa_suite",
+    ("sa", _e1_suffix_array, "gpos", ("doc_id", "local_pos", "sa_rank")),
+    ("spans", _e1_sa_dup_spans, ("doc_id", "local_pos"),
+     ("other_doc_id", "other_pos", "prefix")),
+    ("dedup", _e1_sa_dedup, "doc_id",
+     ("n_chars_kept", "n_chars_removed", "text")),
+    ("bench", _e1_suffix_array_bench, "doc_id",
+     ("n_positions", "rank_checksum")),
+)
+_e2_ann_suite = _suite(
+    "e2_ann_suite",
+    ("cosine", _e2_cosine_topk, ("query_id", "neighbor_id"), "rank",
+     "cos_sim"),
+    ("lsh", _e2_lsh_topk, ("query_id", "neighbor_id"), "rank", "cos_sim"),
+    ("ivf", _e2_ivf_topk, ("query_id", "neighbor_id"), "rank", "cos_sim"),
+)
+_e2_bit_suite = _suite(
+    "e2_bit_suite",
+    ("htop", _e2_hamming_topk, ("query_id", "rank"), "neighbor_id",
+     "hamming"),
+    ("rrk", _e2_rerank_topk, ("query_id", "rank"), "neighbor_id", "cos_sim"),
+    ("hpairs", _e2_hamming_pairs, ("id_a", "id_b"), None, "hamming"),
+    (None, _e2_srp_sketch),  # already ('code'/'topk', k, v, v_num)
+)
+_e2_kmeans_suite = _suite(
+    "e2_kmeans_suite",
+    ("km", _e2_kmeans, "vec_id", ("cluster_id", "sq_dist")),
+    ("cs", _e2_cluster_sample, "vec_id", ("cluster_id", "draw_rank")),
+    ("sd", _e2_semdedup_kmeans, "vec_id",
+     ("kmeans_cluster", "cluster_id", "cluster_size",
+      "CAST(is_survivor AS INT)")),
+)
+_e3_qual_suite = _suite(
+    "e3_qual_suite",
+    _melt("quality", _e3_text_quality, "doc_id",
+          ("n_chars", "n_tokens", "mean_token_len", "digit_ratio",
+           "upper_ratio", "distinct_token_ratio")),
+    _melt("bpe", _e3_bpe_tokens, "doc_id",
+          ("ws_tokens", "bpe_tokens", "pieces_per_word")),
+    ("chunk", _e3_chunk_documents, ("doc_id", "chunk_index"), "chunk_text",
+     "n_chunk_tokens"),
+)
+_e3_docmeta_suite = _suite(
+    "e3_docmeta_suite",
+    ("lang", _e3_lang_id, "doc_id", "predicted_lang", "n_stopword_hits"),
+    ("fp", _e3_fingerprint, "doc_id", "min_fingerprint", "n_chunks"),
+)
+_e3_lm_suite = _suite(
+    "e3_lm_suite",
+    _melt("kn", _e3_kn_ppl, "doc_id", ("n_bigrams", "mean_logprob", "ppl")),
+    _melt("skip", _e3_skipgram, ("center", "context"), ("n",)),
+    _melt("ent", _e3_char_entropy, "doc_id",
+          ("n_chars", "n_distinct_chars", "entropy")),
+    _melt("zipf", _e3_zipf, "grp", ("n", "slope", "intercept", "r2")),
+    ("wp", _e3_wordpiece_apply, "doc_id", ("n_tokens", "tokens_str")),
+)
+_e4_media_suite = _suite(
+    "e4_media_suite",
+    ("png", _e4_png_decode, "media_id",
+     ("width", "height", "n_bytes", "decoded_sha256")),
+    ("meta", _e4_media_metadata, "media_id",
+     ("mime_type", "n_bytes", "payload_sha256")),
+)
+_e5_prep_suite = _suite(
+    "e5_prep_suite",
+    ("kfold", _e5_kfold, "doc_id", None, "fold"),
+    _melt("ece", _e5_calibration, "bin",
+          ("n", "avg_confidence", "accuracy", "abs_gap", "ece")),
+    ("tok", _e5_tokenize, "c_custkey", "c_name", "c_nationkey"),
+    ("profile", _e5_profile, "column",
+     ("n", "n_null", "n_distinct", "min_value", "max_value", "top_value",
+      "top_count")),
+    _melt("ols", _e5_group_ols, "l_returnflag",
+          ("n", "slope", "intercept", "r2")),
+)
+_e5_eval_suite = _suite(
+    "e5_eval_suite",
+    _melt("ndcg", _e5_ndcg, "query_id", ("ndcg_at_k",)),
+    _melt("retr", _e5_retrieval_metrics, "query_id",
+          ("n_relevant", "n_retrieved_relevant", "recall_at_k",
+           "capped_recall_at_k", "reciprocal_rank")),
+    _melt("cls", _e5_class_report, "label",
+          ("support", "precision", "recall", "f1")),
+    _melt("ner", _e5_ner_eval, "label",
+          ("tp", "fp", "fn", "precision", "recall", "f1")),
+    ("iob", _e5_iob_tags, ("doc_id", "pos"), ("token", "tag")),
+)
+_e5_sft_suite = _suite(
+    "e5_sft_suite",
+    ("corrupt", _e5_span_corrupt, "doc_id",
+     ("inputs", "targets", "n_spans", "n_noise_tokens")),
+    ("aug", _e5_augment, "doc_id", ("text", "n_dropped", "n_swapped_pairs")),
+    ("mix", _e5_temperature_mix, "doc_id", "source"),
+    _melt("dsir", _e5_dsir_weights, "doc_id", ("dsir_log_weight",)),
+)
+_e5_gov_suite = _suite(
+    "e5_gov_suite",
+    ("kanon", _e5_k_anonymity, ("event_type", "day_start"),
+     ("class_size", "l_diversity", "at_risk")),
+    _melt("winsor", _e5_winsorize, ("event_type", "event_id"),
+          ("value", "pct_rank", "winsorized")),
+    _melt("cdc", _e5_cdc_apply, ("user_id", "epoch_us(ts)", "event_id"),
+          ("value",)),
+    ("cdc_t", _e5_cdc_apply, ("user_id", "epoch_us(ts)", "event_id"),
+     "event_type"),
+    _melt("cohort", _e5_cohort_retention,
+          ("epoch_us(cohort_period)", "periods_since"), ("n_active",)),
+)
+_e5_dp_suite = _suite(
+    "e5_dp_suite",
+    ("row", _e5_dp_histogram, "event_type", "true_count", "noisy_count"),
+    ("user", _e5_dp_histogram_user, "event_type", "true_count",
+     "noisy_count"),
+)
+_e6_journey_suite = _suite(
+    "e6_journey_suite",
+    _melt("tm", _e6_transition_matrix, ("prev_state", "next_state"),
+          ("n", "prob")),
+    _melt("paths", _e6_top_paths, "path", ("n_entities",)),
+    _melt("power", _e6_transition_power, ("prev_state", "next_state"),
+          ("prob",)),
+    _melt("att", _e6_attribution, ("user_id", "conversion_id", "touch_id"),
+          ("position", "n_touches", "first_credit", "last_credit",
+           "linear_credit")),
+    ("att_touch", _e6_attribution, ("user_id", "conversion_id", "touch_id"),
+     "touch_type"),
+    _melt("cooc", _e6_cooccurrence, ("item_a", "item_b"),
+          ("n_ab", "n_a", "n_b", "confidence_a_to_b", "lift")),
+)
+_g_graph_suite = _suite(
+    "g_graph_suite",
+    ("bfs", _g_bfs_distances, "node", None, "dist"),
+    ("lpa", _g_label_prop, "node", None, "label"),
+    ("walk", _g_random_walks, ("start", "walk_id"), "path"),
+)
+_g_rank_suite = _suite(
+    "g_rank_suite",
+    ("pr", _g_pagerank, "node", None, "rank"),
+    ("ppr", _g_ppr, "node", None, "rank"),
+)
+_g_count_suite = _suite(
+    "g_count_suite",
+    _melt("tri", _g_triangle_count, (),
+          ("n_triangles", "n_edges", "n_vertices")),
+    _melt("cn", _g_common_neighbors, ("a", "b"), ("n_common", "jaccard")),
+)
+_j_er_suite = _suite(
+    "j_er_suite",
+    ("jw", _j_jw_match, ("c_custkey", "c_name"), "matched_v_name", "jw_sim"),
+    ("er", _er_resolve, ("id", "name"), ("cluster", "canonical_name")),
+)
+_t_ts_suite = _suite(
+    "t_ts_suite",
+    _melt("resample", _t_resample_gapfill, ("event_type", "bucket_start"),
+          ("n_obs", "value_avg", "locf", "interp")),
+    _melt("ewma", _t_ewma, ("event_type", "bucket_start"), ("ewma",)),
+    _melt("anomaly", _t_anomaly, ("event_type", "bucket_start"),
+          ("value_avg", "zscore")),
+    ("anomaly_flag", _t_anomaly, ("event_type", "bucket_start"),
+     "is_anomaly"),
+)
+_x1_linker_suite = _suite(
+    "x1_linker_suite",
+    ("inline", _x1_linker_corpus, ("mention", "rank"), "alias_id", "score"),
+    ("maxdf", _x1_linker_corpus_maxdf, ("mention", "rank"), "alias_id",
+     "score"),
+)
 
 
 #: The driver window. The driver hash-checks only the first 50 registry
@@ -11733,111 +11317,6 @@ def oracle_sql() -> dict[str, str]:
     out["x1_linker_served"] = _x1_linker_corpus_oracle(
         0.1, mention_pred="doc_id % 50 = 0 AND doc_id < 250"
     )
-    # -- round-10 consolidation suites: tagged unions of the r09-green
-    # singles they replace in the window; every constituent oracle
-    # stays registered above, so the singles remain individually
-    # hash-checked in tests/test_oracle_parity.py --------------------
-    out["e1_sa_suite"] = f"""
-        SELECT 'sa' AS op, CAST(gpos AS VARCHAR) AS k,
-               concat_ws('§', CAST(doc_id AS VARCHAR),
-                         CAST(local_pos AS VARCHAR),
-                         CAST(sa_rank AS VARCHAR)) AS v,
-               CAST(NULL AS DOUBLE) AS v_num
-        FROM ({out["e1_suffix_array"]})
-        UNION ALL
-        SELECT 'spans',
-               concat_ws('§', CAST(doc_id AS VARCHAR),
-                         CAST(local_pos AS VARCHAR)),
-               concat_ws('§', CAST(other_doc_id AS VARCHAR),
-                         CAST(other_pos AS VARCHAR), prefix),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e1_sa_dup_spans"]})
-        UNION ALL
-        SELECT 'dedup', CAST(doc_id AS VARCHAR),
-               concat_ws('§', CAST(n_chars_kept AS VARCHAR),
-                         CAST(n_chars_removed AS VARCHAR), text),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e1_sa_dedup"]})
-        UNION ALL
-        SELECT 'bench', CAST(doc_id AS VARCHAR),
-               concat_ws('§', CAST(n_positions AS VARCHAR),
-                         CAST(rank_checksum AS VARCHAR)),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e1_suffix_array_bench"]})
-    """
-    out["g_rank_suite"] = f"""
-        SELECT 'pr' AS op, CAST(node AS VARCHAR) AS k,
-               CAST(NULL AS VARCHAR) AS v, rank AS v_num
-        FROM ({out["g_pagerank"]})
-        UNION ALL
-        SELECT 'ppr', CAST(node AS VARCHAR),
-               CAST(NULL AS VARCHAR), rank
-        FROM ({out["g_ppr"]})
-    """
-    out["e2_bit_suite"] = f"""
-        SELECT 'htop' AS op,
-               concat_ws('§', CAST(query_id AS VARCHAR),
-                         CAST(rank AS VARCHAR)) AS k,
-               CAST(neighbor_id AS VARCHAR) AS v,
-               CAST(hamming AS DOUBLE) AS v_num
-        FROM ({out["e2_hamming_topk"]})
-        UNION ALL
-        SELECT 'rrk',
-               concat_ws('§', CAST(query_id AS VARCHAR),
-                         CAST(rank AS VARCHAR)),
-               CAST(neighbor_id AS VARCHAR), cos_sim
-        FROM ({out["e2_rerank_topk"]})
-        UNION ALL
-        SELECT 'hpairs',
-               concat_ws('§', CAST(id_a AS VARCHAR),
-                         CAST(id_b AS VARCHAR)),
-               CAST(NULL AS VARCHAR), CAST(hamming AS DOUBLE)
-        FROM ({out["e2_hamming_pairs"]})
-        UNION ALL
-        SELECT op, k, v, v_num FROM ({out["e2_srp_sketch"]})
-    """
-    out["e5_dp_suite"] = f"""
-        SELECT 'row' AS op, event_type AS k,
-               CAST(true_count AS VARCHAR) AS v,
-               CAST(noisy_count AS DOUBLE) AS v_num
-        FROM ({out["e5_dp_histogram"]})
-        UNION ALL
-        SELECT 'user', event_type, CAST(true_count AS VARCHAR),
-               CAST(noisy_count AS DOUBLE)
-        FROM ({out["e5_dp_histogram_user"]})
-    """
-    out["e2_kmeans_suite"] = f"""
-        SELECT 'km' AS op, CAST(vec_id AS VARCHAR) AS k,
-               concat_ws('§', CAST(cluster_id AS VARCHAR),
-                         CAST(sq_dist AS VARCHAR)) AS v,
-               CAST(NULL AS DOUBLE) AS v_num
-        FROM ({out["e2_kmeans"]})
-        UNION ALL
-        SELECT 'cs', CAST(vec_id AS VARCHAR),
-               concat_ws('§', CAST(cluster_id AS VARCHAR),
-                         CAST(draw_rank AS VARCHAR)),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e2_cluster_sample"]})
-        UNION ALL
-        SELECT 'sd', CAST(vec_id AS VARCHAR),
-               concat_ws('§', CAST(kmeans_cluster AS VARCHAR),
-                         CAST(cluster_id AS VARCHAR),
-                         CAST(cluster_size AS VARCHAR),
-                         CAST(CAST(is_survivor AS INT) AS VARCHAR)),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e2_semdedup_kmeans"]})
-    """
-    out["x1_linker_suite"] = f"""
-        SELECT 'inline' AS op,
-               concat_ws('§', mention, CAST(rank AS VARCHAR)) AS k,
-               CAST(alias_id AS VARCHAR) AS v, score AS v_num
-        FROM ({out["x1_linker_corpus"]})
-        UNION ALL
-        SELECT 'maxdf',
-               concat_ws('§', mention, CAST(rank AS VARCHAR)),
-               CAST(alias_id AS VARCHAR), score
-        FROM ({out["x1_linker_corpus_maxdf"]})
-    """
     # t_acf: the exact-integer ACF replayed — centi-unit floor-div
     # bucket means, lead windows per lag, the n²-cleared numerator and
     # denominator as BIGINTs, ONE division per row (round 10).
@@ -12146,516 +11625,6 @@ def oracle_sql() -> dict[str, str]:
     """
     # the streaming sessionize face must equal its batch twin
     out["e6_sessionize_batch"] = out["e6_sessionize"]
-    # driver-window suites: tagged unions of the consolidated originals'
-    # oracles, stringified into the common (op, k, v) schema
-    # round-6-late consolidation suites: tagged unions of the new
-    # singles' oracles (numerics per-metric on v_num — a double never
-    # casts to string, where engine reprs diverge)
-    out["e5_prep_suite"] = f"""
-        SELECT 'kfold' AS op, CAST(doc_id AS VARCHAR) AS k,
-               CAST(NULL AS VARCHAR) AS v, CAST(fold AS DOUBLE) AS v_num
-        FROM ({out["e5_kfold"]})
-        UNION ALL
-        SELECT 'ece', CAST(bin AS VARCHAR) || '§' || m.name,
-               CAST(NULL AS VARCHAR),
-               CASE m.name WHEN 'n' THEN CAST(n AS DOUBLE)
-                    WHEN 'avg_confidence' THEN avg_confidence
-                    WHEN 'accuracy' THEN accuracy
-                    WHEN 'abs_gap' THEN abs_gap
-                    ELSE ece END
-        FROM ({out["e5_calibration"]}),
-             (VALUES ('n'), ('avg_confidence'), ('accuracy'),
-                     ('abs_gap'), ('ece')) m(name)
-        UNION ALL
-        SELECT 'tok', CAST(c_custkey AS VARCHAR), c_name,
-               CAST(c_nationkey AS DOUBLE)
-        FROM ({out["e5_tokenize"]})
-        UNION ALL
-        SELECT 'profile', "column",
-               concat_ws('§', CAST(n AS VARCHAR),
-                         CAST(n_null AS VARCHAR),
-                         CAST(n_distinct AS VARCHAR), min_value,
-                         max_value, top_value,
-                         CAST(top_count AS VARCHAR)),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e5_profile"]})
-        UNION ALL
-        SELECT 'ols', l_returnflag || '§' || m.name,
-               CAST(NULL AS VARCHAR),
-               CASE m.name WHEN 'n' THEN CAST(n AS DOUBLE)
-                    WHEN 'slope' THEN slope
-                    WHEN 'intercept' THEN intercept
-                    ELSE r2 END
-        FROM ({out["e5_group_ols"]}),
-             (VALUES ('n'), ('slope'), ('intercept'), ('r2')) m(name)
-    """
-    out["g_graph_suite"] = f"""
-        SELECT 'bfs' AS op, CAST(node AS VARCHAR) AS k,
-               CAST(NULL AS VARCHAR) AS v, CAST(dist AS DOUBLE) AS v_num
-        FROM ({out["g_bfs_distances"]})
-        UNION ALL
-        SELECT 'lpa', CAST(node AS VARCHAR), CAST(NULL AS VARCHAR),
-               CAST(label AS DOUBLE)
-        FROM ({out["g_label_prop"]})
-        UNION ALL
-        SELECT 'walk', CAST(start AS VARCHAR) || '§'
-               || CAST(walk_id AS VARCHAR), path, CAST(NULL AS DOUBLE)
-        FROM ({out["g_random_walks"]})
-    """
-    def _num_rows_sql(base_key: str, op: str, key_exprs: list[str],
-                      metrics: list[str]) -> str:
-        # SQL twin of the Spark-side _num_metric_rows helper: one row
-        # per (input row, metric), k = keys § metric, v_num = metric
-        keys = " || '§' || ".join(
-            f"CAST({k} AS VARCHAR)" for k in key_exprs
-        )
-        cases = " ".join(
-            f"WHEN '{m}' THEN CAST(\"{m}\" AS DOUBLE)" for m in metrics
-        )
-        vals = ", ".join(f"('{m}')" for m in metrics)
-        return f"""
-        SELECT '{op}' AS op, {keys} || '§' || m.name AS k,
-               CAST(NULL AS VARCHAR) AS v,
-               CASE m.name {cases} END AS v_num
-        FROM ({out[base_key]}), (VALUES {vals}) m(name)
-        """
-
-    # round-8 consolidation suites (VERDICT r07 next #1): tagged
-    # unions of the consolidated originals' oracles
-    out["t_ts_suite"] = (
-        _num_rows_sql("t_resample_gapfill", "resample",
-                      ["event_type", "bucket_start"],
-                      ["n_obs", "value_avg", "locf", "interp"])
-        + " UNION ALL "
-        + _num_rows_sql("t_ewma", "ewma",
-                        ["event_type", "bucket_start"], ["ewma"])
-        + " UNION ALL "
-        + _num_rows_sql("t_anomaly", "anomaly",
-                        ["event_type", "bucket_start"],
-                        ["value_avg", "zscore"])
-        + f""" UNION ALL
-        SELECT 'anomaly_flag', concat_ws('§', event_type,
-                   CAST(bucket_start AS VARCHAR)),
-               CAST(is_anomaly AS VARCHAR), CAST(NULL AS DOUBLE)
-        FROM ({out["t_anomaly"]})
-        """
-    )
-    out["e6_journey_suite"] = (
-        _num_rows_sql("e6_transition_matrix", "tm",
-                      ["prev_state", "next_state"], ["n", "prob"])
-        + " UNION ALL "
-        + _num_rows_sql("e6_top_paths", "paths", ["path"],
-                        ["n_entities"])
-        + " UNION ALL "
-        + _num_rows_sql("e6_transition_power", "power",
-                        ["prev_state", "next_state"], ["prob"])
-        + " UNION ALL "
-        + _num_rows_sql("e6_attribution", "att",
-                        ["user_id", "conversion_id", "touch_id"],
-                        ["position", "n_touches", "first_credit",
-                         "last_credit", "linear_credit"])
-        + f""" UNION ALL
-        SELECT 'att_touch', concat_ws('§', CAST(user_id AS VARCHAR),
-                   CAST(conversion_id AS VARCHAR),
-                   CAST(touch_id AS VARCHAR)),
-               touch_type, CAST(NULL AS DOUBLE)
-        FROM ({out["e6_attribution"]})
-        """
-        + " UNION ALL "
-        + _num_rows_sql("e6_cooccurrence", "cooc",
-                        ["item_a", "item_b"],
-                        ["n_ab", "n_a", "n_b", "confidence_a_to_b",
-                         "lift"])
-    )
-    out["e5_eval_suite"] = (
-        _num_rows_sql("e5_ndcg", "ndcg", ["query_id"], ["ndcg_at_k"])
-        + " UNION ALL "
-        + _num_rows_sql("e5_retrieval_metrics", "retr", ["query_id"],
-                        ["n_relevant", "n_retrieved_relevant",
-                         "recall_at_k", "capped_recall_at_k",
-                         "reciprocal_rank"])
-        + " UNION ALL "
-        + _num_rows_sql("e5_class_report", "cls", ["label"],
-                        ["support", "precision", "recall", "f1"])
-        + " UNION ALL "
-        + _num_rows_sql("e5_ner_eval", "ner", ["label"],
-                        ["tp", "fp", "fn", "precision", "recall",
-                         "f1"])
-        + f""" UNION ALL
-        SELECT 'iob', concat_ws('§', CAST(doc_id AS VARCHAR),
-                   CAST(pos AS VARCHAR)),
-               concat_ws('§', token, tag), CAST(NULL AS DOUBLE)
-        FROM ({out["e5_iob_tags"]})
-        """
-    )
-    out["e1_clean_suite"] = f"""
-        SELECT 'c4' AS op, CAST(doc_id AS VARCHAR) AS k,
-               concat_ws('§', text, CAST(n_lines_kept AS VARCHAR),
-                   CAST(n_lines_dropped AS VARCHAR),
-                   CAST(has_brace AS VARCHAR),
-                   CAST(has_lorem AS VARCHAR),
-                   CAST(keep AS VARCHAR)) AS v,
-               CAST(NULL AS DOUBLE) AS v_num
-        FROM ({out["e1_c4_filter"]})
-        UNION ALL
-        SELECT 'pii', CAST(doc_id AS VARCHAR),
-               concat_ws('§', text, CAST(n_email AS VARCHAR),
-                   CAST(n_ipv4 AS VARCHAR), CAST(n_ssn AS VARCHAR),
-                   CAST(n_phone AS VARCHAR),
-                   CAST(has_pii AS VARCHAR)),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e1_pii_scrub"]})
-        UNION ALL
-        SELECT 'repair', CAST(doc_id AS VARCHAR),
-               concat_ws('§', text, CAST(n_chars_before AS VARCHAR),
-                   CAST(n_chars_after AS VARCHAR)),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e1_repair_text"]})
-        UNION ALL
-        SELECT 'boiler', CAST(doc_id AS VARCHAR),
-               concat_ws('§', text_clean, CAST(n_removed AS VARCHAR)),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e1_boilerplate_strip"]})
-    """
-    # round-9 consolidation suites: tagged unions of the consolidated
-    # r07-green originals' oracles
-    out["j_er_suite"] = f"""
-        SELECT 'jw' AS op,
-               concat_ws('§', CAST(c_custkey AS VARCHAR), c_name) AS k,
-               matched_v_name AS v, jw_sim AS v_num
-        FROM ({out["j_jw_match"]})
-        UNION ALL
-        SELECT 'er', concat_ws('§', CAST(id AS VARCHAR), name),
-               concat_ws('§', CAST(cluster AS VARCHAR), canonical_name),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["er_resolve"]})
-    """
-    out["e1_pair_suite"] = (
-        f"""
-        SELECT 'recall' AS op, m.name AS k,
-               CAST(NULL AS VARCHAR) AS v,
-               CASE m.name
-                    WHEN 'n_true' THEN CAST(n_true AS DOUBLE)
-                    WHEN 'n_candidates' THEN CAST(n_candidates AS DOUBLE)
-                    WHEN 'n_hit' THEN CAST(n_hit AS DOUBLE)
-                    WHEN 'recall' THEN recall
-                    ELSE precision END AS v_num
-        FROM ({out["e1_near_dup_recall"]}),
-             (VALUES ('n_true'), ('n_candidates'), ('n_hit'),
-                     ('recall'), ('precision')) m(name)
-        UNION ALL
-        """
-        + _num_rows_sql("e1_simhash_pairs", "simhash",
-                        ["id_a", "id_b"], ["hamming"])
-    )
-    out["e3_lm_suite"] = (
-        _num_rows_sql("e3_kn_ppl", "kn", ["doc_id"],
-                      ["n_bigrams", "mean_logprob", "ppl"])
-        + " UNION ALL "
-        + _num_rows_sql("e3_skipgram", "skip", ["center", "context"],
-                        ["n"])
-        + " UNION ALL "
-        + _num_rows_sql("e3_char_entropy", "ent", ["doc_id"],
-                        ["n_chars", "n_distinct_chars", "entropy"])
-        + " UNION ALL "
-        + _num_rows_sql("e3_zipf", "zipf", ["grp"],
-                        ["n", "slope", "intercept", "r2"])
-        + f""" UNION ALL
-        SELECT 'wp', CAST(doc_id AS VARCHAR),
-               concat_ws('§', CAST(n_tokens AS VARCHAR), tokens_str),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e3_wordpiece_apply"]})
-        """
-    )
-    out["e5_sft_suite"] = (
-        f"""
-        SELECT 'corrupt' AS op, CAST(doc_id AS VARCHAR) AS k,
-               concat_ws('§', inputs, targets,
-                   CAST(n_spans AS VARCHAR),
-                   CAST(n_noise_tokens AS VARCHAR)) AS v,
-               CAST(NULL AS DOUBLE) AS v_num
-        FROM ({out["e5_span_corrupt"]})
-        UNION ALL
-        SELECT 'aug', CAST(doc_id AS VARCHAR),
-               concat_ws('§', text, CAST(n_dropped AS VARCHAR),
-                   CAST(n_swapped_pairs AS VARCHAR)),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e5_augment"]})
-        UNION ALL
-        SELECT 'mix', CAST(doc_id AS VARCHAR), source,
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e5_temperature_mix"]})
-        UNION ALL
-        """
-        + _num_rows_sql("e5_dsir_weights", "dsir", ["doc_id"],
-                        ["dsir_log_weight"])
-    )
-    out["g_count_suite"] = (
-        f"""
-        SELECT 'tri' AS op, m.name AS k, CAST(NULL AS VARCHAR) AS v,
-               CASE m.name
-                    WHEN 'n_triangles' THEN CAST(n_triangles AS DOUBLE)
-                    WHEN 'n_edges' THEN CAST(n_edges AS DOUBLE)
-                    ELSE CAST(n_vertices AS DOUBLE) END AS v_num
-        FROM ({out["g_triangle_count"]}),
-             (VALUES ('n_triangles'), ('n_edges'),
-                     ('n_vertices')) m(name)
-        UNION ALL
-        """
-        + _num_rows_sql("g_common_neighbors", "cn", ["a", "b"],
-                        ["n_common", "jaccard"])
-    )
-    # timestamps ride as epoch microseconds on BOTH engines (Spark
-    # unix_micros == DuckDB epoch_us over the same parquet values)
-    out["e5_gov_suite"] = (
-        f"""
-        SELECT 'kanon' AS op,
-               concat_ws('§', event_type,
-                   CAST(day_start AS VARCHAR)) AS k,
-               concat_ws('§', CAST(class_size AS VARCHAR),
-                   CAST(l_diversity AS VARCHAR),
-                   CAST(at_risk AS VARCHAR)) AS v,
-               CAST(NULL AS DOUBLE) AS v_num
-        FROM ({out["e5_k_anonymity"]})
-        UNION ALL
-        """
-        + _num_rows_sql("e5_winsorize", "winsor",
-                        ["event_type", "event_id"],
-                        ["value", "pct_rank", "winsorized"])
-        + f""" UNION ALL
-        SELECT 'cdc',
-               CAST(user_id AS VARCHAR) || '§'
-                   || CAST(epoch_us(ts) AS VARCHAR) || '§'
-                   || CAST(event_id AS VARCHAR) || '§' || 'value',
-               CAST(NULL AS VARCHAR), CAST(value AS DOUBLE)
-        FROM ({out["e5_cdc_apply"]})
-        UNION ALL
-        SELECT 'cdc_t',
-               concat_ws('§', CAST(user_id AS VARCHAR),
-                   CAST(epoch_us(ts) AS VARCHAR),
-                   CAST(event_id AS VARCHAR)),
-               event_type, CAST(NULL AS DOUBLE)
-        FROM ({out["e5_cdc_apply"]})
-        UNION ALL
-        SELECT 'cohort',
-               CAST(epoch_us(cohort_period) AS VARCHAR) || '§'
-                   || CAST(periods_since AS VARCHAR) || '§'
-                   || 'n_active',
-               CAST(NULL AS VARCHAR), CAST(n_active AS DOUBLE)
-        FROM ({out["e5_cohort_retention"]})
-        """
-    )
-    out["u_set_suite"] = f"""
-        SELECT 'a5' AS op, o_orderstatus AS k, o_orderpriority AS v
-        FROM ({out["a5_distinct"]})
-        UNION ALL
-        SELECT 'u2', CAST(c_custkey AS VARCHAR), CAST(NULL AS VARCHAR)
-        FROM ({out["u2_intersect"]})
-        UNION ALL
-        SELECT 'u3', CAST(c_custkey AS VARCHAR), c_name
-        FROM ({out["u3_anti_join"]})
-        UNION ALL
-        SELECT 'a8', member_id, CAST(NULL AS VARCHAR)
-        FROM ({out["a8_explode_distinct"]})
-        UNION ALL
-        SELECT 'o1', CAST(s_suppkey AS VARCHAR), s_name
-        FROM ({out["o1_topk"]})
-        UNION ALL
-        SELECT 'j9', CAST(c_custkey AS VARCHAR), c_name
-        FROM ({out["j9_semi_join"]})
-    """
-    out["f_curie_suite"] = f"""
-        SELECT 'f4' AS op, CAST(p_partkey AS VARCHAR) AS k,
-               id_simplified AS v
-        FROM ({out["f4_curie_prefix_upper"]})
-        UNION ALL
-        SELECT 'f10', prefix, CAST(NULL AS VARCHAR)
-        FROM ({out["f10_prefix_extract"]})
-    """
-    # round 5: u_set_suite absorbs U1 + U4
-    out["u_set_suite"] += f"""
-        UNION ALL
-        SELECT 'u1', CAST(c_custkey AS VARCHAR), CAST(NULL AS VARCHAR)
-        FROM ({out["u1_union_merge"]})
-        UNION ALL
-        SELECT 'u4', CAST(c_custkey AS VARCHAR), reason
-        FROM ({out["u4_union_prefer_first"]})
-    """
-    # round-5 suites: (op, k, v, v_num DOUBLE) tagged unions of the
-    # consolidated originals' oracles — numeric branches ride v_num so
-    # counts/similarities stay checked as numbers, not strings
-    out["syn_suite"] = f"""
-        SELECT 'canonical' AS op, concat_ws('§', via, entity) AS k,
-               concat_ws('§', preferred_curie, preferred_name,
-                         preferred_category) AS v,
-               CAST(NULL AS DOUBLE) AS v_num
-        FROM ({out["syn_canonical"]})
-        UNION ALL
-        SELECT 'equiv', entity, equivalent_id, CAST(NULL AS DOUBLE)
-        FROM ({out["syn_equivalent_nodes"]})
-        UNION ALL
-        SELECT 'cathist', concat_ws('§', cluster_id, category),
-               CAST(NULL AS VARCHAR), CAST(cnt AS DOUBLE)
-        FROM ({out["syn_category_histogram"]})
-        UNION ALL
-        SELECT 'norm', concat_ws('§', cluster_id, equivalent_id),
-               concat_ws('§', entity, label, category, major_branch,
-                         name_sri, CAST(in_sri AS VARCHAR), category_sri,
-                         name_kg2pre, CAST(in_kg2pre AS VARCHAR),
-                         category_kg2pre, cluster_preferred_name),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["syn_normalizer_nodes"]})
-    """
-    out["j_join_suite"] = f"""
-        SELECT 'j2' AS op, CAST(o_custkey AS VARCHAR) AS k,
-               modal_value AS v, CAST(modal_count AS DOUBLE) AS v_num
-        FROM ({out["j2_mode_vote"]})
-        UNION ALL
-        SELECT 'j4', concat_ws('§', CAST(o_orderkey AS VARCHAR),
-                               CAST(o_custkey AS VARCHAR)),
-               resolved_name, CAST(NULL AS DOUBLE)
-        FROM ({out["j4_coalesce_fallback"]})
-        UNION ALL
-        SELECT 'j5', concat_ws('§', suffix, candidate),
-               CAST(NULL AS VARCHAR), CAST(n_nationkey AS DOUBLE)
-        FROM ({out["j5_prefix_expansion"]})
-    """
-    out["a_agg_suite"] = f"""
-        SELECT 'a2' AS op, lang AS k, longest_value AS v,
-               CAST(longest_len AS DOUBLE) AS v_num
-        FROM ({out["a2_longest_value"]})
-        UNION ALL
-        SELECT 'a4', concat_ws('§', CAST(c_nationkey AS VARCHAR),
-                               c_mktsegment),
-               CAST(NULL AS VARCHAR), CAST(cnt AS DOUBLE)
-        FROM ({out["a4_category_histogram"]})
-        UNION ALL
-        SELECT 'a6', CAST(user_id AS VARCHAR),
-               concat_ws('§', CAST(event_id AS VARCHAR), event_type),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["a6_first_writer_wins"]})
-    """
-    out["e1_near_dup_suite"] = f"""
-        SELECT 'simhash' AS op, CAST(doc_id AS VARCHAR) AS k,
-               CAST(simhash AS VARCHAR) AS v, CAST(NULL AS DOUBLE) AS v_num
-        FROM ({out["e1_simhash"]})
-        UNION ALL
-        SELECT 'ngram', concat_ws('§', CAST(id_a AS VARCHAR),
-                                  CAST(id_b AS VARCHAR)),
-               CAST(n_common AS VARCHAR), CAST(jaccard AS DOUBLE)
-        FROM ({out["e1_ngram_jaccard"]})
-        UNION ALL
-        SELECT 'embed', concat_ws('§', CAST(id_a AS VARCHAR),
-                                  CAST(id_b AS VARCHAR)),
-               CAST(NULL AS VARCHAR), CAST(cos_sim AS DOUBLE)
-        FROM ({out["e1_embedding_near_dup"]})
-    """
-    out["e3_docmeta_suite"] = f"""
-        SELECT 'lang' AS op, CAST(doc_id AS VARCHAR) AS k,
-               predicted_lang AS v, CAST(n_stopword_hits AS DOUBLE) AS v_num
-        FROM ({out["e3_lang_id"]})
-        UNION ALL
-        SELECT 'fp', CAST(doc_id AS VARCHAR),
-               CAST(min_fingerprint AS VARCHAR), CAST(n_chunks AS DOUBLE)
-        FROM ({out["e3_fingerprint"]})
-    """
-    out["e4_media_suite"] = f"""
-        SELECT 'png' AS op, CAST(media_id AS VARCHAR) AS k,
-               concat_ws('§', CAST(width AS VARCHAR),
-                         CAST(height AS VARCHAR),
-                         CAST(n_bytes AS VARCHAR), decoded_sha256) AS v,
-               CAST(NULL AS DOUBLE) AS v_num
-        FROM ({out["e4_png_decode"]})
-        UNION ALL
-        SELECT 'meta', CAST(media_id AS VARCHAR),
-               concat_ws('§', mime_type, CAST(n_bytes AS VARCHAR),
-                         payload_sha256),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e4_media_metadata"]})
-    """
-    # round-5 LATE rotation suites: tagged unions of the consolidated
-    # originals' oracles (same (op, k, v, v_num DOUBLE) shape)
-    out["e2_ann_suite"] = f"""
-        SELECT 'cosine' AS op,
-               concat_ws('§', CAST(query_id AS VARCHAR),
-                         CAST(neighbor_id AS VARCHAR)) AS k,
-               CAST(rank AS VARCHAR) AS v, CAST(cos_sim AS DOUBLE) AS v_num
-        FROM ({out["e2_cosine_topk"]})
-        UNION ALL
-        SELECT 'lsh', concat_ws('§', CAST(query_id AS VARCHAR),
-                                CAST(neighbor_id AS VARCHAR)),
-               CAST(rank AS VARCHAR), CAST(cos_sim AS DOUBLE)
-        FROM ({out["e2_lsh_topk"]})
-        UNION ALL
-        SELECT 'ivf', concat_ws('§', CAST(query_id AS VARCHAR),
-                                CAST(neighbor_id AS VARCHAR)),
-               CAST(rank AS VARCHAR), CAST(cos_sim AS DOUBLE)
-        FROM ({out["e2_ivf_topk"]})
-    """
-    out["e1_dedup_suite"] = f"""
-        SELECT 'exact' AS op, content_sha AS k,
-               CAST(canonical_id AS VARCHAR) AS v,
-               CAST(n_copies AS DOUBLE) AS v_num
-        FROM ({out["e1_exact_dedup"]})
-        UNION ALL
-        SELECT 'survivor', CAST(doc_id AS VARCHAR),
-               concat_ws('§', lang, source), CAST(n_chars AS DOUBLE)
-        FROM ({out["e1_dedup_survivor"]})
-        UNION ALL
-        SELECT 'minhash', concat_ws('§', CAST(id_a AS VARCHAR),
-                                    CAST(id_b AS VARCHAR)),
-               CAST(NULL AS VARCHAR), CAST(NULL AS DOUBLE)
-        FROM ({out["e1_minhash_near_dup"]})
-        UNION ALL
-        SELECT 'decon', CAST(doc_id AS VARCHAR),
-               CAST(contaminated AS VARCHAR),
-               CAST(n_overlapping AS DOUBLE)
-        FROM ({out["e1_decontaminate"]})
-        UNION ALL
-        SELECT 'cluster', CAST(doc_id AS VARCHAR),
-               concat_ws('§', CAST(cluster_id AS VARCHAR),
-                         CAST(is_singleton AS VARCHAR)),
-               CAST(NULL AS DOUBLE)
-        FROM ({out["e1_dup_clusters_star"]})
-    """
-    out["e3_qual_suite"] = f"""
-        WITH q AS ({out["e3_text_quality"]}),
-             b AS ({out["e3_bpe_tokens"]})
-        SELECT 'quality' AS op,
-               concat_ws('§', CAST(doc_id AS VARCHAR), m.name) AS k,
-               CAST(NULL AS VARCHAR) AS v, m.x AS v_num
-        FROM q, LATERAL (VALUES
-            ('n_chars', CAST(n_chars AS DOUBLE)),
-            ('n_tokens', CAST(n_tokens AS DOUBLE)),
-            ('mean_token_len', CAST(mean_token_len AS DOUBLE)),
-            ('digit_ratio', CAST(digit_ratio AS DOUBLE)),
-            ('upper_ratio', CAST(upper_ratio AS DOUBLE)),
-            ('distinct_token_ratio', CAST(distinct_token_ratio AS DOUBLE))
-        ) AS m(name, x)
-        UNION ALL
-        SELECT 'bpe', concat_ws('§', CAST(doc_id AS VARCHAR), m.name),
-               CAST(NULL AS VARCHAR), m.x
-        FROM b, LATERAL (VALUES
-            ('ws_tokens', CAST(ws_tokens AS DOUBLE)),
-            ('bpe_tokens', CAST(bpe_tokens AS DOUBLE)),
-            ('pieces_per_word', CAST(pieces_per_word AS DOUBLE))
-        ) AS m(name, x)
-        UNION ALL
-        SELECT 'chunk', concat_ws('§', CAST(doc_id AS VARCHAR),
-                                  CAST(chunk_index AS VARCHAR)),
-               chunk_text, CAST(n_chunk_tokens AS DOUBLE)
-        FROM ({out["e3_chunk_documents"]})
-    """
-    out["f_text_suite"] = f"""
-        SELECT 'name' AS op, CAST(doc_id AS VARCHAR) AS k,
-               concat_ws('§', cleaned, stripped, name_simplified) AS v,
-               CAST(pos AS DOUBLE) AS v_num
-        FROM ({out["f_name_normalize"]})
-        UNION ALL
-        SELECT 'sent', CAST(doc_id AS VARCHAR), sentence,
-               CAST(NULL AS DOUBLE)
-        FROM ({out["f5_sentence_pipeline"]})
-    """
     # the closed-sessions production face: the batch session table
     # restricted to sessions closed below the final watermark
     # W = max(ts) - 10 minutes (the append-mode emission contract)
@@ -12667,65 +11636,6 @@ def oracle_sql() -> dict[str, str]:
     # full-cell IVF-PQ probe of the appended index == flat ADC over the
     # whole corpus — one oracle, two names (see _e2_ivfpq_append_topk)
     out["e2_ivfpq_append_topk"] = out["e2_pq_adc_topk"]
-    # round-6 rotation prep: tagged union of the 14 pytest-only TPC-H
-    # oracles in the (op, k, v, v_num) suite schema
-    _NS = "CAST(NULL AS VARCHAR)"
-    _ND = "CAST(NULL AS DOUBLE)"
-    out["q_tpch_suite"] = f"""
-        SELECT 'q4' AS op, o_orderpriority AS k, {_NS} AS v,
-               CAST(order_count AS DOUBLE) AS v_num
-        FROM ({out["q4_order_priority"]})
-        UNION ALL
-        SELECT 'q6', 'revenue', {_NS}, CAST(revenue AS DOUBLE)
-        FROM ({out["q6_forecast_revenue"]})
-        UNION ALL
-        SELECT 'q7', concat_ws('§', supp_nation, cust_nation,
-                               CAST(l_year AS VARCHAR)),
-               {_NS}, CAST(revenue AS DOUBLE)
-        FROM ({out["q7_volume_shipping"]})
-        UNION ALL
-        SELECT 'q8', CAST(o_year AS VARCHAR), {_NS},
-               CAST(mkt_share AS DOUBLE)
-        FROM ({out["q8_market_share"]})
-        UNION ALL
-        SELECT 'q9', concat_ws('§', nation, CAST(o_year AS VARCHAR)),
-               {_NS}, CAST(sum_profit AS DOUBLE)
-        FROM ({out["q9_product_profit"]})
-        UNION ALL
-        SELECT 'q11', CAST(l_partkey AS VARCHAR), {_NS},
-               CAST(part_value AS DOUBLE)
-        FROM ({out["q11_important_parts"]})
-        UNION ALL
-        SELECT 'q12', l_returnflag, CAST(high_line_count AS VARCHAR),
-               CAST(low_line_count AS DOUBLE)
-        FROM ({out["q12_late_priority"]})
-        UNION ALL
-        SELECT 'q13', CAST(c_count AS VARCHAR), {_NS},
-               CAST(custdist AS DOUBLE)
-        FROM ({out["q13_order_count_distribution"]})
-        UNION ALL
-        SELECT 'q14', 'promo', {_NS}, CAST(promo_revenue AS DOUBLE)
-        FROM ({out["q14_promo_revenue"]})
-        UNION ALL
-        SELECT 'q15', CAST(s_suppkey AS VARCHAR), s_name,
-               CAST(total_revenue AS DOUBLE)
-        FROM ({out["q15_top_supplier"]})
-        UNION ALL
-        SELECT 'q16', concat_ws('§', p_brand, p_type,
-                                CAST(p_size AS VARCHAR)),
-               {_NS}, CAST(supplier_cnt AS DOUBLE)
-        FROM ({out["q16_supplier_counts"]})
-        UNION ALL
-        SELECT 'q19', 'revenue', {_NS}, CAST(revenue AS DOUBLE)
-        FROM ({out["q19_disjunctive_revenue"]})
-        UNION ALL
-        SELECT 'q21', s_name, {_NS}, CAST(numwait AS DOUBLE)
-        FROM ({out["q21_late_sole_supplier"]})
-        UNION ALL
-        SELECT 'q22', c_mktsegment, CAST(numcust AS VARCHAR),
-               CAST(totacctbal AS DOUBLE)
-        FROM ({out["q22_idle_customers"]})
-    """
     # round 7: composed pretrain-prep oracle — the curation chain's
     # CTE prefix (everything up to its final verdict SELECT) plus a
     # kept-survivors CTE and the single-window packing reference the
@@ -12763,4 +11673,6 @@ def oracle_sql() -> dict[str, str]:
                    CAST(start % 512 AS BIGINT) AS offset_in_first
             FROM placed
         """
+    for name, branches in _SUITES.items():
+        out[name] = _suite_sql(branches, out)
     return out

@@ -40,7 +40,9 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 #: Memoized analyzed DataFrames keyed by (session id, sf_dir, table).
 #: Re-creating a reader re-runs file listing + footer schema jobs on the
 #: driver (~0.1-0.4 s each); reusing the analyzed relation skips all of it
-#: while remaining fully lazy.
+#: while remaining fully lazy. An id can be reused once a session is
+#: garbage-collected, so an entry is served only to the session it is
+#: bound to.
 _CACHE: dict[tuple[int, str, str], DataFrame] = {}
 
 
@@ -49,7 +51,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     key = (id(spark), sf_dir, name)
     hit = _CACHE.get(key)
-    if hit is not None:
+    if hit is not None and hit.sparkSession is spark:
         return hit
     df = _read_table(spark, sf_dir, name)
     _CACHE[key] = df

@@ -497,3 +497,16 @@ def test_local_df_keeps_int64_exact_next_to_none(spark):
     # the Arrow batch becomes a LocalRelation, not a Python-RDD scan
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "LocalRelation" in plan, plan
+
+
+def test_load_table_cache_serves_only_its_own_session(spark):
+    # The cache is keyed by id(spark); an id reused after a session dies
+    # must not serve a DataFrame bound to that other session.
+    from drugbankner_spark import tables as TB
+
+    other = spark.newSession()
+    TB._CACHE[(id(spark), SF, "region")] = other.read.parquet(
+        os.path.join(SF, "region.parquet"))
+    df = load_table(spark, SF, "region")
+    assert df.sparkSession is spark
+    assert load_table(spark, SF, "region") is df
