@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from drugbankner_spark.caching import session_memo
 from drugbankner_spark.functions import identifiers as I
 from drugbankner_spark.functions import normalize as N
 from drugbankner_spark.operators import relational as R
@@ -1205,16 +1206,17 @@ def _e2_assign_stream(spark: SparkSession, sf: str) -> DataFrame:
 
     emb = load_table(spark, sf, "embeddings")
     _assigned, centroids = kmeans_fit(emb, k=8, n_iters=3)
-    key = (spark.sparkContext.applicationId, sf, "emb")
-    if key not in _STREAM_SRC:
+    srcs = session_memo(spark).setdefault("stream_src", {})
+    key = (sf, "emb")
+    if key not in srcs:
         d = tempfile.mkdtemp(prefix="emb_stream_")
         emb.select("vec_id", "embedding").repartition(2).write.mode(
             "overwrite"
         ).parquet(d)
-        _STREAM_SRC[key] = d
+        srcs[key] = d
     stream = spark.readStream.schema(
         "vec_id long, embedding array<double>"
-    ).option("maxFilesPerTrigger", 1).parquet(_STREAM_SRC[key])
+    ).option("maxFilesPerTrigger", 1).parquet(srcs[key])
     n = next(_STREAM_SEQ)
     return S.run_to_memory(
         S.cluster_assign_stream(stream, centroids),
@@ -1476,10 +1478,6 @@ def _x1_linker_corpus_maxdf(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-#: Persisted alias-index paths, keyed like _LSH_INDEX.
-_ALIAS_INDEX: dict[tuple[str, str], str] = {}
-
-
 def _ensure_alias_index(spark: SparkSession, sf: str) -> str:
     """Build the persisted alias index ONCE per (session, sf) — the
     fit step a serving deployment pays at publish time, NOT per probe.
@@ -1495,14 +1493,14 @@ def _ensure_alias_index(spark: SparkSession, sf: str) -> str:
     from drugbankner_spark.operators.linker import save_alias_index
 
     _mentions, aliases = _linker_corpus_mentions(spark, sf)
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _ALIAS_INDEX:
+    built = session_memo(spark).setdefault("alias_index", {})
+    if sf not in built:
         path = tempfile.mkdtemp(prefix="alias_index_") + "/idx"
         save_alias_index(
             aliases, "alias", "alias_id", path, max_df_ratio=0.1
         )
-        _ALIAS_INDEX[key] = path
-    return _ALIAS_INDEX[key]
+        built[sf] = path
+    return built[sf]
 
 
 def _x1_linker_indexed(spark: SparkSession, sf: str) -> DataFrame:
@@ -1823,14 +1821,6 @@ def _e2_hard_negatives(spark: SparkSession, sf: str) -> DataFrame:
     return SIM.hard_negatives(emb, queries, pos, k=5, skip_top=1)
 
 
-#: Built LSH index paths keyed by (applicationId, sf dir) — build once,
-#: probe many (the ANN serving amortization; results are identical to
-#: inline lsh_topk, tested in tests/test_partitioning.py). applicationId,
-#: not id(spark): object addresses are reused after GC, so an id-keyed
-#: cache could serve a new session an index bound to a dead one.
-_LSH_INDEX: dict[tuple[str, str], str] = {}
-
-
 def _e2_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     # Amortized serving form: the corpus' bucket assignment is
     # materialized ONCE per (session, sf) as a bucket-partitioned layout;
@@ -1841,21 +1831,15 @@ def _e2_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
     from drugbankner_spark.operators import similarity as SIM
 
     emb = load_table(spark, sf, "embeddings")
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _LSH_INDEX:
+    built = session_memo(spark).setdefault("lsh_index", {})
+    if sf not in built:
         path = tempfile.mkdtemp(prefix="lsh_index_") + "/idx"
         SIM.build_lsh_index(emb, path, num_planes=8, dim=64)
-        _LSH_INDEX[key] = path
+        built[sf] = path
     return SIM.probe_lsh_index(
-        spark, _LSH_INDEX[key], emb.filter(F.col("vec_id") < 5), k=5,
+        spark, built[sf], emb.filter(F.col("vec_id") < 5), k=5,
         num_planes=8, dim=64,
     )
-
-
-#: Incrementally-maintained LSH index paths (build half, append half),
-#: keyed like _LSH_INDEX.
-_LSH_APPEND_INDEX: dict[tuple[str, str], str] = {}
-_IVFPQ_APPEND_INDEX: dict[tuple[str, str], str] = {}
 
 
 def _e2_lsh_append_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -1870,8 +1854,8 @@ def _e2_lsh_append_topk(spark: SparkSession, sf: str) -> DataFrame:
     from drugbankner_spark.operators import similarity as SIM
 
     emb = load_table(spark, sf, "embeddings")
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _LSH_APPEND_INDEX:
+    built = session_memo(spark).setdefault("lsh_append_index", {})
+    if sf not in built:
         path = tempfile.mkdtemp(prefix="lsh_append_") + "/idx"
         SIM.build_lsh_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, num_planes=8, dim=64
@@ -1879,9 +1863,9 @@ def _e2_lsh_append_topk(spark: SparkSession, sf: str) -> DataFrame:
         SIM.append_to_lsh_index(
             emb.filter(F.col("vec_id") % 2 == 1), path, num_planes=8, dim=64
         )
-        _LSH_APPEND_INDEX[key] = path
+        built[sf] = path
     return SIM.probe_lsh_index(
-        spark, _LSH_APPEND_INDEX[key], emb.filter(F.col("vec_id") < 5), k=5,
+        spark, built[sf], emb.filter(F.col("vec_id") < 5), k=5,
         num_planes=8, dim=64,
     )
 
@@ -1900,8 +1884,8 @@ def _e2_ivfpq_append_topk(spark: SparkSession, sf: str) -> DataFrame:
 
     emb = load_table(spark, sf, "embeddings")
     books = SIM.pq_codebooks(dim=64, m=8, ksub=16)
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _IVFPQ_APPEND_INDEX:
+    built = session_memo(spark).setdefault("ivfpq_append_index", {})
+    if sf not in built:
         path = tempfile.mkdtemp(prefix="ivfpq_append_") + "/idx"
         SIM.build_ivfpq_index(
             emb.filter(F.col("vec_id") % 2 == 0), path, books, n_centroids=8
@@ -1909,14 +1893,11 @@ def _e2_ivfpq_append_topk(spark: SparkSession, sf: str) -> DataFrame:
         SIM.append_to_ivfpq_index(
             emb.filter(F.col("vec_id") % 2 == 1), path, books, n_centroids=8
         )
-        _IVFPQ_APPEND_INDEX[key] = path
+        built[sf] = path
     return SIM.probe_ivfpq_index(
-        spark, _IVFPQ_APPEND_INDEX[key], emb.filter(F.col("vec_id") < 5),
+        spark, built[sf], emb.filter(F.col("vec_id") < 5),
         books, k=5, n_centroids=8, n_probe=8,
     )
-
-
-_TEXT_INDEX_CACHE: dict = {}
 
 
 def _e2_retrieval_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -1936,18 +1917,16 @@ def _e2_retrieval_topk(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf, "documents")
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _TEXT_INDEX_CACHE:
+    built = session_memo(spark).setdefault("text_index", {})
+    if sf not in built:
         path = tempfile.mkdtemp(prefix="text_idx_") + "/idx"
         build_text_index(docs, path, chunk_tokens=32, overlap=8)
-        _TEXT_INDEX_CACHE[key] = path
+        built[sf] = path
     queries = docs.filter(F.col("doc_id").isin(1, 2, 3)).select(
         (F.col("doc_id") + 100).alias("query_id"),
         F.col("text").alias("query_text"),
     )
-    return retrieve(
-        spark, _TEXT_INDEX_CACHE[key], queries, k=5,
-    )
+    return retrieve(spark, built[sf], queries, k=5)
 
 
 def _e2_pq_adc_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -2800,45 +2779,58 @@ def _e6_windows_batch(spark: SparkSession, sf: str) -> DataFrame:
     return _e6_shape_suite(tumbling_counts(events), sliding_counts(events))
 
 
-#: Normalized micro-batch copies of the events table, keyed by
-#: (applicationId, sf dir) — the readStream file source for the e6
-#: streaming queries (applicationId, not id(spark): see _LSH_INDEX).
-_STREAM_SRC: dict[tuple[str, str], str] = {}
 _STREAM_SEQ = __import__("itertools").count()
 
 
-def _stream_state_width(spark: SparkSession, sf: str) -> int | None:
-    """Scale-adaptive state-store width for the bounded event-stream
-    replays (round 16, guide §2.2/§5): streaming aggregations cannot
-    use AQE coalescing, so the batch-sized session shuffle width
+def _replay_session(spark: SparkSession, sf: str) -> SparkSession:
+    """The session the bounded event-stream replays plan on, sized to
+    their input (round 16, guide §2.2/§5): streaming aggregations
+    cannot use AQE coalescing, so the batch-sized session shuffle width
     over-partitions a small replay into that many state stores, each
     paying per-batch setup+commit (measured ~0.3 s of the sessionize
     stream's 1.4 s at sf0.1 under 32 stores). Width derives from the
     INPUT size only (never the core count — the driver benches at two
-    core counts); above the session default the estimate returns None
-    and the default stands, so at scale this never fires. Only passed
-    to partitioning-independent aggregation faces."""
+    core counts); at or above the session default ``spark`` itself is
+    returned, so at scale this never fires. Below it, a child
+    ``spark.newSession()`` carries the caller's SQL conf plus the
+    narrower width — the caller's conf is never written — memoized per
+    caller session and conf. Only used by partitioning-independent
+    aggregation faces."""
     from drugbankner_spark.tables import est_plan_bytes
 
     b = est_plan_bytes(load_table(spark, sf, "events"))
     if b is None or b <= 0:
-        return None
+        return spark
     width = max(4, -(-b // (32 << 20)))  # one store per ~32 MB
-    default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    return int(width) if width < default else None
+    if width >= int(spark.conf.get("spark.sql.shuffle.partitions")):
+        return spark
+    conf = {**spark.conf.getAll, "spark.sql.shuffle.partitions": str(width)}
+    key = tuple(sorted(conf.items()))
+    replays = session_memo(spark).setdefault("replay_sessions", {})
+    if key not in replays:
+        child = spark.newSession()
+        inherited = child.conf.getAll
+        for k, v in conf.items():
+            if inherited.get(k) != v and child.conf.isModifiable(k):
+                child.conf.set(k, v)
+        replays[key] = child
+    return replays[key]
 
 
 def _events_stream_dir(spark: SparkSession, sf: str) -> str:
+    """A normalized micro-batch copy of the events table, written once
+    per (session, sf dir) — the readStream file source for the e6
+    streaming queries."""
     import tempfile
 
-    key = (spark.sparkContext.applicationId, sf)
-    if key not in _STREAM_SRC:
+    srcs = session_memo(spark).setdefault("stream_src", {})
+    if sf not in srcs:
         d = tempfile.mkdtemp(prefix="events_stream_")
         load_table(spark, sf, "events").repartition(2).write.mode(
             "overwrite"
         ).parquet(d)
-        _STREAM_SRC[key] = d
-    return _STREAM_SRC[key]
+        srcs[sf] = d
+    return srcs[sf]
 
 
 def _e6_windows(spark: SparkSession, sf: str) -> DataFrame:
@@ -2855,14 +2847,14 @@ def _e6_windows(spark: SparkSession, sf: str) -> DataFrame:
 
     d = _events_stream_dir(spark, sf)
     n = next(_STREAM_SEQ)
-    w = _stream_state_width(spark, sf)
+    replay = _replay_session(spark, sf)
     t = S.run_to_memory(
-        S.tumbling_stream(S.read_event_stream(spark, d)),
-        f"e6_stream_t_{n}", output_mode="complete", state_partitions=w,
+        S.tumbling_stream(S.read_event_stream(replay, d)),
+        f"e6_stream_t_{n}", output_mode="complete",
     )
     s = S.run_to_memory(
-        S.sliding_stream(S.read_event_stream(spark, d)),
-        f"e6_stream_s_{n}", output_mode="complete", state_partitions=w,
+        S.sliding_stream(S.read_event_stream(replay, d)),
+        f"e6_stream_s_{n}", output_mode="complete",
     )
     return _e6_shape_suite(t, s)
 
@@ -2890,9 +2882,8 @@ def _e6_sessionize(spark: SparkSession, sf: str) -> DataFrame:
     d = _events_stream_dir(spark, sf)
     n = next(_STREAM_SEQ)
     return S.run_to_memory(
-        S.session_stream(S.read_event_stream(spark, d)),
+        S.session_stream(S.read_event_stream(_replay_session(spark, sf), d)),
         f"e6_stream_sess_{n}", output_mode="complete",
-        state_partitions=_stream_state_width(spark, sf),
     )
 
 
@@ -2909,11 +2900,10 @@ def _e6_sessionize_closed(spark: SparkSession, sf: str) -> DataFrame:
     d = _events_stream_dir(spark, sf)
     n = next(_STREAM_SEQ)
     return S.run_to_memory(
-        S.closed_sessions_stream(
-            S.read_event_stream(spark, d, watermark="10 minutes")
-        ),
+        S.closed_sessions_stream(S.read_event_stream(
+            _replay_session(spark, sf), d, watermark="10 minutes"
+        )),
         f"e6_stream_closed_{n}", output_mode="append",
-        state_partitions=_stream_state_width(spark, sf),
     )
 
 

@@ -125,79 +125,74 @@ def _kmeans(
     vecs: DataFrame, k: int, n_iters: int,
     id_col: str, vec_col: str, scale: int,
 ) -> tuple[DataFrame, DataFrame]:
-    from drugbankner_spark.caching import (
-        cache_mark,
-        release_since,
-        shared_persist,
-    )
+    from drugbankner_spark.caching import cache_scope, shared_persist
     from drugbankner_spark.operators.dedup import content_hash32
 
     if k < 1 or n_iters < 1:
         raise ValueError("kmeans_lloyd: k and n_iters must be >= 1")
-    mark = cache_mark()
-    # Hash-partition the point table by _id ONCE before caching (round
-    # 15, guide §2.4): every Lloyd iteration groups the scored join by
-    # (_id, cluster_id) then by (_id), and the update joins back on
-    # (_id) — HashPartitioning(_id) satisfies all three clustered
-    # distributions (partitioning keys ⊆ grouping keys), and the cached
-    # plan's partitioning survives into every consumer (static cache
-    # width), so no iteration ever re-exchanges the (corpus-scale)
-    # point table; only the k×dim centroid dim and the per-point
-    # assignment rows move per round.
-    # GATED on input size (round 16, VERDICT r15 next #6): below one
-    # scan task's worth every per-iteration agg/join is a handful of
-    # tiny tasks — the up-front exchange costs more than the
-    # per-iteration exchanges it removes (driver r15: e2_kmeans −13%
-    # at sf0.1). At scale the gate never skips and the cached
-    # HashPartitioning(_id) is what keeps Lloyd iterations
-    # exchange-free.
-    qpts = _quantized_points(vecs, id_col, vec_col, scale)
-    if not fits_one_task(vecs):
-        qpts = qpts.repartition("_id")
-    pts = shared_persist(qpts)
-    # seed draw: global sort + limit(k) plans as TakeOrderedAndProject
-    # (distributed per-partition top-k, k rows to the driver side) —
-    # never a single-partition window over the full id set; ordinals
-    # then come from a window over just the k winners
-    w = Window.orderBy("_h", "_id")
-    seed_ids = (
-        vecs.select(
-            F.col(id_col).alias("_id"),
-            content_hash32(F.col(id_col).cast("string")).alias("_h"),
-        )
-        .orderBy("_h", "_id")
-        .limit(k)
-        .withColumn("cluster_id", F.row_number().over(w) - 1)
-        .select("_id", "cluster_id")
-    )
-    centroids = pts.join(F.broadcast(seed_ids), "_id").select(
-        "cluster_id", "dim", F.col("v").alias("c")
-    )
-    assigned = None
-    for it in range(n_iters):
-        # LAZY between rounds (round 15): the next centroid
-        # checkpoint's job traverses the assignment anyway and
-        # materializes it — one job per round instead of two. The
-        # final round stays EAGER so the result is block-backed
-        # before release_since drops the pts persist below.
-        assigned = _assign_step(pts, centroids).localCheckpoint(
-            eager=(it == n_iters - 1)
-        )
-        if it == n_iters - 1:
-            break  # the last update would never be read
-        # grid-rounded integer mean: ONE IEEE division of exact
-        # integers + floor — bit-identical across engines, no
-        # unordered float reduction
-        centroids = (
-            pts.join(assigned.select("_id", "cluster_id"), "_id")
-            .groupBy("cluster_id", "dim")
-            .agg(
-                F.floor(
-                    F.sum("v") / F.count(F.lit(1)) + F.lit(0.5)
-                ).cast("long").alias("c")
+    with cache_scope():
+        # Hash-partition the point table by _id ONCE before caching (round
+        # 15, guide §2.4): every Lloyd iteration groups the scored join by
+        # (_id, cluster_id) then by (_id), and the update joins back on
+        # (_id) — HashPartitioning(_id) satisfies all three clustered
+        # distributions (partitioning keys ⊆ grouping keys), and the cached
+        # plan's partitioning survives into every consumer (static cache
+        # width), so no iteration ever re-exchanges the (corpus-scale)
+        # point table; only the k×dim centroid dim and the per-point
+        # assignment rows move per round.
+        # GATED on input size (round 16, VERDICT r15 next #6): below one
+        # scan task's worth every per-iteration agg/join is a handful of
+        # tiny tasks — the up-front exchange costs more than the
+        # per-iteration exchanges it removes (driver r15: e2_kmeans −13%
+        # at sf0.1). At scale the gate never skips and the cached
+        # HashPartitioning(_id) is what keeps Lloyd iterations
+        # exchange-free.
+        qpts = _quantized_points(vecs, id_col, vec_col, scale)
+        if not fits_one_task(vecs):
+            qpts = qpts.repartition("_id")
+        pts = shared_persist(qpts)
+        # seed draw: global sort + limit(k) plans as TakeOrderedAndProject
+        # (distributed per-partition top-k, k rows to the driver side) —
+        # never a single-partition window over the full id set; ordinals
+        # then come from a window over just the k winners
+        w = Window.orderBy("_h", "_id")
+        seed_ids = (
+            vecs.select(
+                F.col(id_col).alias("_id"),
+                content_hash32(F.col(id_col).cast("string")).alias("_h"),
             )
-        ).localCheckpoint(eager=True)
-    release_since(mark)
+            .orderBy("_h", "_id")
+            .limit(k)
+            .withColumn("cluster_id", F.row_number().over(w) - 1)
+            .select("_id", "cluster_id")
+        )
+        centroids = pts.join(F.broadcast(seed_ids), "_id").select(
+            "cluster_id", "dim", F.col("v").alias("c")
+        )
+        assigned = None
+        for it in range(n_iters):
+            # LAZY between rounds (round 15): the next centroid
+            # checkpoint's job traverses the assignment anyway and
+            # materializes it — one job per round instead of two. The
+            # final round stays EAGER so the result is block-backed
+            # before the scope drops the pts persist below.
+            assigned = _assign_step(pts, centroids).localCheckpoint(
+                eager=(it == n_iters - 1)
+            )
+            if it == n_iters - 1:
+                break  # the last update would never be read
+            # grid-rounded integer mean: ONE IEEE division of exact
+            # integers + floor — bit-identical across engines, no
+            # unordered float reduction
+            centroids = (
+                pts.join(assigned.select("_id", "cluster_id"), "_id")
+                .groupBy("cluster_id", "dim")
+                .agg(
+                    F.floor(
+                        F.sum("v") / F.count(F.lit(1)) + F.lit(0.5)
+                    ).cast("long").alias("c")
+                )
+            ).localCheckpoint(eager=True)
     return (
         assigned.select(
             F.col("_id").alias(id_col), "cluster_id", "sq_dist"

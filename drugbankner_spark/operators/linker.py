@@ -48,6 +48,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from drugbankner_spark.caching import (
+    cache_scope,
+    forget,
+    session_memo,
+    shared_persist,
+)
 from drugbankner_spark.tables import BROADCAST_MAX_ROWS, maybe_broadcast
 
 
@@ -59,16 +65,26 @@ def char_wb_gram_counts(
     Pure per-row expressions (lower → split → pad → slide), one explode,
     one map-side-combinable count agg — no UDF, whole-stage codegen
     end to end."""
-    padded_grams = F.expr(
+    return _gram_tf(df.select(
+        F.col(id_col).alias("_id"), _char_wb_grams(text_col, n).alias("_gs")
+    ))
+
+
+def _char_wb_grams(text_col: str, n: int):
+    """The array of sklearn ``char_wb`` n-grams of ``text_col``."""
+    return F.expr(
         f"""flatten(transform(
             filter(split(lower({text_col}), '\\\\s+'), t -> t <> ''),
             t -> transform(
                 sequence(1, greatest(length(t) + {3 - n}, 1)),
                 i -> substring(concat(' ', t, ' '), i, {n}))))"""
     )
+
+
+def _gram_tf(grams: DataFrame) -> DataFrame:
+    """(_id, gram, tf) from (_id, _gs): explode + count per pair."""
     return (
-        df.select(F.col(id_col).alias("_id"), padded_grams.alias("_gs"))
-        .select("_id", F.explode("_gs").alias("gram"))
+        grams.select("_id", F.explode("_gs").alias("gram"))
         .groupBy("_id", "gram")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -105,12 +121,12 @@ def build_alias_vectors(
     vectors stay unit-length in the pruned space (what sklearn does).
 
     One gram pass over aliases, two bounded aggs (df per gram, norm per
-    alias). N (alias count) is ONE bounded count job whose value both
-    parameterizes the idf expression as a literal and returns to the
-    caller (round 16: save_alias_index used to re-count the distinct
-    aliases as a separate job; the fit already pays this count)."""
-    from drugbankner_spark.caching import shared_persist
-
+    alias). N (alias count) parameterizes the idf expression as a
+    literal and returns to the caller; it comes out of the ONE eager
+    action that also materializes the fit: every alias emits one NULL
+    gram next to its real grams, so the df row of the NULL key counts
+    every distinct alias — all-whitespace aliases, which have no real
+    gram, included."""
     texts = (
         alias_texts.select(F.col(text_col).alias("alias"))
         .filter(F.col("alias").isNotNull())
@@ -120,13 +136,26 @@ def build_alias_vectors(
     # norms agg) that AQE materializes as CONCURRENT shuffle-stage jobs
     # — unpersisted, each branch re-ran the explode cold (measured at
     # publish: six ~2.7 s duplicate jobs for one fit, round 15, guide
-    # §2.3/§5). Persist the single gram pass; the eager idf
-    # materialization below populates it before any fan-out.
-    counts = shared_persist(char_wb_gram_counts(texts, "alias", "alias", n))
-    n_aliases = texts.count()
+    # §2.3/§5). Persist the single gram pass and the df agg over it;
+    # the eager N collect below populates both before any fan-out.
+    counts = shared_persist(_gram_tf(texts.select(
+        F.col("alias").alias("_id"),
+        F.concat(
+            _char_wb_grams("alias", n), F.array(F.lit(None).cast("string"))
+        ).alias("_gs"),
+    )))
+    dfs = shared_persist(
+        counts.groupBy("gram").agg(F.count(F.lit(1)).alias("_df"))
+    )
+    # Materialize counts+df NOW (one sequential job): every later
+    # action — the publish's w_cut quantile, the probe tail's gate
+    # counts, the posting materialization — then reads the cached gram
+    # pass instead of racing cold copies of it across AQE stage jobs.
+    n_aliases = sum(
+        r["_df"] for r in dfs.filter(F.col("gram").isNull()).collect()
+    )
     idf = (
-        counts.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("_df"))
+        dfs.filter(F.col("gram").isNotNull())
         .select(
             "gram", "_df",
             F.lit(n_aliases).alias("_n_aliases"),
@@ -151,17 +180,11 @@ def build_alias_vectors(
     postings = weighted.join(norms, "alias").select(
         "gram", "alias", (F.col("_w") / F.col("_norm")).alias("w")
     )
-    # both outputs feed multiple consumers (the broadcast-size guard's
-    # count action, the posting join, the mention transform) — without
-    # the persist each consumer re-runs the whole fit; the first
+    # postings feeds multiple consumers (the broadcast-size guard's
+    # count action, the posting join, the index writes) — without the
+    # persist each consumer re-runs the whole fit; the first
     # corpus-scale bench (r08) measured the recompute at ~5x
-    postings, idf = shared_persist(postings), shared_persist(idf)
-    # Materialize counts+idf NOW (one sequential job): every later
-    # action — the publish's w_cut quantile, the probe tail's gate
-    # counts, the posting materialization — then reads the cached gram
-    # pass instead of racing cold copies of it across AQE stage jobs.
-    idf.count()
-    return postings, idf, n_aliases
+    return shared_persist(postings), idf, n_aliases
 
 
 def link_by_tfidf(
@@ -185,8 +208,6 @@ def link_by_tfidf(
     fold. Scores round to 6dp BEFORE threshold/rank (the engine-wide
     float-parity pattern), and ties rank by alias_id ascending, so the
     output is deterministic and hash-oracle-able."""
-    from drugbankner_spark.caching import shared_persist
-
     alias_map = shared_persist(
         aliases.select(
             F.col(alias_col).alias("alias"),
@@ -287,20 +308,12 @@ LINKER_PIN_FULL_MIN_POSTINGS = 1_000_000
 # (the products are tiny there, so full width costs nothing and
 # distributes the fan-out work).
 
-#: (applicationId, gram-plan semanticHash, n_postings) → estimated
-#: product rows. The estimate is a pure function of the mention batch
-#: plan and the posting table; repeat probes of the same shape (the
-#: bench's min-of-N, a serving loop on a fixed corpus slice) pay the
-#: estimate job once. A stale hit can only mis-size a pin width —
-#: performance, never results — so plan-hash + posting-count keying
-#: is enough (no file-snapshot component like the ACF memo needs).
-#: Bounded (ADVICE r14): a long-lived serving app issuing many
-#: distinct batch plans would otherwise grow it without limit — at
-#: the cap the whole dict clears (the entries are 1-row estimates; a
-#: re-estimate costs one broadcast-join job against the fit's
-#: vocabulary-sized ``df`` dim).
-_PIN_EST_CACHE: dict = {}
-_PIN_EST_CACHE_MAX = 1024
+#: Cap on the session's pin-estimate memo (:func:`_estimate_products`).
+#: A long-lived serving app issuing many distinct batch plans would
+#: otherwise grow it without limit (ADVICE r14) — at the cap the table
+#: clears (the entries are 1-row estimates; a re-estimate costs one
+#: broadcast-join job against the fit's vocabulary-sized ``df`` dim).
+_PIN_EST_MAX = 1024
 
 #: Instrumentation: the most recent pin decisions, keyed by call site
 #: ("score_full": n_postings/est_products/width/reason; "rerank":
@@ -395,17 +408,21 @@ def _estimate_products(
     )
     if "_mcnt" not in mcnt.columns:
         raise ValueError("gram_counts must carry (gram, _mcnt)")
+    # (gram-plan semanticHash, n_postings) → estimated product rows,
+    # per session. The estimate is a pure function of the mention batch
+    # plan and the posting table; repeat probes of the same shape (the
+    # bench's min-of-N, a serving loop on a fixed corpus slice) pay the
+    # estimate job once. A stale hit can only mis-size a pin width —
+    # performance, never results — so plan-hash + posting-count keying
+    # is enough (no file-snapshot component like the ACF memo needs).
+    memo = session_memo(mvec.sparkSession).setdefault("pin_estimate", {})
     key = None
     try:
-        key = (
-            mvec.sparkSession.sparkContext.applicationId,
-            mcnt._jdf.queryExecution().logical().semanticHash(),
-            n_post,
-        )
+        key = (mcnt._jdf.queryExecution().logical().semanticHash(), n_post)
     except Exception:
         pass  # py4j API drift — just skip memoization
-    if key is not None and key in _PIN_EST_CACHE:
-        return _PIN_EST_CACHE[key]
+    if key is not None and key in memo:
+        return memo[key]
     pside = F.broadcast(idf.select("gram", F.col("df").alias("_pcnt")))
     est_row = (
         mcnt.join(pside, "gram")
@@ -414,9 +431,9 @@ def _estimate_products(
     )
     est = int(est_row[0]["_est"] or 0)
     if key is not None:
-        if len(_PIN_EST_CACHE) >= _PIN_EST_CACHE_MAX:
-            _PIN_EST_CACHE.clear()
-        _PIN_EST_CACHE[key] = est
+        if len(memo) >= _PIN_EST_MAX:
+            memo.clear()
+        memo[key] = est
     return est
 
 
@@ -559,8 +576,6 @@ def _link_tail(
     (:func:`link_by_tfidf`) and the persisted-index serving path
     (:func:`link_with_alias_index`) so the two can never drift — the
     index probe's parity test leans on exactly this."""
-    from drugbankner_spark.caching import shared_persist
-
     # above the pin floor the product-estimate job will scan the
     # mention grams once more — persist them so the mention-source
     # derivation (document trigram extraction on the corpus shapes) is
@@ -674,13 +689,6 @@ _CERT_MARGIN = 1e-6
 #: The probe serves champions exactly when the ``n_aliases`` the index
 #: meta carries clears this crossover, on every batch shape.
 CHAMPION_AUTO_MIN_ALIASES = 10_000
-
-#: (applicationId, index path) → (n, n_buckets, n_aliases) fit
-#: metadata — the meta parquet is 1 row and immutable per path, so one
-#: read per session is enough; re-reading it per probe cost a driver
-#: job on the serving hot path.
-_ALIAS_META_CACHE: dict[tuple[str, str], tuple[int, int, int]] = {}
-
 
 def _gram_bucket(col, n_buckets: int):
     return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
@@ -807,142 +815,131 @@ def save_alias_index(
         invalidate_index_cache,
     )
 
+    spark = aliases.sparkSession
     # the fit is consumed by up to five actions inside this function
     # (w_cut sizing, postings/champions/cutoffs/alias_vecs writes);
-    # build_alias_vectors persists it (counts/postings/idf) for the
-    # function's scope so the TF-IDF fit runs once. save_alias_index is
-    # eager (every write completes before return), so the release is
-    # safe here — unlike the lazy probe subtrees. The mark is taken
-    # BEFORE the fit so the fit's own persists release with the scope
-    # (a long-lived publisher must not accumulate one fit cache per
-    # published index).
-    from drugbankner_spark.caching import (
-        cache_mark,
-        release_since,
-        shared_persist,
-    )
-
-    spark = aliases.sparkSession
-    _mark = cache_mark()
-    alias_map = (
-        aliases.select(
-            F.col(alias_col).alias("alias"),
-            F.col(alias_id_col).alias("alias_id"),
+    # build_alias_vectors persists it (counts/df/postings) so the
+    # TF-IDF fit runs once. save_alias_index is eager (every write
+    # completes before return), so the scope releases the fit's own
+    # persists here — unlike the lazy probe subtrees (a long-lived
+    # publisher must not accumulate one fit cache per published index).
+    with cache_scope():
+        alias_map = (
+            aliases.select(
+                F.col(alias_col).alias("alias"),
+                F.col(alias_id_col).alias("alias_id"),
+            )
+            .filter(F.col("alias").isNotNull() & F.col("alias_id").isNotNull())
+            .distinct()
         )
-        .filter(F.col("alias").isNotNull() & F.col("alias_id").isNotNull())
-        .distinct()
-    )
-    postings, idf, n_aliases = build_alias_vectors(
-        alias_map, "alias", n, max_df_ratio=max_df_ratio
-    )
-    # alias_map feeds the /alias_map write below plus the fit's
-    # distinct-texts scan — persist so the distinct shuffle runs once
-    # per publish (round 15). The fit's own N (needed up front: the
-    # RMS factor is two-regime by ontology size, round 14; persisted
-    # in the meta below) rides out of the fit itself (round 16).
-    alias_map = shared_persist(alias_map)
-    # the quantile collect doubles as the postings cache warm, so the
-    # write pool's concurrent consumers read blocks, not cold copies
-    # of the fit (round 16, guide §2.3/§5)
-    w_cut = _auto_champion_w_cut(
-        postings,
-        rms_factor=(
-            ALIAS_WCUT_RMS_FACTOR_LARGE
-            if n_aliases >= ALIAS_WCUT_LARGE_MIN_ALIASES
-            else ALIAS_WCUT_RMS_FACTOR
-        ),
-    )
-    # The probe's certificate contract is the only invariant: every
-    # EXCLUDED posting of gram g has w ≤ cutoff(g). NOT persisted
-    # (round 16): each feeds exactly ONE action (its write), reading
-    # the warm postings cache — a persist would only copy blocks.
-    champs = postings.filter(F.col("w") >= F.lit(w_cut))
-    cuts = (
-        postings.filter(F.col("w") < F.lit(w_cut))
-        .groupBy("gram")
-        .agg(F.max("w").alias("cutoff"))
-    )
-
-    def _by_gram(df: DataFrame, sub: str):
-        return lambda: _write_bucket_partitioned(
-            df.withColumn(
-                "gram_bucket", _gram_bucket(F.col("gram"), n_buckets)
-            ), path + sub, n_buckets, "gram_bucket",
+        postings, idf, n_aliases = build_alias_vectors(
+            alias_map, "alias", n, max_df_ratio=max_df_ratio
+        )
+        # alias_map feeds the /alias_map write below plus the fit's
+        # distinct-texts scan — persist so the distinct shuffle runs once
+        # per publish (round 15). The fit's own N (needed up front: the
+        # RMS factor is two-regime by ontology size, round 14; persisted
+        # in the meta below) rides out of the fit itself (round 16).
+        alias_map = shared_persist(alias_map)
+        # the quantile collect doubles as the postings cache warm, so the
+        # write pool's concurrent consumers read blocks, not cold copies
+        # of the fit (round 16, guide §2.3/§5)
+        w_cut = _auto_champion_w_cut(
+            postings,
+            rms_factor=(
+                ALIAS_WCUT_RMS_FACTOR_LARGE
+                if n_aliases >= ALIAS_WCUT_LARGE_MIN_ALIASES
+                else ALIAS_WCUT_RMS_FACTOR
+            ),
+        )
+        # The probe's certificate contract is the only invariant: every
+        # EXCLUDED posting of gram g has w ≤ cutoff(g). NOT persisted
+        # (round 16): each feeds exactly ONE action (its write), reading
+        # the warm postings cache — a persist would only copy blocks.
+        champs = postings.filter(F.col("w") >= F.lit(w_cut))
+        cuts = (
+            postings.filter(F.col("w") < F.lit(w_cut))
+            .groupBy("gram")
+            .agg(F.max("w").alias("cutoff"))
         )
 
-    # repartition ON the bucket key before the partitioned write: each
-    # task then owns whole buckets, so the layout is ~1 file per bucket
-    # instead of (shuffle tasks × buckets) tiny files — the probe-side
-    # scan pays per-file footer/open costs, and a 2048-file index made
-    # the serving probe SLOWER than the inline fit it amortizes
-    # (BENCH_r09: 13.4 s vs 10.5 s at sf1).
-    #
-    # The index subs are INDEPENDENT actions over the same persisted
-    # fit, and each write's tail (commit protocol, small-bucket tasks)
-    # leaves most cores idle — queue them and run a few concurrently
-    # (guide §2.6, overlap independent jobs) instead of serially. The
-    # files written are identical; only the wall clock changes
-    # (round 15: publish ~2x faster at sf0.1).
-    #
-    # Fit metadata rides WITH the index (ADVICE r09: a probe whose n /
-    # n_buckets differ from the fit silently prunes away every posting
-    # — grams hash into different buckets — returning wrong/missing
-    # matches with no error). A 1-row parquet, not a sidecar JSON, so
-    # the layout stays portable to any Hadoop-compatible FS. It also
-    # carries n_aliases (distinct alias strings — the fit's own N) so
-    # probes gate the champion machinery by ontology size. Built as
-    # range(1).select(lit…), not createDataFrame(list): a python-list
-    # local relation executes through a Python worker, and inside a
-    # parquet write task that round trip measured ~5 s per publish
-    # (round 16) — for one metadata row. Literal columns plan as a
-    # pure-JVM LocalTableScan.
-    write_jobs = [
-        ("postings", _by_gram(postings, "/postings")),
-        ("idf", _by_gram(idf, "/idf")),
-        ("alias_map", lambda: alias_map.write.mode("overwrite").parquet(
-            path + "/alias_map"
-        )),
-        ("champions", _by_gram(champs, "/champions")),
-        ("cutoffs", _by_gram(cuts, "/cutoffs")),
-        ("alias_vecs", lambda: _write_bucket_partitioned(
-            postings.withColumn(
-                "alias_bucket",
-                _gram_bucket(F.col("alias"), n_buckets),
-            ), path + "/alias_vecs", n_buckets, "alias_bucket",
-        )),
-        ("meta", lambda: spark.range(1).select(
-            F.lit(int(n)).cast("int").alias("n"),
-            F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
-            F.lit(
-                float(max_df_ratio) if max_df_ratio is not None else None
-            ).cast("double").alias("max_df_ratio"),
-            F.lit(int(n_aliases)).cast("int").alias("n_aliases"),
-            F.lit(float(w_cut)).cast("double").alias("champion_w_cut"),
-        ).coalesce(1).write.mode("overwrite").parquet(path + "/meta")),
-    ]
-    from concurrent.futures import ThreadPoolExecutor
+        def _by_gram(df: DataFrame, sub: str):
+            return lambda: _write_bucket_partitioned(
+                df.withColumn(
+                    "gram_bucket", _gram_bucket(F.col("gram"), n_buckets)
+                ), path + sub, n_buckets, "gram_bucket",
+            )
 
-    # 3 in flight: enough to fill each write's commit/straggler tail,
-    # not enough to thrash the scheduler (guide §2.6). FIFO scheduling
-    # back-fills freed cores exactly as the guide describes; exceptions
-    # propagate through pool.map. Job descriptions are thread-local
-    # (guide §1.5), so each concurrent write is labelled in the UI.
-    def _run_write(job):
-        name, fn = job
-        spark.sparkContext.setJobDescription(f"alias-index write {name}")
-        try:
-            fn()
-        finally:
-            spark.sparkContext.setJobDescription(None)
+        # repartition ON the bucket key before the partitioned write: each
+        # task then owns whole buckets, so the layout is ~1 file per bucket
+        # instead of (shuffle tasks × buckets) tiny files — the probe-side
+        # scan pays per-file footer/open costs, and a 2048-file index made
+        # the serving probe SLOWER than the inline fit it amortizes
+        # (BENCH_r09: 13.4 s vs 10.5 s at sf1).
+        #
+        # The index subs are INDEPENDENT actions over the same persisted
+        # fit, and each write's tail (commit protocol, small-bucket tasks)
+        # leaves most cores idle — queue them and run a few concurrently
+        # (guide §2.6, overlap independent jobs) instead of serially. The
+        # files written are identical; only the wall clock changes
+        # (round 15: publish ~2x faster at sf0.1).
+        #
+        # Fit metadata rides WITH the index (ADVICE r09: a probe whose n /
+        # n_buckets differ from the fit silently prunes away every posting
+        # — grams hash into different buckets — returning wrong/missing
+        # matches with no error). A 1-row parquet, not a sidecar JSON, so
+        # the layout stays portable to any Hadoop-compatible FS. It also
+        # carries n_aliases (distinct alias strings — the fit's own N) so
+        # probes gate the champion machinery by ontology size. Built as
+        # range(1).select(lit…), not createDataFrame(list): a python-list
+        # local relation executes through a Python worker, and inside a
+        # parquet write task that round trip measured ~5 s per publish
+        # (round 16) — for one metadata row. Literal columns plan as a
+        # pure-JVM LocalTableScan.
+        write_jobs = [
+            ("postings", _by_gram(postings, "/postings")),
+            ("idf", _by_gram(idf, "/idf")),
+            ("alias_map", lambda: alias_map.write.mode("overwrite").parquet(
+                path + "/alias_map"
+            )),
+            ("champions", _by_gram(champs, "/champions")),
+            ("cutoffs", _by_gram(cuts, "/cutoffs")),
+            ("alias_vecs", lambda: _write_bucket_partitioned(
+                postings.withColumn(
+                    "alias_bucket",
+                    _gram_bucket(F.col("alias"), n_buckets),
+                ), path + "/alias_vecs", n_buckets, "alias_bucket",
+            )),
+            ("meta", lambda: spark.range(1).select(
+                F.lit(int(n)).cast("int").alias("n"),
+                F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
+                F.lit(
+                    float(max_df_ratio) if max_df_ratio is not None else None
+                ).cast("double").alias("max_df_ratio"),
+                F.lit(int(n_aliases)).cast("int").alias("n_aliases"),
+                F.lit(float(w_cut)).cast("double").alias("champion_w_cut"),
+            ).coalesce(1).write.mode("overwrite").parquet(path + "/meta")),
+        ]
+        from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=3) as _pool:
-        list(_pool.map(_run_write, write_jobs))
-    release_since(_mark)
+        # 3 in flight: enough to fill each write's commit/straggler tail,
+        # not enough to thrash the scheduler (guide §2.6). FIFO scheduling
+        # back-fills freed cores exactly as the guide describes; exceptions
+        # propagate through pool.map. Job descriptions are thread-local
+        # (guide §1.5), so each concurrent write is labelled in the UI.
+        def _run_write(job):
+            name, fn = job
+            spark.sparkContext.setJobDescription(f"alias-index write {name}")
+            try:
+                fn()
+            finally:
+                spark.sparkContext.setJobDescription(None)
+
+        with ThreadPoolExecutor(max_workers=3) as _pool:
+            list(_pool.map(_run_write, write_jobs))
     for name, _fn in write_jobs:
         invalidate_index_cache(spark, f"{path}/{name}")
-    _ALIAS_META_CACHE.pop(
-        (spark.sparkContext.applicationId, path), None
-    )
+    forget(spark, "alias_meta", path)
 
 
 def link_with_alias_index(
@@ -1030,16 +1027,19 @@ def link_with_alias_index(
 
     Cache contract: the champion path registers its shared subtrees
     (mention vectors, candidates, ranked, risky) via
-    ``caching.shared_persist``; long-lived serving drivers should call
-    ``caching.release_shared_caches()`` (or ``cache_mark()`` /
-    ``release_since()``) between probe batches, after the consuming
-    action — the caches are needed DURING the returned DataFrame's
-    execution, so the probe cannot release them itself (ADVICE r11)."""
-    from drugbankner_spark.caching import shared_persist
+    ``caching.shared_persist``; long-lived serving drivers should run
+    each probe batch and its consuming action inside one
+    ``caching.cache_scope()`` block (or call
+    ``caching.release_shared_caches()`` between batches) — the caches
+    are needed DURING the returned DataFrame's execution, so the probe
+    cannot release them itself (ADVICE r11)."""
     from drugbankner_spark.operators.similarity import _read_index
 
-    mkey = (spark.sparkContext.applicationId, path)
-    if mkey not in _ALIAS_META_CACHE:
+    # path → (n, n_buckets, n_aliases): the meta parquet is 1 row and
+    # immutable per publish, so one read per session is enough;
+    # re-reading it per probe cost a driver job on the serving hot path
+    metas = session_memo(spark).setdefault("alias_meta", {})
+    if path not in metas:
         if not _dir_has_parquet(spark, path + "/meta"):
             raise ValueError(
                 f"alias index at {path!r} has no /meta fit metadata — "
@@ -1047,10 +1047,10 @@ def link_with_alias_index(
                 "save_alias_index"
             )
         meta = _read_index(spark, path + "/meta").collect()[0]
-        _ALIAS_META_CACHE[mkey] = (
+        metas[path] = (
             int(meta["n"]), int(meta["n_buckets"]), int(meta["n_aliases"])
         )
-    fit_n, fit_buckets, fit_n_aliases = _ALIAS_META_CACHE[mkey]
+    fit_n, fit_buckets, fit_n_aliases = metas[path]
     if n is not None and n != fit_n:
         raise ValueError(
             f"alias index at {path!r} was fit with n={fit_n}, "

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from drugbankner_spark.caching import shared_persist
+from drugbankner_spark.caching import forget, session_memo, shared_persist
 from drugbankner_spark.tables import local_df
 from pyspark.sql import types as T
 
@@ -513,40 +513,31 @@ def label_centroids(
 # partition pruning demonstrated in tests/test_partitioning.py.
 # --------------------------------------------------------------------------
 
-#: Memoized analyzed index reads keyed by (applicationId, path).
-#: Analyzing a partitioned layout lists every partition directory on the
-#: driver (~0.5-1 s for a 256-bucket index) — pure overhead to repeat per
-#: probe. The cached DataFrame is lazy; literal partition predicates
-#: applied on top of it still prune at planning time. Keyed by
-#: ``sparkContext.applicationId`` (stable + unique per session), NOT
-#: ``id(spark)`` — CPython reuses object addresses after GC, so an
-#: id-keyed cache can hand a new session a DataFrame bound to a dead one.
-_INDEX_READS: dict[tuple[str, str], DataFrame] = {}
-
 #: Serving-contract cap on probe query rows: probes collect the query
 #: side to the driver (bucket list + broadcast). Past this, use the batch
 #: operators ``lsh_topk`` / ``ivf_topk`` instead.
 PROBE_QUERY_CAP = 10_000
 
 
-def _session_key(spark) -> str:
-    return spark.sparkContext.applicationId
-
-
 def _read_index(spark, path: str) -> DataFrame:
-    key = (_session_key(spark), path)
-    if key not in _INDEX_READS:
-        _INDEX_READS[key] = spark.read.parquet(path)
-    return _INDEX_READS[key]
+    """The analyzed index read, memoized per session: analyzing a
+    partitioned layout lists every partition directory on the driver
+    (~0.5-1 s for a 256-bucket index) — pure overhead to repeat per
+    probe. The memoized DataFrame is lazy; literal partition predicates
+    applied on top of it still prune at planning time."""
+    reads = session_memo(spark).setdefault("index_reads", {})
+    if path not in reads:
+        reads[path] = spark.read.parquet(path)
+    return reads[path]
 
 
 def invalidate_index_cache(spark, path: str) -> None:
-    """Drop the memoized read for ``path`` and refresh Spark's own file
-    listing. Called by every build/append so a rebuilt index at the same
-    path is never served from deleted files (parquet reads resolve the
-    file listing eagerly — without this, post-rebuild probes hit
-    FileNotFoundException or silently stale results)."""
-    _INDEX_READS.pop((_session_key(spark), path), None)
+    """Drop the memoized read for ``path`` in every session and refresh
+    Spark's own file listing. Called by every build/append so a rebuilt
+    index at the same path is never served from deleted files (parquet
+    reads resolve the file listing eagerly — without this, post-rebuild
+    probes hit FileNotFoundException or silently stale results)."""
+    forget(spark, "index_reads", path)
     try:
         spark.catalog.refreshByPath(path)
     except Exception:

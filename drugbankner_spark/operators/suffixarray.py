@@ -491,93 +491,98 @@ def suffix_array(
     ``num_partitions`` sizes every per-round shuffle: leave None for
     the session default at cluster scale; set it small for bench-scale
     corpora where per-round fixed stage cost dominates."""
-    from drugbankner_spark.caching import cache_mark, release_between
+    from drugbankner_spark.caching import cache_scope
 
     spark = docs.sparkSession
-    # mark BEFORE corpus_positions: its internal offset persist is
-    # only needed until the round-0 checkpoint materializes
-    prev_lo = cache_mark()
-    pos = corpus_positions(docs, text_col, id_col, sep,
-                           win_len=initial_window)
-    # round-0 bucket: ascii() (the FIRST char's codepoint) is monotone
-    # with binary string order (UTF-8 is order-preserving) — equal
-    # keys share a bucket and bucket order follows key order, so no
-    # sampled range partitioning even at round 0
-    ranked, n_distinct, n = _collected_dense_rank(
-        pos.select("gpos", "doc_id", "local_pos",
-                   F.col("ch").alias("_k1")),
-        ["_k1"],
-        num_partitions=num_partitions,
-        bucket_col=F.ascii(F.col("_k1")),
-    )
-    # LAZY checkpoint (round 15): the next round's histogram job is the
-    # first thing that reads `cur`, so it materializes the checkpoint
-    # as a side effect — the per-round eager-checkpoint job disappears.
-    # The price is deferred cache release: round r−1's branch-point
-    # persist stays alive until round r's histogram has run
-    # (release_between below); the LAST round's persist is released by
-    # the caller's release_shared_caches(), like every registered cache.
-    cur = ranked.drop("_k1").localCheckpoint(eager=False)
-    n_buckets = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    d_doc = cur.schema["doc_id"].dataType.simpleString()
-    d_pos = cur.schema["local_pos"].dataType.simpleString()
-    k = max(1, int(initial_window))  # round 0 certified this many chars
-    rounds = 0
-    while rounds < max_rounds and n_distinct < n:
-        # ONE exchange gathers all four rank components (round 15):
-        # each position contributes its rank to itself (tag 0) and to
-        # the three positions k, 2k, 3k BEFORE it (tags 1-3); a single
-        # groupBy(gpos) pivots the tags into the 4-tuple key. The
-        # former 3-way self-join shape cost four exchanges per round.
-        contrib = cur.select(
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        (F.col("gpos") - F.lit(off * k)).alias("gpos"),
-                        F.lit(tag).alias("_tag"),
-                        F.col("rank").alias("_r"),
-                        (F.col("doc_id") if tag == 0 else
-                         F.lit(None).cast(d_doc)).alias("doc_id"),
-                        (F.col("local_pos") if tag == 0 else
-                         F.lit(None).cast(d_pos)).alias("local_pos"),
-                    )
-                    for tag, off in ((0, 0), (1, 1), (2, 2), (3, 3))
-                ])
-            ).alias("_c")
-        ).select("_c.*").filter(F.col("gpos") >= 1)
-        keyed = contrib.groupBy("gpos").agg(
-            F.max(F.when(F.col("_tag") == 0, F.col("_r"))).alias("_k1"),
-            *[
-                F.coalesce(
-                    F.max(F.when(F.col("_tag") == t, F.col("_r"))),
-                    F.lit(0),
-                ).alias(f"_k{t + 1}")
-                for t in (1, 2, 3)
-            ],
-            F.max("doc_id").alias("doc_id"),
-            F.max("local_pos").alias("local_pos"),
+    # `held` owns the newest round's persists: round 0's include
+    # corpus_positions' internal offset persist, needed only until the
+    # round-0 checkpoint materializes
+    with cache_scope() as held:
+        pos = corpus_positions(docs, text_col, id_col, sep,
+                               win_len=initial_window)
+        # round-0 bucket: ascii() (the FIRST char's codepoint) is monotone
+        # with binary string order (UTF-8 is order-preserving) — equal
+        # keys share a bucket and bucket order follows key order, so no
+        # sampled range partitioning even at round 0
+        ranked, n_distinct, n = _collected_dense_rank(
+            pos.select("gpos", "doc_id", "local_pos",
+                       F.col("ch").alias("_k1")),
+            ["_k1"],
+            num_partitions=num_partitions,
+            bucket_col=F.ascii(F.col("_k1")),
         )
-        # previous ranks are DENSE in [1, n_distinct]: the formula
-        # bucket spreads distinct keys evenly with no sampling pass
-        bucket = F.floor(
-            (F.col("_k1") - 1) * n_buckets / F.lit(int(n_distinct))
-        ).cast("int")
-        mark = cache_mark()
-        ranked, n_distinct, _ = _collected_dense_rank(
-            keyed, ["_k1", "_k2", "_k3", "_k4"],
-            num_partitions=num_partitions, bucket_col=bucket,
+        # LAZY checkpoint (round 15): the next round's histogram job is the
+        # first thing that reads `cur`, so it materializes the checkpoint
+        # as a side effect — the per-round eager-checkpoint job disappears.
+        # The price is deferred cache release: round r−1's branch-point
+        # persist stays alive until round r's histogram has run
+        # (held.release() below); the LAST round's persist is released by
+        # the caller, like every registered cache.
+        cur = ranked.drop("_k1").localCheckpoint(eager=False)
+        n_buckets = num_partitions or int(
+            spark.conf.get("spark.sql.shuffle.partitions")
         )
-        # the histogram job above materialized the PREVIOUS round's
-        # lazy checkpoint — its backing caches are now dead weight
-        release_between(prev_lo, mark)
-        prev_lo = mark
-        cur = ranked.drop("_k1", "_k2", "_k3", "_k4").localCheckpoint(
-            eager=False
-        )
-        k *= 4
-        rounds += 1
+        d_doc = cur.schema["doc_id"].dataType.simpleString()
+        d_pos = cur.schema["local_pos"].dataType.simpleString()
+        k = max(1, int(initial_window))  # round 0 certified this many chars
+        rounds = 0
+        while rounds < max_rounds and n_distinct < n:
+            # ONE exchange gathers all four rank components (round 15):
+            # each position contributes its rank to itself (tag 0) and to
+            # the three positions k, 2k, 3k BEFORE it (tags 1-3); a single
+            # groupBy(gpos) pivots the tags into the 4-tuple key. The
+            # former 3-way self-join shape cost four exchanges per round.
+            contrib = cur.select(
+                F.explode(
+                    F.array(*[
+                        F.struct(
+                            (F.col("gpos") - F.lit(off * k)).alias("gpos"),
+                            F.lit(tag).alias("_tag"),
+                            F.col("rank").alias("_r"),
+                            (F.col("doc_id") if tag == 0 else
+                             F.lit(None).cast(d_doc)).alias("doc_id"),
+                            (F.col("local_pos") if tag == 0 else
+                             F.lit(None).cast(d_pos)).alias("local_pos"),
+                        )
+                        for tag, off in ((0, 0), (1, 1), (2, 2), (3, 3))
+                    ])
+                ).alias("_c")
+            ).select("_c.*").filter(F.col("gpos") >= 1)
+            keyed = contrib.groupBy("gpos").agg(
+                F.max(F.when(F.col("_tag") == 0, F.col("_r"))).alias("_k1"),
+                *[
+                    F.coalesce(
+                        F.max(F.when(F.col("_tag") == t, F.col("_r"))),
+                        F.lit(0),
+                    ).alias(f"_k{t + 1}")
+                    for t in (1, 2, 3)
+                ],
+                F.max("doc_id").alias("doc_id"),
+                F.max("local_pos").alias("local_pos"),
+            )
+            # previous ranks are DENSE in [1, n_distinct]: the formula
+            # bucket spreads distinct keys evenly with no sampling pass
+            bucket = F.floor(
+                (F.col("_k1") - 1) * n_buckets / F.lit(int(n_distinct))
+            ).cast("int")
+            with cache_scope() as fresh:
+                ranked, n_distinct, _ = _collected_dense_rank(
+                    keyed, ["_k1", "_k2", "_k3", "_k4"],
+                    num_partitions=num_partitions, bucket_col=bucket,
+                )
+                # the histogram job above materialized the PREVIOUS
+                # round's lazy checkpoint — its backing caches are now
+                # dead weight
+                held.release()
+                fresh.keep()
+            cur = ranked.drop("_k1", "_k2", "_k3", "_k4").localCheckpoint(
+                eager=False
+            )
+            k *= 4
+            rounds += 1
+        # the LAST round's persists back the lazy `cur`: hand them to
+        # the caller's scope (or release_shared_caches())
+        held.keep()
     return cur.withColumnRenamed("rank", "sa_rank")
 
 

@@ -707,14 +707,6 @@ def holt_linear(
     )
 
 
-#: (applicationId, bucketed-series semantic plan hash) pairs whose
-#: overflow check already PASSED this session — the memo that keeps
-#: repeat autocorrelation calls from paying a driver job each
-#: (VERDICT r11 next #7; same discipline as linker._ALIAS_META_CACHE).
-#: Failures are never cached: a violating call raises every time.
-_ACF_CHECK_MEMO: set[tuple[str, str, str]] = set()
-
-
 def autocorrelation(
     events: DataFrame,
     key_cols: list[str],
@@ -768,7 +760,7 @@ def autocorrelation(
     The check is an EAGER driver action (one bounded agg + a
     ``limit(5)`` collect) at call time — the one deliberately non-lazy
     step in this module — and it is MEMOIZED per (session, bucketed
-    series plan) the way the linker's ``_ALIAS_META_CACHE`` memoizes
+    series plan) in the session memo, the way the linker memoizes
     index metadata (VERDICT r11 next #7): a serving driver calling
     ``autocorrelation`` per batch over the same source pays ONE
     check job, not one per call. The memo key folds in the SOURCE
@@ -780,9 +772,9 @@ def autocorrelation(
     name). The
     checked series rides a ``caching.shared_persist`` so the main
     plan reuses the bucket agg instead of re-scanning events; callers
-    batching many series should ``release_shared_caches()`` (or
-    ``cache_mark()``/``release_since()``) after their action, same
-    contract as the linker serving path (ADVICE r11).
+    batching many series should run each call and its action inside
+    one ``cache_scope()`` block (or ``release_shared_caches()`` after
+    the action), same contract as the linker serving path (ADVICE r11).
 
     Plan: one bucket-agg shuffle, one window shuffle on the series
     key (``lead`` per lag over the ordered buckets — max_lag lead
@@ -802,7 +794,7 @@ def autocorrelation(
         )
     )
     if check_overflow:
-        from drugbankner_spark.caching import shared_persist
+        from drugbankner_spark.caching import session_memo, shared_persist
 
         obs = shared_persist(obs)
         try:
@@ -826,11 +818,14 @@ def autocorrelation(
             src_key = f"{len(files)}:{hash(tuple(sorted(files)))}"
         except Exception:  # pragma: no cover — source without listing
             src_key = ""
-        memo_key = (
-            events.sparkSession.sparkContext.applicationId, plan_key,
-            src_key,
+        # bucketed-series plans whose check already PASSED in this
+        # session; failures are never cached (a violating call raises
+        # every time)
+        passed = session_memo(events.sparkSession).setdefault(
+            "acf_checked", set()
         )
-        if check_overflow == "always" or memo_key not in _ACF_CHECK_MEMO:
+        memo_key = (plan_key, src_key)
+        if check_overflow == "always" or memo_key not in passed:
             bad = (
                 obs.groupBy(*key_cols)
                 .agg(
@@ -860,7 +855,7 @@ def autocorrelation(
                     f"for key(s) {keys}; increase step_seconds (fewer "
                     "buckets) or rescale the value column"
                 )
-            _ACF_CHECK_MEMO.add(memo_key)
+            passed.add(memo_key)
     wo = Window.partitionBy(*key_cols).orderBy("bucket_start")
     led = obs.select(
         *key_cols, "x",

@@ -179,87 +179,82 @@ def train_unigram(
     width, row placement, and every float-merge order below are
     derived from the data alone, never from the cluster
     (VERDICT r15 next #7 / ADVICE r15)."""
-    from drugbankner_spark.caching import (
-        cache_mark,
-        release_since,
-        shared_persist,
-    )
+    from drugbankner_spark.caching import cache_scope, shared_persist
 
-    mark = cache_mark()
-    vocab = shared_persist(_word_vocab(corpus, text_col)
-                           .select("word", "n"))
-    # Scale-adaptive E-step width (round 15, guide §2.5 input skew):
-    # the vocab agg's output is byte-tiny at bench scale, so AQE
-    # coalesces it to ONE partition — and each EM pass's
-    # forward-backward DP (per-row-heavy, byte-light) would run in ONE
-    # task at ANY vocab size. Re-spread only when the vocab is large
-    # enough for parallel DP to beat the per-task overhead
-    # (~_EM_WORDS_PER_TASK words amortize one Python worker round).
-    #
-    # Round 16 — bit-stability across cluster widths (VERDICT r15 #7):
-    # width derives from n_words ONLY (no defaultParallelism clamp),
-    # rows spread by HASH of the word (placement = f(word, width)),
-    # and each partition is sorted by word, so per-batch EC partials
-    # and their driver-side merge order are a pure function of the
-    # corpus — the trained model is bit-identical at any core count
-    # (pinned exactly in tests/test_unigram.py).
-    n_words = vocab.count()  # materializes the persist (one agg run)
-    width = max(1, n_words // _EM_WORDS_PER_TASK)
-    # unconditional (also at width 1): the vocab agg's own layout and
-    # row order are fetch-order/AQE artifacts of the INPUT partitioning
-    # — the one tiny exchange here is what buys exact invariance
-    words = vocab.repartition(width, "word").sortWithinPartitions("word")
-    # lazy checkpoint: the seed collect below is the first reader and
-    # materializes it from the persisted vocab (no extra agg run); the
-    # persist itself is released at return — EM reads only checkpoint
-    # blocks, so no duplicate copy outlives the call (ADVICE r15).
-    words = words.localCheckpoint(eager=False)
-    seed = seed_vocab(words, max_piece_len, seed_size).collect()
-    total = sum(r["count"] for r in seed)
-    probs = {r["piece"]: r["count"] / total for r in seed}
-    single_chars = {r["piece"] for r in seed if len(r["piece"]) == 1}
+    with cache_scope():
+        vocab = shared_persist(_word_vocab(corpus, text_col)
+                               .select("word", "n"))
+        # Scale-adaptive E-step width (round 15, guide §2.5 input skew):
+        # the vocab agg's output is byte-tiny at bench scale, so AQE
+        # coalesces it to ONE partition — and each EM pass's
+        # forward-backward DP (per-row-heavy, byte-light) would run in ONE
+        # task at ANY vocab size. Re-spread only when the vocab is large
+        # enough for parallel DP to beat the per-task overhead
+        # (~_EM_WORDS_PER_TASK words amortize one Python worker round).
+        #
+        # Round 16 — bit-stability across cluster widths (VERDICT r15 #7):
+        # width derives from n_words ONLY (no defaultParallelism clamp),
+        # rows spread by HASH of the word (placement = f(word, width)),
+        # and each partition is sorted by word, so per-batch EC partials
+        # and their driver-side merge order are a pure function of the
+        # corpus — the trained model is bit-identical at any core count
+        # (pinned exactly in tests/test_unigram.py).
+        n_words = vocab.count()  # materializes the persist (one agg run)
+        width = max(1, n_words // _EM_WORDS_PER_TASK)
+        # unconditional (also at width 1): the vocab agg's own layout and
+        # row order are fetch-order/AQE artifacts of the INPUT partitioning
+        # — the one tiny exchange here is what buys exact invariance
+        words = vocab.repartition(width, "word").sortWithinPartitions("word")
+        # lazy checkpoint: the seed collect below is the first reader and
+        # materializes it from the persisted vocab (no extra agg run); the
+        # persist itself is released with the scope — EM reads only
+        # checkpoint blocks, so no duplicate copy outlives the call
+        # (ADVICE r15).
+        words = words.localCheckpoint(eager=False)
+        seed = seed_vocab(words, max_piece_len, seed_size).collect()
+        total = sum(r["count"] for r in seed)
+        probs = {r["piece"]: r["count"] / total for r in seed}
+        single_chars = {r["piece"] for r in seed if len(r["piece"]) == 1}
 
-    while True:
-        for _ in range(em_iters_per_round):
-            # per-partition partial dicts, merged on the DRIVER
-            # (round 15): the kernel already aggregates within each
-            # partition, so the collect is bounded by pieces × P rows
-            # (≤ seed_size per partition — never corpus-scale); the
-            # former groupBy(piece) shuffled those same partials
-            # through one extra Spark job per EM iteration just to add
-            # ≤ seed_size doubles. Merge order (round 16) is a pure
-            # function of the corpus: hash placement + per-partition
-            # word sort above make every partial and the partition-
-            # order collect deterministic at any core count.
-            ec_rows = words.mapInPandas(
-                _expected_counts_kernel(probs, max_piece_len),
-                _EC_SCHEMA,
-            ).collect()
-            acc: dict[str, float] = {}
-            for r in ec_rows:
-                acc[r["piece"]] = acc.get(r["piece"], 0.0) + r["ec"]
-            z = sum(acc.values())
-            probs = {p: v / z for p, v in acc.items()}
-            # pieces the E-step never used drop out naturally; single
-            # chars must never — restore them at epsilon mass if lost
-            for c in single_chars:
-                probs.setdefault(c, 1e-12)
-        n_prunable = sum(1 for p in probs if len(p) > 1)
-        target_prunable = vocab_size - len(single_chars)
-        if n_prunable <= max(target_prunable, 0):
-            break
-        keep = max(int(n_prunable * prune_keep), max(target_prunable, 0))
-        multi = sorted(
-            ((p, v) for p, v in probs.items() if len(p) > 1),
-            key=lambda kv: (-kv[1], kv[0]),
-        )[:keep]
-        probs = {
-            **{p: v for p, v in probs.items() if len(p) == 1},
-            **dict(multi),
-        }
+        while True:
+            for _ in range(em_iters_per_round):
+                # per-partition partial dicts, merged on the DRIVER
+                # (round 15): the kernel already aggregates within each
+                # partition, so the collect is bounded by pieces × P rows
+                # (≤ seed_size per partition — never corpus-scale); the
+                # former groupBy(piece) shuffled those same partials
+                # through one extra Spark job per EM iteration just to add
+                # ≤ seed_size doubles. Merge order (round 16) is a pure
+                # function of the corpus: hash placement + per-partition
+                # word sort above make every partial and the partition-
+                # order collect deterministic at any core count.
+                ec_rows = words.mapInPandas(
+                    _expected_counts_kernel(probs, max_piece_len),
+                    _EC_SCHEMA,
+                ).collect()
+                acc: dict[str, float] = {}
+                for r in ec_rows:
+                    acc[r["piece"]] = acc.get(r["piece"], 0.0) + r["ec"]
+                z = sum(acc.values())
+                probs = {p: v / z for p, v in acc.items()}
+                # pieces the E-step never used drop out naturally; single
+                # chars must never — restore them at epsilon mass if lost
+                for c in single_chars:
+                    probs.setdefault(c, 1e-12)
+            n_prunable = sum(1 for p in probs if len(p) > 1)
+            target_prunable = vocab_size - len(single_chars)
+            if n_prunable <= max(target_prunable, 0):
+                break
+            keep = max(int(n_prunable * prune_keep), max(target_prunable, 0))
+            multi = sorted(
+                ((p, v) for p, v in probs.items() if len(p) > 1),
+                key=lambda kv: (-kv[1], kv[0]),
+            )[:keep]
+            probs = {
+                **{p: v for p, v in probs.items() if len(p) == 1},
+                **dict(multi),
+            }
     z = sum(probs.values())
-    release_since(mark)  # drop the vocab persist; EM read only
-    # checkpoint blocks, so no duplicate copy outlives the call
     return {p: v / z for p, v in sorted(probs.items())}
 
 

@@ -244,43 +244,25 @@ def parquet_overwrite_sink(path: str):
 
 def run_to_memory(
     query_df: DataFrame, name: str, output_mode: str = "append",
-    state_partitions: int | None = None,
 ) -> DataFrame:
     """Drive a streaming DF to completion over all available input
     (trigger availableNow) into an in-memory table; returns the result as
-    a batch DF. Test/debug harness — production sinks are kafka/parquet
-    with checkpointLocation.
+    a batch DF of the streaming DF's session. Test/debug harness —
+    production sinks are kafka/parquet with checkpointLocation.
 
-    ``state_partitions`` (round 16, guide §2.2/§5): streaming
-    aggregations cannot use AQE partition coalescing, so the session's
-    shuffle width — sized for batch — over-partitions a small bounded
-    replay into that many state stores, each paying per-batch
-    setup+commit. Callers whose input is measured small pass a
-    data-derived width here; it is applied as a SCOPED conf for this
-    query's planning only (streaming pins the width into its
-    checkpoint at start) and restored before returning. Only sound
-    for queries whose result is partitioning-independent (pure
-    aggregations); keyed first-wins operators (dropDuplicates) must
-    leave it None."""
-    spark = query_df.sparkSession
-    prev = None
-    if state_partitions:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(int(state_partitions))
-        )
-    try:
-        q = (
-            query_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    The query plans with its session's ``spark.sql.shuffle.partitions``
+    (streaming pins it into the state stores at start); a caller that
+    wants another width builds the stream on a session that carries it
+    (``spark.newSession()``), never by changing a shared session's
+    conf."""
+    q = (
+        query_df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
     return query_df.sparkSession.table(name)
 
 

@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drugbankner_spark.caching import session_memo
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -37,25 +39,19 @@ BROADCAST_DIMS = ("region", "nation", "supplier")
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Memoized analyzed DataFrames keyed by (session id, sf_dir, table).
-#: Re-creating a reader re-runs file listing + footer schema jobs on the
-#: driver (~0.1-0.4 s each); reusing the analyzed relation skips all of it
-#: while remaining fully lazy. An id can be reused once a session is
-#: garbage-collected, so an entry is served only to the session it is
-#: bound to.
-_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The analyzed table, memoized per session: re-creating a reader
+    re-runs file listing + footer schema jobs on the driver (~0.1-0.4 s
+    each); reusing the analyzed relation skips all of it while
+    remaining fully lazy."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    key = (id(spark), sf_dir, name)
-    hit = _CACHE.get(key)
-    if hit is not None and hit.sparkSession is spark:
-        return hit
-    df = _read_table(spark, sf_dir, name)
-    _CACHE[key] = df
-    return df
+    reads = session_memo(spark).setdefault("tables", {})
+    key = (sf_dir, name)
+    if key not in reads:
+        reads[key] = _read_table(spark, sf_dir, name)
+    return reads[key]
 
 
 def _max_partition_bytes(spark: SparkSession) -> int:
@@ -71,7 +67,11 @@ def _max_partition_bytes(spark: SparkSession) -> int:
         return 128 * 1024 * 1024
 
 
-def spread_input(df: DataFrame, cap_bytes: int | None = None) -> DataFrame:
+#: :func:`spread_input` leaves inputs above this size alone.
+SPREAD_CAP_BYTES = 1 << 30
+
+
+def spread_input(df: DataFrame) -> DataFrame:
     """Repair the parallelism of a small unsplittable input ahead of a
     per-row-HEAVY stage (guide §2.5 "input skew" / §6): the local
     fixtures are ONE parquet row group per table, so Spark plans
@@ -89,31 +89,22 @@ def spread_input(df: DataFrame, cap_bytes: int | None = None) -> DataFrame:
 
     Gate: the optimizer's size estimate for THIS subtree (column-pruned,
     no job) must be under what ONE scan task would read anyway
-    (``est_splits < defaultParallelism``) and under a 1 GiB safety cap.
-    At scale the gate never fires — a multi-GiB input plans enough
-    splits on its own — so this is input layout repair, not a
-    local-mode constant. Disable with SPARK_GRAFT_SPREAD=0; cap
-    override SPARK_GRAFT_SPREAD_CAP_MB.
+    (``est_splits < defaultParallelism``) and under
+    :data:`SPREAD_CAP_BYTES` (1 GiB). At scale the gate never fires —
+    a multi-GiB input plans enough splits on its own — so this is
+    input layout repair, not a local-mode constant.
 
     The exchange is ROUND-ROBIN on purpose: `count_shuffles` (the plan
     tests' shuffle budget) counts hash/range exchanges — the
     algorithmic shuffles an operator is responsible for — and a
     source-layout spread is not one of them."""
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") != "1":
-        return df
     spark = df.sparkSession
     try:
         stats = df._jdf.queryExecution().optimizedPlan().stats()
         total_bytes = int(str(stats.sizeInBytes()))
     except Exception:
         return df
-    if total_bytes <= 0:
-        return df
-    if cap_bytes is None:
-        cap_bytes = int(
-            os.environ.get("SPARK_GRAFT_SPREAD_CAP_MB", "1024")
-        ) * 1024 * 1024
-    if total_bytes > cap_bytes:
+    if not 0 < total_bytes <= SPREAD_CAP_BYTES:
         return df
     target = spark.sparkContext.defaultParallelism
     est_splits = -(-total_bytes // _max_partition_bytes(spark))

@@ -538,6 +538,7 @@ def test_pin_estimate_from_published_df_dim(spark, tmp_path,
     # estimate equals Σ_gram (mention grams × postings) without a
     # posting agg per batch plan. Also covers ADVICE r14: every exit
     # of the score_full gate records LAST_PIN_DECISION.
+    from drugbankner_spark.caching import session_memo
     from drugbankner_spark.operators import linker as L
 
     aliases = spark.createDataFrame(
@@ -580,7 +581,7 @@ def test_pin_estimate_from_published_df_dim(spark, tmp_path,
 
     # estimate path: the number equals the posting-table aggregation
     monkeypatch.setattr(L, "LINKER_PIN_MIN_POSTINGS", 1)
-    L._PIN_EST_CACHE.clear()
+    session_memo(spark).pop("pin_estimate", None)
     dec = decide()
     assert dec["reason"] == "estimate" and dec["width"] == 0
     want = (
@@ -666,3 +667,61 @@ def test_champion_probe_stats_and_zero_risky_fast_path(
     assert stats1["n_risky"] + round(
         stats1["certified_fraction"] * stats1["n_mentions"]
     ) == stats1["n_mentions"]
+
+
+def test_fit_counts_whitespace_alias_in_n(spark):
+    # N is the count of distinct non-null alias strings, so an
+    # all-whitespace alias (no grams) still counts; the fit's one eager
+    # action returns it, and every idf value is ln((1+N)/(1+df)) + 1
+    # with that N.
+    from drugbankner_spark.operators.linker import build_alias_vectors
+
+    aliases = spark.createDataFrame(
+        [("aspirin",), ("ecotrin",), ("   ",), ("aspirin",), (None,)],
+        "alias string",
+    )
+    postings, idf, n = build_alias_vectors(aliases, "alias")
+    assert n == 3
+    rows = idf.collect()
+    assert rows
+    for r in rows:
+        assert r["idf"] == math.log((1 + n) / (1 + r["df"])) + 1
+    # the whitespace alias has no posting; the others are unit vectors
+    norms = {
+        r["alias"]: r["s"] for r in postings.groupBy("alias")
+        .agg(F.sum(F.col("w") * F.col("w")).alias("s")).collect()
+    }
+    assert set(norms) == {"aspirin", "ecotrin"}
+    assert all(abs(s - 1.0) < 1e-12 for s in norms.values())
+
+
+def test_alias_index_probe_on_new_session(spark, tmp_path):
+    # A probe through spark.newSession() reads the index through that
+    # session, even after another session of the same application
+    # memoized its own reads of the same paths.
+    from drugbankner_spark.operators.linker import (
+        link_with_alias_index,
+        save_alias_index,
+    )
+    from drugbankner_spark.operators.similarity import _read_index
+
+    aliases = spark.createDataFrame(
+        [("aspirin", 1), ("ecotrin", 3), ("fever", 9)],
+        ["alias", "alias_id"],
+    )
+    path = str(tmp_path / "alias_idx")
+    save_alias_index(aliases, "alias", "alias_id", path)
+    rows = [("asprin",), ("high fever",)]
+    want = sorted(tuple(r) for r in link_with_alias_index(
+        spark, path, spark.createDataFrame(rows, ["mention"]), "mention",
+        threshold=0.3,
+    ).collect())
+    other = spark.newSession()
+    got = link_with_alias_index(
+        other, path, other.createDataFrame(rows, ["mention"]), "mention",
+        threshold=0.3,
+    )
+    assert got.sparkSession is other
+    assert sorted(tuple(r) for r in got.collect()) == want and want
+    for sub in ("meta", "postings", "idf", "alias_map"):
+        assert _read_index(other, f"{path}/{sub}").sparkSession is other

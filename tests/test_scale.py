@@ -500,13 +500,11 @@ def test_local_df_keeps_int64_exact_next_to_none(spark):
 
 
 def test_load_table_cache_serves_only_its_own_session(spark):
-    # The cache is keyed by id(spark); an id reused after a session dies
-    # must not serve a DataFrame bound to that other session.
-    from drugbankner_spark import tables as TB
-
+    # The memo lives on the session object: a new session of the same
+    # application gets, and keeps, DataFrames bound to itself.
     other = spark.newSession()
-    TB._CACHE[(id(spark), SF, "region")] = other.read.parquet(
-        os.path.join(SF, "region.parquet"))
     df = load_table(spark, SF, "region")
-    assert df.sparkSession is spark
+    odf = load_table(other, SF, "region")
+    assert df.sparkSession is spark and odf.sparkSession is other
     assert load_table(spark, SF, "region") is df
+    assert load_table(other, SF, "region") is odf

@@ -435,21 +435,25 @@ def test_acf_overflow_check_memoized_per_plan(spark):
     # violating call raises); check_overflow="always" re-verifies.
     import pytest
 
+    from drugbankner_spark.caching import session_memo
     from drugbankner_spark.operators import timeseries as ts
 
+    def memo_size():
+        return len(session_memo(spark).get("acf_checked", ()))
+
     src = _series(spark, [(i, 10.0 + i) for i in range(12)])
-    before = len(ts._ACF_CHECK_MEMO)
+    before = memo_size()
     ts.autocorrelation(src, ["key"], step_seconds=STEP, max_lag=2) \
         .collect()
-    after_first = len(ts._ACF_CHECK_MEMO)
+    after_first = memo_size()
     assert after_first == before + 1
     ts.autocorrelation(src, ["key"], step_seconds=STEP, max_lag=2) \
         .collect()
-    assert len(ts._ACF_CHECK_MEMO) == after_first  # memo hit, no growth
+    assert memo_size() == after_first  # memo hit, no growth
     # different params -> different bucketed plan -> fresh check
     ts.autocorrelation(src, ["key"], step_seconds=STEP * 2, max_lag=2) \
         .collect()
-    assert len(ts._ACF_CHECK_MEMO) == after_first + 1
+    assert memo_size() == after_first + 1
     # failures never cache: the same bad series raises on BOTH calls
     big = _series(spark, [(i, 1.0e7 * (i + 1)) for i in range(4)])
     for _ in range(2):
