@@ -163,27 +163,19 @@ def live_bioentities(spark: SparkSession) -> DataFrame:
     (look_for_identifiers.py:74-97)."""
     from pyspark.sql import functions as F
 
-    from drugbankner_spark.operators.alignment import (
-        _BIOENTITY_FIELDS,
-        _field_rank,
-    )
+    from drugbankner_spark.operators.alignment import _field_entries
 
     records, _ = _mini_records(spark)
-    branches = []
-    for field in _BIOENTITY_FIELDS:
-        for kind in ("name", "id"):
-            branches.append(
-                records.select(
-                    F.col("kg2_id"),
-                    F.lit(_field_rank(field)).alias("field_rank"),
-                    F.lit(kind).alias("kind"),
-                    F.explode(F.col(field)[kind + "s"]).alias("value"),
-                ).filter(F.col("value").isNotNull() & (F.col("value") != ""))
-            )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.select(*BIOENTITY_COLS)
+    names, ids = (
+        _field_entries(records, "kg2_id", kind + "s", "value").select(
+            "kg2_id", F.col("_field_rank").alias("field_rank"),
+            F.lit(kind).alias("kind"), "value",
+        )
+        for kind in ("name", "id")
+    )
+    return names.unionByName(ids).filter(
+        F.col("value").isNotNull() & (F.col("value") != "")
+    ).select(*BIOENTITY_COLS)
 
 
 # --------------------------------------------------------------------------

@@ -42,21 +42,27 @@ def _field_rank(field: str) -> int:
     return IDENTIFIER_FIELDS.index(field)
 
 
+def _field_entries(records: DataFrame, id_col: str, part: str, out: str) -> DataFrame:
+    """(id_col, _field_rank, out): one row per entry of every bioentity
+    field's ``part`` list — one inline and one explode over ``records``,
+    not a branch per field (ARCHITECTURE §7o)."""
+    return records.select(
+        F.col(id_col),
+        F.inline(F.array(*[
+            F.struct(F.lit(_field_rank(f)).alias("_field_rank"),
+                     F.col(f)[part].alias("_entries"))
+            for f in _BIOENTITY_FIELDS
+        ])),
+    ).select(F.col(id_col), "_field_rank", F.explode("_entries").alias(out))
+
+
 def align_names(records: DataFrame, syn: Synonymizer, id_col: str) -> DataFrame:
     """J8: explode every field's names list → name-path lookup.
     Output: (id_col, curie, name, category, rank) — name/category are the
     cluster's preferred values (unlike the NER stage's surface text)."""
-    branches = []
-    for field in _BIOENTITY_FIELDS:
-        b = records.select(
-            F.col(id_col),
-            F.lit(_field_rank(field)).alias("_field_rank"),
-            F.explode(F.col(field)["names"]).alias("_name"),
-        ).filter(F.col("_name").isNotNull() & (F.col("_name") != ""))
-        branches.append(b)
-    exploded = branches[0]
-    for b in branches[1:]:
-        exploded = exploded.unionByName(b)
+    exploded = _field_entries(records, id_col, "names", "_name").filter(
+        F.col("_name").isNotNull() & (F.col("_name") != "")
+    )
     hit = syn.canonical_from_names(exploded, "_name").filter(
         F.col("preferred_curie").isNotNull()
     )
@@ -75,18 +81,7 @@ def align_bare_ids(records: DataFrame, syn: Synonymizer, id_col: str) -> DataFra
     contributes the FULL-text CURIE (prefix + ':' + id) which then goes
     down the CURIE path (find_curies_with_prefix,
     look_for_identifiers.py:19-38)."""
-    branches = []
-    for field in _BIOENTITY_FIELDS:
-        b = records.select(
-            F.col(id_col),
-            F.lit(_field_rank(field)).alias("_field_rank"),
-            F.explode(F.col(field)["ids"]).alias("_id"),
-        )
-        branches.append(b)
-    exploded = branches[0]
-    for b in branches[1:]:
-        exploded = exploded.unionByName(b)
-    bare = exploded.filter(
+    bare = _field_entries(records, id_col, "ids", "_id").filter(
         F.col("_id").isNotNull() & ~is_curie(F.col("_id"))
     )
     candidates = extract_identifier_candidates(

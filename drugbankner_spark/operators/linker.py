@@ -233,12 +233,19 @@ def _distinct_mentions(mentions: DataFrame, mention_col: str) -> DataFrame:
     )
 
 
-def _mention_vectors(mcounts: DataFrame, idf: DataFrame) -> DataFrame:
+def _mention_vectors(
+    mcounts: DataFrame, idf: DataFrame, n_post: int | None = None
+) -> DataFrame:
     """(gram, mention, mw): mention TF-IDF vectors under the ALIAS
     corpus's idf (sklearn transform semantics — OOV grams drop at the
     idf join, before the norm). Shared by the full posting join and
-    the champion-list probe so vectorization can never drift."""
-    mweighted = mcounts.join(maybe_broadcast(idf), "gram").select(
+    the champion-list probe so vectorization can never drift. idf
+    rows ≤ posting rows, so a posting count ``n_post`` under the cap
+    broadcasts idf without the guard's count job."""
+    small = n_post is not None and n_post <= BROADCAST_MAX_ROWS
+    mweighted = mcounts.join(
+        F.broadcast(idf) if small else maybe_broadcast(idf), "gram"
+    ).select(
         "gram", F.col("_id").alias("mention"),
         (F.col("tf") * F.col("idf")).alias("_w"),
     )
@@ -581,8 +588,8 @@ def _link_tail(
     # derivation (document trigram extraction on the corpus shapes) is
     # paid once, shared with the main probe's vectorization. postings
     # is persisted (inline fit) or a parquet footer count (serving),
-    # so the count here is cheap; passed down so _score_full doesn't
-    # re-count.
+    # so the count here is cheap; passed down so neither the idf
+    # broadcast in _mention_vectors nor _score_full counts again.
     n_post = postings.count()
     if n_post >= LINKER_PIN_MIN_POSTINGS:
         mcounts = shared_persist(mcounts)
@@ -590,7 +597,7 @@ def _link_tail(
     # RAW gram counts (grams outside the posting vocabulary self-filter
     # in the estimate join), sparing a second vectorization pass
     return _score_full(
-        _mention_vectors(mcounts, idf), postings, idf, alias_map,
+        _mention_vectors(mcounts, idf, n_post), postings, idf, alias_map,
         threshold, k,
         gram_counts=mcounts.groupBy("gram").agg(
             F.count(F.lit(1)).alias("_mcnt")

@@ -333,31 +333,27 @@ def align_detected(detected: DataFrame, syn: Synonymizer, id_cols: list[str]) ->
     CURIE path; unlinked entities and entity-less sentences through the
     name path (whole sentence as the 'entity'). Returns one row per
     (ids, entity_text, preferred_*) hit with the matched-synonym count
-    (A3; ordering dropped — it never affects downstream content)."""
-    base = [*id_cols, "sentence", "entity_text"]
-    with_kb = detected.filter(F.col("kb_id").isNotNull())
-    by_curie = syn.canonical_from_curies(with_kb, "kb_id").select(
-        *base, F.col("kb_id").alias("matched_input"),
-        "preferred_curie", "preferred_name", "preferred_category",
+    (A3; ordering dropped — it never affects downstream content).
+
+    Contract: a row with a ``kb_id`` has an ``entity_text`` (no detector
+    here emits one without); each row takes ONE path. One stream
+    (ARCHITECTURE §7o): the CURIE and name lookups are left broadcast
+    joins in series, and a row carries only one of the two keys."""
+    text = F.coalesce("entity_text", "sentence")
+    keyed = detected.select(
+        *id_cols, "kb_id", text.alias("entity_text"),
+        F.when(F.col("kb_id").isNull(), text).alias("_name"),
     )
-    unlinked = detected.filter(
-        F.col("kb_id").isNull() & F.col("entity_text").isNotNull()
+    looked = syn.canonical_from_names(
+        syn.canonical_from_curies(keyed, "kb_id", prefix="c_"),
+        "_name", prefix="n_",
     )
-    by_name = syn.canonical_from_names(unlinked, "entity_text").select(
-        *base, F.col("entity_text").alias("matched_input"),
-        "preferred_curie", "preferred_name", "preferred_category",
-    )
-    sentence_only = detected.filter(F.col("entity_text").isNull()).withColumn(
-        "entity_text", F.col("sentence")
-    )
-    by_sentence = syn.canonical_from_names(sentence_only, "entity_text").select(
-        *base, F.col("entity_text").alias("matched_input"),
-        "preferred_curie", "preferred_name", "preferred_category",
-    )
-    hits = (
-        by_curie.unionByName(by_name).unionByName(by_sentence)
-        .filter(F.col("preferred_curie").isNotNull())
-    )
+    hits = looked.select(
+        *id_cols, "entity_text",
+        F.coalesce("kb_id", "entity_text").alias("matched_input"),
+        *[F.coalesce("c_" + c, "n_" + c).alias(c) for c in (
+            "preferred_curie", "preferred_name", "preferred_category")],
+    ).filter(F.col("preferred_curie").isNotNull())
     return hits.groupBy(
         *id_cols, "entity_text",
         "preferred_curie", "preferred_name", "preferred_category",
@@ -436,15 +432,17 @@ def spot_mentions(
     entity_text, kb_id) with ``entity_text`` the ORIGINAL-case
     sentence gram (what a real NER emits) and ``kb_id`` always NULL
     (linking belongs to :func:`link_entities_tfidf` — spotting and
-    linking stay separate, independently testable stages); sentences
-    with no match emit the (ids, sentence, NULL, NULL) sentinel so
-    J7's sentence-as-name fallback still sees them.
+    linking stay separate, independently testable stages). Per (ids,
+    sentence) key: one row per DISTINCT matched gram, else one (ids,
+    sentence, NULL, NULL) sentinel per INPUT row, so J7's
+    sentence-as-name fallback still sees them.
 
-    Scale shape: one explode bounded by sentence_tokens ×
-    ``max_tokens``, then ONE equi-join on the normalized gram — the
-    surface dim broadcasts below ``tables.BROADCAST_MAX_ROWS`` (an
-    ontology's alias table is a dim) and otherwise shuffles on the gram
-    key. Fully SQL-expressible (no UDF), so EP1 variants built on it are
+    Scale shape: one stream (ARCHITECTURE §7o) — one posexplode bounded
+    by sentence_tokens × ``max_tokens``, ONE left equi-join on the
+    normalized gram (the surface dim broadcasts below
+    ``tables.BROADCAST_MAX_ROWS``, else shuffles on the gram key), one
+    aggregation per sentence and one explode. Fully SQL-expressible
+    (no UDF), so EP1 variants built on it are
     hash-oracle-able end to end; for 100k+-term dictionaries with
     deep phrases, textanalysis.tag_dictionary_terms (Aho-Corasick,
     O(text) per doc) is the offsets-included alternative."""
@@ -475,24 +473,28 @@ def spot_mentions(
         F.expr(f"filter(split({text_col}, '\\\\s+'), t -> t <> '')")
         .alias("_toks"),
     )
-    hits = (
+    # each input row yields one gram at position 0 or one NULL gram, so
+    # counting those rows per sentence counts the input rows
+    per_sentence = (
         toks.select(*id_cols, "sentence",
-                    F.explode(grams_expr).alias("_gram"))
-        .join(surf, norm(F.col("_gram")) == F.col("_surf"))
-        .select(*id_cols, "sentence",
-                F.col("_gram").alias("entity_text"))
-        .distinct()
-        .withColumn("kb_id", F.lit(None).cast("string"))
+                    F.posexplode_outer(grams_expr).alias("_pos", "_gram"))
+        .join(surf, norm(F.col("_gram")) == F.col("_surf"), "left")
+        .groupBy(*id_cols, "sentence")
+        .agg(
+            F.collect_set(F.when(F.col("_surf").isNotNull(), F.col("_gram")))
+            .alias("_hits"),
+            F.count(F.when(F.coalesce(F.col("_pos"), F.lit(0)) == 0, 1))
+            .cast("int").alias("_rows"),
+        )
     )
-    misses = (
-        toks.select(*id_cols, "sentence")
-        .join(hits.select(*id_cols, "sentence").distinct(),
-              [*id_cols, "sentence"], "left_anti")
-        .select(*id_cols, "sentence",
-                F.lit(None).cast("string").alias("entity_text"),
-                F.lit(None).cast("string").alias("kb_id"))
+    return per_sentence.select(
+        *id_cols, "sentence",
+        F.explode(
+            F.when(F.size("_hits") > 0, F.col("_hits")).otherwise(
+                F.array_repeat(F.lit(None).cast("string"), F.col("_rows")))
+        ).alias("entity_text"),
+        F.lit(None).cast("string").alias("kb_id"),
     )
-    return hits.unionByName(misses)
 
 
 def link_entities_tfidf(
@@ -517,31 +519,27 @@ def link_entities_tfidf(
     detect_entities emits, NER.py:106-108); mentions that clear no
     candidate keep their NULL kb_id so the name-fallback path (J7)
     still sees them; entity-less sentinel rows pass through. Linking
-    cost scales with DISTINCT mention strings, not detections."""
+    cost scales with DISTINCT mention strings, not detections. One
+    stream (ARCHITECTURE §7o): the join condition carries ``kb_id IS
+    NULL``, so ``k`` never multiplies an already-linked row."""
     from drugbankner_spark.operators.linker import link_by_tfidf
 
-    linked_already = detected.filter(F.col("kb_id").isNotNull())
-    no_entity = detected.filter(F.col("entity_text").isNull())
-    unlinked = detected.filter(
-        F.col("kb_id").isNull() & F.col("entity_text").isNotNull()
-    )
     candidates = link_by_tfidf(
-        unlinked, "entity_text", aliases, alias_col, alias_id_col,
-        threshold=threshold, k=k,
-    ).select(
-        F.col("mention").alias("entity_text"),
-        F.col("alias_id").alias("_linked_kb"),
-    )
+        detected.filter(F.col("kb_id").isNull()), "entity_text",
+        aliases, alias_col, alias_id_col, threshold=threshold, k=k,
+    ).select("mention", F.col("alias_id").alias("_linked_kb"))
     # candidates is bounded by distinct mentions × k — usually dim-sized
     # but corpus-dependent, so AQE picks the join strategy (no hint)
-    relinked = (
-        unlinked.drop("kb_id")
-        .join(candidates, "entity_text", "left")
-        .withColumn("kb_id", F.col("_linked_kb"))
-        .drop("_linked_kb")
+    return (
+        detected.join(
+            candidates,
+            (F.col("entity_text") == F.col("mention"))
+            & F.col("kb_id").isNull(),
+            "left",
+        )
+        .withColumn("kb_id", F.coalesce("kb_id", "_linked_kb"))
         .select(*detected.columns)
     )
-    return linked_already.unionByName(no_entity).unionByName(relinked)
 
 
 def text_to_kg2_nodes(

@@ -102,8 +102,13 @@ def get_spark(
 
     Honors ``SPARK_GRAFT_CPUS`` for local-mode parallelism; if a master is
     already configured (spark-submit on a cluster) we do not override it.
+    Driver heap: ``SPARK_DRIVER_MEMORY``, else min(16g, physical RAM / 4).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    driver_memory = os.environ.get(
+        "SPARK_DRIVER_MEMORY", f"{min(16 * 1024, phys_mb // 4)}m"
+    )
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cpus), 8)
 
@@ -132,7 +137,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
     )
     # Only force a local master when none is configured (cluster submits set it).

@@ -152,6 +152,31 @@ def test_link_entities_tfidf_preserves_detected_contract(spark):
     }
 
 
+def test_link_entities_tfidf_top_k_never_multiplies_linked_rows(spark):
+    # With k=2 an unlinked mention gains one row per candidate, while a
+    # row that already carries a kb_id (same mention text) stays one row
+    # and keeps its kb_id.
+    from drugbankner_spark.operators.ner import link_entities_tfidf
+
+    detected = spark.createDataFrame(
+        [("D1", "s1", "aspirin", "UMLS:999"),
+         ("D1", "s2", "aspirin", None),
+         ("D1", "s3", None, None)],
+        "kg2_id string, sentence string, entity_text string, kb_id string",
+    )
+    aliases = spark.createDataFrame(
+        [("C1", "aspirin"), ("C2", "aspirin")], ["id", "name"]
+    )
+    got = sorted(
+        (r["sentence"], r["kb_id"] or "")
+        for r in link_entities_tfidf(
+            detected, aliases, threshold=0.7, k=2
+        ).collect()
+    )
+    assert got == [("s1", "UMLS:999"), ("s2", "C1"), ("s2", "C2"),
+                   ("s3", "")]
+
+
 def test_ep1_tfidf_links_without_lexicon_kb_ids(spark):
     # EP1 end-to-end with spotting-only stubs: every kb link in the
     # output came from TF-IDF arithmetic, and the longest-surface merge

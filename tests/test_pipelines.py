@@ -263,6 +263,77 @@ def test_spot_mentions_contract_and_matching(spark):
     assert len(sentinels) == 2
 
 
+def test_spot_mentions_keeps_one_sentinel_per_input_row(spark):
+    # A no-hit sentence that appears twice under the same key emits its
+    # NULL sentinel twice: the sentinel count is the input row count.
+    from drugbankner_spark.operators.ner import spot_mentions
+
+    sents = spark.createDataFrame(
+        [(1, "nothing relevant here"), (1, "nothing relevant here"),
+         (2, "nothing relevant here")],
+        ["kg2_id", "sentence"],
+    )
+    surf = spark.createDataFrame([("aspirin",)], ["name"])
+    out = spot_mentions(sents, "sentence", ["kg2_id"], surf, "name")
+    got = sorted(tuple(r) for r in out.collect())
+    sentinel = ("nothing relevant here", None, None)
+    assert got == [(1, *sentinel), (1, *sentinel), (2, *sentinel)]
+
+
+def test_spot_mentions_one_row_per_distinct_hit_gram(spark):
+    # A hit sentence that appears twice, with a gram repeated inside it,
+    # emits one row per DISTINCT matched gram and no sentinel.
+    from drugbankner_spark.operators.ner import spot_mentions
+
+    sentence = "Aspirin and aspirin beat fever"
+    sents = spark.createDataFrame(
+        [(1, sentence), (1, sentence)], ["kg2_id", "sentence"]
+    )
+    surf = spark.createDataFrame([("aspirin",), ("fever",)], ["name"])
+    out = spot_mentions(sents, "sentence", ["kg2_id"], surf, "name")
+    got = sorted(r["entity_text"] for r in out.collect())
+    assert got == ["Aspirin", "aspirin", "fever"]
+
+
+def test_align_detected_routes_each_row_down_one_path(spark):
+    # Each detection takes ONE path: the CURIE path when kb_id is set,
+    # else the name path on entity_text or, for the entity-less
+    # sentinel, on the sentence. A (kb_id set, entity_text NULL) row is
+    # outside the detect contract: it takes the CURIE path with the
+    # sentence as its text. The producers never emit such a row.
+    from pyspark.sql import functions as F
+
+    from drugbankner_spark.fixtures_ner import live_detected
+    from drugbankner_spark.operators.ner import (
+        align_detected,
+        link_entities_tfidf,
+    )
+
+    nodes, clusters, edges = mini_synonymizer_frames(spark)
+    syn = Synonymizer(nodes, clusters, edges)
+    detected = spark.createDataFrame(
+        [("D1", "s1", "head ache", "umls:600"),   # CURIE path
+         ("D1", "s2", "Ecotrin", None),           # name path
+         ("D1", "Headache", None, None),          # sentence as name
+         ("D2", "Aspirin", None, "RXNORM:400")],  # outside the contract
+        "kg2_id string, sentence string, entity_text string, kb_id string",
+    )
+    got = {tuple(r) for r in align_detected(detected, syn, ["kg2_id"])
+           .select("kg2_id", "entity_text", "preferred_curie",
+                   "n_matched_synonyms").collect()}
+    assert got == {
+        ("D1", "head ache", "MONDO:500", 1),
+        ("D1", "Ecotrin", "CHEBI:101", 1),
+        ("D1", "Headache", "MONDO:500", 1),
+        ("D2", "Aspirin", "CHEBI:101", 1),
+    }
+    det = live_detected(spark)
+    linked = link_entities_tfidf(det, nodes.select("id", "name"))
+    for df in (det, linked):
+        assert df.filter(F.col("kb_id").isNotNull()
+                         & F.col("entity_text").isNull()).count() == 0
+
+
 def test_spot_mentions_feeds_tfidf_linker(spark):
     # The composed detection->linking handoff: a spotted surface links
     # to its concept id through pure TF-IDF arithmetic.

@@ -811,3 +811,57 @@ def test_round13_candidate_rankers_sharded_plan_shapes(spark, tmp_path):
     build_lsh_index(vecs, idx, num_planes=2, dim=4)
     qi = probe_lsh_index(spark, idx, queries, k=2, num_planes=2, dim=4)
     assert "_shard" in X.plan_string(qi, "simple")
+
+
+def test_ep_chain_reads_each_layer_input_once(spark):
+    # The fan-out law (ARCHITECTURE §7o): a DataFrame consumed by N
+    # filter/union branches is planned N times, and the copies multiply
+    # down a chain. The benchmark's ep_drugbank chain over the mini XML
+    # must plan each layer's input once; no action runs on the
+    # assembled frame (only the builders' own eager guard jobs run).
+    import re
+
+    from pyspark.sql import functions as F
+
+    from drugbankner_spark import pipelines as P
+    from drugbankner_spark.fixtures import mini_synonymizer_frames
+    from drugbankner_spark.fixtures_ner import MINI_XML
+    from drugbankner_spark.functions.normalize import remove_brackets
+    from drugbankner_spark.operators import alignment, drugbank
+    from drugbankner_spark.operators import ner as NER
+    from drugbankner_spark.operators.synonymizer import Synonymizer
+    from drugbankner_spark.sources import xml_source
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    syn = Synonymizer(*mini_synonymizer_frames(spark))
+    records = drugbank.extract_drug_records(
+        xml_source.normalize_drugs(
+            xml_source.read_drugbank_xml(spark, MINI_XML)), syn)
+    branches = (
+        (records.filter(F.col("indication").isNotNull()
+                        & (F.col("indication") != "")),
+         remove_brackets(F.col("indication")), NER.DISEASE_CATEGORIES),
+        (records, P.mechanistic_text(), NER.MECHANISTIC_CATEGORIES),
+    )
+    out = []
+    for src, text, cats in branches:
+        sents = NER.prepare_sentences(src, text, ["kg2_id"])
+        det = NER.spot_mentions(sents, "sentence", ["kg2_id"],
+                                syn.nodes.select("name"), "name")
+        assert "LeftAnti" not in analyzed(det)
+        det = NER.link_entities_tfidf(det, syn.nodes.select("id", "name"))
+        assert "Union" not in analyzed(det)
+        aligned = NER.align_detected(det, syn, ["kg2_id"])
+        assert "Union" not in analyzed(aligned)
+        out.append(NER.merge_longest_name(aligned, ["kg2_id"], cats))
+    assert "Union" not in analyzed(alignment.align_names(records, syn, "kg2_id"))
+    indication, mech = out
+    ref = P.assemble_reference_json(
+        records, indication, P.run_ep2(records, mech, syn))
+    plan = analyzed(ref)
+    n_xml = len(re.findall(r"Relation \S*\[.*\] xml", plan))
+    n_union = len(re.findall(r"\bUnion\b", plan))
+    assert 0 < n_xml <= 12, f"{n_xml} XML relations"
+    assert n_union <= 3, f"{n_union} Union nodes"
