@@ -39,6 +39,14 @@ def _label_invariant(labels: DataFrame) -> tuple:
     return (row["n"], row["x"])
 
 
+def _not_converged(name: str, max_iterations: int) -> ValueError:
+    return ValueError(
+        f"{name} did not converge in max_iterations={max_iterations} "
+        "rounds: its labels are not a fixed point yet; raise "
+        "max_iterations"
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -59,7 +67,8 @@ def connected_components(
     cheaper than the join-with-old-labels changed-count it replaces).
     Lineage is cut per round with ``localCheckpoint`` so iteration N
     doesn't replan rounds 1..N-1. Pass ``stats={}`` to receive
-    ``stats["rounds"]``.
+    ``stats["rounds"]``. Raises ``ValueError`` when ``max_iterations``
+    rounds end before the fingerprint confirms a fixed point.
     """
     # LAZY checkpoints (round 15, guide §1/§2.4): every round already
     # runs an invariant action over the full label table — that action
@@ -125,6 +134,8 @@ def connected_components(
         if inv == prev_inv:
             break
         prev_inv = inv
+    else:
+        raise _not_converged("connected_components", max_iterations)
     if stats is not None:
         stats["rounds"] = rounds
     return labels
@@ -200,7 +211,8 @@ def connected_components_star(
     Convergence is detected by comparing one-agg edge-set fingerprints
     (``_edge_invariant``) across rounds — a single action per round
     instead of two ``exceptAll`` compares. Pass ``stats={}`` to receive
-    ``stats["rounds"]``, the number of star rounds executed.
+    ``stats["rounds"]``, the number of star rounds executed. Raises
+    ``ValueError`` when ``max_iterations`` rounds end unconverged.
     """
     # lazy checkpoints: the per-round invariant action materializes
     # each round's edge set (same trick as connected_components —
@@ -242,6 +254,8 @@ def connected_components_star(
         if inv == prev_inv:
             break
         prev_inv = inv
+    else:
+        raise _not_converged("connected_components_star", max_iterations)
     if stats is not None:
         stats["rounds"] = rounds
     # converged: e is a star forest large→small; centers label themselves

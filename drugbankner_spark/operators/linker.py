@@ -1,5 +1,4 @@
-"""In-engine TF-IDF character-n-gram entity linker (X1 gap closure,
-VERDICT r06 next #5).
+"""In-engine TF-IDF character-3-gram entity linker.
 
 The reference's linking stage is scispaCy's ``EntityLinker``
 (NER.py:42-51 configures it; threshold/k/max_entities_per_mention are
@@ -15,11 +14,11 @@ fake (the sandbox has no scispaCy install, so the ``scispacy_linker``
 path stays a validated config contract; see operators/ner.py).
 
 Vectorization follows sklearn's ``TfidfVectorizer(analyzer="char_wb",
-ngram_range=(n, n))`` defaults exactly, so every number is
+ngram_range=(3, 3))`` defaults exactly, so every number is
 deterministic and DuckDB-replicable:
 
 - grams: text lowercased, split on whitespace; each token padded to
-  ``' ' || token || ' '`` and every n-gram of the padded token emitted
+  ``' ' || token || ' '`` and every 3-gram of the padded token emitted
   (char_wb — grams never cross word boundaries);
 - the fit corpus is the DISTINCT alias strings (one vector per alias
   string; a concept reachable through several aliases scores its BEST
@@ -57,27 +56,39 @@ from drugbankner_spark.caching import (
 from drugbankner_spark.tables import BROADCAST_MAX_ROWS, maybe_broadcast
 
 
+#: Gram size of the char_wb vectorizer (scispaCy's candidate generator
+#: fits character 3-grams). The published index records it in
+#: ``/meta``; the probe refuses an index fit with another size.
+GRAM_N = 3
+
+#: Bucket count for the persisted alias index's gram partitioning.
+#: Probes prune to the buckets their mention grams hash into, so a
+#: small query batch touches a handful of the 64 partitions.
+ALIAS_INDEX_BUCKETS = 64
+
+
 def char_wb_gram_counts(
-    df: DataFrame, text_col: str, id_col: str, n: int = 3
+    df: DataFrame, text_col: str, id_col: str
 ) -> DataFrame:
-    """(_id, gram, tf): sklearn ``char_wb`` n-gram raw counts per row.
+    """(_id, gram, tf): sklearn ``char_wb`` gram raw counts per row.
 
     Pure per-row expressions (lower → split → pad → slide), one explode,
     one map-side-combinable count agg — no UDF, whole-stage codegen
     end to end."""
     return _gram_tf(df.select(
-        F.col(id_col).alias("_id"), _char_wb_grams(text_col, n).alias("_gs")
+        F.col(id_col).alias("_id"), _char_wb_grams(text_col).alias("_gs")
     ))
 
 
-def _char_wb_grams(text_col: str, n: int):
-    """The array of sklearn ``char_wb`` n-grams of ``text_col``."""
+def _char_wb_grams(text_col: str):
+    """The array of sklearn ``char_wb`` grams of ``text_col``: a padded
+    token of length L + 2 has L + 3 - GRAM_N grams (at least one)."""
     return F.expr(
         f"""flatten(transform(
             filter(split(lower({text_col}), '\\\\s+'), t -> t <> ''),
             t -> transform(
-                sequence(1, greatest(length(t) + {3 - n}, 1)),
-                i -> substring(concat(' ', t, ' '), i, {n}))))"""
+                sequence(1, greatest(length(t) + {3 - GRAM_N}, 1)),
+                i -> substring(concat(' ', t, ' '), i, {GRAM_N}))))"""
     )
 
 
@@ -91,7 +102,7 @@ def _gram_tf(grams: DataFrame) -> DataFrame:
 
 
 def build_alias_vectors(
-    alias_texts: DataFrame, text_col: str, n: int = 3,
+    alias_texts: DataFrame, text_col: str,
     max_df_ratio: float | None = None,
 ) -> tuple[DataFrame, DataFrame, int]:
     """Fit the TF-IDF model over DISTINCT alias strings.
@@ -100,18 +111,8 @@ def build_alias_vectors(
 
     - ``postings``: (gram, alias, w) — the alias matrix in sparse
       (inverted-index) form, rows L2-normalized;
-    - ``idf``: (gram, idf, df) — the fitted vocabulary, reused
-      verbatim to vectorize mentions (sklearn transform semantics).
-      ``df`` is the gram's document frequency == its POSTING-LIST
-      LENGTH (one posting row per (gram, alias) pair), a byproduct of
-      the idf fit kept so the pin gate's product estimate
-      (:func:`_pin_width`) can price the gram join against this
-      vocabulary-sized broadcastable dim instead of re-aggregating
-      the posting table per batch plan (VERDICT r14 next #1); it
-      rides into the persisted index with ``/idf``, so the decision
-      is also restart-stable on the serving path. Consumers that
-      only vectorize select (gram, idf) and Catalyst prunes ``df``
-      out of their scans.
+    - ``idf``: (gram, idf) — the fitted vocabulary, reused verbatim to
+      vectorize mentions (sklearn transform semantics).
 
     ``max_df_ratio`` (sklearn's ``max_df``): drop grams occurring in
     more than that fraction of aliases — the stop-gram pruning knob.
@@ -141,7 +142,7 @@ def build_alias_vectors(
     counts = shared_persist(_gram_tf(texts.select(
         F.col("alias").alias("_id"),
         F.concat(
-            _char_wb_grams("alias", n), F.array(F.lit(None).cast("string"))
+            _char_wb_grams("alias"), F.array(F.lit(None).cast("string"))
         ).alias("_gs"),
     )))
     dfs = shared_persist(
@@ -167,9 +168,7 @@ def build_alias_vectors(
         idf = idf.filter(
             F.col("_df") <= F.col("_n_aliases") * F.lit(max_df_ratio)
         )
-    idf = idf.select(
-        "gram", "idf", F.col("_df").cast("long").alias("df")
-    )
+    idf = idf.select("gram", "idf")
     weighted = counts.join(idf, "gram").select(
         "gram", F.col("_id").alias("alias"),
         (F.col("tf") * F.col("idf")).alias("_w"),
@@ -195,7 +194,6 @@ def link_by_tfidf(
     alias_id_col: str,
     threshold: float = 0.7,
     k: int = 1,
-    n: int = 3,
     max_df_ratio: float | None = None,
 ) -> DataFrame:
     """Link each DISTINCT mention string to its top-k concepts.
@@ -208,7 +206,21 @@ def link_by_tfidf(
     fold. Scores round to 6dp BEFORE threshold/rank (the engine-wide
     float-parity pattern), and ties rank by alias_id ascending, so the
     output is deterministic and hash-oracle-able."""
-    alias_map = shared_persist(
+    alias_map = shared_persist(_alias_map(aliases, alias_col, alias_id_col))
+    postings, idf, _ = build_alias_vectors(
+        alias_map, "alias", max_df_ratio=max_df_ratio
+    )
+    mcounts = char_wb_gram_counts(
+        _distinct_mentions(mentions, mention_col), "mention", "mention"
+    )
+    return _link_tail(mcounts, postings, idf, alias_map, threshold, k)
+
+
+def _alias_map(
+    aliases: DataFrame, alias_col: str, alias_id_col: str
+) -> DataFrame:
+    """(alias, alias_id): the distinct non-null alias → concept pairs."""
+    return (
         aliases.select(
             F.col(alias_col).alias("alias"),
             F.col(alias_id_col).alias("alias_id"),
@@ -216,13 +228,6 @@ def link_by_tfidf(
         .filter(F.col("alias").isNotNull() & F.col("alias_id").isNotNull())
         .distinct()
     )
-    postings, idf, _ = build_alias_vectors(
-        alias_map, "alias", n, max_df_ratio=max_df_ratio
-    )
-    mcounts = char_wb_gram_counts(
-        _distinct_mentions(mentions, mention_col), "mention", "mention", n
-    )
-    return _link_tail(mcounts, postings, idf, alias_map, threshold, k)
 
 
 def _distinct_mentions(mentions: DataFrame, mention_col: str) -> DataFrame:
@@ -257,191 +262,55 @@ def _mention_vectors(
     )
 
 
-def _pinned_shuffle_n(df: DataFrame) -> int:
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-
-
-#: Posting-table size below which the probe tail skips the pin
-#: machinery ENTIRELY — including the 1-row product-estimate job
-#: (measured at sf0.1 / ~35k postings: even a worst-case product fits
-#: one task, and the serving probe is sub-second, so an extra driver
-#: job is pure latency). Above it, the gate is the ESTIMATED gram-join
-#: product row count (:data:`LINKER_PIN_MIN_PRODUCT_ROWS`) — round
-#: 14, VERDICT r13 #1: the r13 posting-count gate (200k) pinned two
-#: FULL-WIDTH shuffles at sf1 (~356k postings) where AQE's coalesced
-#: plan was strictly better, doubling the inline fit (7.9 → 14.0 s);
-#: the quantity that actually collapses is the product table built
-#: inside the coalesced partition, not the posting count.
-LINKER_PIN_MIN_POSTINGS = 200_000
-
-#: Pin the probe tail's exchanges only when the gram join is estimated
-#: to explode at least this many product rows into its child's
-#: (possibly AQE-collapsed-to-1) partitioning. The estimate is EXACT
-#: join cardinality — Σ_gram (mention rows × posting rows), one small
-#: agg + 1-row collect, self-filtering on the vocabulary — not a
-#: heuristic. Placement (round 14, MEASURED at the scale it taxes —
-#: VERDICT r13 #1): sf1's inline corpus fit estimates 1.02×10⁸
-#: products and runs HEALTHY unpinned (9.7 s loaded / ~8 s quiet; the
-#: r13 full-width pin made it 13.9-14.8 s — pin cost is shuffle-byte
-#: -bound, so even a narrow width pays most of it), while the
-#: observed sf10 bulk collapse built products another decade up
-#: (~10⁹) in one task for 25 min. 4×10⁸ sits 4× above the measured
-#: healthy point and comfortably below the measured disaster.
-LINKER_PIN_MIN_PRODUCT_ROWS = 400_000_000
-
-#: Posting-table size at/above which the tail pins REGARDLESS of the
-#: product estimate (VERDICT r13 #1's "raise the gate to ~1M" option,
-#: kept as an OR-condition alongside the estimate): r12's UNPINNED
-#: sf10 numbers show the collapse hits shapes whose product estimate
-#: is small — the 202-mention serving-flat probe against the 1.8M-
-#: posting index ran 47.3 s unpinned vs 9.0 s pinned — because at
-#: that index scale AQE coalesces the tiny mention side to one
-#: partition and everything downstream inherits it. 1M postings is a
-#: decade of margin over sf1's measured-healthy 390k and sits under
-#: the 1.8M where both collapses were observed.
+#: Posting count at/above which the full posting join pins its two
+#: exchanges at full width (``spark.sql.shuffle.partitions``). The
+#: posting count separates every measured point: sf1's inline fit
+#: (~356k postings) runs healthy unpinned (9.7 s loaded, ~8 s quiet; a
+#: full-width pin made it 13.9-14.8 s), while at the sf10 index (1.8M
+#: postings) the bulk and the 202-mention serving-flat probes collapse
+#: unpinned (a 25-minute single task; serving-flat 47.3 s vs 9.0 s
+#: pinned — at that index scale AQE coalesces even a tiny mention side
+#: to one partition). Full width, not a narrower one: pin cost is the
+#: product-table bytes through the exchange, which every width pays
+#: (sf1 at widths 26 and 32: both ~14 s), and a narrow pin starves the
+#: fan-out (sf10 serving-flat: 15.6 s at width ~3).
 LINKER_PIN_FULL_MIN_POSTINGS = 1_000_000
 
-# When the gate fires, the pin is always FULL width
-# (spark.sql.shuffle.partitions). VERDICT r13 #1 suggested sizing
-# the width from the estimate instead; implemented, measured,
-# REJECTED with numbers (round 14): pin cost is dominated by the
-# product-table bytes through the exchange, which every width pays —
-# at sf1's 1.02×10⁸-product inline fit, width 26 and width 32 both
-# cost ~14 s vs 9.7 s unpinned (the only winning mid-scale move is
-# not pinning, which the estimate gate now delivers) — while a
-# NARROW pin under-provisions the explosion when the gate fires on
-# the posting-count condition with a small product table: sf10
-# serving-flat measured 15.6 s at width ~3 vs 9.0 s at full width
-# (the products are tiny there, so full width costs nothing and
-# distributes the fan-out work).
-
-#: Cap on the session's pin-estimate memo (:func:`_estimate_products`).
-#: A long-lived serving app issuing many distinct batch plans would
-#: otherwise grow it without limit (ADVICE r14) — at the cap the table
-#: clears (the entries are 1-row estimates; a re-estimate costs one
-#: broadcast-join job against the fit's vocabulary-sized ``df`` dim).
-_PIN_EST_MAX = 1024
-
-#: Instrumentation: the most recent pin decisions, keyed by call site
-#: ("score_full": n_postings/est_products/width/reason; "rerank":
-#: n_aliases/width/reason) — read by bench.py so the pin evidence
-#: lands in BENCH JSON without a second estimate job.
-LAST_PIN_DECISION: dict = {}
-
 #: Alias-count gate for the champion rerank's full-width pin (the
-#: rerank knows the meta's n_aliases but not the posting count).
-#: Round 14: raised 20k → 100k with measurements on BOTH sides — sf1
-#: bulk (35.6k aliases) runs faster unpinned (2.13 s vs r13's pinned
-#: 2.56 s), sf10 bulk (357k) collapses without the pin (36.9 s vs
-#: 25.7 s pinned, loaded box). An estimate-gated rerank variant
-#: (exact candidate-pair gram-count bound, one agg + 1-row collect)
-#: was implemented, MEASURED at both scales, and rejected: the sf10
-#: bulk rerank estimates 2.6×10⁸ products — under the 4×10⁸ gate that
-#: is correct for the full join's shape — yet runs 36.9 s unpinned vs
-#: 25.7 s pinned, while sf1's bulk runs FASTER unpinned. Two shapes,
-#: two thresholds — and this alias gate already separates the
-#: measured-healthy from the measured-unhealthy points at both
-#: scales, with no estimate job on any probe.
+#: rerank knows the meta's n_aliases but not the posting count). It
+#: separates the measured points of the rerank's own shape: sf1 bulk
+#: (35.6k aliases) runs faster unpinned (2.13 s vs 2.56 s pinned), sf10
+#: bulk (357k) collapses without the pin (36.9 s vs 25.7 s pinned).
 LINKER_PIN_MIN_ALIASES = 100_000
 
+#: Instrumentation: the most recent pin decision per call site
+#: ("score_full": n_postings/width/reason; "rerank":
+#: n_aliases/width/reason), read by bench.py.
+LAST_PIN_DECISION: dict = {}
 
-def _pin_width(
-    site: str,
-    mvec: DataFrame,
-    n_aliases: int | None = None,
-    n_post: int | None = None,
-    gram_counts: DataFrame | None = None,
-    idf: DataFrame | None = None,
-) -> int:
-    """Gate one probe-tail site's pinned exchanges and record the
-    decision in ``LAST_PIN_DECISION[site]``. Returns 0 (no pin — leave
-    the plan to AQE) or the full REPARTITION_BY_NUM width (narrow
-    widths measured strictly worse — see the constants' comment).
 
-    ``"rerank"`` (the champion rerank) pins when the index meta's
-    ``n_aliases`` clears :data:`LINKER_PIN_MIN_ALIASES`.
+def _pin_width(site: str, df: DataFrame, count: int) -> int:
+    """Gate one probe-tail site's pinned exchanges on its one count and
+    record the decision in ``LAST_PIN_DECISION[site]``. Returns 0 (no
+    pin — AQE keeps the plan) or the full REPARTITION_BY_NUM width.
 
-    ``"score_full"`` (the full posting join over ``mvec``, the mention
-    vectors) pins when EITHER the estimated product row count clears
-    :data:`LINKER_PIN_MIN_PRODUCT_ROWS` (a big batch × any index) OR
-    the posting count ``n_post`` clears
-    :data:`LINKER_PIN_FULL_MIN_POSTINGS` (a corpus-scale index, where
-    even a tiny batch's plan collapses — the r12 serving-flat
-    evidence). The estimate is the exact product row count of the gram
-    join — Σ_gram (mention-side rows × posting-side rows): the
-    mention side is ``gram_counts`` ``(gram, _mcnt)`` (raw mention
-    gram counts — grams outside the posting vocabulary self-filter in
-    the join, so this equals counting ``mvec`` itself), the posting side
-    is the fit's per-gram posting-list length, the ``df`` column of
-    ``idf`` (VERDICT r14 next #1: a vocabulary-sized broadcast dim,
-    published with ``/idf``, so the estimate is near-free per new
-    batch plan and stable across driver restarts), and the job is a
-    1-row collect memoized per (app, batch plan, posting count). It is
-    skipped below :data:`LINKER_PIN_MIN_POSTINGS`, where neither
-    condition can fire, and at/above the posting floor, where the
-    estimate cannot change the decision."""
-    full = _pinned_shuffle_n(mvec)
+    ``"rerank"`` counts the index's aliases against
+    :data:`LINKER_PIN_MIN_ALIASES`; ``"score_full"`` counts postings
+    against :data:`LINKER_PIN_FULL_MIN_POSTINGS`."""
     if site == "rerank":
-        width = full if n_aliases >= LINKER_PIN_MIN_ALIASES else 0
-        LAST_PIN_DECISION[site] = {
-            "n_aliases": n_aliases, "width": width, "reason": "alias-gate",
-        }
-        return width
-    est = None
-    if n_post < LINKER_PIN_MIN_POSTINGS:
-        width, reason = 0, "below-floor"
-    elif n_post >= LINKER_PIN_FULL_MIN_POSTINGS:
-        width, reason = full, "posting-floor"
+        pin = count >= LINKER_PIN_MIN_ALIASES
+        key, reason = "n_aliases", "alias-gate"
     else:
-        est = _estimate_products(mvec, n_post, gram_counts, idf)
-        width = 0 if est < LINKER_PIN_MIN_PRODUCT_ROWS else full
-        reason = "estimate"
-    LAST_PIN_DECISION[site] = {
-        "n_postings": n_post, "est_products": est, "width": width,
-        "reason": reason,
-    }
+        pin = count >= LINKER_PIN_FULL_MIN_POSTINGS
+        key, reason = "n_postings", (
+            "posting-floor" if pin else "below-floor"
+        )
+    width = (
+        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        if pin else 0
+    )
+    LAST_PIN_DECISION[site] = {key: count, "width": width, "reason": reason}
     return width
-
-
-def _estimate_products(
-    mvec: DataFrame,
-    n_post: int,
-    gram_counts: DataFrame | None,
-    idf: DataFrame,
-) -> int:
-    mcnt = (
-        gram_counts if gram_counts is not None
-        else mvec.groupBy("gram").agg(F.count(F.lit(1)).alias("_mcnt"))
-    )
-    if "_mcnt" not in mcnt.columns:
-        raise ValueError("gram_counts must carry (gram, _mcnt)")
-    # (gram-plan semanticHash, n_postings) → estimated product rows,
-    # per session. The estimate is a pure function of the mention batch
-    # plan and the posting table; repeat probes of the same shape (the
-    # bench's min-of-N, a serving loop on a fixed corpus slice) pay the
-    # estimate job once. A stale hit can only mis-size a pin width —
-    # performance, never results — so plan-hash + posting-count keying
-    # is enough (no file-snapshot component like the ACF memo needs).
-    memo = session_memo(mvec.sparkSession).setdefault("pin_estimate", {})
-    key = None
-    try:
-        key = (mcnt._jdf.queryExecution().logical().semanticHash(), n_post)
-    except Exception:
-        pass  # py4j API drift — just skip memoization
-    if key is not None and key in memo:
-        return memo[key]
-    pside = F.broadcast(idf.select("gram", F.col("df").alias("_pcnt")))
-    est_row = (
-        mcnt.join(pside, "gram")
-        .agg(F.sum(F.col("_mcnt") * F.col("_pcnt")).alias("_est"))
-        .collect()
-    )
-    est = int(est_row[0]["_est"] or 0)
-    if key is not None:
-        if len(memo) >= _PIN_EST_MAX:
-            memo.clear()
-        memo[key] = est
-    return est
 
 
 def _mention_clustered(products: DataFrame, width: int) -> DataFrame:
@@ -473,9 +342,8 @@ def _mention_clustered(products: DataFrame, width: int) -> DataFrame:
     elides it when the child already hashes by mention — exactly what
     silently re-created the collapse on the first attempt.
 
-    ``width`` comes from the caller's gate (:func:`_pin_width`) —
-    round 14: the r13 always-on pin shuffled the whole raw product
-    table for parallelism the mid-scale data couldn't use."""
+    ``width`` comes from the caller's gate (:func:`_pin_width`): below
+    it the coalesced plan is faster."""
     return products.repartition(width, F.col("mention"))
 
 
@@ -522,21 +390,16 @@ def _fold_rank(
 def _score_full(
     mvec: DataFrame,
     postings: DataFrame,
-    idf: DataFrame,
     alias_map: DataFrame,
     threshold: float,
     k: int,
-    gram_counts: DataFrame | None = None,
     n_post: int | None = None,
 ) -> DataFrame:
     """Full sparse matmul + fold over PRE-VECTORIZED mentions: one
     equi-join on gram + one (mention, alias) agg. Split out of
-    :func:`_link_tail` so the champion path's uncertified tail can
-    reuse its already-persisted mention vectors instead of re-running
-    gram counting + vectorization (VERDICT r11 next #1b — the risky
-    mentions were paying for vectorization twice). ``idf`` is the
-    fit's (gram, idf, df) vocabulary; only its ``df`` is read here,
-    to price the pin estimate.
+    :func:`_link_tail` so the champion path's uncertified tail reuses
+    its persisted mention vectors instead of vectorizing twice.
+    ``n_post`` is the posting count when the caller holds it.
 
     When :func:`_pin_width` fires, the mention side enters the join
     under a PINNED gram-keyed repartition and the products under a
@@ -546,17 +409,12 @@ def _score_full(
     coalesced that child to ~1 partition on its tiny pre-explosion
     bytes (see :func:`_mention_clustered` for the full post-mortem).
     Keyed by gram, so when postings DON'T broadcast the sort-merge
-    join reuses the exchange instead of adding one. Below the gate
-    the coalesced plan is strictly faster and the pins are skipped —
-    the posting count is already paid for by the broadcast decision,
-    and the estimate job itself is skipped below
-    :data:`LINKER_PIN_MIN_POSTINGS`."""
+    join reuses the exchange instead of adding one."""
     if n_post is None:
         n_post = postings.count()
     post_dim = (F.broadcast(postings) if n_post <= BROADCAST_MAX_ROWS
                 else postings)
-    width = _pin_width("score_full", mvec, n_post=n_post,
-                       gram_counts=gram_counts, idf=idf)
+    width = _pin_width("score_full", mvec, n_post)
     mside = mvec.repartition(width, F.col("gram")) if width else mvec
     products = mside.join(post_dim, "gram").select(
         "mention", "alias", (F.col("mw") * F.col("w")).alias("_prod")
@@ -583,33 +441,15 @@ def _link_tail(
     (:func:`link_by_tfidf`) and the persisted-index serving path
     (:func:`link_with_alias_index`) so the two can never drift — the
     index probe's parity test leans on exactly this."""
-    # above the pin floor the product-estimate job will scan the
-    # mention grams once more — persist them so the mention-source
-    # derivation (document trigram extraction on the corpus shapes) is
-    # paid once, shared with the main probe's vectorization. postings
-    # is persisted (inline fit) or a parquet footer count (serving),
-    # so the count here is cheap; passed down so neither the idf
-    # broadcast in _mention_vectors nor _score_full counts again.
+    # postings is persisted (inline fit) or a parquet footer count
+    # (serving), so the count is cheap; it sizes the idf broadcast, the
+    # posting broadcast and the pin
     n_post = postings.count()
-    if n_post >= LINKER_PIN_MIN_POSTINGS:
-        mcounts = shared_persist(mcounts)
-    # the pin gate's product estimate counts mention gram rows from the
-    # RAW gram counts (grams outside the posting vocabulary self-filter
-    # in the estimate join), sparing a second vectorization pass
     return _score_full(
-        _mention_vectors(mcounts, idf, n_post), postings, idf, alias_map,
-        threshold, k,
-        gram_counts=mcounts.groupBy("gram").agg(
-            F.count(F.lit(1)).alias("_mcnt")
-        ),
-        n_post=n_post,
+        _mention_vectors(mcounts, idf, n_post), postings, alias_map,
+        threshold, k, n_post,
     )
 
-
-#: Bucket count for the persisted alias index's gram partitioning.
-#: Probes prune to the buckets their mention grams hash into, so a
-#: small query batch touches a handful of the 64 partitions.
-ALIAS_INDEX_BUCKETS = 64
 
 #: Champion policy (impact thresholding, round 13 — VERDICT r12 next
 #: #1): the candidate-generation index keeps, per gram, only the
@@ -697,8 +537,8 @@ _CERT_MARGIN = 1e-6
 #: meta carries clears this crossover, on every batch shape.
 CHAMPION_AUTO_MIN_ALIASES = 10_000
 
-def _gram_bucket(col, n_buckets: int):
-    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
+def _gram_bucket(col):
+    return F.pmod(F.xxhash64(col), F.lit(ALIAS_INDEX_BUCKETS)).cast("int")
 
 
 def _dir_has_parquet(spark, path: str) -> bool:
@@ -717,7 +557,7 @@ def _dir_has_parquet(spark, path: str) -> bool:
 
 
 def _write_bucket_partitioned(
-    df: DataFrame, path: str, n_buckets: int, bucket_col: str
+    df: DataFrame, path: str, bucket_col: str
 ) -> None:
     """Bucket-partitioned index-sub write, repartitioned ON the bucket
     key first so the layout is ~1 file per bucket (a 2048-file index
@@ -736,7 +576,7 @@ def _write_bucket_partitioned(
     publish summed to ~10 s of job time at sf0.1 (measured, round 16).
     The listing costs no Spark job, and only a genuinely empty frame
     pays the tiny fallback rewrite."""
-    df.repartition(n_buckets, bucket_col).write.mode(
+    df.repartition(ALIAS_INDEX_BUCKETS, bucket_col).write.mode(
         "overwrite"
     ).partitionBy(bucket_col).parquet(path)
     if not _dir_has_parquet(df.sparkSession, path):
@@ -775,9 +615,7 @@ def save_alias_index(
     alias_col: str,
     alias_id_col: str,
     path: str,
-    n: int = 3,
     max_df_ratio: float | None = None,
-    n_buckets: int = ALIAS_INDEX_BUCKETS,
 ) -> None:
     """Fit the TF-IDF alias model ONCE and persist it as a serving
     index — the production shape the corpus-scale bench exposed: the
@@ -787,9 +625,9 @@ def save_alias_index(
     fixed. Fit once → probe many flattens that to the probe's own
     work.
 
-    Layout: ``postings`` and ``idf`` (gram, idf, df) land PARTITIONED
-    BY ``gram_bucket = pmod(xxhash64(gram), n_buckets)`` so a probe
-    reads only the partitions its mention grams hash into (partition
+    Layout: ``postings`` and ``idf`` (gram, idf) land PARTITIONED BY
+    ``gram_bucket = pmod(xxhash64(gram), ALIAS_INDEX_BUCKETS)`` so a
+    probe reads only the partitions its mention grams hash into (partition
     pruning — the lsh/ivf on-disk index discipline); ``alias_map`` is
     a plain dim. The bucket hash is a STORAGE layout, not an oracle
     surface — probe results are bit-identical to the inline linker
@@ -807,14 +645,15 @@ def save_alias_index(
       zeros) — the per-mention completeness certificate's raw
       material;
     - ``alias_vecs``: the same posting rows re-partitioned by
-      ``alias_bucket = pmod(xxhash64(alias), n_buckets)`` — the
-      exact-rerank side, keyed by the candidate pair's alias so the
+      ``alias_bucket = pmod(xxhash64(alias), ALIAS_INDEX_BUCKETS)`` —
+      the exact-rerank side, keyed by the candidate pair's alias so the
       rerank join is bounded by candidates, never by the ontology.
 
     ``w_cut`` is auto-sized from the fit's own shape
     (:func:`_auto_champion_w_cut`, factor picked by the alias count)
-    and persisted in the meta parquet with ``n``, ``n_buckets``,
-    ``max_df_ratio`` and ``n_aliases``. The champion/cutoff split is
+    and persisted in the meta parquet with ``n`` (:data:`GRAM_N`),
+    ``n_buckets`` (:data:`ALIAS_INDEX_BUCKETS`), ``max_df_ratio`` and
+    ``n_aliases``. The champion/cutoff split is
     two filters + a map-side-combinable max agg — no ranking pass,
     nothing skew-sensitive at build time; ``max_df_ratio`` remains the
     PROBE-side stop-gram lever (it shrinks the posting join itself)."""
@@ -831,16 +670,9 @@ def save_alias_index(
     # persists here — unlike the lazy probe subtrees (a long-lived
     # publisher must not accumulate one fit cache per published index).
     with cache_scope():
-        alias_map = (
-            aliases.select(
-                F.col(alias_col).alias("alias"),
-                F.col(alias_id_col).alias("alias_id"),
-            )
-            .filter(F.col("alias").isNotNull() & F.col("alias_id").isNotNull())
-            .distinct()
-        )
+        alias_map = _alias_map(aliases, alias_col, alias_id_col)
         postings, idf, n_aliases = build_alias_vectors(
-            alias_map, "alias", n, max_df_ratio=max_df_ratio
+            alias_map, "alias", max_df_ratio=max_df_ratio
         )
         # alias_map feeds the /alias_map write below plus the fit's
         # distinct-texts scan — persist so the distinct shuffle runs once
@@ -873,8 +705,8 @@ def save_alias_index(
         def _by_gram(df: DataFrame, sub: str):
             return lambda: _write_bucket_partitioned(
                 df.withColumn(
-                    "gram_bucket", _gram_bucket(F.col("gram"), n_buckets)
-                ), path + sub, n_buckets, "gram_bucket",
+                    "gram_bucket", _gram_bucket(F.col("gram"))
+                ), path + sub, "gram_bucket",
             )
 
         # repartition ON the bucket key before the partitioned write: each
@@ -892,17 +724,17 @@ def save_alias_index(
         # (round 15: publish ~2x faster at sf0.1).
         #
         # Fit metadata rides WITH the index (ADVICE r09: a probe whose n /
-        # n_buckets differ from the fit silently prunes away every posting
-        # — grams hash into different buckets — returning wrong/missing
-        # matches with no error). A 1-row parquet, not a sidecar JSON, so
-        # the layout stays portable to any Hadoop-compatible FS. It also
-        # carries n_aliases (distinct alias strings — the fit's own N) so
-        # probes gate the champion machinery by ontology size. Built as
-        # range(1).select(lit…), not createDataFrame(list): a python-list
-        # local relation executes through a Python worker, and inside a
-        # parquet write task that round trip measured ~5 s per publish
-        # (round 16) — for one metadata row. Literal columns plan as a
-        # pure-JVM LocalTableScan.
+        # n_buckets differ from the stored index silently prunes away
+        # every posting — grams hash into different buckets — returning
+        # wrong/missing matches with no error). A 1-row parquet, not a
+        # sidecar JSON, so the layout stays portable to any
+        # Hadoop-compatible FS. It also carries n_aliases (distinct alias
+        # strings — the fit's own N) so probes gate the champion
+        # machinery by ontology size. Built as range(1).select(lit…), not
+        # createDataFrame(list): a python-list local relation executes
+        # through a Python worker, and inside a parquet write task that
+        # round trip measured ~5 s per publish (round 16) — for one
+        # metadata row. Literal columns plan as a pure-JVM LocalTableScan.
         write_jobs = [
             ("postings", _by_gram(postings, "/postings")),
             ("idf", _by_gram(idf, "/idf")),
@@ -914,12 +746,12 @@ def save_alias_index(
             ("alias_vecs", lambda: _write_bucket_partitioned(
                 postings.withColumn(
                     "alias_bucket",
-                    _gram_bucket(F.col("alias"), n_buckets),
-                ), path + "/alias_vecs", n_buckets, "alias_bucket",
+                    _gram_bucket(F.col("alias")),
+                ), path + "/alias_vecs", "alias_bucket",
             )),
             ("meta", lambda: spark.range(1).select(
-                F.lit(int(n)).cast("int").alias("n"),
-                F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
+                F.lit(GRAM_N).cast("int").alias("n"),
+                F.lit(ALIAS_INDEX_BUCKETS).cast("int").alias("n_buckets"),
                 F.lit(
                     float(max_df_ratio) if max_df_ratio is not None else None
                 ).cast("double").alias("max_df_ratio"),
@@ -956,8 +788,6 @@ def link_with_alias_index(
     mention_col: str,
     threshold: float = 0.7,
     k: int = 1,
-    n: int | None = None,
-    n_buckets: int | None = None,
     prune_buckets: bool = True,
     probe_stats: dict | None = None,
 ) -> DataFrame:
@@ -965,8 +795,8 @@ def link_with_alias_index(
     ``link_by_tfidf`` with the same fit parameters (parity-tested),
     but the ontology fit is amortized away and the index scan prunes
     to the mention grams' buckets. The bucket list is a bounded
-    driver-side collect (≤ n_buckets integers — a constant, not data
-    scale).
+    driver-side collect (≤ ALIAS_INDEX_BUCKETS integers — a constant,
+    not data scale).
 
     Champion probe — on exactly when the index meta's ``n_aliases``
     is ≥ :data:`CHAMPION_AUTO_MIN_ALIASES` (below that crossover the
@@ -1016,12 +846,11 @@ def link_with_alias_index(
     ``certified_fraction`` and ``used_champions``; filling it adds one
     more bounded count job — leave it None on latency-sensitive paths.
 
-    ``n`` / ``n_buckets`` default to the values persisted by
-    :func:`save_alias_index` (the ``meta`` parquet); passing explicit
-    values that disagree with the fit raises instead of silently
-    pruning every posting into the wrong bucket (ADVICE r09). A
-    directory without ``meta`` is not an index this module wrote and
-    raises ``ValueError`` naming the path.
+    An index whose ``meta`` parquet records another gram size or bucket
+    count than :data:`GRAM_N` / :data:`ALIAS_INDEX_BUCKETS` raises
+    ``ValueError`` instead of silently pruning every posting into the
+    wrong bucket (ADVICE r09). A directory without ``meta`` is not an
+    index this module wrote and raises ``ValueError`` naming the path.
 
     ``prune_buckets``: bucket pruning costs one extra job (mention
     grams → distinct bucket ids → driver collect) to save index scan
@@ -1042,9 +871,9 @@ def link_with_alias_index(
     cannot release them itself (ADVICE r11)."""
     from drugbankner_spark.operators.similarity import _read_index
 
-    # path → (n, n_buckets, n_aliases): the meta parquet is 1 row and
-    # immutable per publish, so one read per session is enough;
-    # re-reading it per probe cost a driver job on the serving hot path
+    # path → n_aliases: the meta parquet is 1 row and immutable per
+    # publish, so one read per session is enough; re-reading it per
+    # probe cost a driver job on the serving hot path
     metas = session_memo(spark).setdefault("alias_meta", {})
     if path not in metas:
         if not _dir_has_parquet(spark, path + "/meta"):
@@ -1054,22 +883,16 @@ def link_with_alias_index(
                 "save_alias_index"
             )
         meta = _read_index(spark, path + "/meta").collect()[0]
-        metas[path] = (
-            int(meta["n"]), int(meta["n_buckets"]), int(meta["n_aliases"])
-        )
-    fit_n, fit_buckets, fit_n_aliases = metas[path]
-    if n is not None and n != fit_n:
-        raise ValueError(
-            f"alias index at {path!r} was fit with n={fit_n}, "
-            f"probe requested n={n}: grams would hash into different "
-            "buckets and matches would be silently pruned"
-        )
-    if n_buckets is not None and n_buckets != fit_buckets:
-        raise ValueError(
-            f"alias index at {path!r} was fit with n_buckets="
-            f"{fit_buckets}, probe requested n_buckets={n_buckets}"
-        )
-    n, n_buckets = fit_n, fit_buckets
+        fit = (int(meta["n"]), int(meta["n_buckets"]))
+        if fit != (GRAM_N, ALIAS_INDEX_BUCKETS):
+            raise ValueError(
+                f"alias index at {path!r} was fit with (n, n_buckets)="
+                f"{fit}, this linker uses {(GRAM_N, ALIAS_INDEX_BUCKETS)}:"
+                " grams would hash into different buckets and matches "
+                "would be silently pruned; rebuild it with save_alias_index"
+            )
+        metas[path] = int(meta["n_aliases"])
+    fit_n_aliases = metas[path]
 
     distinct_mentions = _distinct_mentions(mentions, mention_col)
 
@@ -1080,18 +903,16 @@ def link_with_alias_index(
         return out.select(*cols)
 
     buckets = None
-    mcounts = char_wb_gram_counts(
-        distinct_mentions, "mention", "mention", n
-    )
+    mcounts = char_wb_gram_counts(distinct_mentions, "mention", "mention")
     if prune_buckets:
         buckets = [
             r["b"]
             for r in mcounts.select(
-                _gram_bucket(F.col("gram"), n_buckets).alias("b")
+                _gram_bucket(F.col("gram")).alias("b")
             ).distinct().collect()
         ]
     postings = _gram_side("/postings", ["gram", "alias", "w"], buckets)
-    idf = _gram_side("/idf", ["gram", "idf", "df"], buckets)
+    idf = _gram_side("/idf", ["gram", "idf"], buckets)
     alias_map = _read_index(spark, path + "/alias_map")
     if fit_n_aliases < CHAMPION_AUTO_MIN_ALIASES:
         if probe_stats is not None:
@@ -1119,7 +940,7 @@ def link_with_alias_index(
         abuckets = [
             r["b"]
             for r in cand.select(
-                _gram_bucket(F.col("alias"), n_buckets).alias("b")
+                _gram_bucket(F.col("alias")).alias("b")
             ).distinct().collect()
         ]
         avecs = _read_index(spark, path + "/alias_vecs").filter(
@@ -1135,7 +956,7 @@ def link_with_alias_index(
         .select("mention", "alias",
                 (F.col("mw") * F.col("w")).alias("_prod"))
     )
-    width = _pin_width("rerank", mvec, n_aliases=fit_n_aliases)
+    width = _pin_width("rerank", mvec, fit_n_aliases)
     if width:
         rerank_products = _mention_clustered(rerank_products, width)
     scored = (
@@ -1199,6 +1020,6 @@ def link_with_alias_index(
     # the persisted mention vectors (no second vectorization)
     risky_out = _score_full(
         mvec.join(maybe_broadcast(risky), "mention", "left_semi"),
-        postings, idf, alias_map, threshold, k,
+        postings, alias_map, threshold, k,
     )
     return safe_out.unionByName(risky_out)

@@ -25,9 +25,8 @@ cluster_id asc); documented divergence per SURVEY.md §2.4 A1.
 
 Scale note: at 100 TB the *query* side is huge, not the dims; every join
 here broadcasts the dim and AQE's skew-join handles Zipfian name keys.
-If the synonymizer itself outgrew broadcast range (~10^9 nodes), the same
-code runs as a shuffle hash join — switch by dropping the broadcast hint
-via ``Synonymizer(..., broadcast_dims=False)``.
+A synonymizer past broadcast range (~10^9 nodes) would need its hints
+dropped; no snapshot comes near that, so the hint is unconditional.
 """
 
 from __future__ import annotations
@@ -98,18 +97,13 @@ class Synonymizer:
         nodes: DataFrame,
         clusters: DataFrame,
         edges: DataFrame | None = None,
-        broadcast_dims: bool = True,
     ):
         self.nodes = nodes
         self.clusters = clusters
         self.edges = edges
-        self._hint = F.broadcast if broadcast_dims else (lambda df: df)
         self._prefix_cache: list[str] | None = None
 
     # -- internals ---------------------------------------------------------
-
-    def _dim(self, df: DataFrame) -> DataFrame:
-        return self._hint(df)
 
     def _curie_hits(self) -> DataFrame:
         """nodes ⋈ clusters keyed by id_simplified (J1)."""
@@ -164,7 +158,7 @@ class Synonymizer:
         (curie, name, biolink-category); misses → NULLs.
         """
         key = capitalize_curie_prefix(F.col(curie_col))
-        hits = self._dim(
+        hits = F.broadcast(
             self._curie_hits().select(
                 F.col("id_simplified").alias("_key"),
                 F.col("cluster_id").alias(f"{prefix}preferred_curie"),
@@ -182,7 +176,7 @@ class Synonymizer:
         """get_canonical_curies(names=...) (node_synonymizer.py:88-119):
         simplify the name, probe name_simplified, mode-vote the cluster."""
         key = simplify_name(F.col(name_col))
-        hits = self._dim(
+        hits = F.broadcast(
             self._name_hits().select(
                 F.col("name_simplified").alias("_nkey"),
                 F.col("cluster_id").alias(f"{prefix}preferred_curie"),
@@ -210,7 +204,7 @@ class Synonymizer:
         from drugbankner_spark.operators.relational import fuzzy_join
 
         probes = df.withColumn("_nkey", simplify_name(F.col(name_col)))
-        dim = self._dim(
+        dim = F.broadcast(
             self._name_hits().select(
                 F.col("name_simplified"),
                 F.col("cluster_id").alias("preferred_curie"),
@@ -319,7 +313,7 @@ class Synonymizer:
         member_ids array; misses → NULL array."""
         c = self.canonical_from_curies(df, entity_col, prefix="c_")
         cn = self.canonical_from_names(c, entity_col, prefix="n_")
-        members = self._dim(
+        members = F.broadcast(
             self.clusters.select(
                 F.col("cluster_id").alias("_mcid"), "member_ids"
             )
@@ -357,7 +351,7 @@ class Synonymizer:
         JSON shape is an aggregation over this (sink-time concern).
         """
         eq = self.equivalent_nodes(df, entity_col, explode=True)
-        node_info = self._dim(
+        node_info = F.broadcast(
             self.nodes.select(
                 F.col("id").alias("equivalent_id"),
                 F.col("name").alias("label"),
@@ -374,7 +368,7 @@ class Synonymizer:
                 F.col("cluster_id"),
             )
         )
-        rep = self._dim(
+        rep = F.broadcast(
             self.clusters.select(
                 F.col("cluster_id"),
                 F.col("name").alias("cluster_preferred_name"),
@@ -390,7 +384,7 @@ class Synonymizer:
         nodes and intra-cluster edges for a set of cluster ids, via
         semi-join against the exploded id lists."""
         want = cluster_ids.select(F.col(cluster_ids.columns[0]).alias("cluster_id"))
-        cl = self.clusters.join(self._dim(want), "cluster_id")
+        cl = self.clusters.join(F.broadcast(want), "cluster_id")
         member_ids = cl.select(F.explode("member_ids").alias("id"))
         nodes_out = self.nodes.join(member_ids, "id", "left_semi").select(
             "id", "category", "name"

@@ -497,3 +497,21 @@ def test_g_kcore_registry_row_uses_hindex_not_peeling(spark):
     src = inspect.getsource(E.all_queries()["g_kcore"])
     assert "coreness_hindex" in src
     assert "kcore_decomposition(" not in src
+
+
+def test_components_raise_when_round_budget_runs_out(spark):
+    # a 40-node path needs ~40 propagation rounds: the default budget of
+    # 25 ends before the fingerprint confirms a fixed point, and the
+    # star form needs more than one round; both raise, naming the budget
+    import pytest
+
+    from drugbankner_spark.operators.graph import connected_components_star
+
+    e = _edges(spark, [(i, i + 1) for i in range(39)])
+    with pytest.raises(ValueError, match="max_iterations=25"):
+        connected_components(e)
+    with pytest.raises(ValueError, match="max_iterations=1 "):
+        connected_components_star(e, max_iterations=1)
+    # the star form's default budget is ample for the same path
+    rows = connected_components_star(e).collect()
+    assert {r["component"] for r in rows} == {0}

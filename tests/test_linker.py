@@ -26,7 +26,7 @@ def test_char_wb_gram_semantics(spark):
     df = spark.createDataFrame([("Ab cd", 1), ("x", 2)], ["t", "i"])
     got = {
         (r["_id"], r["gram"]): r["tf"]
-        for r in char_wb_gram_counts(df, "t", "i", n=3).collect()
+        for r in char_wb_gram_counts(df, "t", "i").collect()
     }
     assert got == {
         (1, " ab"): 1, (1, "ab "): 1,         # token 'ab' padded ' ab '
@@ -297,52 +297,51 @@ def test_alias_index_probe_prunes_partitions(spark, tmp_path):
 
 
 def test_alias_index_probe_validates_fit_params(spark, tmp_path):
-    # ADVICE r09: a probe whose n / n_buckets differ from the fit used
-    # to hash grams into buckets would silently prune every posting —
-    # the persisted meta parquet must make that a loud error, an
-    # unparameterized probe must auto-load the fit values, and an
-    # index without meta must fail loudly, naming its path.
+    # ADVICE r09: an index whose stored gram size or bucket count differs
+    # from the linker's constants would hash grams into other buckets and
+    # silently prune every posting — the stored /meta must make that a
+    # loud error; an index without meta must fail loudly, naming its path.
+    import shutil
+
     import pytest
 
-    from drugbankner_spark.operators.linker import (
-        link_with_alias_index,
-        save_alias_index,
-    )
+    from drugbankner_spark.operators import linker as L
 
     aliases = spark.createDataFrame(
         [("aspirin", 1), ("ecotrin", 3)], ["alias", "alias_id"]
     )
     mentions = spark.createDataFrame([("aspirin",)], ["mention"])
     path = str(tmp_path / "alias_idx")
-    save_alias_index(aliases, "alias", "alias_id", path, n=4,
-                     n_buckets=16)
-    # auto-load: no n/n_buckets passed, fit values recovered from meta
-    out = link_with_alias_index(
+    L.save_alias_index(aliases, "alias", "alias_id", path)
+    meta = spark.read.parquet(path + "/meta").collect()[0]
+    assert (meta["n"], meta["n_buckets"]) == (
+        L.GRAM_N, L.ALIAS_INDEX_BUCKETS
+    )
+    out = L.link_with_alias_index(
         spark, path, mentions, "mention", threshold=0.3, k=1
     ).collect()
     assert [r["alias_id"] for r in out] == [1]
-    # explicit matching values still fine
-    assert link_with_alias_index(
-        spark, path, mentions, "mention", threshold=0.3, k=1,
-        n=4, n_buckets=16,
-    ).count() == 1
-    with pytest.raises(ValueError, match="was fit with n=4"):
-        link_with_alias_index(
-            spark, path, mentions, "mention", n=3
-        )
-    with pytest.raises(ValueError, match="n_buckets=16"):
-        link_with_alias_index(
-            spark, path, mentions, "mention", n_buckets=64
-        )
+    # the same index under a hand-written meta: a 4-gram fit, then a
+    # 16-bucket one
+    for tag, n, n_buckets in (("n4", 4, L.ALIAS_INDEX_BUCKETS),
+                              ("b16", L.GRAM_N, 16)):
+        bad = str(tmp_path / f"bad_{tag}")
+        shutil.copytree(path, bad)
+        spark.range(1).select(
+            F.lit(n).cast("int").alias("n"),
+            F.lit(n_buckets).cast("int").alias("n_buckets"),
+            F.lit(None).cast("double").alias("max_df_ratio"),
+            F.lit(2).cast("int").alias("n_aliases"),
+            F.lit(0.2).cast("double").alias("champion_w_cut"),
+        ).write.mode("overwrite").parquet(bad + "/meta")
+        with pytest.raises(ValueError, match=rf"\({n}, {n_buckets}\)"):
+            L.link_with_alias_index(spark, bad, mentions, "mention")
     # a directory without the /meta fit metadata is rejected by path
-    # instead of being probed with guessed n / n_buckets
-    import shutil
-
     bare = str(tmp_path / "no_meta_idx")
-    save_alias_index(aliases, "alias", "alias_id", bare)
+    shutil.copytree(path, bare)
     shutil.rmtree(bare + "/meta")
     with pytest.raises(ValueError, match="no_meta_idx"):
-        link_with_alias_index(spark, bare, mentions, "mention")
+        L.link_with_alias_index(spark, bare, mentions, "mention")
 
 
 def test_auto_champion_w_cut_quantile_math(spark):
@@ -535,97 +534,42 @@ def test_weight_policy_bulk_gate_and_pinned_exchanges(
     assert "REPARTITION_BY_NUM" in plan()
     assert L.LAST_PIN_DECISION["rerank"]["width"] >= 2
     assert sorted(tuple(r) for r in probe().collect()) == rows[4]
-    # flat-path pins, gated by ESTIMATED PRODUCT ROWS (round 14 — the
-    # r13 posting-count gate taxed mid-scale data where AQE's
-    # coalesced plan was strictly better): the estimate job is skipped
-    # entirely below LINKER_PIN_MIN_POSTINGS; with the product gate
-    # forced open the gram-side and mention-side repartitions survive
-    # as REPARTITION_BY_NUM (not elided, not AQE-coalescible).
+    # flat-path pins, gated by the posting count that the probe tail
+    # already holds: the gate itself runs no Spark job, and at the
+    # default floor the plan is left to AQE
     monkeypatch.setattr(L, "CHAMPION_AUTO_MIN_ALIASES", 10**9)
-    monkeypatch.setattr(L, "LINKER_PIN_MIN_PRODUCT_ROWS", 1)
+    tracker = spark.sparkContext.statusTracker()
+    gate_jobs = []
+    real_gate = L._pin_width
+
+    def counted_gate(site, df, count):
+        before = set(tracker.getJobIdsForGroup(None))
+        width = real_gate(site, df, count)
+        gate_jobs.append(set(tracker.getJobIdsForGroup(None)) - before)
+        return width
+
+    monkeypatch.setattr(L, "_pin_width", counted_gate)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
     assert "REPARTITION_BY_NUM" not in plan()
-    monkeypatch.setattr(L, "LINKER_PIN_MIN_POSTINGS", 1)
-    assert "REPARTITION_BY_NUM" in plan()
-    assert L.LAST_PIN_DECISION["score_full"]["width"] >= 2
-    assert L.LAST_PIN_DECISION["score_full"]["est_products"] > 0
-    assert sorted(tuple(r) for r in probe().collect()) == rows[4]
-    # the estimate itself gates: a sky-high product threshold keeps
-    # the coalesced plan even above the posting floor
-    monkeypatch.setattr(L, "LINKER_PIN_MIN_PRODUCT_ROWS", 10**15)
-    assert "REPARTITION_BY_NUM" not in plan()
-
-
-def test_pin_estimate_from_published_df_dim(spark, tmp_path,
-                                            monkeypatch):
-    # VERDICT r14 next #1: the pin gate's product estimate prices its
-    # posting side from the (gram, df) dim the fit publishes with
-    # /idf — df == posting-list length by construction, so the
-    # estimate equals Σ_gram (mention grams × postings) without a
-    # posting agg per batch plan. Also covers ADVICE r14: every exit
-    # of the score_full gate records LAST_PIN_DECISION.
-    from drugbankner_spark.caching import session_memo
-    from drugbankner_spark.operators import linker as L
-
-    aliases = spark.createDataFrame(
-        [("aspirin", 1), ("ecotrin", 3), ("fever", 9), ("aspirin jr", 4)],
-        ["alias", "alias_id"],
-    )
-    mentions = spark.createDataFrame(
-        [("aspirin",), ("fever",)], ["mention"]
-    )
-    path = str(tmp_path / "df_idx")
-    L.save_alias_index(aliases, "alias", "alias_id", path)
-
-    # the published /idf carries df == per-gram posting-list length
-    idf_disk = spark.read.parquet(path + "/idf")
-    post_cnt = spark.read.parquet(path + "/postings").groupBy("gram").agg(
-        F.count(F.lit(1)).alias("_pcnt")
-    )
-    mism = (
-        idf_disk.select("gram", "df")
-        .join(post_cnt, "gram", "full")
-        .filter(
-            F.col("df").isNull() | F.col("_pcnt").isNull()
-            | (F.col("df") != F.col("_pcnt"))
-        )
-        .count()
-    )
-    assert mism == 0
-
-    def decide():
-        L.LAST_PIN_DECISION.clear()
-        L.link_with_alias_index(
-            spark, path, mentions, "mention", threshold=0.3, k=1,
-            prune_buckets=False,
-        ).collect()
-        return dict(L.LAST_PIN_DECISION["score_full"])
-
-    # default floors on a tiny fixture: below-floor decision recorded
-    dec = decide()
-    assert dec["reason"] == "below-floor" and dec["width"] == 0
-
-    # estimate path: the number equals the posting-table aggregation
-    monkeypatch.setattr(L, "LINKER_PIN_MIN_POSTINGS", 1)
-    session_memo(spark).pop("pin_estimate", None)
-    dec = decide()
-    assert dec["reason"] == "estimate" and dec["width"] == 0
-    want = (
-        L.char_wb_gram_counts(mentions, "mention", "mention")
-        .groupBy("gram").agg(F.count(F.lit(1)).alias("_mcnt"))
-        .join(post_cnt, "gram")
-        .agg(F.sum(F.col("_mcnt") * F.col("_pcnt")))
-        .collect()[0][0]
-    )
-    assert dec["est_products"] == want > 0
-
-    # posting floor: pins full width without paying the estimate job
+    n_post = spark.read.parquet(wpath + "/postings").count()
+    assert L.LAST_PIN_DECISION["score_full"] == {
+        "n_postings": n_post, "width": 0, "reason": "below-floor",
+    }
+    # above the floor both pinned exchanges survive as
+    # REPARTITION_BY_NUM (not elided, not AQE-coalescible): the gram-keyed
+    # one under the join's mention side, the mention-keyed one over the
+    # products
     monkeypatch.setattr(L, "LINKER_PIN_FULL_MIN_POSTINGS", 1)
-    dec = decide()
-    assert dec["reason"] == "posting-floor"
-    assert dec["est_products"] is None
-    assert dec["width"] == int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    pinned = [ln for ln in plan().splitlines() if "REPARTITION_BY_NUM" in ln]
+    assert any("hashpartitioning(gram" in ln for ln in pinned), pinned
+    assert any("hashpartitioning(mention" in ln for ln in pinned), pinned
+    assert L.LAST_PIN_DECISION["score_full"] == {
+        "n_postings": n_post,
+        "width": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "reason": "posting-floor",
+    }
+    assert sorted(tuple(r) for r in probe().collect()) == rows[4]
+    assert gate_jobs and not any(gate_jobs)
 
 
 def test_champion_probe_stats_and_zero_risky_fast_path(
@@ -707,10 +651,15 @@ def test_fit_counts_whitespace_alias_in_n(spark):
     )
     postings, idf, n = build_alias_vectors(aliases, "alias")
     assert n == 3
+    # df is the gram's posting-list length: one posting per (gram, alias)
+    df = {
+        r["gram"]: r["count"]
+        for r in postings.groupBy("gram").count().collect()
+    }
     rows = idf.collect()
-    assert rows
+    assert rows and {r["gram"] for r in rows} == set(df)
     for r in rows:
-        assert r["idf"] == math.log((1 + n) / (1 + r["df"])) + 1
+        assert r["idf"] == math.log((1 + n) / (1 + df[r["gram"]])) + 1
     # the whitespace alias has no posting; the others are unit vectors
     norms = {
         r["alias"]: r["s"] for r in postings.groupBy("alias")
