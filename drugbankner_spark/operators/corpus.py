@@ -214,6 +214,7 @@ def ingest_clean_batch(
     import os
 
     from drugbankner_spark.operators import dedup as D
+    from drugbankner_spark.operators.scale import write_partitioned
 
     from pyspark.errors import AnalysisException
 
@@ -288,17 +289,14 @@ def ingest_clean_batch(
     # snapshot.
     admitted = fresh.localCheckpoint(eager=True)
 
-    admitted.write.mode("append").parquet(corpus_path)
+    # both writes go through the scale.py index store, which refreshes
+    # the session's listing of each path — without that, this ingest's
+    # rows would be invisible to the next batch and to the re-read below
+    write_partitioned(admitted, corpus_path, [], mode="append")
     if bootstrapped:
         D.append_to_minhash_band_table(admitted, bands_path, text_col, id_col)
     else:
         D.build_minhash_band_table(admitted, bands_path, text_col, id_col)
-    # the session's FileStatusCache still holds the PRE-append listing
-    # for both state paths (the reads above populated it) — refresh, or
-    # this ingest's rows are invisible to the next batch and to the
-    # returned re-read
-    spark.catalog.refreshByPath(corpus_path)
-    spark.catalog.refreshByPath(bands_path)
     return spark.read.parquet(corpus_path).join(
         admitted.select(id_col), id_col, "semi"
     )

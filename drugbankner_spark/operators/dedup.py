@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from drugbankner_spark.caching import shared_persist
+from drugbankner_spark.operators.scale import read_index, write_partitioned
 from drugbankner_spark.tables import fits_one_task
 
 #: Modulus for MinHash permutations: smallest prime > 2^32.
@@ -306,11 +307,10 @@ def build_minhash_band_table(
     bytes per document) instead of rescanning bodies. The near-dup twin
     of ``incremental_exact_dedup``'s digest index and
     ``append_to_lsh_index``'s layout."""
-    (
+    write_partitioned(
         _banded_keys(df, text_col, id_col, num_hashes, n, bands,
-                     rows_per_band, kernel)
-        .repartition("band")
-        .write.mode("overwrite").partitionBy("band").parquet(path)
+                     rows_per_band, kernel),
+        path, ["band"],
     )
 
 
@@ -321,11 +321,10 @@ def append_to_minhash_band_table(
 ) -> None:
     """Add a batch's band keys to the stored table — O(batch), appends
     files only under the batch's band partitions."""
-    (
+    write_partitioned(
         _banded_keys(new_docs, text_col, id_col, num_hashes, n, bands,
-                     rows_per_band, kernel)
-        .repartition("band")
-        .write.mode("append").partitionBy("band").parquet(path)
+                     rows_per_band, kernel),
+        path, ["band"], mode="append",
     )
 
 
@@ -351,7 +350,7 @@ def incremental_near_dup_pairs(
         new_docs, text_col, id_col, num_hashes, n, bands, rows_per_band,
         kernel,
     ))
-    stored = spark.read.parquet(path)
+    stored = read_index(spark, path)
     vs_stored = (
         new_banded.select(F.col(id_col).alias("id_a"), "band", "band_key")
         .join(

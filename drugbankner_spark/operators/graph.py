@@ -312,60 +312,9 @@ def pagerank(
     every few rounds (the connected-components discipline).
     Output: (node, rank); ranks sum to 1.
     """
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+    return _power_iteration(
+        edges, None, n_iters, damping, src, dst, checkpoint_every
     )
-    n_total = nodes.count()
-    if n_total == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    # static per-iteration inputs: node ⋈ out-degree, checkpointed once
-    base = (
-        nodes.join(
-            out_deg.withColumnRenamed("src", "node"), "node", "left"
-        )
-        .select("node", F.coalesce("out_deg", F.lit(0)).alias("out_deg"))
-        .localCheckpoint(eager=True)
-    )
-    ranks = base.select("node", F.lit(1.0 / n_total).alias("rank"))
-    for i in range(n_iters):
-        with_deg = ranks.join(base, "node")
-        dangling = with_deg.filter(F.col("out_deg") == 0).agg(
-            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass")
-        )  # 1-row build side
-        contrib = (
-            e.join(
-                with_deg.filter(F.col("out_deg") > 0)
-                .withColumnRenamed("node", "src"),
-                "src",
-            )
-            .select("dst", (F.col("rank") / F.col("out_deg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("inflow"))
-        )
-        ranks = (
-            base.select("node")
-            .join(contrib.withColumnRenamed("dst", "node"), "node", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "node",
-                (
-                    F.lit((1.0 - damping) / n_total)
-                    + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inflow"), F.lit(0.0))
-                        + F.col("mass") / F.lit(float(n_total))
-                    )
-                ).alias("rank"),
-            )
-        )
-        if (i + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
-    return ranks
 
 
 def personalized_pagerank(
@@ -383,14 +332,31 @@ def personalized_pagerank(
     signal (seed a topic's known-good hosts, rank the rest of the link
     graph by affinity to them; also the classic recommender walk).
 
-    Same power-iteration shape as :func:`pagerank` (one edges⋈ranks
-    join + one dest-keyed sum per round, 1-row dangling broadcast,
-    lineage cut every few rounds); the teleport vector rides ``base``
-    as a column, so seeds cost nothing extra per iteration. Ranks sum
-    to 1 over reachable nodes; nodes unreachable from the seeds
-    converge to 0."""
+    Same power iteration as :func:`pagerank`; the teleport vector rides
+    ``base`` as a column, so seeds cost nothing extra per iteration.
+    Ranks sum to 1 over reachable nodes; nodes unreachable from the
+    seeds converge to 0."""
     if not seeds:
         raise ValueError("personalized_pagerank: seeds must be non-empty")
+    return _power_iteration(
+        edges, list(seeds), n_iters, damping, src, dst, checkpoint_every
+    )
+
+
+def _power_iteration(
+    edges: DataFrame,
+    seeds: list | None,
+    n_iters: int,
+    damping: float,
+    src: str,
+    dst: str,
+    checkpoint_every: int,
+) -> DataFrame:
+    """The power iteration both PageRanks share: per round one
+    edges⋈ranks join + one dest-keyed sum, the dangling mass as a 1-row
+    broadcast, lineage cut every ``checkpoint_every`` rounds. ``seeds``
+    None teleports uniformly over all n nodes (one count job sizes n);
+    a seed list teleports to the seeds through a ``_tele`` column."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -398,10 +364,23 @@ def personalized_pagerank(
         .distinct()
         .localCheckpoint(eager=True)
     )
+    if seeds is None:
+        n_total = nodes.count()
+        if n_total == 0:
+            return nodes.withColumn("rank", F.lit(0.0))
+        tele_cols = []
+        start = F.lit(1.0 / n_total)
+        teleport = F.lit((1.0 - damping) / n_total)
+        spread = F.col("mass") / F.lit(float(n_total))
+    else:
+        tele_cols = [F.when(
+            F.col("node").isin(seeds), F.lit(1.0 / len(seeds))
+        ).otherwise(F.lit(0.0)).alias("_tele")]
+        start = F.col("_tele")
+        teleport = F.lit(1.0 - damping) * F.col("_tele")
+        spread = F.col("mass") * F.col("_tele")
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    tele = F.when(
-        F.col("node").isin(list(seeds)), F.lit(1.0 / len(seeds))
-    ).otherwise(F.lit(0.0))
+    # static per-iteration inputs: node ⋈ out-degree, checkpointed once
     base = (
         nodes.join(
             out_deg.withColumnRenamed("src", "node"), "node", "left"
@@ -409,16 +388,17 @@ def personalized_pagerank(
         .select(
             "node",
             F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            tele.alias("_tele"),
+            *tele_cols,
         )
         .localCheckpoint(eager=True)
     )
-    ranks = base.select("node", F.col("_tele").alias("rank"))
+    keep = ["node", *(["_tele"] if tele_cols else [])]
+    ranks = base.select("node", start.alias("rank"))
     for i in range(n_iters):
         with_deg = ranks.join(base, "node")
         dangling = with_deg.filter(F.col("out_deg") == 0).agg(
             F.coalesce(F.sum("rank"), F.lit(0.0)).alias("mass")
-        )
+        )  # 1-row build side
         contrib = (
             e.join(
                 with_deg.filter(F.col("out_deg") > 0)
@@ -430,18 +410,15 @@ def personalized_pagerank(
             .agg(F.sum("c").alias("inflow"))
         )
         ranks = (
-            base.select("node", "_tele")
+            base.select(*keep)
             .join(contrib.withColumnRenamed("dst", "node"), "node", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
                 "node",
                 (
-                    F.lit(1.0 - damping) * F.col("_tele")
+                    teleport
                     + F.lit(damping)
-                    * (
-                        F.coalesce(F.col("inflow"), F.lit(0.0))
-                        + F.col("mass") * F.col("_tele")
-                    )
+                    * (F.coalesce(F.col("inflow"), F.lit(0.0)) + spread)
                 ).alias("rank"),
             )
         )

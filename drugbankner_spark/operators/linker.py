@@ -53,6 +53,7 @@ from drugbankner_spark.caching import (
     session_memo,
     shared_persist,
 )
+from drugbankner_spark.operators.scale import read_index, write_partitioned
 from drugbankner_spark.tables import BROADCAST_MAX_ROWS, maybe_broadcast
 
 
@@ -541,48 +542,6 @@ def _gram_bucket(col):
     return F.pmod(F.xxhash64(col), F.lit(ALIAS_INDEX_BUCKETS)).cast("int")
 
 
-def _dir_has_parquet(spark, path: str) -> bool:
-    """Driver-side recursive listing for at least one parquet data
-    file — Hadoop FS API, so any production filesystem works."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(p):
-        return False
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            return True
-    return False
-
-
-def _write_bucket_partitioned(
-    df: DataFrame, path: str, bucket_col: str
-) -> None:
-    """Bucket-partitioned index-sub write, repartitioned ON the bucket
-    key first so the layout is ~1 file per bucket (a 2048-file index
-    made the probe slower than the fit it amortizes — BENCH_r09).
-    An EMPTY frame needs a plain fallback write: a partitioned write of
-    zero rows leaves a directory with no parquet footers, which the
-    probe's read cannot infer a schema from (round 13 — the weight
-    policy's cutoffs table is legitimately empty when nothing is
-    excluded); the plain write keeps the bucket column as an ordinary
-    int column, so probe-side bucket filters still resolve.
-
-    Round 16 (guide §1/§5): emptiness is detected AFTER the write by a
-    driver-side file listing, not by a ``take(1)`` pre-probe — under
-    AQE each take(1) planned the full query as its own multi-stage job
-    cascade over the (possibly cold) fit caches; five probes per
-    publish summed to ~10 s of job time at sf0.1 (measured, round 16).
-    The listing costs no Spark job, and only a genuinely empty frame
-    pays the tiny fallback rewrite."""
-    df.repartition(ALIAS_INDEX_BUCKETS, bucket_col).write.mode(
-        "overwrite"
-    ).partitionBy(bucket_col).parquet(path)
-    if not _dir_has_parquet(df.sparkSession, path):
-        df.write.mode("overwrite").parquet(path)
-
-
 def _auto_champion_w_cut(
     postings: DataFrame,
     rms_factor: float = ALIAS_WCUT_RMS_FACTOR,
@@ -657,10 +616,6 @@ def save_alias_index(
     two filters + a map-side-combinable max agg — no ranking pass,
     nothing skew-sensitive at build time; ``max_df_ratio`` remains the
     PROBE-side stop-gram lever (it shrinks the posting join itself)."""
-    from drugbankner_spark.operators.similarity import (
-        invalidate_index_cache,
-    )
-
     spark = aliases.sparkSession
     # the fit is consumed by up to five actions inside this function
     # (w_cut sizing, postings/champions/cutoffs/alias_vecs writes);
@@ -670,16 +625,18 @@ def save_alias_index(
     # persists here — unlike the lazy probe subtrees (a long-lived
     # publisher must not accumulate one fit cache per published index).
     with cache_scope():
-        alias_map = _alias_map(aliases, alias_col, alias_id_col)
+        # alias_map feeds the fit's distinct-texts scan plus the
+        # /alias_map write below — persisted BEFORE the fit, whose eager
+        # collect then fills the cache, so the distinct shuffle runs once
+        # per publish. The fit's own N (needed up front: the RMS factor
+        # is two-regime by ontology size, round 14; persisted in the meta
+        # below) rides out of the fit itself (round 16).
+        alias_map = shared_persist(
+            _alias_map(aliases, alias_col, alias_id_col)
+        )
         postings, idf, n_aliases = build_alias_vectors(
             alias_map, "alias", max_df_ratio=max_df_ratio
         )
-        # alias_map feeds the /alias_map write below plus the fit's
-        # distinct-texts scan — persist so the distinct shuffle runs once
-        # per publish (round 15). The fit's own N (needed up front: the
-        # RMS factor is two-regime by ontology size, round 14; persisted
-        # in the meta below) rides out of the fit itself (round 16).
-        alias_map = shared_persist(alias_map)
         # the quantile collect doubles as the postings cache warm, so the
         # write pool's concurrent consumers read blocks, not cold copies
         # of the fit (round 16, guide §2.3/§5)
@@ -703,18 +660,22 @@ def save_alias_index(
         )
 
         def _by_gram(df: DataFrame, sub: str):
-            return lambda: _write_bucket_partitioned(
+            return lambda: write_partitioned(
                 df.withColumn(
                     "gram_bucket", _gram_bucket(F.col("gram"))
-                ), path + sub, "gram_bucket",
+                ), path + sub, ["gram_bucket"],
             )
 
-        # repartition ON the bucket key before the partitioned write: each
-        # task then owns whole buckets, so the layout is ~1 file per bucket
-        # instead of (shuffle tasks × buckets) tiny files — the probe-side
-        # scan pays per-file footer/open costs, and a 2048-file index made
-        # the serving probe SLOWER than the inline fit it amortizes
-        # (BENCH_r09: 13.4 s vs 10.5 s at sf1).
+        # Every sub goes through the scale.py index store, which
+        # repartitions ON the bucket key before the partitioned write:
+        # each task then owns whole buckets, so the layout is ~1 file per
+        # bucket instead of (shuffle tasks × buckets) tiny files — the
+        # probe-side scan pays per-file footer/open costs, and a
+        # 2048-file index made the serving probe SLOWER than the inline
+        # fit it amortizes (BENCH_r09: 13.4 s vs 10.5 s at sf1). An empty
+        # sub (the cutoffs table is legitimately empty when the cut
+        # excludes nothing) is written plain, so the probe still reads
+        # it.
         #
         # The index subs are INDEPENDENT actions over the same persisted
         # fit, and each write's tail (commit protocol, small-bucket tasks)
@@ -738,18 +699,18 @@ def save_alias_index(
         write_jobs = [
             ("postings", _by_gram(postings, "/postings")),
             ("idf", _by_gram(idf, "/idf")),
-            ("alias_map", lambda: alias_map.write.mode("overwrite").parquet(
-                path + "/alias_map"
+            ("alias_map", lambda: write_partitioned(
+                alias_map, path + "/alias_map", []
             )),
             ("champions", _by_gram(champs, "/champions")),
             ("cutoffs", _by_gram(cuts, "/cutoffs")),
-            ("alias_vecs", lambda: _write_bucket_partitioned(
+            ("alias_vecs", lambda: write_partitioned(
                 postings.withColumn(
                     "alias_bucket",
                     _gram_bucket(F.col("alias")),
-                ), path + "/alias_vecs", "alias_bucket",
+                ), path + "/alias_vecs", ["alias_bucket"],
             )),
-            ("meta", lambda: spark.range(1).select(
+            ("meta", lambda: write_partitioned(spark.range(1).select(
                 F.lit(GRAM_N).cast("int").alias("n"),
                 F.lit(ALIAS_INDEX_BUCKETS).cast("int").alias("n_buckets"),
                 F.lit(
@@ -757,7 +718,7 @@ def save_alias_index(
                 ).cast("double").alias("max_df_ratio"),
                 F.lit(int(n_aliases)).cast("int").alias("n_aliases"),
                 F.lit(float(w_cut)).cast("double").alias("champion_w_cut"),
-            ).coalesce(1).write.mode("overwrite").parquet(path + "/meta")),
+            ).coalesce(1), path + "/meta", [])),
         ]
         from concurrent.futures import ThreadPoolExecutor
 
@@ -776,8 +737,6 @@ def save_alias_index(
 
         with ThreadPoolExecutor(max_workers=3) as _pool:
             list(_pool.map(_run_write, write_jobs))
-    for name, _fn in write_jobs:
-        invalidate_index_cache(spark, f"{path}/{name}")
     forget(spark, "alias_meta", path)
 
 
@@ -869,20 +828,21 @@ def link_with_alias_index(
     ``caching.release_shared_caches()`` between batches) — the caches
     are needed DURING the returned DataFrame's execution, so the probe
     cannot release them itself (ADVICE r11)."""
-    from drugbankner_spark.operators.similarity import _read_index
+    from pyspark.errors import AnalysisException
 
     # path → n_aliases: the meta parquet is 1 row and immutable per
     # publish, so one read per session is enough; re-reading it per
     # probe cost a driver job on the serving hot path
     metas = session_memo(spark).setdefault("alias_meta", {})
     if path not in metas:
-        if not _dir_has_parquet(spark, path + "/meta"):
+        try:
+            meta = read_index(spark, path + "/meta").collect()[0]
+        except AnalysisException:
             raise ValueError(
                 f"alias index at {path!r} has no /meta fit metadata — "
                 "not a save_alias_index layout; rebuild it with "
                 "save_alias_index"
-            )
-        meta = _read_index(spark, path + "/meta").collect()[0]
+            ) from None
         fit = (int(meta["n"]), int(meta["n_buckets"]))
         if fit != (GRAM_N, ALIAS_INDEX_BUCKETS):
             raise ValueError(
@@ -897,7 +857,7 @@ def link_with_alias_index(
     distinct_mentions = _distinct_mentions(mentions, mention_col)
 
     def _gram_side(sub: str, cols: list[str], buckets) -> DataFrame:
-        out = _read_index(spark, path + sub)
+        out = read_index(spark, path + sub)
         if buckets is not None:
             out = out.filter(F.col("gram_bucket").isin(buckets))
         return out.select(*cols)
@@ -913,7 +873,7 @@ def link_with_alias_index(
         ]
     postings = _gram_side("/postings", ["gram", "alias", "w"], buckets)
     idf = _gram_side("/idf", ["gram", "idf"], buckets)
-    alias_map = _read_index(spark, path + "/alias_map")
+    alias_map = read_index(spark, path + "/alias_map")
     if fit_n_aliases < CHAMPION_AUTO_MIN_ALIASES:
         if probe_stats is not None:
             probe_stats.update(
@@ -943,11 +903,11 @@ def link_with_alias_index(
                 _gram_bucket(F.col("alias")).alias("b")
             ).distinct().collect()
         ]
-        avecs = _read_index(spark, path + "/alias_vecs").filter(
+        avecs = read_index(spark, path + "/alias_vecs").filter(
             F.col("alias_bucket").isin(abuckets)
         ).select("alias", "gram", "w")
     else:
-        avecs = _read_index(spark, path + "/alias_vecs").select(
+        avecs = read_index(spark, path + "/alias_vecs").select(
             "alias", "gram", "w"
         )
     rerank_products = (

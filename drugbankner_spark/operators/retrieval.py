@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from drugbankner_spark.operators.corpus import chunk_documents
+from drugbankner_spark.operators.scale import read_index, write_partitioned
 from drugbankner_spark.operators.similarity import (
     append_to_lsh_index,
     build_lsh_index,
@@ -40,6 +41,27 @@ from drugbankner_spark.operators.textanalysis import hashed_tf_vectors
 #: One global chunk id = doc_id * CHUNK_STRIDE + chunk_index; recover
 #: either side with div/mod. Caps chunks-per-doc at CHUNK_STRIDE.
 CHUNK_STRIDE = 1_000_000
+
+
+def _chunk_vectors(
+    docs: DataFrame, path: str, mode: str, id_col: str, text_col: str,
+    chunk_tokens: int, overlap: int, dim: int,
+) -> DataFrame:
+    """Chunk ``docs``, write (``mode``) the chunk texts to the
+    ``<path>_chunks`` side table, and return the chunks' hashed vectors
+    as (chunk_id, embedding) — the step build and append share."""
+    chunks = chunk_documents(
+        docs, id_col, text_col, chunk_tokens, overlap
+    ).select(
+        (F.col(id_col) * CHUNK_STRIDE + F.col("chunk_index")).alias(
+            "chunk_id"
+        ),
+        "chunk_text",
+    )
+    write_partitioned(chunks, path + "_chunks", [], mode=mode)
+    return hashed_tf_vectors(
+        chunks, "chunk_text", "chunk_id", dim
+    ).withColumnRenamed("vector", "embedding")
 
 
 def build_text_index(
@@ -55,20 +77,10 @@ def build_text_index(
     """Chunk → vectorize → persist the bucket-partitioned ANN index at
     ``path`` plus a ``<path>_chunks`` parquet side table carrying the
     chunk text for hydration after retrieval."""
-    chunks = chunk_documents(
-        docs, id_col, text_col, chunk_tokens, overlap
-    ).select(
-        (F.col(id_col) * CHUNK_STRIDE + F.col("chunk_index")).alias(
-            "chunk_id"
-        ),
-        "chunk_text",
-    )
-    chunks.write.mode("overwrite").parquet(path + "_chunks")
-    vecs = hashed_tf_vectors(
-        chunks, "chunk_text", "chunk_id", dim
-    ).withColumnRenamed("vector", "embedding")
     build_lsh_index(
-        vecs, path, id_col="chunk_id", vec_col="embedding",
+        _chunk_vectors(docs, path, "overwrite", id_col, text_col,
+                       chunk_tokens, overlap, dim),
+        path, id_col="chunk_id", vec_col="embedding",
         num_planes=num_planes, dim=dim,
     )
 
@@ -90,20 +102,10 @@ def append_to_text_index(
     buckets). A post-append ``retrieve`` equals a fresh full build
     (parity-tested), so the 100 TB index is maintained at O(new docs),
     never rebuilt."""
-    chunks = chunk_documents(
-        new_docs, id_col, text_col, chunk_tokens, overlap
-    ).select(
-        (F.col(id_col) * CHUNK_STRIDE + F.col("chunk_index")).alias(
-            "chunk_id"
-        ),
-        "chunk_text",
-    )
-    chunks.write.mode("append").parquet(path + "_chunks")
-    vecs = hashed_tf_vectors(
-        chunks, "chunk_text", "chunk_id", dim
-    ).withColumnRenamed("vector", "embedding")
     append_to_lsh_index(
-        vecs, path, id_col="chunk_id", vec_col="embedding",
+        _chunk_vectors(new_docs, path, "append", id_col, text_col,
+                       chunk_tokens, overlap, dim),
+        path, id_col="chunk_id", vec_col="embedding",
         num_planes=num_planes, dim=dim,
     )
 
@@ -134,7 +136,7 @@ def retrieve(
         spark, path, qvecs, id_col="chunk_id", vec_col="embedding",
         k=k, num_planes=num_planes, dim=dim,
     )
-    chunks = spark.read.parquet(path + "_chunks")
+    chunks = read_index(spark, path + "_chunks")
     return (
         hits.join(
             chunks.withColumnRenamed("chunk_id", "neighbor_id"),

@@ -1,10 +1,17 @@
 """Scale utilities (SURVEY.md §4, ARCHITECTURE.md §2-3): explicit skew
-salting and bucketed co-located joins.
+salting, bucketed co-located joins, and the index store.
 
 AQE's skew-join covers the common case automatically; these are the
 manual levers for when the planner needs help — extreme Zipfian keys
 (entity names like "protein" in J2), or repeated join workloads where
 bucketing amortizes the shuffle to zero.
+
+The index store is :func:`write_partitioned` plus :func:`read_index`:
+every serving index (LSH, IVF, IVF-PQ, the MinHash band table, the text
+index, the linker's alias index) and the ingest state are written,
+appended and read through these two, so the partition layout, the
+empty-input fallback and the read memo's invalidation live in one
+place.
 """
 
 from __future__ import annotations
@@ -12,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from drugbankner_spark.caching import shared_persist
+from drugbankner_spark.caching import forget, session_memo, shared_persist
 
 
 def _hadoop_fs(spark: SparkSession, path_str: str):
@@ -27,16 +34,21 @@ def _hadoop_fs(spark: SparkSession, path_str: str):
     return fs, path
 
 
-def _tree_bytes(fs, path, suffix: str = ".parquet") -> int:
-    """Recursive size of ``suffix`` files under ``path`` — pure namespace
-    metadata (one listing), no data scan."""
-    total = 0
-    it = fs.listFiles(path, True)
+def _parquet_files(fs, path, recursive: bool = True):
+    """The ``.parquet`` file statuses under ``path`` (none when it does
+    not exist) — pure namespace metadata (one listing), no data scan."""
+    if not fs.exists(path):
+        return
+    it = fs.listFiles(path, recursive)
     while it.hasNext():
         st = it.next()
-        if st.getPath().getName().endswith(suffix):
-            total += st.getLen()
-    return total
+        if st.getPath().getName().endswith(".parquet"):
+            yield st
+
+
+def _tree_bytes(fs, path) -> int:
+    """Recursive size of the parquet files under ``path``."""
+    return sum(st.getLen() for st in _parquet_files(fs, path))
 
 
 def fact_salt_expr(salt_buckets: int):
@@ -397,8 +409,10 @@ def write_partitioned(
     partition_cols: list[str],
     max_records_per_file: int = 1_000_000,
     files_per_partition: int = 1,
+    mode: str = "overwrite",
 ) -> None:
-    """Hive-partitioned Parquet sink with explicit file-count control.
+    """Hive-partitioned Parquet sink with explicit file-count control —
+    the write side of the index store.
 
     The naive ``df.write.partitionBy(c)`` writes one file per (task ×
     partition value) — at 1000 executors × 1000 partition values that is
@@ -408,19 +422,67 @@ def write_partitioned(
     partition columns first routes each value's rows to
     ``files_per_partition`` tasks (salted when >1 so a hot value still
     splits), and ``maxRecordsPerFile`` caps the opposite failure (one
-    giant file per value)."""
-    parts = [F.col(c) for c in partition_cols]
-    if files_per_partition > 1:
-        parts.append(F.pmod(F.monotonically_increasing_id(),
-                            F.lit(files_per_partition)))
-    n_target = max(df.sparkSession.sparkContext.defaultParallelism, 1)
-    (
-        df.repartition(n_target, *parts)
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-        .partitionBy(*partition_cols)
-        .parquet(path)
-    )
+    giant file per value). With no ``partition_cols`` the write is a
+    plain one (side tables, fit metadata, ingest state).
+
+    ``mode='append'`` adds files only under the partitions the new rows
+    land in; existing partitions are untouched, so maintaining an index
+    costs O(new data). A partitioned write of zero rows leaves no
+    parquet footer to infer a schema from, so an empty frame is written
+    plain instead: its partition columns stay ordinary columns and a
+    probe's filters on them still resolve to an empty result. The next
+    append replaces that zero-row placeholder (a plain file beside
+    partition directories is not a readable layout). Emptiness is read
+    off a driver-side file listing after the write — no Spark job.
+
+    Every write drops the memoized :func:`read_index` of ``path``."""
+    spark = df.sparkSession
+    fs, root = _hadoop_fs(spark, path)
+    if partition_cols:
+        if mode == "append" and any(_parquet_files(fs, root, False)):
+            mode = "overwrite"  # the store holds the zero-row placeholder
+        parts = [F.col(c) for c in partition_cols]
+        if files_per_partition > 1:
+            parts.append(F.pmod(F.monotonically_increasing_id(),
+                                F.lit(files_per_partition)))
+        n_target = max(spark.sparkContext.defaultParallelism, 1)
+        (
+            df.repartition(n_target, *parts)
+            .write.mode(mode)
+            .option("maxRecordsPerFile", max_records_per_file)
+            .partitionBy(*partition_cols)
+            .parquet(path)
+        )
+    if not partition_cols or not any(_parquet_files(fs, root)):
+        df.write.mode(mode).option(
+            "maxRecordsPerFile", max_records_per_file
+        ).parquet(path)
+    _forget_read(spark, path)
+
+
+def read_index(spark: SparkSession, path: str) -> DataFrame:
+    """The read side of the index store: the analyzed read of ``path``,
+    memoized per session. Analyzing a partitioned layout lists every
+    partition directory on the driver (~0.5-1 s for a 256-bucket index)
+    — pure overhead to repeat per probe. The memoized DataFrame is lazy;
+    literal partition predicates applied on top of it still prune at
+    planning time."""
+    reads = session_memo(spark).setdefault("index_reads", {})
+    if path not in reads:
+        reads[path] = spark.read.parquet(path)
+    return reads[path]
+
+
+def _forget_read(spark: SparkSession, path: str) -> None:
+    """Drop the memoized read of ``path`` in every session and refresh
+    Spark's own file listing, so a rewritten store is never served from
+    deleted files (parquet reads resolve the listing eagerly — without
+    this, later probes hit FileNotFoundException or stale results)."""
+    forget(spark, "index_reads", path)
+    try:
+        spark.catalog.refreshByPath(path)
+    except Exception:
+        pass  # path not yet known to the catalog — nothing to refresh
 
 
 def zorder_key(cols: list[str], bits: int = 16) -> F.Column:

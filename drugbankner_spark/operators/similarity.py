@@ -21,7 +21,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from drugbankner_spark.caching import forget, session_memo, shared_persist
+from drugbankner_spark.caching import shared_persist
+from drugbankner_spark.operators.scale import (
+    read_index,
+    sharded_topk,
+    write_partitioned,
+)
 from drugbankner_spark.tables import local_df
 from pyspark.sql import types as T
 
@@ -43,7 +48,7 @@ def dot(a: Column, b: Column) -> Column:
 # that. A SQL string is assembled in pure Python and parsed JVM-side in
 # ONE call; `repr(float)` round-trips exactly through Java's
 # Double.parseDouble, so the arithmetic (and every stored bucket/cell/
-# code) is bit-identical to the Column path (parity-tested). This is
+# code) matches the DuckDB oracle bit for bit. This is
 # driver-side PLAN latency — at 1000 executors it is pure serial
 # overhead on every probe, so it matters beyond the bench.
 # ---------------------------------------------------------------------------
@@ -115,26 +120,15 @@ def hyperplane(dim: int, plane: int) -> list[float]:
     return out
 
 
-def lsh_bucket(vec: Column | str, planes: list[list[float]]) -> Column:
-    """Sign pattern of the vector against each plane → bucket key string.
-
-    Pass the column NAME (str) on hot paths: the whole expression is
-    then built as one SQL string (one Py4J call instead of ~600 — see
-    the SQL-builder note above). The Column form remains for composed
-    expressions; both produce bit-identical buckets (parity-tested)."""
-    if isinstance(vec, str):
-        parts = ",".join(
-            f"CASE WHEN {_dot_sql(vec, p)} >= 0D THEN '1' ELSE '0' END"
-            for p in planes
-        )
-        return F.expr(f"concat({parts})")
-    bits = [
-        F.when(
-            dot(vec, F.array(*[F.lit(x) for x in p])) >= 0, F.lit("1")
-        ).otherwise(F.lit("0"))
+def lsh_bucket(vec: str, planes: list[list[float]]) -> Column:
+    """Sign pattern of the column ``vec`` against each plane → bucket
+    key string, built as one SQL string (one Py4J call instead of ~600 —
+    see the SQL-builder note above)."""
+    parts = ",".join(
+        f"CASE WHEN {_dot_sql(vec, p)} >= 0D THEN '1' ELSE '0' END"
         for p in planes
-    ]
-    return F.concat(*bits)
+    )
+    return F.expr(f"concat({parts})")
 
 
 def lsh_topk(
@@ -149,8 +143,6 @@ def lsh_topk(
     """Approximate top-k: candidates = same LSH bucket, exact cosine
     re-rank on candidates only. At 100 TB the bucket join replaces the
     full cross product; recall is tested against cosine_topk."""
-    from pyspark.sql import Window
-
     planes = [hyperplane(dim, j) for j in range(num_planes)]
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"),
@@ -187,8 +179,6 @@ def lsh_topk_banded(
     P(candidate) = 1-(1-p^r)^B — so recall approaches 1 while each band's
     bucket stays selective. One equi join on (band, bucket) (bands via
     posexplode — B rows per vector, not B joins), dedupe, exact re-rank."""
-    from pyspark.sql import Window
-
     band_planes = [
         [hyperplane(dim, b * planes_per_band + j) for j in range(planes_per_band)]
         for b in range(bands)
@@ -365,24 +355,33 @@ def cluster_embeddings(
     )
 
 
-def _cell_scores(vec: Column | str, cents: list[list[float]]) -> Column:
-    """Per-centroid dot scores as an array of (sim, cell) structs — the
-    IVF coarse quantizer, shared by the inline plan and the index
-    build/probe paths so assignments always agree. Name (str) input
-    takes the one-call SQL-string path; both forms bit-identical."""
-    if isinstance(vec, str):
-        items = ",".join(
-            f"named_struct('sim', {_dot_sql(vec, c)}, 'cell', {j})"
-            for j, c in enumerate(cents)
-        )
-        return F.expr(f"array({items})")
-    return F.array(*[
-        F.struct(
-            dot(vec, F.array(*[F.lit(x) for x in c])).alias("sim"),
-            F.lit(j).alias("cell"),
-        )
+def _cell_scores(vec: str, cents: list[list[float]]) -> Column:
+    """Per-centroid dot scores of the column ``vec`` as an array of
+    (sim, cell) structs, built as one SQL string — the IVF coarse
+    quantizer, shared by the inline plan and the index build/probe
+    paths so assignments always agree."""
+    items = ",".join(
+        f"named_struct('sim', {_dot_sql(vec, c)}, 'cell', {j})"
         for j, c in enumerate(cents)
-    ])
+    )
+    return F.expr(f"array({items})")
+
+
+def _probe_cells(
+    vec_col: str, cents: list[list[float]], n_probe: int
+) -> Column:
+    """A query's ``n_probe`` best cells, one row per cell (a generator
+    expression) — the IVF probe side of the inline plan and the index
+    probes."""
+    return F.explode(
+        F.transform(
+            F.slice(
+                F.reverse(F.array_sort(_cell_scores(vec_col, cents))),
+                1, n_probe,
+            ),
+            lambda s: s["cell"],
+        )
+    )
 
 
 def _ivf_with_centroids(
@@ -397,23 +396,13 @@ def _ivf_with_centroids(
     """Shared IVF serving plan: assign corpus rows to their argmax-dot
     cell, probe each query's n_probe best cells, exact-cosine re-rank
     bucket members only."""
-    from pyspark.sql import Window
-
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"),
         F.array_max(_cell_scores(vec_col, cents))["cell"].alias("_cell"),
     )
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"),
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.reverse(F.array_sort(_cell_scores(vec_col, cents))),
-                    1, n_probe,
-                ),
-                lambda s: s["cell"],
-            )
-        ).alias("_cell"),
+        _probe_cells(vec_col, cents, n_probe).alias("_cell"),
     )
     scored = (
         c.join(F.broadcast(q), "_cell")
@@ -441,8 +430,6 @@ def cosine_topk_pandas(
     reduced per batch, exact global top-k via the final window)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
-
     qm = np.stack(queries_pdf[vec_col].to_numpy()).astype("float64")
     qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
     qids = queries_pdf[id_col].to_numpy()
@@ -510,38 +497,16 @@ def label_centroids(
 # cost of lsh_topk/ivf_topk is recomputing every corpus row's hyperplane
 # dot products; a serving deployment pays that once at build time, and
 # each probe reads only the partitions its buckets/cells live in —
-# partition pruning demonstrated in tests/test_partitioning.py.
+# partition pruning demonstrated in tests/test_partitioning.py. Every
+# family writes, appends and reads through the scale.py index store
+# (write_partitioned / read_index); each builds its stored rows in one
+# function shared by build and append, so the two can never drift.
 # --------------------------------------------------------------------------
 
 #: Serving-contract cap on probe query rows: probes collect the query
 #: side to the driver (bucket list + broadcast). Past this, use the batch
 #: operators ``lsh_topk`` / ``ivf_topk`` instead.
 PROBE_QUERY_CAP = 10_000
-
-
-def _read_index(spark, path: str) -> DataFrame:
-    """The analyzed index read, memoized per session: analyzing a
-    partitioned layout lists every partition directory on the driver
-    (~0.5-1 s for a 256-bucket index) — pure overhead to repeat per
-    probe. The memoized DataFrame is lazy; literal partition predicates
-    applied on top of it still prune at planning time."""
-    reads = session_memo(spark).setdefault("index_reads", {})
-    if path not in reads:
-        reads[path] = spark.read.parquet(path)
-    return reads[path]
-
-
-def invalidate_index_cache(spark, path: str) -> None:
-    """Drop the memoized read for ``path`` in every session and refresh
-    Spark's own file listing. Called by every build/append so a rebuilt
-    index at the same path is never served from deleted files (parquet
-    reads resolve the file listing eagerly — without this, post-rebuild
-    probes hit FileNotFoundException or silently stale results)."""
-    forget(spark, "index_reads", path)
-    try:
-        spark.catalog.refreshByPath(path)
-    except Exception:
-        pass  # path not yet known to the catalog — nothing to refresh
 
 
 def _collect_probe_queries(q: DataFrame, caller: str) -> list:
@@ -575,8 +540,6 @@ def _rerank_topk(
     window partition at shards × k rows regardless; equality with the
     plain window is pinned in tests/test_scale.py and the plan shape
     in tests/test_plans.py."""
-    from drugbankner_spark.operators.scale import sharded_topk
-
     if k < 1:
         # preserve the pre-round-13 public contract: the plain-window
         # form's filter(rank <= 0) returned an EMPTY frame for a
@@ -585,6 +548,24 @@ def _rerank_topk(
         return scored.withColumn("rank", F.lit(1)).filter(F.lit(False))
     order = order_cols or [F.desc("cos_sim"), F.asc("neighbor_id")]
     return sharded_topk(scored, ["query_id"], order, k, rank_col="rank")
+
+
+def _lsh_key(vec_col: str, num_planes: int, dim: int) -> Column:
+    """The stored bucket key: the LSH sign pattern prefixed 'b' so
+    partition-value inference keeps it a string (a raw '00000101' would
+    be read back as the integer 101)."""
+    planes = [hyperplane(dim, j) for j in range(num_planes)]
+    return F.concat(F.lit("b"), lsh_bucket(vec_col, planes))
+
+
+def _lsh_rows(
+    vectors: DataFrame, id_col: str, vec_col: str, num_planes: int, dim: int
+) -> DataFrame:
+    """(id, vector, bucket) — the stored LSH index row."""
+    return vectors.select(
+        F.col(id_col), F.col(vec_col),
+        _lsh_key(vec_col, num_planes, dim).alias("bucket"),
+    )
 
 
 def build_lsh_index(
@@ -597,29 +578,11 @@ def build_lsh_index(
 ) -> None:
     """Materialize the LSH-bucketed corpus partitioned BY bucket. One
     scan computes all plane signs; afterwards a probe for bucket b reads
-    directory bucket=b only. The bucket key is prefixed 'b' so partition-
-    value inference keeps it a string (a raw '00000101' would be read
-    back as the integer 101)."""
-    planes = [hyperplane(dim, j) for j in range(num_planes)]
-    (
-        corpus.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.concat(F.lit("b"), lsh_bucket(vec_col, planes)).alias(
-                "bucket"
-            ),
-        )
-        # cluster by the partition key first: without this every write
-        # task emits a file into every bucket directory (tasks × buckets
-        # tiny files — the small-file failure mode write_partitioned
-        # documents); with it, one file per bucket. One build-time
-        # shuffle, amortized over every probe.
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 4_000_000)
-        .partitionBy("bucket").parquet(path)
+    directory bucket=b only."""
+    write_partitioned(
+        _lsh_rows(corpus, id_col, vec_col, num_planes, dim), path,
+        ["bucket"],
     )
-    invalidate_index_cache(corpus.sparkSession, path)
 
 
 def append_to_lsh_index(
@@ -638,21 +601,10 @@ def append_to_lsh_index(
     so maintaining a 100 TB index costs O(new data), never a rebuild.
     A post-append probe equals a probe of a fresh full build (parity
     tested in tests/test_partitioning.py)."""
-    planes = [hyperplane(dim, j) for j in range(num_planes)]
-    (
-        new_vectors.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.concat(F.lit("b"), lsh_bucket(vec_col, planes)).alias(
-                "bucket"
-            ),
-        )
-        .repartition("bucket")  # one file per touched bucket per append
-        .write.mode("append")
-        .option("maxRecordsPerFile", 4_000_000)
-        .partitionBy("bucket").parquet(path)
+    write_partitioned(
+        _lsh_rows(new_vectors, id_col, vec_col, num_planes, dim), path,
+        ["bucket"], mode="append",
     )
-    invalidate_index_cache(new_vectors.sparkSession, path)
 
 
 def probe_lsh_index(
@@ -670,12 +622,9 @@ def probe_lsh_index(
     isin predicate lands in PartitionFilters, so a 256-bucket index
     serves a 5-query probe by touching ≤5 directories). Results are
     identical to lsh_topk over the same corpus/planes (tested)."""
-    planes = [hyperplane(dim, j) for j in range(num_planes)]
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"),
-        F.concat(F.lit("b"), lsh_bucket(vec_col, planes)).alias(
-            "bucket"
-        ),
+        _lsh_key(vec_col, num_planes, dim).alias("bucket"),
     )
     # one materialization of the (small, by serving contract) query side:
     # the collected rows provide BOTH the pruning bucket list and the
@@ -683,7 +632,7 @@ def probe_lsh_index(
     qrows = _collect_probe_queries(q, "probe_lsh_index")
     want = sorted({r["bucket"] for r in qrows})
     q_local = local_df(spark, qrows, q.schema)
-    idx = _read_index(spark, path).filter(F.col("bucket").isin(want))
+    idx = read_index(spark, path).filter(F.col("bucket").isin(want))
     scored = (
         idx.select(
             F.col(id_col).alias("neighbor_id"),
@@ -700,6 +649,23 @@ def probe_lsh_index(
     return _rerank_topk(scored, k)
 
 
+def _ivf_cell(vec_col: str, n_centroids: int, dim: int) -> Column:
+    """The stored cell: argmax-dot over the deterministic centroids
+    (seeds 1000+j) that ivf_topk uses."""
+    cents = [hyperplane(dim, 1000 + j) for j in range(n_centroids)]
+    return F.array_max(_cell_scores(vec_col, cents))["cell"]
+
+
+def _ivf_rows(
+    vectors: DataFrame, id_col: str, vec_col: str, n_centroids: int, dim: int
+) -> DataFrame:
+    """(id, vector, cell) — the stored IVF index row."""
+    return vectors.select(
+        F.col(id_col), F.col(vec_col),
+        _ivf_cell(vec_col, n_centroids, dim).alias("cell"),
+    )
+
+
 def build_ivf_index(
     corpus: DataFrame,
     path: str,
@@ -713,19 +679,9 @@ def build_ivf_index(
     n_probe/n_centroids of the data via partition pruning. Uses the same
     deterministic centroids as ivf_topk (seeds 1000+j), so probe results
     are comparable/identical."""
-    cents = [hyperplane(dim, 1000 + j) for j in range(n_centroids)]
-    c = corpus.select(
-        F.col(id_col),
-        F.col(vec_col),
-        F.array_max(_cell_scores(vec_col, cents))["cell"].alias("cell"),
+    write_partitioned(
+        _ivf_rows(corpus, id_col, vec_col, n_centroids, dim), path, ["cell"]
     )
-    (
-        c.repartition("cell")  # one file per cell, not tasks × cells
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 4_000_000)
-        .partitionBy("cell").parquet(path)
-    )
-    invalidate_index_cache(corpus.sparkSession, path)
 
 
 def append_to_ivf_index(
@@ -743,21 +699,10 @@ def append_to_ivf_index(
     equal a fresh full build (parity tested). Note: like every IVF, a
     drifting data distribution eventually wants re-learned centroids —
     that is the full ``build_ivf_index`` rebuild path, by design."""
-    cents = [hyperplane(dim, 1000 + j) for j in range(n_centroids)]
-    (
-        new_vectors.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.array_max(_cell_scores(vec_col, cents))["cell"].alias(
-                "cell"
-            ),
-        )
-        .repartition("cell")
-        .write.mode("append")
-        .option("maxRecordsPerFile", 4_000_000)
-        .partitionBy("cell").parquet(path)
+    write_partitioned(
+        _ivf_rows(new_vectors, id_col, vec_col, n_centroids, dim), path,
+        ["cell"], mode="append",
     )
-    invalidate_index_cache(new_vectors.sparkSession, path)
 
 
 def probe_ivf_index(
@@ -778,20 +723,12 @@ def probe_ivf_index(
     cents = [hyperplane(dim, 1000 + j) for j in range(n_centroids)]
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"),
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.reverse(F.array_sort(_cell_scores(vec_col, cents))),
-                    1, n_probe,
-                ),
-                lambda s: s["cell"],
-            )
-        ).alias("cell"),
+        _probe_cells(vec_col, cents, n_probe).alias("cell"),
     )
     qrows = _collect_probe_queries(q, "probe_ivf_index")
     want = sorted({r["cell"] for r in qrows})
     q_local = local_df(spark, qrows, q.schema)
-    idx = _read_index(spark, path).filter(F.col("cell").isin(want))
+    idx = read_index(spark, path).filter(F.col("cell").isin(want))
     scored = (
         idx.select(
             F.col(id_col).alias("neighbor_id"),
@@ -836,29 +773,6 @@ def pq_codebooks(
         [hyperplane(dsub, seed + j * ksub + c) for c in range(ksub)]
         for j in range(m)
     ]
-
-
-def _sq_l2(vec: Column | str, cent: list[float], offset: int) -> Column:
-    """Squared L2 between vec[offset : offset+len(cent)] and a literal
-    centroid — unrolled, fixed evaluation order; (x-c)*(x-c) rather than
-    pow so both engines do the identical multiply. Name (str) input
-    takes the one-call SQL-string path; both forms bit-identical."""
-    if isinstance(vec, str):
-        terms = " + ".join(
-            f"(element_at(`{vec}`, {offset + i + 1}) - {_fd(c)})"
-            f" * (element_at(`{vec}`, {offset + i + 1}) - {_fd(c)})"
-            for i, c in enumerate(cent)
-        )
-        return F.expr(f"({terms})")
-    terms = [
-        (F.element_at(vec, offset + i + 1) - F.lit(c))
-        * (F.element_at(vec, offset + i + 1) - F.lit(c))
-        for i, c in enumerate(cent)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
 
 
 def _books_sql(codebooks: list[list[list[float]]]) -> str:
@@ -940,8 +854,6 @@ def pq_adc_topk(
     lookups summed — float vectors are never touched at probe time.
     Output: (query_id, neighbor_id, adc_dist, rank), rank 1 = nearest,
     ties pinned to smallest neighbor id."""
-    from pyspark.sql import Window
-
     # LUT entries are micro-unit INTEGERS (round(dist * 1e6)): the m-way
     # ADC sum is then exact integer arithmetic — order-free, so any
     # engine (or Spark's own fold vs pairwise summation) produces the
@@ -1027,13 +939,10 @@ def _ivfpq_encoded(
 ) -> DataFrame:
     """(id, codes[m], cell) for each vector — the stored IVF-PQ row.
     Shared by build and append so the two paths can never drift."""
-    cents = [hyperplane(dim, 1000 + j) for j in range(n_centroids)]
     return vectors.select(
         F.col(id_col),
         _pq_codes_expr(vec_col, codebooks).alias("codes"),
-        F.array_max(_cell_scores(vec_col, cents))["cell"].alias(
-            "cell"
-        ),
+        _ivf_cell(vec_col, n_centroids, dim).alias("cell"),
     )
 
 
@@ -1052,14 +961,10 @@ def build_ivfpq_index(
     reads n_probe/n_centroids of an already-64×-smaller table. Same
     deterministic cell centroids as build_ivf_index, same codebooks as
     pq_encode — every piece individually oracle-checked."""
-    (
-        _ivfpq_encoded(corpus, codebooks, id_col, vec_col, n_centroids, dim)
-        .repartition("cell")
-        .write.mode("overwrite")
-        .option("maxRecordsPerFile", 4_000_000)
-        .partitionBy("cell").parquet(path)
+    write_partitioned(
+        _ivfpq_encoded(corpus, codebooks, id_col, vec_col, n_centroids, dim),
+        path, ["cell"],
     )
-    invalidate_index_cache(corpus.sparkSession, path)
 
 
 def append_to_ivfpq_index(
@@ -1084,16 +989,12 @@ def append_to_ivfpq_index(
     training time — appends quantize new vectors against them, which is
     exactly what FAISS's ``add`` does. Re-training (distribution drift)
     is the full rebuild path, by design."""
-    (
+    write_partitioned(
         _ivfpq_encoded(
             new_vectors, codebooks, id_col, vec_col, n_centroids, dim
-        )
-        .repartition("cell")
-        .write.mode("append")
-        .option("maxRecordsPerFile", 4_000_000)
-        .partitionBy("cell").parquet(path)
+        ),
+        path, ["cell"], mode="append",
     )
-    invalidate_index_cache(new_vectors.sparkSession, path)
 
 
 def probe_ivfpq_index(
@@ -1112,26 +1013,16 @@ def probe_ivfpq_index(
     PartitionFilters (only those directories are read), candidates are
     scored by integer ADC over their stored codes — float vectors never
     touched. Output: (query_id, neighbor_id, adc_dist, rank)."""
-    from pyspark.sql import Window
-
     cents = [hyperplane(dim, 1000 + j) for j in range(n_centroids)]
     q = queries.select(
         F.col(id_col).alias("query_id"),
         _pq_lut_expr(vec_col, codebooks).alias("_lut"),
-        F.explode(
-            F.transform(
-                F.slice(
-                    F.reverse(F.array_sort(_cell_scores(vec_col, cents))),
-                    1, n_probe,
-                ),
-                lambda s: s["cell"],
-            )
-        ).alias("cell"),
+        _probe_cells(vec_col, cents, n_probe).alias("cell"),
     )
     qrows = _collect_probe_queries(q, "probe_ivfpq_index")
     want = sorted({r["cell"] for r in qrows})
     q_local = local_df(spark, qrows, q.schema)
-    idx = _read_index(spark, path).filter(F.col("cell").isin(want))
+    idx = read_index(spark, path).filter(F.col("cell").isin(want))
     scored = (
         idx.select(F.col(id_col).alias("neighbor_id"), "codes", "cell")
         .join(F.broadcast(q_local), "cell")
@@ -1361,8 +1252,6 @@ def hard_negatives(
     positive pairs + one per-query window. At 100 TB you'd swap the
     exact join for probe_lsh_index/probe_ivf_index candidates and keep
     the anti-join + window unchanged — the mining logic is the same."""
-    from pyspark.sql import Window
-
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
     )
@@ -1386,8 +1275,6 @@ def hard_negatives(
     # sharded top-(skip_top+k) (round 12): the anti-joined candidate
     # set is still corpus-scale per query — rank the bounded head in
     # two phases, then drop the skipped band (identical rows/ranks)
-    from drugbankner_spark.operators.scale import sharded_topk
-
     return (
         sharded_topk(
             scored, ["query_id"],
@@ -1597,8 +1484,6 @@ def hamming_topk(
     For corpus×corpus joins at scale use :func:`hamming_band_pairs`
     (the banded pair generator with the pigeonhole recall guarantee)
     instead of brute force."""
-    from pyspark.sql import Window
-
     q = query_codes.select(
         F.col(id_col).alias("query_id"), F.col("code").alias("_qc")
     )
@@ -1727,8 +1612,6 @@ def rerank_topk(
 
     Output: (query_id, neighbor_id, cos_sim, rank) — same shape as
     :func:`cosine_topk`, ranks from the exact scores."""
-    from pyspark.sql import Window
-
     codes = binary_quantize(corpus, id_col, vec_col, dim)
     qcodes = binary_quantize(queries, id_col, vec_col, dim)
     short = hamming_topk(codes, qcodes, id_col, k=shortlist_k)

@@ -62,6 +62,25 @@ def test_ingest_clean_batch_two_batches(spark, tmp_path):
     assert a3 == 0
 
 
+def test_ingest_after_a_batch_that_admits_nothing(spark, tmp_path):
+    # A first batch whose every document fails the quality rules
+    # bootstraps an empty state; the band table it leaves must stay
+    # readable, so later batches are still admitted and deduplicated.
+    state = str(tmp_path / "state")
+    b1 = _df(spark, [(1, "tiny doc")])
+    assert ingest_clean_batch(spark, b1, state, min_tokens=10).count() == 0
+
+    b2 = _df(spark, [(2, GOOD), (3, GOOD2)])
+    a2 = {r["doc_id"] for r in
+          ingest_clean_batch(spark, b2, state, min_tokens=10).collect()}
+    assert a2 == {2, 3}
+
+    b3 = _df(spark, [(4, GOOD + " extra tail")])  # near-dup of stored 2
+    assert ingest_clean_batch(spark, b3, state, min_tokens=10).count() == 0
+    final = spark.read.parquet(os.path.join(state, "corpus"))
+    assert {r["doc_id"] for r in final.select("doc_id").collect()} == {2, 3}
+
+
 def test_stream_ingest_corpus_micro_batches(spark, tmp_path):
     # two parquet files → two micro-batches (maxFilesPerTrigger=1)
     # through foreachBatch. Micro-batch ORDER is not contractual, so

@@ -677,7 +677,7 @@ def test_alias_index_probe_on_new_session(spark, tmp_path):
         link_with_alias_index,
         save_alias_index,
     )
-    from drugbankner_spark.operators.similarity import _read_index
+    from drugbankner_spark.operators.scale import read_index
 
     aliases = spark.createDataFrame(
         [("aspirin", 1), ("ecotrin", 3), ("fever", 9)],
@@ -698,4 +698,4 @@ def test_alias_index_probe_on_new_session(spark, tmp_path):
     assert got.sparkSession is other
     assert sorted(tuple(r) for r in got.collect()) == want and want
     for sub in ("meta", "postings", "idf", "alias_map"):
-        assert _read_index(other, f"{path}/{sub}").sparkSession is other
+        assert read_index(other, f"{path}/{sub}").sparkSession is other

@@ -213,7 +213,7 @@ def test_index_read_cache_keyed_by_application_id():
     # path in every session of the application only. Stub sessions (no
     # JVM needed) prove the keying.
     from drugbankner_spark.caching import session_memo
-    from drugbankner_spark.operators import similarity as SIM
+    from drugbankner_spark.operators import scale as SC
 
     class _Stub:
         def __init__(self, sc, token):
@@ -231,11 +231,11 @@ def test_index_read_cache_keyed_by_application_id():
     app1 = _context("app-1")
     s1, sibling = _Stub(app1, "df-of-session-1"), _Stub(app1, "df-of-sibling")
     s2 = _Stub(_context("app-2"), "df-of-session-2")
-    assert SIM._read_index(s1, "/tmp/xyz") == "df-of-session-1"
+    assert SC.read_index(s1, "/tmp/xyz") == "df-of-session-1"
     # same path, different session: must NOT be served session 1's read
-    assert SIM._read_index(sibling, "/tmp/xyz") == "df-of-sibling"
-    assert SIM._read_index(s2, "/tmp/xyz") == "df-of-session-2"
-    SIM.invalidate_index_cache(s1, "/tmp/xyz")
+    assert SC.read_index(sibling, "/tmp/xyz") == "df-of-sibling"
+    assert SC.read_index(s2, "/tmp/xyz") == "df-of-session-2"
+    SC._forget_read(s1, "/tmp/xyz")
     assert "/tmp/xyz" not in session_memo(s1)["index_reads"]
     assert "/tmp/xyz" not in session_memo(sibling)["index_reads"]
     assert "/tmp/xyz" in session_memo(s2)["index_reads"]
@@ -244,25 +244,27 @@ def test_index_read_cache_keyed_by_application_id():
 def test_index_read_cache_serves_only_its_own_session(spark, tmp_path):
     # The memoized index read lives in its session's memo: a new session
     # of the same application must get a DataFrame bound to itself, not
-    # the first session's; invalidation drops the read in both.
-    from drugbankner_spark.operators import similarity as SIM
+    # the first session's; a write through the store drops the read in
+    # both.
+    from drugbankner_spark.operators import scale as SC
 
     path = str(tmp_path / "idx")
-    spark.range(3).write.parquet(path)
+    SC.write_partitioned(spark.range(3), path, [])
     other = spark.newSession()
-    first = SIM._read_index(spark, path)
-    mine = SIM._read_index(other, path)
+    first = SC.read_index(spark, path)
+    mine = SC.read_index(other, path)
     assert first.sparkSession is spark and mine.sparkSession is other
-    assert SIM._read_index(other, path) is mine
-    SIM.invalidate_index_cache(spark, path)
-    assert SIM._read_index(spark, path) is not first
-    assert SIM._read_index(other, path) is not mine
+    assert SC.read_index(other, path) is mine
+    SC.write_partitioned(spark.range(4), path, [])
+    assert SC.read_index(spark, path) is not first
+    assert SC.read_index(other, path) is not mine
+    assert SC.read_index(other, path).count() == 4
 
 
 def test_rebuild_at_same_path_invalidates_probe_cache(spark):
     # ADVICE r03: rebuilding an index at the same path (the natural
     # refresh op) must not leave probes bound to the deleted files —
-    # build_*_index invalidates the memoized read + refreshByPath
+    # the index store's write drops the memoized read + refreshByPath
     from drugbankner_spark.operators import similarity as SIM
 
     emb = load_table(spark, EMB_SF, "embeddings")
@@ -385,27 +387,71 @@ def test_ivfpq_append_parity_and_partition_locality(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_sql_string_builders_bit_identical_to_column_forms(spark):
-    # Round-5 driver-latency fix: lsh_bucket/_cell_scores/_sq_l2 build
-    # literal-heavy expressions as ONE SQL string when given a column
-    # NAME. The arithmetic must be BIT-identical to the Column forms —
-    # stored indexes from either path must interoperate.
+def _empty_family_probe(spark, family, d):
+    """Build ``family``'s index at ``d`` from a zero-row frame of its
+    input schema, then probe it with real queries."""
+    from drugbankner_spark.operators import dedup as D
+    from drugbankner_spark.operators import linker as L
+    from drugbankner_spark.operators import retrieval as R
     from drugbankner_spark.operators import similarity as SIM
 
-    emb = load_table(spark, EMB_SF, "embeddings").limit(50)
-    planes = [SIM.hyperplane(64, j) for j in range(8)]
-    cents = [SIM.hyperplane(64, 1000 + j) for j in range(8)]
-    books = SIM.pq_codebooks(dim=64, m=8, ksub=16)
-    rows = emb.select(
-        SIM.lsh_bucket("embedding", planes).alias("b_sql"),
-        SIM.lsh_bucket(F.col("embedding"), planes).alias("b_col"),
-        SIM._cell_scores("embedding", cents).alias("c_sql"),
-        SIM._cell_scores(F.col("embedding"), cents).alias("c_col"),
-        SIM._sq_l2("embedding", books[0][0], 0).alias("d_sql"),
-        SIM._sq_l2(F.col("embedding"), books[0][0], 0).alias("d_col"),
-    ).collect()
-    assert rows
-    for r in rows:
-        assert r["b_sql"] == r["b_col"]
-        assert r["c_sql"] == r["c_col"]          # exact struct equality
-        assert r["d_sql"] == r["d_col"]          # exact double equality
+    emb = load_table(spark, EMB_SF, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    none = emb.filter(F.lit(False))
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")],
+        "doc_id long, text string",
+    )
+    if family == "lsh":
+        SIM.build_lsh_index(none, d)
+        return SIM.probe_lsh_index(spark, d, queries, k=5)
+    if family == "ivf":
+        SIM.build_ivf_index(none, d)
+        return SIM.probe_ivf_index(spark, d, queries, k=5)
+    if family == "ivfpq":
+        books = SIM.pq_codebooks(dim=64, m=8, ksub=16)
+        SIM.build_ivfpq_index(none, d, books)
+        return SIM.probe_ivfpq_index(spark, d, queries, books, k=5)
+    if family == "band_table":
+        D.build_minhash_band_table(docs.filter(F.lit(False)), d)
+        return D.incremental_near_dup_pairs(spark, docs, d)
+    if family == "text":
+        R.build_text_index(docs.filter(F.lit(False)), d)
+        return R.retrieve(spark, d, spark.createDataFrame(
+            [(1, "quick brown fox")], "query_id long, query_text string"))
+    aliases = spark.createDataFrame([], "alias string, alias_id long")
+    L.save_alias_index(aliases, "alias", "alias_id", d)
+    return L.link_with_alias_index(spark, d, spark.createDataFrame(
+        [("aspirin",)], ["mention"]), "mention", threshold=0.3)
+
+
+@pytest.mark.parametrize(
+    "family", ["lsh", "ivf", "ivfpq", "band_table", "text", "alias"]
+)
+def test_index_built_from_empty_frame_probes_empty(spark, tmp_path, family):
+    # A partitioned write of zero rows leaves no parquet footer to infer
+    # a schema from; the index store writes the empty frame plain, so
+    # every family's probe reads it and answers with no rows.
+    out = _empty_family_probe(spark, family, str(tmp_path / "idx"))
+    assert out.collect() == []
+
+
+def test_append_after_empty_build_matches_full_build(spark, tmp_path):
+    # The zero-row placeholder an empty build leaves is replaced by the
+    # first append, so the layout is partitioned again: probes equal a
+    # fresh full build and prune by bucket.
+    from drugbankner_spark.operators import similarity as SIM
+
+    emb = load_table(spark, EMB_SF, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    inc, full = str(tmp_path / "inc"), str(tmp_path / "full")
+    SIM.build_lsh_index(emb.filter(F.lit(False)), inc)
+    SIM.append_to_lsh_index(emb, inc)
+    SIM.build_lsh_index(emb, full)
+    assert _bucket_files(inc).keys() == _bucket_files(full).keys()
+    assert not [f for f in os.listdir(inc) if f.endswith(".parquet")]
+    want = sorted(map(tuple, SIM.probe_lsh_index(
+        spark, full, queries, k=5).collect()))
+    got = sorted(map(tuple, SIM.probe_lsh_index(
+        spark, inc, queries, k=5).collect()))
+    assert got == want and len(got) > 0
