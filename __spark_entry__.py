@@ -2403,28 +2403,6 @@ def _e1_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     return near_dup_clusters(docs, pairs, "doc_id")
 
 
-def _e1_dup_clusters_star(spark: SparkSession, sf: str) -> DataFrame:
-    # Same clustering via the O(log n)-round large-star/small-star
-    # algorithm — labels are the component minima either way, so the
-    # e1_dup_clusters oracle applies unchanged. Proves the adversarial-
-    # graph path end to end, not just on synthetic chains.
-    from drugbankner_spark.operators import dedup as D
-    from drugbankner_spark.operators.graph import connected_components_star
-
-    docs = load_table(spark, sf, "documents")
-    pairs = D.minhash_band_pairs_rowwise(docs, "text", "doc_id", 16)
-    comp = connected_components_star(pairs, "id_a", "id_b")
-    return (
-        docs.select("doc_id")
-        .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"),
-            F.col("component").isNull().alias("is_singleton"),
-        )
-    )
-
-
 def _t_asof_join(spark: SparkSession, sf: str) -> DataFrame:
     # Temporal engine extra: backward-inclusive as-of join — each
     # purchase picks up the user's most recent click at-or-before it
@@ -4743,7 +4721,7 @@ _e1_dedup_suite = _suite(
      "n_chars"),
     ("minhash", _e1_minhash_near_dup, ("id_a", "id_b")),
     ("decon", _e1_decontaminate, "doc_id", "contaminated", "n_overlapping"),
-    ("cluster", _e1_dup_clusters_star, "doc_id",
+    ("cluster", _e1_dup_clusters, "doc_id",
      ("cluster_id", "is_singleton")),
 )
 _e1_clean_suite = _suite(
@@ -4999,7 +4977,7 @@ _MORE = (
     _e5_chat_render, _e5_needle_inject, _e4_bmp_decode, _s_warc_probe,
     _s_tar_probe, _e2_cosine_topk, _e2_lsh_topk, _e2_ivf_topk, _e1_exact_dedup,
     _e1_dedup_survivor, _e1_minhash_near_dup, _e1_decontaminate,
-    _e1_dup_clusters_star, _e3_text_quality, _e3_bpe_tokens,
+    _e3_text_quality, _e3_bpe_tokens,
     _e3_chunk_documents, _f_name_normalize, _f5_sentence_pipeline,
     _e5_sketch_distinct, _e4_image_hashes, _e4_audio_features, _e4_mpeg_decode,
     _x1_tfidf_linker, _e5_gov_suite, _e1_suffix_array, _e1_sa_dup_spans,
@@ -11291,8 +11269,6 @@ def oracle_sql() -> dict[str, str]:
     """
     # the streaming suite must equal its batch twin — one oracle, two names
     out["e6_windows_batch"] = out["e6_windows"]
-    # star CC labels are the same component minima as propagation's
-    out["e1_dup_clusters_star"] = out["e1_dup_clusters"]
     # a probe of the incrementally-maintained index must equal a probe of
     # a fresh full build — one oracle, two names
     out["e2_lsh_append_topk"] = out["e2_lsh_topk"]

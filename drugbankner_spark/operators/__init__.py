@@ -17,7 +17,9 @@ Each module maps to a SURVEY.md §2 section:
 - ``multimodal``   E4 binary columns: REAL stdlib PNG/WAV codecs,
                    perceptual image hashes, FFT audio features.
 - ``temporal``     as-of / range joins + SCD2 dimension versioning.
-- ``graph``        connected components (propagation + large/small-star).
+- ``graph``        connected components (min-label propagation), PageRank,
+                   triangles, link prediction, cores, BFS, label
+                   propagation, random walks, modularity.
 - ``sampling``     deterministic hash sample / split / stratified draw.
 - ``corpus``       cleaning, chunking, decontamination, sequence packing,
                    continuous ingest (batch + streaming), data-card report.

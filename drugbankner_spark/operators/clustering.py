@@ -261,9 +261,10 @@ def semdedup_clustered(
 
     Scale shape: ONE self-join keyed on the k-means cell (bounded by
     cell size — balance cells by raising k), the CC fixpoint's
-    O(log n) rounds, one size agg. Fully deterministic (grid-integer
-    k-means, 6dp-rounded cosines, min-id survivor) — the whole
-    composition hash-matches a chained-CTE + recursive-SQL oracle."""
+    diameter rounds (``ValueError`` past ``max_iterations=25``), one
+    size agg. Fully deterministic (grid-integer k-means, 6dp-rounded
+    cosines, min-id survivor) — the whole composition hash-matches a
+    chained-CTE + recursive-SQL oracle."""
     from drugbankner_spark.caching import shared_persist
     from drugbankner_spark.operators.graph import near_dup_clusters
     from drugbankner_spark.operators.similarity import cosine

@@ -12,11 +12,16 @@ neighbors. Converges in graph-diameter rounds; near-dup graphs are
 dense small cliques (diameter ~2-3), so 3-5 rounds in practice.
 Per round: one shuffle-join (edges ⋈ labels) + one hash agg — the same
 shape GraphX/GraphFrames uses, with ``localCheckpoint`` truncating the
-lineage so the plan doesn't grow per iteration. For adversarial
-long-chain graphs, ``connected_components_star`` implements the
-large-star/small-star alternation (Kiveris et al., "Connected Components
-in MapReduce and Beyond"), dropping rounds to O(log n); near-dup
-clustering keeps the simpler propagation default (diameter 2-3).
+lineage so the plan doesn't grow per iteration. A long-chain graph
+needs one round per hop of diameter; past ``max_iterations`` the
+operator raises instead of returning unconverged labels.
+
+Every operator here reads its edge list as one relation: an undirected
+edge list is built by :func:`_both_ways` (both directions from ONE scan
+of the caller's plan) or :func:`_canonical` (one ``least``/``greatest``
+row per edge), never by a ``union`` of two projections of the same
+frame, which would plan the caller's edge subtree twice (ARCHITECTURE
+§7o).
 """
 
 from __future__ import annotations
@@ -39,11 +44,31 @@ def _label_invariant(labels: DataFrame) -> tuple:
     return (row["n"], row["x"])
 
 
-def _not_converged(name: str, max_iterations: int) -> ValueError:
-    return ValueError(
-        f"{name} did not converge in max_iterations={max_iterations} "
-        "rounds: its labels are not a fixed point yet; raise "
-        "max_iterations"
+def _both_ways(
+    edges: DataFrame, src: str, dst: str, a: str = "a", b: str = "b"
+) -> DataFrame:
+    """Both directions of every edge from ONE scan of ``edges``: two
+    rows (a=src, b=dst) and (a=dst, b=src) per input row, loops and
+    duplicates kept. Selecting ``a`` alone lists every endpoint once per
+    edge end. A union of two projections would embed the caller's
+    ``edges`` subtree twice in one plan — Catalyst does not dedupe
+    common subtrees, so an expensive pair generator would run twice."""
+    return edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(src).alias(a), F.col(dst).alias(b)),
+                F.struct(F.col(dst).alias(a), F.col(src).alias(b)),
+            )
+        ).alias("_e")
+    ).select(f"_e.{a}", f"_e.{b}")
+
+
+def _canonical(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """One (a, b) row per edge with a = least, b = greatest endpoint —
+    the direction-free form; loops and duplicates kept."""
+    return edges.select(
+        F.least(F.col(src), F.col(dst)).alias("a"),
+        F.greatest(F.col(src), F.col(dst)).alias("b"),
     )
 
 
@@ -77,14 +102,10 @@ def connected_components(
     # Blocks are cached on first computation exactly as before; only
     # WHICH job pays for them changes.
     #
-    # Symmetrize with ONE scan of the edge plan (round 15, guide §2.3):
-    # the union-of-two-projections form embedded the caller's ``edges``
-    # subtree TWICE in one plan — Catalyst does not dedupe common
-    # subtrees, so an expensive pair generator (MinHash band self-join,
-    # blocked Jaro-Winkler) was computed twice, and under AQE its
-    # shuffle stages materialize CONCURRENTLY, defeating even a persist
-    # on the subtree (parallel cold tasks can't see each other's cache).
-    # explode(array(fwd, rev)) emits both directions from a single scan.
+    # Symmetrize with ONE scan of the edge plan (``_both_ways``): under
+    # AQE a twice-planned pair generator's shuffle stages materialize
+    # CONCURRENTLY, defeating even a persist on the subtree (parallel
+    # cold tasks can't see each other's cache).
     #
     # Partition AND sort the edge table by the per-round join key ONCE,
     # then persist (guide §2.4): every round joins sym on "b", so under
@@ -96,15 +117,7 @@ def connected_components(
     # under AQE (verified in-plan: ExistingRDD re-exchanged; cached scan
     # not). Only the label table moves per round.
     sym = shared_persist(
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.a", "_e.b")
+        _both_ways(edges, src, dst)
         .distinct()
         .repartition("b")
         .sortWithinPartitions("b")
@@ -135,136 +148,14 @@ def connected_components(
             break
         prev_inv = inv
     else:
-        raise _not_converged("connected_components", max_iterations)
+        raise ValueError(
+            f"connected_components did not converge in max_iterations="
+            f"{max_iterations} rounds: its labels are not a fixed point "
+            "yet; raise max_iterations"
+        )
     if stats is not None:
         stats["rounds"] = rounds
     return labels
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """Large-star round (Kiveris et al., CC-MR): every node connects its
-    strictly-LARGER neighbors to the minimum of its closed neighborhood.
-    Input/output: directed edge list (a, b); output edges all point
-    large→small."""
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    mins = sym.groupBy("a").agg(
-        F.least(F.min("b"), F.first("a")).alias("m")
-    )
-    return (
-        sym.join(mins, "a")
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Small-star round: orient edges large→small; every node connects
-    ALL its (smaller) neighbors and itself to the neighborhood minimum."""
-    ori = e.select(
-        F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-    ).filter(F.col("a") != F.col("b")).distinct()
-    mins = ori.groupBy("a").agg(F.min("b").alias("m"))
-    return (
-        ori.join(mins, "a")
-        .select(F.col("b").alias("a"), F.col("m").alias("b"))
-        .union(mins.select("a", F.col("m").alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def _edge_invariant(e: DataFrame) -> tuple:
-    """One-aggregation convergence fingerprint of a DISTINCT edge set:
-    (row count, order-free bit-XOR of xxhash64(a, b)). The star rounds
-    always emit distinct edges, so XOR never cancels duplicates; two
-    successive rounds with equal fingerprints are equal edge sets up to
-    a 2^-64 hash-collision probability — one hash agg (a single action)
-    instead of the two full ``exceptAll`` distinct-compare shuffles the
-    naive check costs per round."""
-    row = e.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64("a", "b")).alias("x"),
-    ).first()
-    return (row["n"], row["x"])
-
-
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iterations: int = 40,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Two-phase large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond") — same output
-    contract as ``connected_components`` but O(log n) rounds on ANY
-    graph, including adversarial long chains where min-label propagation
-    needs diameter rounds (a 10^4-node path would be 10^4 shuffles).
-
-    Use this when the candidate graph's shape is unknown or chain-like
-    (e.g. transitive similarity at low thresholds); plain propagation
-    remains the default for near-dup cliques (diameter 2-3, fewer
-    shuffles per round). Deterministic: the final label is the component
-    minimum, independent of partitioning.
-
-    Convergence is detected by comparing one-agg edge-set fingerprints
-    (``_edge_invariant``) across rounds — a single action per round
-    instead of two ``exceptAll`` compares. Pass ``stats={}`` to receive
-    ``stats["rounds"]``, the number of star rounds executed. Raises
-    ``ValueError`` when ``max_iterations`` rounds end unconverged.
-    """
-    # lazy checkpoints: the per-round invariant action materializes
-    # each round's edge set (same trick as connected_components —
-    # round 15). The caller's ``edges`` plan is scanned ONCE via
-    # explode(array(fwd, rev)) — the previous three projections of
-    # ``edges`` (nodes × 2 + e) embedded an expensive pair subtree
-    # three times in the startup plans (see connected_components).
-    # ``ends`` is checkpointed so nodes and e both read its blocks;
-    # the first invariant materializes e → ends; nodes (consumed only
-    # by the final join) reads the cached blocks lazily.
-    ends = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
-                    F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.a", "_e.b")
-        .localCheckpoint(eager=False)
-    )
-    # symmetric ends: "a" alone covers both endpoints of every edge
-    nodes = ends.select(F.col("a").alias("id")).distinct()
-    # one canonical direction per undirected edge (a < b drops loops);
-    # orientation is free — the first large-star round re-symmetrizes
-    e = (
-        ends.filter(F.col("a") < F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    prev_inv = _edge_invariant(e)  # materializes e
-    rounds = 0
-    for _ in range(max_iterations):
-        e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        rounds += 1
-        inv = _edge_invariant(e2)  # materializes e2
-        e = e2
-        if inv == prev_inv:
-            break
-        prev_inv = inv
-    else:
-        raise _not_converged("connected_components_star", max_iterations)
-    if stats is not None:
-        stats["rounds"] = rounds
-    # converged: e is a star forest large→small; centers label themselves
-    return (
-        nodes.join(e.withColumnRenamed("a", "id"), "id", "left")
-        .select(
-            "id", F.coalesce(F.col("b"), F.col("id")).alias("component")
-        )
-    )
 
 
 def near_dup_clusters(
@@ -359,8 +250,8 @@ def _power_iteration(
     a seed list teleports to the seeds through a ``_tele`` column."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
+        _both_ways(e, "src", "dst")
+        .select(F.col("a").alias("node"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -449,16 +340,14 @@ def triangle_count(
     case — the provable bound for exact triangle enumeration — and
     hot hub vertices never explode their wedge lists. Three shuffles:
     degree agg, wedge join key, closing semi join."""
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    e = (
-        edges.select(a.alias("a"), b.alias("b"))
+    e = shared_persist(
+        _canonical(edges, src, dst)
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    e = shared_persist(e)
     deg = (
-        e.select(F.explode(F.array("a", "b")).alias("v"))
-        .groupBy("v")
+        _both_ways(e, "a", "b")
+        .groupBy(F.col("a").alias("v"))
         .agg(F.count(F.lit(1)).alias("d"))
     )
     da = deg.select(F.col("v").alias("a"), F.col("d").alias("_da"))
@@ -505,18 +394,13 @@ def common_neighbor_scores(
     degree lookups. The wedge join is the same Σd² shape as triangle
     counting — at scale cap hub degrees first (sample or filter) as
     every production link-prediction pipeline does."""
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
-    e = (
-        edges.select(a.alias("a"), b.alias("b"))
+    e = shared_persist(
+        _canonical(edges, src, dst)
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    e = shared_persist(e)
     # adjacency in both directions: (v, neighbor)
-    adj = e.select(F.col("a").alias("v"), F.col("b").alias("n")).unionByName(
-        e.select(F.col("b").alias("v"), F.col("a").alias("n"))
-    )
-    adj = shared_persist(adj)
+    adj = shared_persist(_both_ways(e, "a", "b", "v", "n"))
     deg = adj.groupBy("v").agg(F.count(F.lit(1)).alias("d"))
     x = adj.select(F.col("v").alias("x"), "n")
     y = adj.select(F.col("v").alias("y"), "n")
@@ -578,25 +462,25 @@ def kcore_decomposition(
     round carries an action). Total rounds are bounded by the
     degeneracy + peel depth (small for real sparse graphs); each
     round shuffles edge endpoints only."""
-    a, b = F.least(F.col(src), F.col(dst)), F.greatest(F.col(src), F.col(dst))
     e = (
-        edges.select(a.alias("a"), b.alias("b"))
+        _canonical(edges, src, dst)
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
     )
     n_e = e.count()
-    core = e.select(F.col("a").alias("v")).unionByName(
-        e.select(F.col("b").alias("v"))
-    ).distinct().select("v", F.lit(0).alias("core"))
+
+    def ends(e: DataFrame) -> DataFrame:
+        return _both_ways(e, "a", "b").select(F.col("a").alias("v"))
+
+    core = ends(e).distinct().select("v", F.lit(0).alias("core"))
     core = core.localCheckpoint(eager=True)
     for k in range(1, max_k + 1):
         if n_e == 0:
             break
         while True:
             deg = (
-                e.select(F.col("a").alias("v"))
-                .unionByName(e.select(F.col("b").alias("v")))
+                ends(e)
                 .groupBy("v")
                 .agg(F.count(F.lit(1)).alias("d"))
             )
@@ -613,9 +497,7 @@ def kcore_decomposition(
             n_e = n_new
         if n_e == 0:
             break
-        survivors = e.select(F.col("a").alias("v")).unionByName(
-            e.select(F.col("b").alias("v"))
-        ).distinct()
+        survivors = ends(e).distinct()
         core = core.join(
             survivors.withColumnRenamed("v", "_sv"),
             core["v"] == F.col("_sv"),
@@ -673,20 +555,13 @@ def coreness_hindex(
     1-row agg) and a ``ValueError`` names the still-changing vertex
     count instead of silently returning a column called ``core`` that
     is only an upper bound."""
-    a = F.least(F.col(src), F.col(dst))
-    b = F.greatest(F.col(src), F.col(dst))
     und = (
-        edges.select(a.alias("a"), b.alias("b"))
+        _canonical(edges, src, dst)
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
     # both directions: one row per (vertex, neighbor)
-    dirs = (
-        und.select(F.col("a").alias("v"), F.col("b").alias("u"))
-        .unionByName(und.select(F.col("b").alias("v"),
-                                F.col("a").alias("u")))
-        .localCheckpoint(eager=True)
-    )
+    dirs = _both_ways(und, "a", "b", "v", "u").localCheckpoint(eager=True)
     vals = dirs.groupBy("v").agg(F.count(F.lit(1)).alias("core"))
     prev_vals = vals
     from pyspark.sql import Window
@@ -760,11 +635,10 @@ def bfs_distances(
     budget as :func:`connected_components`. The visited table only ever
     grows by the frontier, so per-round shuffle volume is proportional
     to the frontier's edge fan-out, not the whole graph."""
-    adj = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if not directed:
-        adj = adj.union(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
+    adj = (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        if directed else _both_ways(edges, src, dst)
+    )
     adj = adj.filter(F.col("a") != F.col("b")).distinct() \
         .localCheckpoint(eager=True)
     visited = (
@@ -816,8 +690,7 @@ def label_propagation(
     budget as a CC round; isolated nodes keep their label via the
     left join + coalesce."""
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        _both_ways(edges, src, dst)
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
@@ -877,8 +750,7 @@ def random_walks(
     from drugbankner_spark.operators.dedup import content_hash32
 
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        _both_ways(edges, src, dst)
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
@@ -959,10 +831,8 @@ def modularity_score(
     Communities with no internal edge still emit (their −(d_c/2m)²
     term is real). Output: (community, n_nodes, m_in, deg_sum,
     q_num, q)."""
-    a = F.least(F.col(src), F.col(dst))
-    b = F.greatest(F.col(src), F.col(dst))
     und = (
-        edges.select(a.alias("a"), b.alias("b"))
+        _canonical(edges, src, dst)
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
@@ -976,9 +846,8 @@ def modularity_score(
     ).distinct()
     m_row = und.agg(F.count(F.lit(1)).alias("_m"))
     deg = (
-        und.select(F.col("a").alias("_n"))
-        .unionByName(und.select(F.col("b").alias("_n")))
-        .groupBy("_n")
+        _both_ways(und, "a", "b")
+        .groupBy(F.col("a").alias("_n"))
         .agg(F.count(F.lit(1)).alias("_d"))
     )
     per_c = (

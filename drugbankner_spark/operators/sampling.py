@@ -95,7 +95,9 @@ def cluster_safe_split(
     in train AND test, the classic benchmark-contamination bug.
 
     Composition: near-dup ``pairs`` (minhash_band_pairs_rowwise output) →
-    connected components (graph.near_dup_clusters, O(log n) rounds) →
+    connected components (graph.near_dup_clusters: min-label
+    propagation, one round per hop of graph diameter, ``ValueError``
+    past ``max_iterations=25``) →
     ``hash_split`` on the CLUSTER id. A whole clique of near-dups
     therefore moves as one unit into a single split; singleton docs are
     their own cluster. Output: docs + ``split`` label.

@@ -1099,7 +1099,8 @@ def semantic_dedup(
     is not — the dedup axis MinHash cannot see. Composition of the
     engine's own parts: sign-LSH bucketed cosine pairs
     (:func:`embedding_near_dup_pairs` — equi join, never a cross
-    product) → connected components (graph.py, O(log n) rounds) →
+    product) → connected components (graph.py: one round per hop of
+    graph diameter, ``ValueError`` past ``max_iterations=25``) →
     min-id survivor per semantic cluster.
 
     Output, one row per input vector: (id, cluster_id, cluster_size,

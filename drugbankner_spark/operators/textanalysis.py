@@ -582,7 +582,6 @@ def word_lm_logprob(
     text_col: str = "text",
     id_col: str = "doc_id",
     backoff: float = 0.4,
-    broadcast_max_rows: int = BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Per-document mean bigram log-probability under STUPID BACKOFF
     (Brants et al. 2007 — the web-scale LM scoring rule: no discount
@@ -591,7 +590,7 @@ def word_lm_logprob(
     Scoring = one bigram explode + two joins onto the model dims + a
     per-doc agg — the corpus shuffles (id, bigram) pairs, never text.
     The model dims take the broadcast hint only when a count-agg
-    confirms they fit under ``broadcast_max_rows`` (min_count bounds
+    confirms they fit under ``BROADCAST_MAX_ROWS`` (min_count bounds
     them in normal use; an un-pruned web-scale bigram table falls back
     to an AQE-chosen shuffle join instead of blowing the broadcast).
     Output: (id, n_bigrams, mean_logprob)."""
@@ -616,10 +615,10 @@ def word_lm_logprob(
     # dim per action). Decision-only: a conservative skip of the hint
     # changes the join strategy, never the rows.
     if "_pair_counts" in model:
-        fits = model["_pair_counts"].count() <= broadcast_max_rows
+        fits = model["_pair_counts"].count() <= BROADCAST_MAX_ROWS
         _dim = (lambda d: F.broadcast(d)) if fits else (lambda d: d)
     else:
-        _dim = lambda d: maybe_broadcast(d, broadcast_max_rows)
+        _dim = maybe_broadcast
     scored = (
         occ.join(_dim(lp_known), ["w1", "w2"], "left")
         .join(_dim(uni2), "w2", "left")
@@ -744,7 +743,6 @@ def kn_lm_logprob(
     text_col: str = "text",
     id_col: str = "doc_id",
     discount: float = 0.75,
-    broadcast_max_rows: int = BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Per-document mean log-probability and perplexity under
     interpolated Kneser–Ney:
@@ -787,10 +785,10 @@ def kn_lm_logprob(
     # persisted pair dim bounds each derived dim's rows — see
     # word_lm_logprob for the rationale; decision-only, never rows
     if "_pair_counts" in model:
-        fits = model["_pair_counts"].count() <= broadcast_max_rows
+        fits = model["_pair_counts"].count() <= BROADCAST_MAX_ROWS
         _dim = (lambda d: F.broadcast(d)) if fits else (lambda d: d)
     else:
-        _dim = lambda d: maybe_broadcast(d, broadcast_max_rows)
+        _dim = maybe_broadcast
     scored = (
         occ.join(_dim(big), ["w1", "w2"], "left")
         .join(_dim(ctx), "w1", "left")
@@ -1067,7 +1065,6 @@ def char_lm_logprob(
     k_smooth: float = 0.1,
     charset_size: int = 64,
     occ: DataFrame | None = None,
-    broadcast_max_rows: int = BROADCAST_MAX_ROWS,
 ) -> DataFrame:
     """Per-document mean character log-probability under the trained
     model — the CCNet/KenLM quality signal (low = gibberish relative to
@@ -1095,9 +1092,7 @@ def char_lm_logprob(
     # still checks before hinting (a pathological charset at high
     # order falls back to an AQE-chosen join)
     scored = (
-        occ.join(
-            maybe_broadcast(lp_model, broadcast_max_rows), "gram", "left"
-        )
+        occ.join(maybe_broadcast(lp_model), "gram", "left")
         .select(
             F.col(id_col),
             F.coalesce(F.col("_lp"), unseen_lp).alias("_lp"),

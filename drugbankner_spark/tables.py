@@ -99,12 +99,8 @@ def spread_input(df: DataFrame) -> DataFrame:
     algorithmic shuffles an operator is responsible for — and a
     source-layout spread is not one of them."""
     spark = df.sparkSession
-    try:
-        stats = df._jdf.queryExecution().optimizedPlan().stats()
-        total_bytes = int(str(stats.sizeInBytes()))
-    except Exception:
-        return df
-    if not 0 < total_bytes <= SPREAD_CAP_BYTES:
+    total_bytes = est_plan_bytes(df)
+    if total_bytes is None or not 0 < total_bytes <= SPREAD_CAP_BYTES:
         return df
     target = spark.sparkContext.defaultParallelism
     est_splits = -(-total_bytes // _max_partition_bytes(spark))
@@ -159,15 +155,13 @@ def local_df(spark: SparkSession, rows, schema) -> DataFrame:
 BROADCAST_MAX_ROWS = 2_000_000
 
 
-def maybe_broadcast(
-    dim: DataFrame, max_rows: int = BROADCAST_MAX_ROWS
-) -> DataFrame:
+def maybe_broadcast(dim: DataFrame) -> DataFrame:
     """``F.broadcast(dim)`` when one count job on the (already
-    aggregated, bounded) dim says it fits under ``max_rows``; the bare
-    dim otherwise, so AQE chooses the join. The count scans the dim
-    only, never the fact side, so callers persist a dim that is costly
-    to recompute."""
-    return F.broadcast(dim) if dim.count() <= max_rows else dim
+    aggregated, bounded) dim says it fits under
+    :data:`BROADCAST_MAX_ROWS`; the bare dim otherwise, so AQE chooses
+    the join. The count scans the dim only, never the fact side, so
+    callers persist a dim that is costly to recompute."""
+    return F.broadcast(dim) if dim.count() <= BROADCAST_MAX_ROWS else dim
 
 
 def est_plan_bytes(df: DataFrame) -> int | None:

@@ -1800,9 +1800,10 @@ def test_crossdoc_dedup_adversarial_repeated_token(spark):
     assert rows[3]["n_tokens_dropped"] == 0
 
 
-def test_word_lm_broadcast_guard_shuffle_fallback(spark):
+def test_word_lm_broadcast_guard_shuffle_fallback(spark, monkeypatch):
     # VERDICT r05: an over-threshold model dim must SKIP the broadcast
     # hint (AQE picks the join) and still produce identical scores.
+    from drugbankner_spark.operators import textanalysis
     from drugbankner_spark.operators.textanalysis import (
         train_word_lm,
         word_lm_logprob,
@@ -1818,7 +1819,9 @@ def test_word_lm_broadcast_guard_shuffle_fallback(spark):
     )
     model = train_word_lm(train)
     hinted = word_lm_logprob(probes, model)
-    guarded = word_lm_logprob(probes, model, broadcast_max_rows=0)
+    # the size limit is read at call time; 0 rows forces the shuffle path
+    monkeypatch.setattr(textanalysis, "BROADCAST_MAX_ROWS", 0)
+    guarded = word_lm_logprob(probes, model)
     # the guarded plan carries no broadcast hint on the model dims
     # (only the 1-row total keeps its unconditional hint)
     h_plan = hinted._jdf.queryExecution().analyzed().toString()

@@ -58,51 +58,14 @@ def test_near_dup_clusters_singletons(spark):
     }
 
 
-def test_star_components_match_propagation(spark):
-    from drugbankner_spark.operators.graph import connected_components_star
-
-    # mixed shapes: chain, triangle, isolated edge, reversed edges
-    e = _edges(
-        spark,
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12),
-         (20, 21), (9, 5), (5, 7)],
-    )
-    want = {(r["id"], r["component"])
-            for r in connected_components(e).collect()}
-    got = {(r["id"], r["component"])
-           for r in connected_components_star(e).collect()}
-    assert got == want
-
-
-def test_star_components_long_chain_converges_fast(spark):
-    # the adversarial case the propagation algorithm CANNOT handle in
-    # bounded rounds: a 300-node path has diameter 299, so min-label
-    # propagation needs 299 rounds; large-star/small-star must label the
-    # whole chain with component 0 within its default O(log n) budget.
-    from drugbankner_spark.operators.graph import connected_components_star
-
-    n = 300
-    e = _edges(spark, [(i, i + 1) for i in range(n - 1)])
-    stats = {}
-    rows = connected_components_star(e, max_iterations=15, stats=stats).collect()
-    assert len(rows) == n
-    assert {r["component"] for r in rows} == {0}
-    # O(log n) rounds, and the one-agg fingerprint convergence check costs
-    # ONE action per round (vs two exceptAll compares before) — so total
-    # driver actions stay bounded by rounds + 1.
-    assert stats["rounds"] <= 12
-
-
-def test_star_components_empty_and_self_edges(spark):
-    from drugbankner_spark.operators.graph import connected_components_star
-
-    # self-loops only: every node is its own component, zero star rounds
-    # of real work — the fingerprint check must still terminate promptly.
+def test_components_self_loops_only(spark):
+    # self-loops only: every node is its own component, and the first
+    # round's fingerprint already matches, so propagation stops at once
     e = _edges(spark, [(5, 5), (6, 6)])
     stats = {}
-    rows = connected_components_star(e, stats=stats).collect()
+    rows = connected_components(e, stats=stats).collect()
     assert {(r["id"], r["component"]) for r in rows} == {(5, 5), (6, 6)}
-    assert stats["rounds"] <= 2
+    assert stats["rounds"] == 1
 
 
 def test_triangle_count_known_graphs(spark):
@@ -502,16 +465,9 @@ def test_g_kcore_registry_row_uses_hindex_not_peeling(spark):
 def test_components_raise_when_round_budget_runs_out(spark):
     # a 40-node path needs ~40 propagation rounds: the default budget of
     # 25 ends before the fingerprint confirms a fixed point, and the
-    # star form needs more than one round; both raise, naming the budget
+    # error names the budget
     import pytest
-
-    from drugbankner_spark.operators.graph import connected_components_star
 
     e = _edges(spark, [(i, i + 1) for i in range(39)])
     with pytest.raises(ValueError, match="max_iterations=25"):
         connected_components(e)
-    with pytest.raises(ValueError, match="max_iterations=1 "):
-        connected_components_star(e, max_iterations=1)
-    # the star form's default budget is ample for the same path
-    rows = connected_components_star(e).collect()
-    assert {r["component"] for r in rows} == {0}

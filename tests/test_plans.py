@@ -865,3 +865,33 @@ def test_ep_chain_reads_each_layer_input_once(spark):
     n_union = len(re.findall(r"\bUnion\b", plan))
     assert 0 < n_xml <= 12, f"{n_xml} XML relations"
     assert n_union <= 3, f"{n_union} Union nodes"
+
+
+def test_graph_ops_read_their_edges_once(spark):
+    # an undirected edge list built as a union of two projections plans
+    # the caller's edge subtree twice (ARCHITECTURE §7o); graph.py emits
+    # both directions from one scan, so these plans hold no Union. No
+    # action runs: only the analyzed plans are read.
+    import re
+
+    from drugbankner_spark.caching import cache_scope
+    from drugbankner_spark.operators.graph import (
+        common_neighbor_scores,
+        modularity_score,
+        random_walks,
+    )
+
+    def n_unions(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return len(re.findall(r"\bUnion\b", plan))
+
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 12) for i in range(12)], "src long, dst long"
+    )
+    labels = spark.createDataFrame(
+        [(i, i % 3) for i in range(12)], "node long, label long"
+    )
+    with cache_scope():
+        assert n_unions(random_walks(edges)) == 0
+        assert n_unions(common_neighbor_scores(edges)) == 0
+        assert n_unions(modularity_score(edges, labels)) == 0
